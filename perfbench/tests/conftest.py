@@ -1,0 +1,7 @@
+import sys
+from pathlib import Path
+
+HERE = Path(__file__).resolve().parent
+for p in (HERE.parent, HERE.parent.parent):  # the runner's modules, then the package
+    if str(p) not in sys.path:
+        sys.path.insert(0, str(p))
