@@ -80,11 +80,11 @@ import time as _time
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .config import EngineConfig
-from .index import SpatialIndex, morton_interval_pred
+from .index import SpatialIndex, leaf_scan_pred
 from .zorder import morton_encode_np
 
 __all__ = ["auto_knn_level", "knn", "knn_join"]
@@ -99,9 +99,10 @@ HIST_SAMPLE_ROWS = 2_000_000
 MESH_CAP_LOG2 = 18.0
 # each round collects the shells' DISTINCT leaf ancestors (bounded by the
 # skeleton size, not the shell-cell count) and pre-filters each branch's
-# points scan by their Morton intervals — cached-batch min/max pruning
-# skips cold regions in round 1 on skewed inputs and ~the whole table in
-# straggler rounds. Skipped if the distinct set somehow exceeds this cap.
+# points scan by their Morton intervals where index.leaf_scan_pred finds
+# that worth it — cached-batch min/max pruning skips cold regions in round
+# 1 on skewed inputs and ~the whole table in straggler rounds. Skipped if
+# the distinct set somehow exceeds this cap.
 LEAF_COLLECT_CAP = 100_000
 # pending sets at or below this many queries generate + resolve their shell
 # cells ON THE DRIVER (one small Arrow collect, numpy resolution, local
@@ -539,10 +540,10 @@ def _mesh_parts_local(
     exchange or a Spark job) and carry the query coordinates, so the
     candidate join needs no separate qside join; per-level leaf sets and
     counts come from pandas instead of a dedicated per-round collect job.
-    Scan pruning mirrors the distributed path: every minority level gets
-    its own Morton-interval-filtered scan of the points. ``cells_pdf``
-    columns: qid, lvl, cell, q0..q{d-1} (lvl == -1 rows are resolved
-    level-L leaves; lvl > L rows are fine cells)."""
+    Scan pruning uses the same rule as the distributed path
+    (``leaf_scan_pred``). ``cells_pdf`` columns: qid, lvl, cell,
+    q0..q{d-1} (lvl == -1 rows are resolved level-L leaves; lvl > L rows
+    are fine cells)."""
     if not len(cells_pdf):
         return [], {}
     leaf_shift = d * (kb - L)
@@ -556,11 +557,6 @@ def _mesh_parts_local(
     lvl_counts = {int(lv): int(c) for lv, c in zip(uls, ucnts)}
     per_level_leaves = {int(lv): np.unique(ancv[lvlv == lv]) for lv in uls}
 
-    def _covered_frac(leaves: np.ndarray) -> float:
-        i = np.searchsorted(mnp["cells"], np.unique(leaves))
-        total = int(mnp["cum"][-1])
-        return float((mnp["cum"][i + 1] - mnp["cum"][i]).sum()) / max(1, total)
-
     def _local_cl(mask, rename: dict, cols: list[str], schema: str) -> DataFrame:
         sub = cells_pdf.loc[mask]
         if rename:
@@ -570,10 +566,11 @@ def _mesh_parts_local(
     # AT MOST TWO parts — one coarse leaf equi-join, one consolidated
     # fine-levels join (points interval-filtered by the UNION of all fine
     # levels' leaves, then exploded over the levels present). Per-level
-    # scans would prune slightly tighter, but each extra part is a fresh
-    # WholeStageCodegen compile per round per call (literals are embedded,
-    # so Janino never caches across query sets) — measured ~2s of a 2.3s
-    # straggler round at sf0.1 was plan/compile overhead, not compute.
+    # scans would prune slightly tighter, but each extra part is one more
+    # filtered scan per round. The ~2s measured in a 2.3s straggler round
+    # at sf0.1 was not plan/compile overhead: the 64-term interval filter
+    # made a generated method past HotSpot's huge-method limit, which then
+    # ran interpreted per row (see SCAN_PRED_MAX_INTERVALS in index.py).
     mesh_parts: list[DataFrame] = []
     n_coarse = lvl_counts.get(-1, 0)
     if n_coarse:
@@ -584,11 +581,9 @@ def _mesh_parts_local(
         if n_coarse <= cells_bcast_rows:
             cl = F.broadcast(cl)
         p = pts_narrow
-        leaves = per_level_leaves[-1]
-        if _covered_frac(leaves) <= 0.4:
-            pred = morton_interval_pred(leaves, leaf_shift)
-            if pred is not None:
-                p = p.where(pred)
+        pred = leaf_scan_pred(mnp, per_level_leaves[-1], leaf_shift)
+        if pred is not None:
+            p = p.where(pred)
         p = p.withColumn("pcell", F.shiftrightunsigned("morton", leaf_shift))
         mesh_parts.append(p.join(cl, F.col("pcell") == F.col("leaf")).drop("leaf", "morton"))
     fine_levels = sorted(l for l in lvl_counts if l >= 0)
@@ -603,10 +598,9 @@ def _mesh_parts_local(
         all_leaves = np.unique(
             np.concatenate([per_level_leaves[lv] for lv in fine_levels])
         )
-        if _covered_frac(all_leaves) <= 0.4:
-            pred = morton_interval_pred(all_leaves, leaf_shift)
-            if pred is not None:
-                p = p.where(pred)
+        pred = leaf_scan_pred(mnp, all_leaves, leaf_shift)
+        if pred is not None:
+            p = p.where(pred)
         # foldable literal level array (codegen hoists it); the cell is
         # column arithmetic AFTER the explode — an array-of-structs here
         # allocates per ROW (GC-bound floor at 38.4M pts)
@@ -1074,14 +1068,14 @@ def knn(
                 cells = cells.persist()
             # Per-LEVEL scan pruning: collect each level's DISTINCT leaf
             # ancestors (bounded by the skeleton size, never the shell-cell
-            # count) and, where a level's leaves hold a minority of the
-            # points (exact from the memoized prefix sums), give that level
-            # its OWN Morton-interval-filtered scan — cached-batch min/max
-            # skipping then reads only the touched regions. On skewed
-            # inputs the cluster queries' deep levels touch only hot
-            # leaves, so their scans are nearly free; only levels whose
-            # leaves span most of the table share one full explode scan.
-            # Straggler rounds >= 2 prune everything the same way. r3
+            # count) and, where the level's capped Morton intervals exclude
+            # most of the points (leaf_scan_pred: exact from the memoized
+            # prefix sums), give that level its OWN filtered scan —
+            # cached-batch min/max skipping then reads only the touched
+            # regions. On skewed inputs the cluster queries' deep levels
+            # touch only hot leaves, so their scans are nearly free; only
+            # levels whose leaves span most of the table share one full
+            # explode scan. Straggler rounds >= 2 prune the same way. r3
             # instead exploded ALL n rows over EVERY distinct level.
             # ONE driver action serves both the per-level shell-cell
             # counts and the leaf sets: group by (lvl, leaf-ancestor) —
@@ -1131,33 +1125,29 @@ def knn(
                 n_coarse = lvl_counts.get(-1, 0)
                 fine_levels = sorted(l for l in lvl_counts if l >= 0)
 
-                def _covered_frac(leaves: np.ndarray) -> float:
-                    i = np.searchsorted(mnp["cells"], np.unique(leaves))
-                    total = int(mnp["cum"][-1])
-                    return float((mnp["cum"][i + 1] - mnp["cum"][i]).sum()) / max(1, total)
-
-                def _scan(leaves: np.ndarray | None) -> DataFrame:
-                    if leaves is None or _covered_frac(leaves) > 0.4:
-                        return pts_narrow
-                    return pts_narrow.where(morton_interval_pred(leaves, leaf_shift))
+                def _scan_pred(lvl: int) -> Column | None:
+                    if per_level_leaves is None or lvl not in per_level_leaves:
+                        return None
+                    return leaf_scan_pred(mnp, per_level_leaves[lvl], leaf_shift)
 
                 if n_coarse:
                     cl = cells.where(F.col("lvl") < 0).select("qid", F.col("cell").alias("leaf"))
                     if n_coarse <= cells_bcast_rows:
                         cl = F.broadcast(cl)
-                    p = _scan(None if per_level_leaves is None else per_level_leaves.get(-1))
+                    pred = _scan_pred(-1)
+                    p = pts_narrow if pred is None else pts_narrow.where(pred)
                     p = p.withColumn("pcell", F.shiftrightunsigned("morton", leaf_shift))
                     mesh_parts.append(p.join(cl, F.col("pcell") == F.col("leaf")).drop("leaf", "morton"))
                 shared_levels: list[int] = []
                 for lvl in fine_levels:
-                    leaves = None if per_level_leaves is None else per_level_leaves.get(lvl)
-                    if leaves is None or _covered_frac(leaves) > 0.4:
+                    pred = _scan_pred(lvl)
+                    if pred is None:
                         shared_levels.append(lvl)
                         continue
                     cl = cells.where(F.col("lvl") == lvl).select("qid", "cell")
                     if lvl_counts[lvl] <= cells_bcast_rows:
                         cl = F.broadcast(cl)
-                    p = pts_narrow.where(morton_interval_pred(leaves, leaf_shift)).withColumn(
+                    p = pts_narrow.where(pred).withColumn(
                         "pcell", F.shiftrightunsigned("morton", d * (kb - lvl))
                     )
                     mesh_parts.append(p.join(cl, F.col("pcell") == F.col("cell")).drop("cell", "morton"))

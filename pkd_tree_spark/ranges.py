@@ -40,7 +40,7 @@ from .index import (
     SpatialIndex,
     cover_regions,
     interior_counts_np,
-    morton_interval_pred,
+    leaf_scan_pred,
     resolve_covers_np,
 )
 
@@ -284,8 +284,9 @@ def _boundary_candidates(
     cells beneath them (driver-side numpy against the memoized meta for
     small batches; a meta-side explode join for huge query sets), then the
     points table — scanned ONCE, pre-filtered by the resolved leaves'
-    Morton intervals (cached-batch min/max pruning), with ONE derived leaf
-    column and NO generate — equi-joins the resolved (qid, leaf) pairs.
+    Morton intervals when they exclude most rows (``leaf_scan_pred``),
+    with ONE derived leaf column and NO generate — equi-joins the resolved
+    (qid, leaf) pairs.
     r3 instead exploded all points over every distinct cover level
     (n x 6-8 generated rows at 38.4M: 35->38s NEGATIVE 4->16-core
     scaling); the resolved join scans n rows exactly once.
@@ -313,7 +314,7 @@ def _boundary_candidates(
             if len(res) <= RESOLVED_BCAST_ROWS:
                 rdf = F.broadcast(spark.createDataFrame(res))
                 pts = index.points.select(*base, "morton")
-                pred = morton_interval_pred(res["leaf"].to_numpy(), shift)
+                pred = leaf_scan_pred(mnp, res["leaf"].to_numpy(), shift)
                 if pred is not None:
                     pts = pts.where(pred)
                 pts = pts.withColumn("pleaf", F.shiftrightunsigned("morton", shift))
