@@ -4,23 +4,28 @@
               fixed-point-quantized vectors: the correctness baseline,
               broadcast queries x full scan, deterministic tie-break.
   ann_lsh   — random-hyperplane LSH buckets (deterministic +/-1 planes),
-              candidates = bucket equi-join (multi-probe over all tables),
-              exact re-rank inside buckets: the scale path. Approximate by
-              construction -> no SQL oracle; recall is pytest-checked.
+              candidates = corpus rows sharing a probed bucket (multi-probe
+              over all tables) with a query, found and exactly re-ranked in
+              ONE partition-local pass over the corpus against a broadcast
+              probe table: the scale path. Approximate by construction ->
+              no SQL oracle; recall is pytest-checked.
 """
 
 from __future__ import annotations
 
+from typing import Iterable, Iterator, NamedTuple
+
 import numpy as np
 import pandas as pd
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
 
 from ..config import A1, A2
+from ..index import expand_ranges
 from .dedup import quantized_embeddings
 
-__all__ = ["topk_dot", "ann_lsh", "lsh_bucket_col", "auto_planes"]
+__all__ = ["topk_dot", "ann_lsh", "ann_rerank", "lsh_bucket_col", "lsh_table_keys", "auto_planes"]
 
 
 def _dot(qcol: str, vcol: str):
@@ -124,42 +129,154 @@ def auto_planes(n_corpus: int) -> int:
     return max(6, math.ceil(math.log2(max(2.0, n_corpus / LSH_BUCKET_TARGET_ROWS))))
 
 
-def _table_keys_udf(n_planes: int, n_tables: int, m2: int, aug_zero: bool):
-    """Arrow-batched pandas UDF: ALL ``n_tables`` bucket keys of a vector in
-    ONE integer matmul against the ±1 plane matrix. Bit-identical to
-    ``lsh_bucket_col`` per table (same sign rule ((i*A1 + pg*A2) >> 7) % 2,
-    same >=0 bit test, exact int64 sums), but one (batch × d+1) @ (d+1 × 48)
-    GEMM replaces n_tables*n_planes higher-order array aggregates per row —
-    the per-row expression cost made the r3 corpus pass 18.7s at sf0.1 for
-    what is a trivial bucketed join. Asymmetric augmentation happens inside:
-    data vectors append floor(sqrt(m2 - norm2)), queries append 0."""
+def lsh_table_keys(V: np.ndarray, aug: np.ndarray, n_planes: int, n_tables: int) -> np.ndarray:
+    """All ``n_tables`` bucket keys of each row of ``V`` (b, d) in ONE
+    integer matmul against the ±1 plane matrix: (b, n_tables) int64.
+
+    Bit-identical to ``lsh_bucket_col`` per table (same sign rule
+    ((i*A1 + pg*A2) >> 7) % 2, same >= 0 bit test, exact int64 sums); the
+    table id sits above the plane bits, so keys of different tables never
+    collide. ``aug`` is the appended asymmetric-augmentation coordinate:
+    floor(sqrt(m2 - norm2)) for data vectors (``mips_aug``), 0 for queries.
+    The driver (query side) and the executors (corpus side) share it."""
     P = n_planes * n_tables
+    Va = np.concatenate([V.astype(np.int64, copy=False), aug.astype(np.int64)[:, None]], axis=1)
+    idx = np.arange(Va.shape[1], dtype=np.int64)
+    pg = np.arange(P, dtype=np.int64)
+    S = np.where(((idx[:, None] * A1 + pg[None, :] * A2) >> 7) % 2 == 0, np.int64(1), np.int64(-1))
+    bits = ((Va @ S) >= 0).reshape(len(Va), n_tables, n_planes).astype(np.int64)
+    keys = (bits << np.arange(n_planes, dtype=np.int64)).sum(axis=2)
+    return keys | (np.arange(n_tables, dtype=np.int64) << n_planes)
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def keys(qv: pd.Series, norm2: pd.Series) -> pd.Series:
-        V = np.stack(qv.to_numpy()).astype(np.int64)  # (b, d)
-        if aug_zero:
-            aug = np.zeros(len(V), dtype=np.int64)
-        else:
-            # float64 sqrt matches F.floor(F.sqrt(...)) IEEE-exactly
-            aug = np.floor(
-                np.sqrt(np.maximum(0.0, float(m2) - norm2.to_numpy(dtype=np.float64)))
-            ).astype(np.int64)
-        Va = np.concatenate([V, aug[:, None]], axis=1)  # (b, d+1)
-        idx = np.arange(Va.shape[1], dtype=np.int64)
-        pg = np.arange(P, dtype=np.int64)
-        S = np.where(
-            ((idx[:, None] * A1 + pg[None, :] * A2) >> 7) % 2 == 0, np.int64(1), np.int64(-1)
-        )
-        bits = (Va @ S) >= 0  # (b, P) — exact int64 sums
-        out = np.zeros((len(Va), n_tables), dtype=np.int64)
-        for t in range(n_tables):
-            for p in range(n_planes):
-                out[:, t] |= bits[:, t * n_planes + p].astype(np.int64) << p
-            out[:, t] |= np.int64(t << n_planes)
-        return pd.Series(list(out))
 
-    return keys
+def mips_aug(norm2: np.ndarray, m2: int) -> np.ndarray:
+    """Data-side augmentation floor(sqrt(m2 - norm2)); float64 sqrt matches
+    F.floor(F.sqrt(...)) IEEE-exactly."""
+    return np.floor(np.sqrt(np.maximum(0.0, float(m2) - norm2.astype(np.float64)))).astype(np.int64)
+
+
+class LshProbes(NamedTuple):
+    """Probe side of ann_lsh, built on the driver from one collect of the
+    query rows and shipped to every corpus partition: the (bucket, query
+    index) probe table sorted by bucket, the query vec_ids and the query
+    matrix (index i of the table <-> qids[i] <-> Q[i])."""
+
+    n_planes: int
+    n_tables: int
+    m2: int
+    bucket: np.ndarray
+    qi: np.ndarray
+    qids: np.ndarray
+    Q: np.ndarray
+
+
+def lsh_probes(qids: np.ndarray, Q: np.ndarray, n_planes: int, n_tables: int, m2: int) -> LshProbes:
+    """Multi-probe table of the queries (Q, qids): each query probes its
+    own bucket and every bucket one or two plane flips away (Hamming-0/1/2
+    XOR masks), in every table."""
+    nq = len(qids)
+    masks = np.array(
+        [0]
+        + [1 << p for p in range(n_planes)]
+        + [(1 << p) | (1 << p2) for p in range(n_planes) for p2 in range(p + 1, n_planes)],
+        dtype=np.int64,
+    )
+    keys = lsh_table_keys(Q, np.zeros(nq, dtype=np.int64), n_planes, n_tables)
+    bucket = (keys[:, :, None] ^ masks).ravel()
+    qi = np.repeat(np.arange(nq, dtype=np.int64), n_tables * len(masks))
+    order = np.lexsort((qi, bucket))
+    return LshProbes(n_planes, n_tables, int(m2), bucket[order], qi[order], np.asarray(qids, dtype=np.int64), Q)
+
+
+# Candidate (row, query) pairs the re-rank holds at once: bounds a task's
+# memory at ~2 * ANN_TILE_PAIRS * d int64 (the gathered rows of both
+# sides) however many corpus rows share a bucket; duplicate-heavy corpora
+# pile any number of identical vectors into one bucket at every plane
+# count. A single row adds at most n_queries * n_tables pairs, so a tile
+# never exceeds ANN_TILE_PAIRS + that.
+ANN_TILE_PAIRS = 1 << 15
+
+
+class _RunningTopK:
+    """Per-query top-k by (-dot, vec_id) over a stream of candidate tiles.
+    Holds the current top-k (<= nq * k rows) plus a buffer of at most
+    ``limit`` rows that beat or tie each query's current k-th dot."""
+
+    def __init__(self, nq: int, k: int, limit: int):
+        self.k, self.limit = k, limit
+        self.kth = np.full(nq, np.iinfo(np.int64).min, dtype=np.int64)
+        e = np.zeros(0, dtype=np.int64)
+        self.parts = [(e, e, e)]
+        self.n_top = self.n = 0
+
+    def push(self, q: np.ndarray, v: np.ndarray, d: np.ndarray) -> None:
+        keep = d >= self.kth[q]
+        if keep.any():
+            self.parts.append((q[keep], v[keep], d[keep]))
+            self.n += int(keep.sum())
+        if self.n - self.n_top > self.limit:
+            self._compact()
+
+    def _compact(self) -> None:
+        q, v, d = (np.concatenate(c) for c in zip(*self.parts))
+        o = np.lexsort((v, -d, q))
+        q, v, d = q[o], v[o], d[o]
+        start = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
+        rank = np.arange(len(q)) - np.repeat(start, np.diff(np.r_[start, len(q)]))
+        keep = rank < self.k
+        q, v, d, rank = q[keep], v[keep], d[keep], rank[keep]
+        full = rank == self.k - 1
+        self.kth[q[full]] = d[full]
+        self.parts = [(q, v, d)]
+        self.n_top = self.n = len(q)
+
+    def result(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        self._compact()
+        return self.parts[0]
+
+
+def ann_rerank(
+    batches: Iterable[pd.DataFrame], pr: LshProbes, k: int, tile: int = ANN_TILE_PAIRS
+) -> Iterator[pd.DataFrame]:
+    """mapInPandas body of ann_lsh over one corpus partition of (vec_id, qv,
+    norm2) batches: each row's table keys, its candidate queries found by
+    ``searchsorted`` in the probe table (any shared probed bucket in any
+    table, self excluded, each pair once), exact int64 dots, and a running
+    per-query top-k by (-dot, vec_id). Yields one (qid, vec_id, dot) frame
+    with <= k rows per query. Rows are keyed in blocks of tile // n_tables
+    and their candidates expanded and dotted in tiles of ~``tile`` pairs,
+    so memory is bounded by the tile and the query side, never by bucket
+    occupancy."""
+    T, nq = pr.n_tables, len(pr.qids)
+    top = _RunningTopK(nq, int(k), tile)
+    block = max(1, tile // T)
+    for pdf in batches:
+        vids = pdf["vec_id"].to_numpy(dtype=np.int64)
+        qvs = pdf["qv"].to_numpy()
+        norm2 = pdf["norm2"].to_numpy(dtype=np.int64)
+        for r0 in range(0, len(pdf), block):
+            V = np.stack(qvs[r0 : r0 + block]).astype(np.int64)
+            keys = lsh_table_keys(V, mips_aug(norm2[r0 : r0 + block], pr.m2), pr.n_planes, T)
+            i0 = np.searchsorted(pr.bucket, keys, side="left")
+            i1 = np.searchsorted(pr.bucket, keys, side="right")
+            cnt = (i1 - i0).sum(axis=1)
+            if not cnt.any():
+                continue
+            # rows whose first pair falls in the same tile-sized window share a tile
+            tid = (np.cumsum(cnt) - cnt) // tile
+            cuts = np.r_[0, np.flatnonzero(np.diff(tid)) + 1, len(V)]
+            for a, b in zip(cuts[:-1], cuts[1:]):
+                idx, per = expand_ranges(i0[a:b].ravel(), i1[a:b].ravel())
+                row = np.repeat(np.repeat(np.arange(a, b, dtype=np.int64), T), per)
+                pair = np.unique(row * nq + pr.qi[idx])  # a pair found via several tables/probes counts once
+                row, q = pair // nq, pair % nq
+                vid = vids[r0 + row]
+                ok = vid != pr.qids[q]
+                row, q, vid = row[ok], q[ok], vid[ok]
+                # exact: |qv| <= ~2^12, so d-term int64 sums stay far below 2^63
+                top.push(q, vid, np.einsum("ij,ij->i", V[row], pr.Q[q]))
+    q, v, d = top.result()
+    yield pd.DataFrame({"qid": pr.qids[q], "vec_id": v, "dot": d})
 
 
 def ann_lsh(emb: DataFrame, n_queries: int = 16, k: int = 10, n_planes: int | None = None) -> DataFrame:
@@ -175,27 +292,29 @@ def ann_lsh(emb: DataFrame, n_queries: int = 16, k: int = 10, n_planes: int | No
          inner-product order (a no-op for pre-normalized corpora);
       2. MULTI-PROBE: each query probes its own bucket plus all Hamming-1
          and Hamming-2 flips (vectors near a hyperplane land on either
-         side; probe rows live on the tiny broadcast side, so deeper
-         probing costs nothing on the corpus);
+         side; probes live in the small driver-built probe table, so
+         deeper probing costs nothing on the corpus);
       3. MULTIPLE TABLES: n_tables independent plane families; a true
-         neighbor is found if ANY table collides — recall
-         1-(1-r)^L. The data side explodes over tables map-side (queries
-         are the broadcast side; nothing reshuffles the corpus).
+         neighbor is found if ANY table collides — recall 1-(1-r)^L.
     ``n_planes=None`` (default) sizes the plane count off the corpus row
     count (auto_planes) so bucket occupancy stays ~LSH_BUCKET_TARGET_ROWS
     at any scale; corpora up to ~8k rows get the historical 6.
     The re-rank uses the ORIGINAL vectors' exact integer dot. Output shape
     == topk_dot (rn may be < k if buckets are small). At 100TB the
-    bucketed join replaces topk_dot's full scan; recall is pytest-checked
+    bucketed probe replaces topk_dot's full scan; recall is pytest-checked
     AND logged per bench run (ann_recall_at_10).
 
-    Plan shape: the corpus pass is ONE pandas-UDF projection (all 8 table
-    keys per row in one matmul, see _table_keys_udf); probe flips
-    (Hamming-0/1/2 XOR masks) expand the small query side; candidates are
-    re-ranked per BUCKET by one exact int64 GEMM per cogrouped bucket with
-    a lossless per-(query, bucket) top-k cut, so candidate PAIRS are never
-    materialized (see the inline note) and only <= k rows per (qid,
-    bucket) reach the global window."""
+    Plan shape: the query rows are collected ONCE; their table keys (the
+    same numpy key function the executors run), the sorted Hamming-0/1/2
+    probe table and the query matrix are built from that one frame and
+    broadcast. The corpus then makes ONE mapInPandas pass in its own
+    partitioning (ann_rerank: keys, probe-table lookup, exact dots in
+    bounded tiles, running per-query top-k) — no corpus explode, no
+    shuffle of the corpus. Only <= k rows per query per partition reach
+    the row_number window; every vector lives in one partition, so no
+    dedup is needed. The <= n_queries * k result is materialized inside
+    the call and the broadcast destroyed: nothing the call creates
+    outlives it, and the returned frame is a local relation."""
     base = quantized_embeddings(emb)
     m2, n_corpus = _corpus_stats(base)
     if n_planes is None:
@@ -207,90 +326,21 @@ def ann_lsh(emb: DataFrame, n_queries: int = 16, k: int = 10, n_planes: int | No
     # where the per-bit collision probability is low for EVERY plane
     # family, so extra tables mostly re-find the already-found.
     n_tables = 8
-    dkeys = _table_keys_udf(n_planes, n_tables, m2, aug_zero=False)(F.col("qv"), F.col("norm2"))
-    corpus_b = base.select("vec_id", "qv", F.explode(dkeys).alias("bucket"))
-    qbase = base.where(F.col("vec_id") < n_queries)
-    qkeys = _table_keys_udf(n_planes, n_tables, m2, aug_zero=True)(F.col("qv"), F.col("norm2"))
-    masks = (
-        [0]
-        + [1 << p for p in range(n_planes)]
-        + [(1 << p) | (1 << p2) for p in range(n_planes) for p2 in range(p + 1, n_planes)]
-    )
-    qprobe = (
-        qbase.select(F.col("vec_id").alias("qid"), F.explode(qkeys).alias("b0"))
-        .select("qid", "b0", F.explode(F.array(*[F.lit(m) for m in masks])).alias("mask"))
-        .select("qid", F.col("b0").bitwiseXOR(F.col("mask")).alias("bucket"))
-    )
-    # Per-BUCKET GEMM re-rank (r7): the prior shape materialized one row
-    # per (qid, vec_id) candidate PAIR and computed a higher-order-function
-    # dot per pair — at the 1M-vector study the skewed buckets emitted
-    # 10^8+ pairs and the pair join + per-pair dot was 1026s of the wall.
-    # Instead, cogroup the corpus's (vec_id, qv, bucket) rows with the
-    # probe rows per bucket and compute ALL of a bucket's query x corpus
-    # dots as ONE int64 numpy GEMM (exact: |qv| <= ~2^12, d sums << 2^63,
-    # identical to the old per-pair aggregate), keeping only the per-
-    # (query, bucket) top-k. A global top-k member beats < k candidates in
-    # EVERY bucket that contains it, so the per-bucket cut is lossless and
-    # only <= k rows per (qid, bucket) reach the dedup + global window.
-    # The embedding array rides the xL explode once (L*corpus bytes
-    # shuffled, bounded) instead of riding every candidate pair.
+    qpd = base.where(F.col("vec_id") < n_queries).select("vec_id", "qv").toPandas()
+    Q = np.stack(qpd["qv"].to_numpy()).astype(np.int64) if len(qpd) else np.zeros((0, 0), dtype=np.int64)
+    probes = lsh_probes(qpd["vec_id"].to_numpy(dtype=np.int64), Q, n_planes, n_tables, m2)
     spark = emb.sparkSession
-    qpd = qbase.select("vec_id", "qv").toPandas()
-    qindex = {int(v): i for i, v in enumerate(qpd["vec_id"].to_numpy())}
-    qmat = (
-        np.stack(qpd["qv"].to_numpy()).astype(np.int64)
-        if len(qpd)
-        else np.zeros((0, 1), dtype=np.int64)
-    )
-    bq = spark.sparkContext.broadcast((qindex, qmat))
+    bc = spark.sparkContext.broadcast(probes)
     kk = int(k)
-
-    def _bucket_topk(cpdf: pd.DataFrame, ppdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "qid": pd.Series(dtype="int64"),
-                "vec_id": pd.Series(dtype="int64"),
-                "dot": pd.Series(dtype="int64"),
-            }
+    try:
+        cand = base.mapInPandas(lambda it: ann_rerank(it, bc.value, kk), "qid long, vec_id long, dot long")
+        w = Window.partitionBy("qid").orderBy(F.col("dot").desc(), F.col("vec_id"))
+        top = (
+            cand.withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") <= k)
+            .select("qid", F.col("rn").cast("long").alias("rn"), "vec_id", "dot")
+            .toPandas()
         )
-        if not len(cpdf) or not len(ppdf):
-            return empty
-        qidx, qm = bq.value
-        V = np.stack(cpdf["qv"].to_numpy()).astype(np.int64)
-        vid = cpdf["vec_id"].to_numpy()
-        qs = ppdf["qid"].to_numpy()
-        dots = qm[[qidx[int(q)] for q in qs]] @ V.T  # (nq_b, nv_b) exact
-        oq, ov, od = [], [], []
-        for r in range(len(qs)):
-            keep = vid != qs[r]  # self-exclusion, as the old pair filter
-            ids, dd = vid[keep], dots[r][keep]
-            if not len(ids):
-                continue
-            top = np.lexsort((ids, -dd))[: min(kk, len(ids))]  # (-dot, vec_id)
-            oq.append(np.full(len(top), qs[r], dtype=np.int64))
-            ov.append(ids[top])
-            od.append(dd[top])
-        if not oq:
-            return empty
-        return pd.DataFrame(
-            {
-                "qid": np.concatenate(oq),
-                "vec_id": np.concatenate(ov),
-                "dot": np.concatenate(od),
-            }
-        )
-
-    cand = (
-        corpus_b.groupBy("bucket")
-        .cogroup(qprobe.groupBy("bucket"))
-        .applyInPandas(_bucket_topk, "qid long, vec_id long, dot long")
-        # a pair reached via several tables/probes carries the SAME exact
-        # dot every time — dedup before ranking, as the old distinct did
-        .dropDuplicates(["qid", "vec_id"])
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("dot").desc(), F.col("vec_id"))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("qid", F.col("rn").cast("long").alias("rn"), "vec_id", "dot")
-    )
+    finally:
+        bc.destroy()
+    return spark.createDataFrame(top.astype("int64"), "qid long, rn long, vec_id long, dot long")

@@ -59,9 +59,9 @@ def morton_decode_np(keys: np.ndarray, d: int, bits: int = GRID_BITS) -> np.ndar
     return out.astype(np.int64)
 
 
-def morton_col(cols: list[Column | str], d: int, bits: int = GRID_BITS) -> Column:
-    """Morton key as a Spark Column from d integer coordinate columns
-    (Column objects or SQL expression strings).
+def morton_col(cols: list[str], d: int, bits: int = GRID_BITS) -> Column:
+    """Morton key as a Spark Column from d integer coordinate SQL
+    expression strings (a ``Column`` raises TypeError).
 
     Pure JVM expression — a sum of d*bits disjoint single-bit terms
     ((x_j >> b & 1) << (b*d + d-1-j)) that whole-stage codegen fuses into
@@ -75,15 +75,10 @@ def morton_col(cols: list[Column | str], d: int, bits: int = GRID_BITS) -> Colum
     form issued ~4 py4j round-trips per term (d*bits terms = 160+ calls,
     a measured ~0.15s of pure driver latency per call site — per STEP in
     iterative update loops)."""
-    sqls = []
     for c in cols:
-        if isinstance(c, str):
-            sqls.append(f"CAST(({c}) AS BIGINT)")
-        else:
-            # Column.__repr__ is "Column<'sql'>" — extract the SQL text so
-            # legacy Column callers keep working through the single-expr path
-            s = str(c)
-            sqls.append(f"CAST(({s[8:-2]}) AS BIGINT)")
+        if not isinstance(c, str):
+            raise TypeError(f"morton_col takes SQL expression strings, got {type(c).__name__}")
+    sqls = [f"CAST(({c}) AS BIGINT)" for c in cols]
     terms = []
     for j, cs in enumerate(sqls):
         for b in range(bits):

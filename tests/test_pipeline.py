@@ -171,24 +171,35 @@ def test_ann_lsh_adaptive_planes(spark, emb):
         big.unpersist()
 
 
-def test_ann_lsh_bucket_gemm_matches_pair_join(spark, emb):
-    """r7: ann_lsh's per-bucket GEMM re-rank (lossless per-(query, bucket)
-    top-k before the global window) must be bit-identical to the
-    candidate-pair join + per-pair exact HOF dot it replaced — same
+def test_ann_lsh_rerank_matches_pair_join(spark, emb):
+    """ann_lsh's partition-local re-rank (probe-table lookup, exact dots in
+    tiles, per-partition top-k before the global window) must be
+    bit-identical to a candidate-pair join + per-pair exact HOF dot — same
     buckets, same probes, same exact int64 dots, same (-dot, vec_id)
     tie-break."""
     import pkd_tree_spark.pipeline.similarity as S
     from pyspark.sql import Window
+    from pyspark.sql.types import ArrayType, LongType
+
+    def table_keys_udf(n_planes, n_tables, m2, aug_zero):
+        @F.pandas_udf(ArrayType(LongType()))
+        def keys(qv: pd.Series, norm2: pd.Series) -> pd.Series:
+            V = np.stack(qv.to_numpy()).astype(np.int64)
+            n2 = norm2.to_numpy(dtype=np.int64)
+            aug = np.zeros(len(V), dtype=np.int64) if aug_zero else S.mips_aug(n2, m2)
+            return pd.Series(list(S.lsh_table_keys(V, aug, n_planes, n_tables)))
+
+        return keys
 
     base = S.quantized_embeddings(emb)
     m2, n = S._corpus_stats(base)
     n_planes, n_tables, nq, k = S.auto_planes(n), 8, 16, 10
-    dkeys = S._table_keys_udf(n_planes, n_tables, m2, aug_zero=False)(
+    dkeys = table_keys_udf(n_planes, n_tables, m2, aug_zero=False)(
         F.col("qv"), F.col("norm2")
     )
     corpus = base.select("vec_id", F.explode(dkeys).alias("bucket"))
     qbase = base.where(F.col("vec_id") < nq)
-    qkeys = S._table_keys_udf(n_planes, n_tables, m2, aug_zero=True)(
+    qkeys = table_keys_udf(n_planes, n_tables, m2, aug_zero=True)(
         F.col("qv"), F.col("norm2")
     )
     masks = (
@@ -229,6 +240,27 @@ def test_ann_lsh_bucket_gemm_matches_pair_join(spark, emb):
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got, want)
+
+
+def test_ann_lsh_leaves_no_broadcast(spark, emb, monkeypatch):
+    """Every broadcast ann_lsh makes is destroyed before it returns, and
+    consuming the returned frame makes none."""
+    from pyspark import SparkContext
+
+    made = []
+    real = SparkContext.broadcast
+
+    def recording(self, value):
+        b = real(self, value)
+        made.append(b)
+        return b
+
+    monkeypatch.setattr(SparkContext, "broadcast", recording)
+    got = SIM.ann_lsh(emb, n_queries=16, k=10)
+    assert made  # the probe table ships as a broadcast
+    assert not any(b._jbroadcast.isValid() for b in made)
+    got.toPandas()
+    assert not any(b._jbroadcast.isValid() for b in made)
 
 
 def test_embedding_dup_pairs_exact(emb, emb_q):

@@ -51,12 +51,14 @@ def test_jvm_expr_matches_numpy(spark):
         pdf["rid"] = np.arange(len(pdf))
         got = (
             spark.createDataFrame(pdf)
-            .select("rid", morton_col([F.col(f"x{j}") for j in range(d)], d).alias("m"))
+            .select("rid", morton_col([f"x{j}" for j in range(d)], d).alias("m"))
             .toPandas()
             .sort_values("rid")["m"]
             .to_numpy()
         )
         assert np.array_equal(got, morton_encode_np(pts, bits=20))
+    with pytest.raises(TypeError):
+        morton_col([F.col("x0"), "x1"], 2)
 
 
 def test_monotone_within_cell():

@@ -188,9 +188,15 @@ def main() -> None:
         ann.count()
         section(
             "ann_lsh (bucketed MIPS)",
-            "One ArrowEval (the 8-table GEMM key UDF) on the corpus side; "
-            "probes expand the broadcast query side; corpus max-norm is "
-            "memoized per corpus (no per-call full-table aggregate after "
+            "The query rows are collected once and the sorted Hamming-0/1/2 "
+            "probe table is broadcast; the corpus makes ONE MapInPandas pass "
+            "in its own partitioning (8-table keys, probe lookup, exact dots "
+            "in bounded tiles, per-partition top-k) with no explode and no "
+            "corpus shuffle; only <= k rows per query per partition reach "
+            "the row_number window. That <= n_queries x k result is "
+            "materialized inside the call and the broadcast destroyed, so "
+            "the plan below is a scan of the local result. Corpus max-norm "
+            "is memoized per corpus (no per-call full-table aggregate after "
             "the first).",
             ann._jdf.queryExecution().executedPlan().toString(),
         )
