@@ -73,15 +73,15 @@ class SpatialIndex:
     """points: (doc_id, span_idx, key, x0..x{d-1}, morton) range-partitioned
     and sorted by morton; meta: (cell, cnt, mn0..mx{d-1}) at cfg.index_level.
 
-    ``_ladder`` memoizes the kNN density ladder (density_ladder below) —
-    INDEX state, like the reference kd-tree's depth structure, computed at
-    most once per index generation (updates produce a new SpatialIndex, so
-    the memo invalidates naturally)."""
+    ``_meta_np`` memoizes the driver-side skeleton (meta_np below), from
+    which kNN picks its per-query levels and resolves its shells — INDEX
+    state, like the reference kd-tree's depth structure, computed at most
+    once per index generation (updates produce a new SpatialIndex, so the
+    memo invalidates naturally)."""
 
     points: DataFrame
     meta: DataFrame
     cfg: EngineConfig
-    _ladder: tuple[DataFrame, list[int]] | None = None
     _meta_np: dict | None = None
     _staged_ids: list = field(default_factory=list)
     _pruned: object = None  # None | "refused" | (DataFrame, cap)
@@ -108,8 +108,8 @@ class SpatialIndex:
         residency stays bounded by the LIVE index — the r4 153.6M study
         held ~6 persisted full-size tables by the update section and
         anti-scaled. Blocking by default so the block drop completes
-        OUTSIDE the next timed section. Driver-side memos (meta_np,
-        ladder) die with the instance."""
+        OUTSIDE the next timed section. Driver-side memos (meta_np)
+        die with the instance."""
         for df in (self.points, self.meta):
             try:
                 df.unpersist(blocking=blocking)
@@ -275,59 +275,6 @@ class SpatialIndex:
                 pass
         object.__setattr__(self, "_pruned", (pruned, cap))
         return pruned
-
-    def density_ladder(self, target: int = 256) -> tuple[DataFrame, list[int]]:
-        """(hist, levels): a (lvl, c, hcnt) point-count histogram over grid
-        levels 1..index_level — the skew-adaptivity state for kNN level
-        assignment (the kd-tree's density-adaptive depth; divide_rotate's
-        data-driven splits, build_tree.hpp:19-45).
-
-        EXACT rollup of the per-cell metadata (meta is ~n/leaf_target rows
-        and already persisted — ZERO passes over the points; levels deeper
-        than index_level come from the closed-form density formula over the
-        meta row's count + occupied bbox, see knn._assign_levels). The
-        assignment rule only asks "does the home cell DISQUALIFY this rung"
-        (estimate above the candidate target); cells at/below the target
-        behave exactly like absent rows in the left join, so the histogram
-        keeps ONLY dense cells — small and always broadcastable.
-
-        Computed once per index (eager localCheckpoint), memoized — the
-        memo keeps the FIRST call's target; later calls with a smaller
-        target may land one rung coarser (a performance nuance only:
-        kNN level choices never affect exactness, the ring bound does).
-        """
-        if self._ladder is not None:
-            return self._ladder
-        cfg = self.cfg
-        d, L = cfg.dims, cfg.index_level
-
-        coarse_levels = list(range(1, L + 1))
-        lvl_cells = F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(lvl).cast("int").alias("lvl"),
-                        (
-                            F.shiftrightunsigned("cell", d * (L - lvl))
-                            if lvl < L
-                            else F.col("cell")
-                        ).alias("c"),
-                    )
-                    for lvl in coarse_levels
-                ]
-            )
-        ).alias("s")
-        keep_floor = max(0, target // (3**d))
-        hist = (
-            self.meta.select(lvl_cells, "cnt")
-            .select(F.col("s.lvl").alias("lvl"), F.col("s.c").alias("c"), "cnt")
-            .groupBy("lvl", "c")
-            .agg(F.sum("cnt").alias("hcnt"))
-            .where(F.col("hcnt") > keep_floor)
-            .localCheckpoint(eager=True)
-        )
-        self._ladder = (hist, coarse_levels)
-        return self._ladder
 
     @classmethod
     def build(

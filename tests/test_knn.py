@@ -137,6 +137,24 @@ def test_knn_large_meta_fallback_adaptive(spark, cfg, index_varden):
     pd.testing.assert_frame_equal(got, want)
 
 
+def test_knn_large_meta_fixed_fine_level(spark, cfg, index_varden):
+    """A fixed level above index_level through the Spark-side resolution
+    path: fine shell cells survive as (qid, lvl, cell) behind the
+    leaf-occupancy semi-join and must match the memoized path exactly."""
+    from pkd_tree_spark.documents import load_points
+    from pkd_tree_spark.index import SpatialIndex
+
+    idx = SpatialIndex.build(load_points(spark, "/root/testdata/sf0.001", dims=2, dist="varden"), cfg)
+    object.__setattr__(idx, "_meta_np", {"cells": None})
+    queries = FX.knn_fixtures(16, 2)
+    lvl = cfg.index_level + 2
+    plans: list = []
+    got = _sorted(knn(idx, queries, k=10, level=lvl, adaptive=False, plan_log=plans))
+    want = _sorted(knn(index_varden, queries, k=10, level=lvl, adaptive=False))
+    pd.testing.assert_frame_equal(got, want)
+    assert any(lv > cfg.index_level for p in plans for lv in p["lvl_counts"]), plans
+
+
 def test_knn_pruned_duplicate_collapse(spark, cfg):
     """Dummy-leaf duplicate collapse (build_tree.hpp:183-186): on a
     duplicate-heavy lattice the pruned candidate table must engage, shrink
@@ -199,21 +217,80 @@ def test_knn_driver_loop_window_reduction_matches_raw(index_varden, monkeypatch)
     pd.testing.assert_frame_equal(got, want)
 
 
-def test_knn_spark_vs_driver_loop_equivalence(spark, cfg, index_uniform):
-    """The small-batch driver loop and the distributed loop must return the
-    same rows AND the same per-query (rounds, cand_rows) stats."""
+@pytest.mark.parametrize("which", ["uniform", "varden"])
+def test_knn_handoff_size_invariance(request, which, monkeypatch):
+    """The ring loop hands its pending set from the distributed rounds to
+    the driver rounds once it is at most DRIVER_CELLS_MAX_QUERIES: never
+    (0), mid-batch (8) or before round 1 (the default, for 32 queries).
+    Rows and per-query (rounds, cand_rows) must not depend on where."""
     import pkd_tree_spark.knn as K
 
+    idx = request.getfixturevalue(f"index_{which}")
     queries = FX.knn_fixtures(32, 2)
-    res_a, st_a = knn(index_uniform, queries, k=10, return_stats=True)
-    a, sa = _sorted(res_a), st_a.toPandas().sort_values("qid").reset_index(drop=True)
-    import unittest.mock as mock
+    entered: list[int] = []
+    real = K._knn_driver
 
-    with mock.patch.object(K, "DRIVER_CELLS_MAX_QUERIES", -1):
-        res_b, st_b = knn(index_uniform, queries, k=10, return_stats=True)
-        b, sb = _sorted(res_b), st_b.toPandas().sort_values("qid").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
-    pd.testing.assert_frame_equal(sa, sb)
+    def spy(index, st, carried, k, rnd0, *args):
+        entered.append(rnd0)
+        return real(index, st, carried, k, rnd0, *args)
+
+    monkeypatch.setattr(K, "_knn_driver", spy)
+    runs = {}
+    for size in (0, 8, K.DRIVER_CELLS_MAX_QUERIES):
+        entered.clear()
+        monkeypatch.setattr(K, "DRIVER_CELLS_MAX_QUERIES", size)
+        res, st = knn(idx, queries, k=10, return_stats=True)
+        runs[size] = (_sorted(res), st.toPandas().sort_values("qid").reset_index(drop=True), list(entered))
+    (a, sa, ea), (b, sb, eb), (c, sc, ec) = runs.values()
+    assert ea == [] and ec == [1]
+    assert len(eb) == 1 and eb[0] > 1, eb  # handed off mid-batch
+    assert len(a) == 32 * 10
+    for got, st in ((b, sb), (c, sc)):
+        pd.testing.assert_frame_equal(got, a)
+        pd.testing.assert_frame_equal(st, sa)
+
+
+def test_knn_leaves_no_broadcast(spark, index_varden, monkeypatch):
+    """Every broadcast the distributed rounds make is destroyed before kNN
+    returns, and consuming the returned frame makes none."""
+    from pyspark import SparkContext
+
+    import pkd_tree_spark.knn as K
+
+    made = []
+    real = SparkContext.broadcast
+
+    def recording(self, value):
+        b = real(self, value)
+        made.append(b)
+        return b
+
+    monkeypatch.setattr(SparkContext, "broadcast", recording)
+    monkeypatch.setattr(K, "DRIVER_CELLS_MAX_QUERIES", 0)
+    res, st = knn(index_varden, FX.knn_fixtures(16, 2), k=10, return_stats=True)
+    assert made  # the skeleton ships as a broadcast
+    assert not any(b._jbroadcast.isValid() for b in made)
+    assert len(res.toPandas()) == 16 * 10 and len(st.toPandas()) == 16
+    assert not any(b._jbroadcast.isValid() for b in made)
+
+
+def test_knn_driver_loop_jobs_per_round(spark, index_uniform):
+    """Job-count guard: on a warm index a pandas batch in the driver rounds
+    issues two Spark jobs per ring round at this shape (one coarse leaf
+    join per round; both jobs run under the round's candidate collect)."""
+    queries = FX.knn_fixtures(32, 2)
+    knn(index_uniform, queries, k=10)  # warm: skeleton memo, pruned-table decision
+    sc = spark.sparkContext
+    sc.setJobGroup("knn-job-guard", "kNN job-count guard")
+    try:
+        _, st = knn(index_uniform, queries, k=10, return_stats=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("knn-job-guard")
+    rounds = int(st.toPandas()["rounds"].max())
+    assert rounds == 2
+    assert len(jobs) == 2 * rounds
 
 
 def test_knn_cells_join_over_gate_equivalence(spark, cfg, index_varden):
