@@ -37,7 +37,6 @@ __all__ = [
     "SpatialIndex",
     "cover_regions",
     "leaf_scan_pred",
-    "morton_interval_pred",
     "scan_intervals",
     "tracked_local_checkpoint",
 ]
@@ -428,58 +427,43 @@ def expand_ranges(i0: np.ndarray, i1: np.ndarray) -> tuple[np.ndarray, np.ndarra
     return np.cumsum(steps), n
 
 
-def resolve_covers_np(meta: dict, sel: pd.DataFrame, d: int, L: int) -> pd.DataFrame:
+def _leaf_spans(meta: dict, sel: pd.DataFrame, d: int, L: int) -> tuple[np.ndarray, np.ndarray]:
+    """Each cover cell's occupied level-L leaves as the index range
+    [i0, i1) of the memoized meta's sorted cells (cells at a level are
+    contiguous runs of sorted leaf ids: two searchsorteds)."""
+    s = d * (L - sel["level"].to_numpy(dtype=np.int64))
+    c = sel["cell"].to_numpy(dtype=np.int64)
+    return np.searchsorted(meta["cells"], c << s), np.searchsorted(meta["cells"], (c + 1) << s)
+
+
+def resolve_covers_np(meta: dict, sel: pd.DataFrame, d: int, L: int, max_rows: int | None = None):
     """Resolve cover cells (qid, level<=L, cell, interior) to the OCCUPIED
-    level-L leaf cells beneath them — pure numpy over the memoized meta
-    (cells at a level are contiguous runs of sorted leaf ids: two
-    searchsorteds per level group). Output (qid, leaf, interior) feeds a
-    SINGLE-LEVEL equi-join against the points' leaf column: no points-side
-    explode, and resolution size is bounded by occupancy (<= points under
-    the covers), never by geometric cell counts."""
-    cells_sorted = meta["cells"]
-    frames = []
-    for lvl, grp in sel.groupby("level"):
-        s = d * (L - int(lvl))
-        c = grp["cell"].to_numpy(dtype=np.int64)
-        i0 = np.searchsorted(cells_sorted, c << s)
-        i1 = np.searchsorted(cells_sorted, (c + 1) << s)
-        idx, counts = expand_ranges(i0, i1)
-        if idx.size == 0:
-            continue
-        frames.append(
-            pd.DataFrame(
-                {
-                    "qid": np.repeat(grp["qid"].to_numpy(dtype=np.int64), counts),
-                    "leaf": cells_sorted[idx],
-                    "interior": np.repeat(grp["interior"].to_numpy(dtype=bool), counts),
-                }
-            )
-        )
-    if not frames:
-        return pd.DataFrame(
-            {"qid": pd.Series(dtype="int64"), "leaf": pd.Series(dtype="int64"),
-             "interior": pd.Series(dtype="bool")}
-        )
-    return pd.concat(frames, ignore_index=True)
+    level-L leaf cells beneath them — pure numpy over the memoized meta.
+    Output (qid, leaf, interior) feeds a SINGLE-LEVEL equi-join against the
+    points' leaf column: no points-side explode, and resolution size is
+    bounded by occupancy (<= points under the covers), never by geometric
+    cell counts. Returns None, before expanding any row, when the
+    resolution would exceed ``max_rows``."""
+    i0, i1 = _leaf_spans(meta, sel, d, L)
+    if max_rows is not None and int((i1 - i0).sum()) > max_rows:
+        return None
+    idx, counts = expand_ranges(i0, i1)
+    return pd.DataFrame(
+        {
+            "qid": np.repeat(sel["qid"].to_numpy(dtype=np.int64), counts),
+            "leaf": meta["cells"][idx],
+            "interior": np.repeat(sel["interior"].to_numpy(dtype=bool), counts),
+        }
+    )
 
 
 def interior_counts_np(meta: dict, sel: pd.DataFrame, d: int, L: int) -> pd.DataFrame:
     """Per-qid SUM of metadata counts under fully-contained cover cells —
     the `within_box -> return T->size` shortcut (range_count.hpp:79-80)
-    evaluated ENTIRELY on the driver from the memoized prefix sums: the
-    interior branch of a range count costs zero Spark jobs."""
-    cells_sorted, cum = meta["cells"], meta["cum"]
-    qids, sums = [], []
-    for lvl, grp in sel.groupby("level"):
-        s = d * (L - int(lvl))
-        c = grp["cell"].to_numpy(dtype=np.int64)
-        i0 = np.searchsorted(cells_sorted, c << s)
-        i1 = np.searchsorted(cells_sorted, (c + 1) << s)
-        qids.append(grp["qid"].to_numpy(dtype=np.int64))
-        sums.append(cum[i1] - cum[i0])
-    if not qids:
-        return pd.DataFrame({"qid": pd.Series(dtype="int64"), "cnt": pd.Series(dtype="int64")})
-    out = pd.DataFrame({"qid": np.concatenate(qids), "cnt": np.concatenate(sums)})
+    evaluated from the memoized prefix sums alone: the interior branch of a
+    range count touches no point row and runs no Spark job."""
+    i0, i1 = _leaf_spans(meta, sel, d, L)
+    out = pd.DataFrame({"qid": sel["qid"].to_numpy(dtype=np.int64), "cnt": meta["cum"][i1] - meta["cum"][i0]})
     out = out.groupby("qid", as_index=False)["cnt"].sum()
     return out[out["cnt"] > 0].astype({"qid": "int64", "cnt": "int64"})
 
@@ -531,17 +515,6 @@ def _intervals_pred(starts: np.ndarray, ends: np.ndarray, shift: int) -> Column:
     return F.expr(" OR ".join(terms))
 
 
-def morton_interval_pred(
-    leaves: np.ndarray, shift: int, max_intervals: int = SCAN_PRED_MAX_INTERVALS
-) -> Column | None:
-    """OR-of-BETWEEN predicate on ``morton`` covering the given level-L
-    leaf cells, one term per range of ``morton_intervals``. Unconditional:
-    read paths go through ``leaf_scan_pred``, which decides whether the
-    predicate is worth emitting at all."""
-    starts, ends = morton_intervals(leaves, max_intervals)
-    return _intervals_pred(starts, ends, shift) if starts.size else None
-
-
 def scan_intervals(meta: dict | None, leaves: np.ndarray) -> tuple[np.ndarray, np.ndarray] | None:
     """The scan pre-filter decision: the capped leaf ranges to filter a
     points scan by, or None when the scan should read the whole table.
@@ -574,15 +547,19 @@ def leaf_scan_pred(meta: dict | None, leaves: np.ndarray, shift: int) -> Column 
 
 
 class _Region:
-    """Geometry predicates for cover_regions. ``classify_batch`` takes the
-    per-cell bounds arrays lo, hi of shape (m, d) and returns an (m,) int
-    array of DISJOINT/PARTIAL/CONTAINED — fully vectorized, the cover
-    descent never touches cells one by one."""
+    """One query region for cover_regions. Each region class supplies
+    ``params(regions)``, its regions' parameters stacked into per-query
+    arrays, and ``classify(params, qsel, lo, hi)``: frontier cells with
+    per-cell bounds lo, hi of shape (m, d), each against its own query's
+    region (``qsel`` indexes the per-query arrays), as an (m,) array of
+    DISJOINT/PARTIAL/CONTAINED — fully vectorized, the cover descent never
+    touches cells or queries one by one."""
 
     DISJOINT, PARTIAL, CONTAINED = 0, 1, 2
 
-    def classify_batch(self, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:  # pragma: no cover
-        raise NotImplementedError
+
+def _verdict(disjoint: np.ndarray, contained: np.ndarray) -> np.ndarray:
+    return np.where(disjoint, _Region.DISJOINT, np.where(contained, _Region.CONTAINED, _Region.PARTIAL))
 
 
 class BoxRegion(_Region):
@@ -590,10 +567,16 @@ class BoxRegion(_Region):
         self.qlo = np.asarray(qlo, dtype=np.int64)
         self.qhi = np.asarray(qhi, dtype=np.int64)
 
-    def classify_batch(self, lo, hi):
-        disjoint = ((hi < self.qlo) | (lo > self.qhi)).any(axis=1)
-        contained = ((lo >= self.qlo) & (hi <= self.qhi)).all(axis=1)
-        return np.where(disjoint, self.DISJOINT, np.where(contained, self.CONTAINED, self.PARTIAL))
+    @staticmethod
+    def params(regions):
+        return np.stack([r.qlo for r in regions]), np.stack([r.qhi for r in regions])
+
+    @staticmethod
+    def classify(p, qsel, lo, hi):
+        qlo, qhi = p[0][qsel], p[1][qsel]
+        disjoint = ((hi < qlo) | (lo > qhi)).any(axis=1)
+        contained = ((lo >= qlo) & (hi <= qhi)).all(axis=1)
+        return _verdict(disjoint, contained)
 
 
 class BallRegion(_Region):
@@ -604,12 +587,17 @@ class BallRegion(_Region):
         self.c = np.asarray(center, dtype=np.int64)
         self.r2 = int(r2)
 
-    def classify_batch(self, lo, hi):
-        nearest = np.clip(self.c, lo, hi)
-        dmin2 = ((nearest - self.c) ** 2).sum(axis=1)
-        farthest = np.where(np.abs(lo - self.c) > np.abs(hi - self.c), lo, hi)
-        dmax2 = ((farthest - self.c) ** 2).sum(axis=1)
-        return np.where(dmin2 > self.r2, self.DISJOINT, np.where(dmax2 <= self.r2, self.CONTAINED, self.PARTIAL))
+    @staticmethod
+    def params(regions):
+        return np.stack([r.c for r in regions]), np.array([r.r2 for r in regions], dtype=np.int64)
+
+    @staticmethod
+    def classify(p, qsel, lo, hi):
+        c, r2 = p[0][qsel], p[1][qsel]
+        dmin2 = ((np.clip(c, lo, hi) - c) ** 2).sum(axis=1)
+        farthest = np.where(np.abs(lo - c) > np.abs(hi - c), lo, hi)
+        dmax2 = ((farthest - c) ** 2).sum(axis=1)
+        return _verdict(dmin2 > r2, dmax2 <= r2)
 
 
 class ConvexPolygonRegion(_Region):
@@ -617,60 +605,78 @@ class ConvexPolygonRegion(_Region):
 
     def __init__(self, verts: np.ndarray):
         self.v = np.asarray(verts, dtype=np.int64)  # (e, 2)
-        self.e = np.roll(self.v, -1, axis=0) - self.v  # edges
 
-    def classify_batch(self, lo, hi):
-        m = lo.shape[0]
-        # corners: (m, 4, 2)
-        corners = np.stack(
-            [
-                np.stack([lo[:, 0], lo[:, 1]], axis=1),
-                np.stack([lo[:, 0], hi[:, 1]], axis=1),
-                np.stack([hi[:, 0], lo[:, 1]], axis=1),
-                np.stack([hi[:, 0], hi[:, 1]], axis=1),
-            ],
-            axis=1,
-        )
-        # cross((v1-v0),(p-v0)): (e, m, 4)
-        rel = corners[None, :, :, :] - self.v[:, None, None, :]
-        cross = self.e[:, None, None, 0] * rel[:, :, :, 1] - self.e[:, None, None, 1] * rel[:, :, :, 0]
-        contained = (cross >= 0).all(axis=(0, 2))
-        disjoint = (cross < 0).all(axis=2).any(axis=0)  # box fully outside one edge
-        # polygon-box SAT on the box axes
-        vx, vy = self.v[:, 0], self.v[:, 1]
-        disjoint |= (vx[None, :] < lo[:, [0]]).all(axis=1) | (vx[None, :] > hi[:, [0]]).all(axis=1)
-        disjoint |= (vy[None, :] < lo[:, [1]]).all(axis=1) | (vy[None, :] > hi[:, [1]]).all(axis=1)
-        return np.where(disjoint, self.DISJOINT, np.where(contained, self.CONTAINED, self.PARTIAL))
+    @staticmethod
+    def params(regions):
+        # pad every polygon to the longest by repeating its last vertex: the
+        # zero-length edge this adds has a zero cross product with every
+        # corner (neither the contained nor the outside-one-edge test moves)
+        # and a repeated vertex leaves the vertex separating-axis tests as is
+        e = max(len(r.v) for r in regions)
+        v = np.stack([np.concatenate([r.v, np.repeat(r.v[-1:], e - len(r.v), axis=0)]) for r in regions])
+        return v[:, :, 0], v[:, :, 1]
+
+    @staticmethod
+    def classify(p, qsel, lo, hi):
+        vx, vy = p
+        cx = np.stack([lo[:, 0], lo[:, 0], hi[:, 0], hi[:, 0]], axis=1)  # (m, 4) cell corners
+        cy = np.stack([lo[:, 1], hi[:, 1], lo[:, 1], hi[:, 1]], axis=1)
+        e = vx.shape[1]
+        contained = np.ones(len(qsel), dtype=bool)
+        disjoint = np.zeros(len(qsel), dtype=bool)
+        # box-axis SAT: every vertex left of / right of / below / above the cell
+        sat = np.ones((4, len(qsel)), dtype=bool)
+        for j in range(e):  # one edge of every query at a time: O(m) memory
+            ax, ay = vx[qsel, j], vy[qsel, j]
+            ex, ey = vx[qsel, (j + 1) % e] - ax, vy[qsel, (j + 1) % e] - ay
+            cross = ex[:, None] * (cy - ay[:, None]) - ey[:, None] * (cx - ax[:, None])
+            contained &= (cross >= 0).all(axis=1)
+            disjoint |= (cross < 0).all(axis=1)  # cell fully outside this edge
+            sat &= np.stack([ax < lo[:, 0], ax > hi[:, 0], ay < lo[:, 1], ay > hi[:, 1]])
+        return _verdict(disjoint | sat.any(axis=0), contained)
 
 
-def _cover_regions_vec(
-    qids: np.ndarray,
-    classify,
-    d: int,
-    L: int,
-    cb: int,
-    budget: int,
+def cover_regions(
+    regions: list[tuple[int, _Region]],
+    cfg: EngineConfig = DEFAULT_CONFIG,
+    budget: int = 512,
 ) -> pd.DataFrame:
-    """Level-synchronous cover descent vectorized ACROSS QUERIES: one
-    frontier array for the whole batch, one classify call per level.
-    ``classify(qsel, lo, hi)`` classifies frontier rows against their own
-    query's region (qsel indexes the per-query parameter arrays). Emits
-    exactly the same cover as the per-query loop: contained cells emit as
-    interior; a query stops (emitting its partial cells as boundary) at
-    level L or when emitted + partials*2^d would exceed the budget."""
+    """Hierarchical cell cover per query region (data-independent), for a
+    batch of regions of one class.
+
+    Returns DataFrame columns (qid, level, cell, interior) where cells are
+    pairwise disjoint per qid; ``interior`` cells are fully inside the
+    region (answered from metadata counts alone — the `within_box ->
+    T->size` shortcut, range_count.hpp:79-80), boundary cells need an exact
+    row filter.
+
+    Level-synchronous descent vectorized ACROSS QUERIES: one frontier array
+    for the whole batch, one classify call per level (the per-query loop
+    was 0.6s of driver time per 1000-box bench call). Contained cells emit
+    as interior; a query stops, emitting its partial cells as boundary, at
+    level L or when emitted + partials*2^d would exceed ``budget`` cells
+    (correct, just scans a few more rows). Runs on the driver for small
+    batches and inside mapInPandas tasks for large ones.
+    """
+    d, L, cb = cfg.dims, cfg.index_level, cfg.coord_bits
+    kind = type(regions[0][1]) if regions else None
+    if any(type(r) is not kind for _, r in regions):
+        raise ValueError("cover_regions takes one region class per batch")
+    qids = np.array([q for q, _ in regions], dtype=np.int64)
+    params = kind.params([r for _, r in regions]) if regions else None
     nq = len(qids)
     f_q = np.arange(nq, dtype=np.int64)
     f_c = np.zeros(nq, dtype=np.int64)
     emitted = np.zeros(nq, dtype=np.int64)
     child = np.arange(1 << d, dtype=np.int64)
-    q_out, l_out, c_out, i_out = [], [], [], []
+    # seeded with typed empties: an empty cover keeps the column dtypes
+    q_out, l_out, c_out, i_out = [qids[:0]], [np.zeros(0, np.int32)], [f_c[:0]], [np.zeros(0, bool)]
 
     def emit(qsel: np.ndarray, level: int, cells: np.ndarray, interior: bool):
-        if cells.size:
-            q_out.append(qids[qsel])
-            l_out.append(np.full(cells.size, level, dtype=np.int32))
-            c_out.append(cells)
-            i_out.append(np.full(cells.size, interior, dtype=bool))
+        q_out.append(qids[qsel])
+        l_out.append(np.full(cells.size, level, dtype=np.int32))
+        c_out.append(cells)
+        i_out.append(np.full(cells.size, interior, dtype=bool))
 
     for level in range(L + 1):
         if not len(f_c):
@@ -679,127 +685,20 @@ def _cover_regions_vec(
         w = 1 << (cb - level)
         lo = g * w
         hi = lo + (w - 1)
-        cls = classify(f_q, lo, hi)
+        cls = kind.classify(params, f_q, lo, hi)
         cont = cls == _Region.CONTAINED
         part = cls == _Region.PARTIAL
         emit(f_q[cont], level, f_c[cont], True)
         emitted += np.bincount(f_q[cont], minlength=nq)
-        pcnt = np.bincount(f_q[part], minlength=nq)
         if level == L:
             stop = np.ones(nq, dtype=bool)
         else:
-            stop = emitted + pcnt * (1 << d) > budget
+            stop = emitted + np.bincount(f_q[part], minlength=nq) * (1 << d) > budget
         pm = part & stop[f_q]
         emit(f_q[pm], level, f_c[pm], False)
         cm = part & ~stop[f_q]
         f_q = np.repeat(f_q[cm], 1 << d)
         f_c = ((f_c[cm][:, None] << d) | child[None, :]).reshape(-1)
-    if not q_out:
-        return pd.DataFrame(columns=["qid", "level", "cell", "interior"]).astype(
-            {"qid": "int64", "level": "int32", "cell": "int64", "interior": "bool"}
-        )
-    return pd.DataFrame(
-        {
-            "qid": np.concatenate(q_out),
-            "level": np.concatenate(l_out),
-            "cell": np.concatenate(c_out),
-            "interior": np.concatenate(i_out),
-        }
-    )
-
-
-def cover_regions(
-    regions: list[tuple[int, _Region]],
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    budget: int = 512,
-) -> pd.DataFrame:
-    """Hierarchical cell cover per query region (data-independent).
-
-    Returns DataFrame columns (qid, level, cell, interior) where cells are
-    pairwise disjoint per qid; ``interior`` cells are fully inside the
-    region (answered from metadata counts alone — the `within_box ->
-    T->size` shortcut, range_count.hpp:79-80), boundary cells need an exact
-    row filter. Level-synchronous quadtree descent, vectorized over the
-    whole frontier per query, with a budget: once the emitted+frontier size
-    would exceed ``budget`` cells, remaining PARTIAL cells are emitted as
-    boundary at their current level (correct, just scans a few more rows).
-
-    At cluster scale with millions of queries this same function runs
-    inside mapInPandas over the query DataFrame (it is data-independent and
-    embarrassingly parallel per query); driver-side suffices for the
-    benchmark query counts.
-    """
-    d, L, cb = cfg.dims, cfg.index_level, cfg.coord_bits
-
-    # homogeneous batches take the across-queries vectorized descent (one
-    # classify per level for the whole batch — the per-query loop was
-    # 0.6s of driver time per 1000-box bench call, and runs inside
-    # mapInPandas tasks for distributed covers at scale)
-    if regions and all(isinstance(r, BoxRegion) for _, r in regions):
-        qids = np.array([q for q, _ in regions], dtype=np.int64)
-        qlo = np.stack([r.qlo for _, r in regions])
-        qhi = np.stack([r.qhi for _, r in regions])
-
-        def _classify_boxes(qsel, lo, hi):
-            disjoint = ((hi < qlo[qsel]) | (lo > qhi[qsel])).any(axis=1)
-            contained = ((lo >= qlo[qsel]) & (hi <= qhi[qsel])).all(axis=1)
-            return np.where(
-                disjoint, _Region.DISJOINT, np.where(contained, _Region.CONTAINED, _Region.PARTIAL)
-            )
-
-        return _cover_regions_vec(qids, _classify_boxes, d, L, cb, budget)
-    if regions and all(isinstance(r, BallRegion) for _, r in regions):
-        qids = np.array([q for q, _ in regions], dtype=np.int64)
-        qc = np.stack([r.c for _, r in regions])
-        qr2 = np.array([r.r2 for _, r in regions], dtype=np.int64)
-
-        def _classify_balls(qsel, lo, hi):
-            c = qc[qsel]
-            nearest = np.clip(c, lo, hi)
-            dmin2 = ((nearest - c) ** 2).sum(axis=1)
-            farthest = np.where(np.abs(lo - c) > np.abs(hi - c), lo, hi)
-            dmax2 = ((farthest - c) ** 2).sum(axis=1)
-            r2 = qr2[qsel]
-            return np.where(
-                dmin2 > r2, _Region.DISJOINT, np.where(dmax2 <= r2, _Region.CONTAINED, _Region.PARTIAL)
-            )
-
-        return _cover_regions_vec(qids, _classify_balls, d, L, cb, budget)
-
-    child_offsets = np.arange(1 << d, dtype=np.int64)
-    q_out, l_out, c_out, i_out = [], [], [], []
-
-    def emit(qid: int, level: int, cells: np.ndarray, interior: bool):
-        if cells.size == 0:
-            return
-        q_out.append(np.full(cells.size, qid, dtype=np.int64))
-        l_out.append(np.full(cells.size, level, dtype=np.int32))
-        c_out.append(cells)
-        i_out.append(np.full(cells.size, interior, dtype=bool))
-
-    for qid, region in regions:
-        cells = np.zeros(1, dtype=np.int64)  # the level-0 root cell
-        emitted = 0
-        for level in range(L + 1):
-            if cells.size == 0:
-                break
-            g = morton_decode_np(cells, d, bits=level) if level else np.zeros((1, d), dtype=np.int64)
-            w = 1 << (cb - level)
-            lo = g * w
-            hi = lo + (w - 1)
-            cls = region.classify_batch(lo, hi)
-            cont = cells[cls == _Region.CONTAINED]
-            emit(qid, level, cont, True)
-            emitted += cont.size
-            partial = cells[cls == _Region.PARTIAL]
-            if level == L or emitted + partial.size * (1 << d) > budget:
-                emit(qid, level, partial, False)
-                break
-            cells = ((partial[:, None] << d) | child_offsets[None, :]).reshape(-1)
-    if not q_out:
-        return pd.DataFrame(columns=["qid", "level", "cell", "interior"]).astype(
-            {"qid": "int64", "level": "int32", "cell": "int64", "interior": "bool"}
-        )
     return pd.DataFrame(
         {
             "qid": np.concatenate(q_out),

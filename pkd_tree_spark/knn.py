@@ -348,8 +348,8 @@ def _exh_cond(d: int):
 
 def _resolve_cells_spark(index, cells: DataFrame, d: int, L: int) -> DataFrame:
     """Spark-side shell resolution for indexes whose meta exceeds the
-    driver memo (META_MEMO_CELLS) — the kNN mirror of the general path in
-    ranges._boundary_candidates (the reference routes through its skeleton
+    driver memo (META_MEMO_CELLS) — the kNN mirror of the over-memo path in
+    ranges._resolve (the reference routes through its skeleton
     at every n, inner_tree.hpp:42-55; r4 instead fell back to the full
     points explode here, re-creating the r3 scale-killer exactly at the
     scale the memo gives up).

@@ -6,30 +6,43 @@ Reference operators reproduced (SURVEY.md §2.4):
   R4/R5 range report  (query_op/range_query.hpp)
   + point-in-convex-polygon (north-star extension; no reference analog).
 
-Physical plan per query batch (all JVM-side after the driver computes the
-data-independent cell covers):
+Box, ball and convex polygon differ only in their region class (the cover
+classifier, index.py) and their exact row predicate; one count plan and
+one report plan serve all three. Per query batch:
 
-  covers (small, broadcast)         meta (per-cell counts)      points
-      |  interior cells  \____________/                           |
-      |                       per-level prefix equi-join          |
-      |                       -> SUM(cnt)  [no data touched]      |
-      |  boundary cells  ________________________________________/
-      |                       per-level cell equi-join (broadcast)
-      |                       -> exact predicate -> COUNT/rows
-      +-> union -> groupBy(qid)
+  query frame --(cover_regions: data-independent cell cover per query)
+      |   cells (qid, level, cell, interior), disjoint per qid
+      |
+      +-- resolve against the skeleton (SpatialIndex.meta_np):
+      |     interior cells -> SUM of per-cell counts      [no row touched]
+      |     boundary cells -> occupied level-L leaves (qid, leaf, interior)
+      |
+      +-- points (ONE scan, Morton pre-filter when it pays, one derived
+            leaf column) == resolved leaves  [broadcast when it fits]
+            -> exact predicate -> COUNT per qid / rows
+  count: interior sums UNION boundary counts -> SUM per qid (covers are
+  disjoint per qid, so nothing double counts); report: interior-cell rows
+  skip the predicate (the bulk-flatten path, range_query.hpp:99-102).
 
 The interior branch is the reference's containment short-circuit
-(`within_box -> return T->size`, range_count.hpp:79-80) expressed as
-partition-pruned metadata aggregation; the boundary branch touches only
-perimeter cells. Covers are disjoint per qid, so the union never double
-counts.
+(`within_box -> return T->size`, range_count.hpp:79-80).
+
+Where resolution runs (`_resolve`, the one place that decides): batches
+of at most DISTRIBUTED_COVER_THRESHOLD queries whose resolution fits
+RESOLVED_BCAST_ROWS resolve on the driver — zero Spark jobs before the
+final query. Every other batch takes one mapInPandas pass over the query
+frame that computes covers, interior sums and resolved leaves inside the
+executors against a broadcast of the skeleton (covers are never
+collected). A meta past META_MEMO_CELLS has no skeleton: the same pass
+emits covers, which resolve by a meta-side explode join instead.
 """
 
 from __future__ import annotations
 
-import numpy as np
+from functools import partial
+
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .config import EngineConfig
@@ -45,8 +58,6 @@ from .index import (
 )
 
 __all__ = [
-    "box_queries_df",
-    "ball_queries_df",
     "range_count_boxes",
     "range_count_balls",
     "range_report_boxes",
@@ -56,24 +67,14 @@ __all__ = [
     "range_cover_stats",
 ]
 
-
-# ---------------------------------------------------------------------------
-# query-set plumbing
-# ---------------------------------------------------------------------------
-
-def box_queries_df(spark: SparkSession, boxes: pd.DataFrame) -> DataFrame:
-    """boxes: pandas with columns qid, lo0..lo{d-1}, hi0..hi{d-1} (int64)."""
-    return spark.createDataFrame(boxes)
-
-
-def ball_queries_df(spark: SparkSession, balls: pd.DataFrame) -> DataFrame:
-    """balls: pandas with columns qid, c0..c{d-1}, r2 (int64)."""
-    return spark.createDataFrame(balls)
-
-
+# query batches above this size compute and resolve their covers in the
+# executors instead of on the driver
 DISTRIBUTED_COVER_THRESHOLD = 4000
 # resolved (qid, leaf, interior) rows are ~24B: 5M rows ≈ 120MB broadcast
 RESOLVED_BCAST_ROWS = 5_000_000
+
+_COVER_SCHEMA = "qid long, level int, cell long, interior boolean"
+_RESOLVED_SCHEMA = "qid long, leaf long, interior boolean, cnt long"
 
 
 def _budget(cfg: EngineConfig, budget: int | None) -> int:
@@ -90,144 +91,156 @@ def _budget(cfg: EngineConfig, budget: int | None) -> int:
     return 4096 if cfg.dims == 3 else 512
 
 
-def _covers_distributed(spark, qpd: pd.DataFrame, kind: str, cfg, budget: int) -> DataFrame:
-    """Compute cell covers INSIDE executors (mapInPandas over the query set)
-    and keep them there: the result is a DataFrame that feeds the cell
-    joins directly — covers are NEVER collected to the driver (10^7 queries
-    x up-to-512 cells would not fit). The cover is data-independent and
-    embarrassingly parallel per query; driver-side stays fine for hundreds
-    of queries (the pandas branch below)."""
-    d = cfg.dims
+# ---------------------------------------------------------------------------
+# region kinds: query frame -> regions, exact row predicate
+# ---------------------------------------------------------------------------
 
-    def gen(batches):
-        from pkd_tree_spark.index import BallRegion, BoxRegion, cover_regions
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if kind == "box":
-                regions = [
-                    (int(r.qid), BoxRegion([getattr(r, f"lo{j}") for j in range(d)],
-                                           [getattr(r, f"hi{j}") for j in range(d)]))
-                    for r in pdf.itertuples()
-                ]
-            else:
-                regions = [
-                    (int(r.qid), BallRegion([getattr(r, f"c{j}") for j in range(d)], int(r.r2)))
-                    for r in pdf.itertuples()
-                ]
-            yield cover_regions(regions, cfg, budget)
-
-    qdf = spark.createDataFrame(qpd).repartition(cfg.partitions)
-    # eager localCheckpoint: computed once, reused by every per-level branch
-    # without re-running the cover generation (and no persist leak)
-    return qdf.mapInPandas(gen, schema="qid long, level int, cell long, interior boolean").localCheckpoint(
-        eager=True
-    )
-
-
-def _covers_for_boxes(spark, boxes: pd.DataFrame, cfg, budget: int):
-    if len(boxes) > DISTRIBUTED_COVER_THRESHOLD:
-        return _covers_distributed(spark, boxes, "box", cfg, budget)
-    return cover_regions(_box_regions(boxes, cfg.dims), cfg, budget)
-
-
-def _covers_for_balls(spark, balls: pd.DataFrame, cfg, budget: int):
-    if len(balls) > DISTRIBUTED_COVER_THRESHOLD:
-        return _covers_distributed(spark, balls, "ball", cfg, budget)
-    return cover_regions(_ball_regions(balls, cfg.dims), cfg, budget)
-
-
-def _cover_levels(covers) -> list[int]:
-    """Distinct cover levels — from the pandas frame directly, or one tiny
-    distinct-collect (<= index_level+1 rows, independent of query count)."""
-    if isinstance(covers, pd.DataFrame):
-        return sorted(int(v) for v in covers["level"].unique())
-    return sorted(r["level"] for r in covers.select("level").distinct().collect())
-
-
-def _cover_slice(spark, covers, interior: bool | None):
-    """All cover cells (qid, lvl, c, interior) as ONE DataFrame, or None if
-    provably empty. pandas covers (small) come back broadcast-hinted;
-    DataFrame covers are left unhinted — the cell join shuffles and AQE
-    picks the strategy (the large-batch path)."""
-    if isinstance(covers, pd.DataFrame):
-        sel = covers
-        if interior is not None:
-            sel = sel[sel.interior] if interior else sel[~sel.interior]
-        if sel.empty:
-            return None
-        df = spark.createDataFrame(sel[["qid", "level", "cell", "interior"]])
-        return F.broadcast(
-            df.select("qid", F.col("level").alias("lvl"), F.col("cell").alias("c"), "interior")
-        )
-    sel = covers
-    if interior is not None:
-        sel = sel.where(F.col("interior") == interior)
-    return sel.select("qid", F.col("level").alias("lvl"), F.col("cell").alias("c"), "interior")
-
-
-def _box_regions(boxes: pd.DataFrame, d: int):
+def _regions(kind: str, q: pd.DataFrame, d: int) -> list:
+    """(qid, Region) per row of a query frame: boxes carry lo0..hi{d-1},
+    balls c0..c{d-1} and r2, polygons CCW vertex lists vx, vy (d=2)."""
+    qid = q["qid"].tolist()
+    if kind == "box":
+        lo = q[[f"lo{j}" for j in range(d)]].to_numpy(dtype="int64")
+        hi = q[[f"hi{j}" for j in range(d)]].to_numpy(dtype="int64")
+        return [(i, BoxRegion(a, b)) for i, a, b in zip(qid, lo, hi)]
+    if kind == "ball":
+        c = q[[f"c{j}" for j in range(d)]].to_numpy(dtype="int64")
+        return [(i, BallRegion(a, r2)) for i, a, r2 in zip(qid, c, q["r2"].tolist())]
     return [
-        (int(r.qid), BoxRegion([getattr(r, f"lo{j}") for j in range(d)], [getattr(r, f"hi{j}") for j in range(d)]))
-        for r in boxes.itertuples()
+        (i, ConvexPolygonRegion(list(zip(vx, vy)))) for i, vx, vy in zip(qid, q["vx"], q["vy"])
     ]
 
 
-def _ball_regions(balls: pd.DataFrame, d: int):
-    return [
-        (int(r.qid), BallRegion([getattr(r, f"c{j}") for j in range(d)], int(r.r2)))
-        for r in balls.itertuples()
-    ]
-
-
-def _and_all(preds: list[Column]) -> Column:
-    out = preds[0]
-    for p in preds[1:]:
-        out = out & p
-    return out
-
-
-def _ball_pred(d: int) -> Column:
-    dist2 = None
-    for j in range(d):
-        t = (F.col(f"x{j}") - F.col(f"c{j}")) * (F.col(f"x{j}") - F.col(f"c{j}"))
-        dist2 = t if dist2 is None else dist2 + t
-    return dist2 <= F.col("r2")
-
-
-def _polygon_pred() -> Column:
-    """Point (x0,x1) inside CCW convex polygon (vx, vy arrays), d=2.
-
-    Higher-order function (F.forall) — stays JVM-side, no Python in the
-    row path. Cross products are exact int64 (coords < 2^20).
-    """
+def _exact_pred(kind: str, d: int) -> Column:
+    x = [F.col(f"x{j}") for j in range(d)]
+    if kind == "box":
+        out = x[0].between(F.col("lo0"), F.col("hi0"))
+        for j in range(1, d):
+            out = out & x[j].between(F.col(f"lo{j}"), F.col(f"hi{j}"))
+        return out
+    if kind == "ball":  # exact squared-int arithmetic
+        dist2 = (x[0] - F.col("c0")) * (x[0] - F.col("c0"))
+        for j in range(1, d):
+            dist2 = dist2 + (x[j] - F.col(f"c{j}")) * (x[j] - F.col(f"c{j}"))
+        return dist2 <= F.col("r2")
+    # point inside the CCW convex polygon (vx, vy arrays): a higher-order
+    # function (F.forall) stays JVM-side, no Python in the row path; the
+    # cross products are exact int64 (coords < 2^20)
     n = F.size("vx")
 
     def edge_ok(i: Column) -> Column:
         j = (i + F.lit(1)) % n
         ex = F.element_at("vx", j + 1) - F.element_at("vx", i + 1)
         ey = F.element_at("vy", j + 1) - F.element_at("vy", i + 1)
-        px = F.col("x0") - F.element_at("vx", i + 1)
-        py = F.col("x1") - F.element_at("vy", i + 1)
+        px = x[0] - F.element_at("vx", i + 1)
+        py = x[1] - F.element_at("vy", i + 1)
         return (ex * py - ey * px) >= 0
 
     return F.forall(F.sequence(F.lit(0), n - 1), edge_ok)
 
 
 # ---------------------------------------------------------------------------
-# core two-branch plan
+# cover resolution: driver or executors, decided in _resolve
 # ---------------------------------------------------------------------------
+
+def _executor_pass(index: SpatialIndex, kind: str, qdf: DataFrame, budget: int, fn, schema: str,
+                   meta: dict | None = None) -> DataFrame:
+    """``fn(covers, meta)`` over every batch of the query frame inside
+    mapInPandas: covers are computed in the executors and never collected.
+    The skeleton ships once as a broadcast; the output is checkpointed, so
+    the broadcast is destroyed before this returns."""
+    spark = index.points.sparkSession
+    cfg = index.cfg
+    bc = spark.sparkContext.broadcast(meta) if meta is not None else None
+
+    def gen(batches):
+        m = bc.value if bc is not None else None
+        for pdf in batches:
+            if len(pdf):
+                yield fn(cover_regions(_regions(kind, pdf, cfg.dims), cfg, budget), m)
+
+    try:
+        return qdf.mapInPandas(gen, schema=schema).localCheckpoint(eager=True)
+    finally:
+        if bc is not None:
+            bc.destroy()
+
+
+def _resolve_batch(cov: pd.DataFrame, meta: dict, d: int, L: int, count: bool) -> pd.DataFrame:
+    """One executor batch resolved against the skeleton: (qid, leaf,
+    interior, cnt). A count's interior cells arrive pre-summed, one row
+    per qid with leaf -1; every resolved leaf row carries cnt 0."""
+    if not count:
+        return resolve_covers_np(meta, cov, d, L).assign(cnt=0)
+    res = resolve_covers_np(meta, cov[~cov.interior], d, L).assign(cnt=0)
+    inter = interior_counts_np(meta, cov[cov.interior], d, L).assign(leaf=-1, interior=True)
+    return pd.concat([res, inter[res.columns]], ignore_index=True)
+
+
+def _resolve(index: SpatialIndex, kind: str, q: pd.DataFrame, qdf: DataFrame, budget: int, count: bool):
+    """(interior sums (qid, cnt) | None, resolved (qid, leaf, interior) |
+    None, Morton scan pre-filter | None) for a query batch. A count
+    resolves only its boundary cells; a report resolves every cover cell."""
+    spark = index.points.sparkSession
+    cfg = index.cfg
+    d, L = cfg.dims, cfg.index_level
+    mnp = index.meta_np()
+    if mnp is not None and len(q) <= DISTRIBUTED_COVER_THRESHOLD:
+        cov = cover_regions(_regions(kind, q, d), cfg, budget)
+        res = resolve_covers_np(mnp, cov[~cov.interior] if count else cov, d, L, RESOLVED_BCAST_ROWS)
+        if res is not None:
+            inter = interior_counts_np(mnp, cov[cov.interior], d, L) if count else None
+            pred = leaf_scan_pred(mnp, res["leaf"].to_numpy(), d * (cfg.grid_bits - L))
+            return (
+                None if inter is None or inter.empty else spark.createDataFrame(inter),
+                None if res.empty else F.broadcast(spark.createDataFrame(res)),
+                pred,
+            )
+        # region-spanning covers can resolve to ~n_queries x occupied leaves:
+        # too big for a driver frame and a broadcast, so the executors
+        # resolve them and the gate below measures the result
+    if mnp is not None:
+        out = _executor_pass(index, kind, qdf, budget, partial(_resolve_batch, d=d, L=L, count=count),
+                             _RESOLVED_SCHEMA, mnp)
+    else:
+        # no skeleton (meta past META_MEMO_CELLS): resolve the executor
+        # covers by a meta-side join, one row per (qid, leaf) with the
+        # leaf's count, so interior sums aggregate downstream
+        cov = _executor_pass(index, kind, qdf, budget, lambda c, _m: c, _COVER_SCHEMA)
+        levels = sorted(r["level"] for r in cov.select("level").distinct().collect())
+        m = _with_lvl_cell(index.meta.select("cell", "cnt"), "cell", levels, d, L).select(
+            "lvl", "c", F.col("cell").alias("leaf"), "cnt"
+        )
+        # meta-side broadcast gated on rows (meta x levels): a meta past the
+        # driver memo can reach 10^7+ exploded rows — broadcasting it is the
+        # OOM-shaped mistake; both sides are then left to a shuffled join
+        if index.meta_n_cells() * max(1, len(levels)) <= RESOLVED_BCAST_ROWS:
+            m = F.broadcast(m)
+        out = (
+            cov.select("qid", F.col("level").alias("lvl"), F.col("cell").alias("c"), "interior")
+            .join(m, ["lvl", "c"])
+            .select("qid", "leaf", "interior", "cnt")
+            .localCheckpoint(eager=True)
+        )
+    res = (out.where(~F.col("interior")) if count else out).select("qid", "leaf", "interior")
+    # the resolved side is usually a few MB but can exceed AQE's broadcast
+    # threshold (10k-box batches resolve to ~10^6 rows), which would fall
+    # back to SHUFFLING the full points table on the leaf key — measure it
+    # (a scan of the checkpoint) and hint the broadcast explicitly when it fits
+    n_res = res.count()
+    if n_res <= RESOLVED_BCAST_ROWS:
+        res = F.broadcast(res)
+    inter = out.where(F.col("interior")).select("qid", "cnt") if count else None
+    return inter, res if n_res else None, None
+
 
 def _with_lvl_cell(df: DataFrame, src_col: str, levels: list[int], d: int, top_bits_level: int) -> DataFrame:
     """Append (lvl, c): ``src_col``'s ancestor cell at each cover level —
     ONE explode instead of one scan per level. Applied ONLY to the small
-    metadata table (leaf resolution): r3 exploded the full POINTS table
-    over every distinct cover level, multiplying the 38.4M-row scan by
-    6-8x and inverting 4->16-core scaling (alloc/bandwidth-bound generate);
-    the points side now derives ONE leaf column and equi-joins resolved
-    covers (see _boundary_candidates). ``top_bits_level`` is the level
-    src_col itself is encoded at."""
+    metadata table (leaf resolution without a skeleton): r3 exploded the
+    full POINTS table over every distinct cover level, multiplying the
+    38.4M-row scan by 6-8x and inverting 4->16-core scaling. ``top_bits_level``
+    is the level src_col itself is encoded at."""
     return df.select(
         "*", F.explode(F.array(*[F.lit(int(l)).cast("int") for l in levels])).alias("lvl")
     ).withColumn(
@@ -235,178 +248,86 @@ def _with_lvl_cell(df: DataFrame, src_col: str, levels: list[int], d: int, top_b
     )
 
 
-def _interior_counts(index: SpatialIndex, covers) -> DataFrame | None:
-    """SUM per-cell metadata counts for fully-contained cover cells —
-    answers without touching point rows (range_count.hpp:79-80 analog).
-    ``covers`` is pandas (small batch) or a DataFrame (large batch).
+# ---------------------------------------------------------------------------
+# the count plan and the report plan
+# ---------------------------------------------------------------------------
 
-    Small batches with a memoized meta skip Spark entirely: the interior
-    branch is two searchsorteds over the driver-resident prefix sums
-    (interior_counts_np) — zero jobs, zero shuffles. The general path is
-    ONE join of the meta exploded over the interior cover levels."""
-    spark = index.points.sparkSession
-    d, L = index.cfg.dims, index.cfg.index_level
-    if isinstance(covers, pd.DataFrame):
-        mnp = index.meta_np()
-        if mnp is not None:
-            sel = covers[covers.interior]
-            if sel.empty:
-                return None
-            pdf = interior_counts_np(mnp, sel, d, L)
-            if pdf.empty:
-                return None
-            return spark.createDataFrame(pdf)
-    cdf = _cover_slice(spark, covers, interior=True)
-    if cdf is None:
-        return None
-    levels = _slice_levels(covers, cdf)
-    m = _with_lvl_cell(index.meta.select("cell", "cnt"), "cell", levels, d, L).select("lvl", "c", "cnt")
-    if not isinstance(covers, pd.DataFrame) and index.meta_n_cells() * max(1, len(levels)) <= RESOLVED_BCAST_ROWS:
-        m = F.broadcast(m)  # covers may be huge; meta side gated by rows
-    return m.join(cdf, ["lvl", "c"]).groupBy("qid").agg(F.sum("cnt").alias("cnt"))
+def _plan(index: SpatialIndex, kind: str, q: pd.DataFrame, budget: int | None, count: bool):
+    """(query frame, interior sums | None, candidate point rows tagged with
+    qid and interior | None, broadcast-the-query-side flag).
 
-
-def _slice_levels(covers, cdf) -> list[int]:
-    """Distinct levels present in a cover SLICE (not the whole cover set —
-    r3 exploded the points over interior-only levels too, multiplying the
-    boundary scan for nothing)."""
-    if isinstance(covers, pd.DataFrame):
-        return _cover_levels(covers)
-    return sorted(r["lvl"] for r in cdf.select("lvl").distinct().collect())
-
-
-def _boundary_candidates(
-    index: SpatialIndex, covers, interior_too: bool = False, cols: list[str] | None = None
-) -> DataFrame | None:
-    """Point rows inside cover cells, tagged with qid.
-
-    Plan: cover cells are first RESOLVED to the occupied level-L leaf
-    cells beneath them (driver-side numpy against the memoized meta for
-    small batches; a meta-side explode join for huge query sets), then the
-    points table — scanned ONCE, pre-filtered by the resolved leaves'
-    Morton intervals when they exclude most rows (``leaf_scan_pred``),
-    with ONE derived leaf column and NO generate — equi-joins the resolved
-    (qid, leaf) pairs.
-    r3 instead exploded all points over every distinct cover level
-    (n x 6-8 generated rows at 38.4M: 35->38s NEGATIVE 4->16-core
-    scaling); the resolved join scans n rows exactly once.
-
-    Resolution is occupancy-bounded: a cover cell resolves to at most the
-    occupied leaves beneath it (<= points beneath it), so the broadcast
-    side stays small for bench-scale query sets and shuffles for huge
-    ones. ``cols`` narrows the point columns carried through the hot join
-    — counts pass the coordinate columns only."""
+    Candidates: the points table scanned ONCE — pre-filtered by the
+    resolved leaves' Morton intervals when they exclude most rows
+    (``leaf_scan_pred``), with ONE derived leaf column and NO generate —
+    equi-joined with the resolved (qid, leaf) pairs. A count carries only
+    the coordinate columns through the hot join."""
+    if kind == "polygon" and index.cfg.dims != 2:
+        raise ValueError("polygon queries are 2-D")
     spark = index.points.sparkSession
     cfg = index.cfg
-    d, gb, L = cfg.dims, cfg.grid_bits, cfg.index_level
-    shift = d * (gb - L)
-    base = list(cols) if cols is not None else [c for c in index.points.columns if c != "morton"]
-
-    if isinstance(covers, pd.DataFrame):
-        mnp = index.meta_np()
-        if mnp is not None:
-            sel = covers if interior_too else covers[~covers.interior]
-            if sel.empty:
-                return None
-            res = resolve_covers_np(mnp, sel, d, L)
-            if res.empty:
-                return None
-            if len(res) <= RESOLVED_BCAST_ROWS:
-                rdf = F.broadcast(spark.createDataFrame(res))
-                pts = index.points.select(*base, "morton")
-                pred = leaf_scan_pred(mnp, res["leaf"].to_numpy(), shift)
-                if pred is not None:
-                    pts = pts.where(pred)
-                pts = pts.withColumn("pleaf", F.shiftrightunsigned("morton", shift))
-                return pts.join(rdf, F.col("pleaf") == F.col("leaf")).drop("pleaf", "leaf", "morton")
-            # region-spanning covers can resolve to ~n_queries x occupied
-            # leaves — too big for a driver frame + unconditional broadcast
-            # (OOM risk); fall through to the Spark-side resolution below,
-            # which measures the resolved side before hinting (same gate)
-
-    # general path: meta-side resolution join (huge query sets, or a meta
-    # too large to memoize) — the points side is still ONE scan + equi-join
-    cdf = _cover_slice(spark, covers, interior=None if interior_too else False)
-    if cdf is None:
-        return None
-    levels = _slice_levels(covers, cdf)
-    m = _with_lvl_cell(index.meta.select("cell"), "cell", levels, d, L).select(
-        "lvl", "c", F.col("cell").alias("leaf")
-    )
-    # meta-side broadcast gated on rows (meta x levels): a meta past the
-    # driver memo can reach 10^7+ exploded rows — broadcasting it is the
-    # OOM-shaped mistake, and the two sides are then best left to a
-    # shuffled join (both are far smaller than the points table)
-    if index.meta_n_cells() * max(1, len(levels)) <= RESOLVED_BCAST_ROWS:
-        m = F.broadcast(m)
-    resolved = cdf.join(m, ["lvl", "c"]).select("qid", "leaf", "interior")
-    # the resolved side is usually a few MB but can exceed AQE's broadcast
-    # threshold (10k-box batches resolve to ~10^6 rows), which would fall
-    # back to SHUFFLING the full points table on the leaf key — measure it
-    # (cheap: covers x meta) and hint the broadcast explicitly when it fits
-    resolved = resolved.localCheckpoint(eager=True)
-    if resolved.count() <= RESOLVED_BCAST_ROWS:
-        resolved = F.broadcast(resolved)
-    pts = index.points.select(*base, F.shiftrightunsigned("morton", shift).alias("pleaf"))
-    return pts.join(resolved, F.col("pleaf") == F.col("leaf")).drop("pleaf", "leaf")
+    qdf = spark.createDataFrame(q)
+    inter, res, pred = _resolve(index, kind, q, qdf, _budget(cfg, budget), count)
+    small = len(q) <= DISTRIBUTED_COVER_THRESHOLD
+    if res is None:
+        return qdf, inter, None, small
+    base = [f"x{j}" for j in range(cfg.dims)] if count else [c for c in index.points.columns if c != "morton"]
+    pts = index.points.select(*base, "morton")
+    if pred is not None:
+        pts = pts.where(pred)
+    pts = pts.withColumn("pleaf", F.shiftrightunsigned("morton", cfg.dims * (cfg.grid_bits - cfg.index_level)))
+    cand = pts.join(res, F.col("pleaf") == F.col("leaf")).drop("pleaf", "leaf", "morton")
+    return qdf, inter, cand.join(F.broadcast(qdf) if small else qdf, "qid"), small
 
 
-def _finalize_counts(queries_df: DataFrame, branches: list[DataFrame | None], small: bool) -> DataFrame:
-    live = [b for b in branches if b is not None]
+def _count(index: SpatialIndex, kind: str, q: pd.DataFrame, budget: int | None) -> DataFrame:
+    """(qid, cnt) for every query: interior sums plus exact boundary counts."""
+    qdf, inter, cand, small = _plan(index, kind, q, budget, count=True)
+    if cand is not None:
+        cand = cand.where(_exact_pred(kind, index.cfg.dims)).groupBy("qid").agg(F.count(F.lit(1)).alias("cnt"))
+    live = [b for b in (inter, cand) if b is not None]
     if not live:
-        return queries_df.select("qid", F.lit(0).cast("long").alias("cnt"))
-    u = live[0]
-    for b in live[1:]:
-        u = u.unionByName(b)
+        return qdf.select("qid", F.lit(0).cast("long").alias("cnt"))
+    u = live[0] if len(live) == 1 else live[0].unionByName(live[1])
     agg = u.groupBy("qid").agg(F.sum("cnt").alias("cnt"))
     if small:
         agg = F.broadcast(agg)  # agg is <= one row per query
     return (
-        queries_df.select("qid")
+        qdf.select("qid")
         .join(agg, "qid", "left")
         .select("qid", F.coalesce(F.col("cnt"), F.lit(0)).cast("long").alias("cnt"))
     )
 
 
-def _count_plan(index: SpatialIndex, queries_df: DataFrame, covers, exact_pred: Column, small: bool = True) -> DataFrame:
-    interior = _interior_counts(index, covers)
-    cand = _boundary_candidates(
-        index, covers, cols=[f"x{j}" for j in range(index.cfg.dims)]
-    )
-    boundary = None
-    if cand is not None:
-        q = F.broadcast(queries_df) if small else queries_df
-        boundary = (
-            cand.join(q, "qid")
-            .where(exact_pred)
-            .groupBy("qid")
-            .agg(F.count(F.lit(1)).alias("cnt"))
+def _report(index: SpatialIndex, kind: str, q: pd.DataFrame, budget: int | None) -> DataFrame:
+    """(qid, doc_id, span_idx, key, x0..): interior-cell rows skip the
+    predicate, boundary rows get the exact filter."""
+    d = index.cfg.dims
+    cols = ["qid", "doc_id", "span_idx", "key"] + [f"x{j}" for j in range(d)]
+    _, _, cand, _ = _plan(index, kind, q, budget, count=False)
+    if cand is None:
+        return index.points.sparkSession.createDataFrame(
+            [], schema="qid long, doc_id string, span_idx int, key long, " + ", ".join(f"x{j} long" for j in range(d))
         )
-    return _finalize_counts(queries_df, [interior, boundary], small)
+    return cand.where(F.col("interior") | _exact_pred(kind, d)).select(*cols)
 
 
 def range_cover_stats(index: SpatialIndex, boxes: pd.DataFrame, budget: int | None = None) -> dict:
     """V3 introspection (validation.hpp:72-124 analog) for range queries:
     cells touched per query and the interior (metadata-answered, zero rows
     scanned) share — the distributed analog of nodes-visited counters.
-    Works for both cover representations without collecting large covers."""
-    spark = index.points.sparkSession
-    covers = _covers_for_boxes(spark, boxes, index.cfg, _budget(index.cfg, budget))
-    if isinstance(covers, pd.DataFrame):
-        g = covers.groupby("qid").agg(cells=("cell", "size"), inter=("interior", "sum"))
-        return {
-            "n_queries": int(len(g)),
-            "avg_cells_per_query": round(float(g.cells.mean()), 2),
-            "avg_interior_cells": round(float(g.inter.mean()), 2),
-        }
-    agg = covers.groupBy("qid").agg(
-        F.count(F.lit(1)).alias("cells"), F.sum(F.col("interior").cast("long")).alias("inter")
-    )
-    r = agg.agg(F.avg("cells").alias("c"), F.avg("inter").alias("i"), F.count(F.lit(1)).alias("n")).collect()[0]
+    Summed per batch in the executors: covers are never collected."""
+
+    def summary(cov: pd.DataFrame, _meta) -> pd.DataFrame:
+        return pd.DataFrame({"n": [cov["qid"].nunique()], "cells": [len(cov)], "inter": [int(cov["interior"].sum())]})
+
+    qdf = index.points.sparkSession.createDataFrame(boxes)
+    part = _executor_pass(index, "box", qdf, _budget(index.cfg, budget), summary, "n long, cells long, inter long")
+    r = part.agg(F.sum("n").alias("n"), F.sum("cells").alias("c"), F.sum("inter").alias("i")).collect()[0]
+    n = int(r["n"] or 0)
     return {
-        "n_queries": int(r["n"]),
-        "avg_cells_per_query": round(float(r["c"]), 2),
-        "avg_interior_cells": round(float(r["i"]), 2),
+        "n_queries": n,
+        "avg_cells_per_query": round(float(r["c"] or 0) / n, 2) if n else 0.0,
+        "avg_interior_cells": round(float(r["i"] or 0) / n, 2) if n else 0.0,
     }
 
 
@@ -415,104 +336,34 @@ def range_cover_stats(index: SpatialIndex, boxes: pd.DataFrame, budget: int | No
 # ---------------------------------------------------------------------------
 
 def range_count_boxes(index: SpatialIndex, boxes: pd.DataFrame, budget: int | None = None) -> DataFrame:
-    """(qid, cnt) — rectangle range count (R1)."""
-    spark = index.points.sparkSession
-    d = index.cfg.dims
-    covers = _covers_for_boxes(spark, boxes, index.cfg, _budget(index.cfg, budget))
-    qdf = box_queries_df(spark, boxes)
-    return _count_plan(index, qdf, covers, _and_all(
-        [F.col(f"x{j}").between(F.col(f"lo{j}"), F.col(f"hi{j}")) for j in range(d)]
-    ), small=len(boxes) <= DISTRIBUTED_COVER_THRESHOLD)
+    """(qid, cnt) — rectangle range count (R1). boxes: pandas with columns
+    qid, lo0..lo{d-1}, hi0..hi{d-1} (int64)."""
+    return _count(index, "box", boxes, budget)
 
 
 def range_count_balls(index: SpatialIndex, balls: pd.DataFrame, budget: int | None = None) -> DataFrame:
-    """(qid, cnt) — radius range count (R2); exact squared-int arithmetic."""
-    spark = index.points.sparkSession
-    d = index.cfg.dims
-    covers = _covers_for_balls(spark, balls, index.cfg, _budget(index.cfg, budget))
-    qdf = ball_queries_df(spark, balls)
-    return _count_plan(index, qdf, covers, _ball_pred(d),
-                       small=len(balls) <= DISTRIBUTED_COVER_THRESHOLD)
+    """(qid, cnt) — radius range count (R2). balls: pandas with columns
+    qid, c0..c{d-1}, r2 (int64)."""
+    return _count(index, "ball", balls, budget)
 
 
-def range_report_boxes(index: SpatialIndex, boxes: pd.DataFrame, budget: int = 512) -> DataFrame:
-    """(qid, doc_id, span_idx, key, x0..) — rectangle range report (R4/R5).
-
-    Interior-cell rows skip the predicate entirely (the bulk-flatten path,
-    range_query.hpp:99-102); boundary rows get the exact filter.
-    """
-    spark = index.points.sparkSession
-    d = index.cfg.dims
-    covers = _covers_for_boxes(spark, boxes, index.cfg, budget)  # same dispatch as counts
-    cand = _boundary_candidates(index, covers, interior_too=True)
-    cols = ["qid", "doc_id", "span_idx", "key"] + [f"x{j}" for j in range(d)]
-    if cand is None:
-        return spark.createDataFrame([], schema="qid long, doc_id string, span_idx int, key long, "
-                                      + ", ".join(f"x{j} long" for j in range(d)))
-    small = len(boxes) <= DISTRIBUTED_COVER_THRESHOLD
-    qdf = box_queries_df(spark, boxes)
-    pred = _and_all([F.col(f"x{j}").between(F.col(f"lo{j}"), F.col(f"hi{j}")) for j in range(d)])
-    return (
-        cand.join(F.broadcast(qdf) if small else qdf, "qid")
-        .where(F.col("interior") | pred)
-        .select(*cols)
-    )
+def range_count_polygons(index: SpatialIndex, polys: pd.DataFrame, budget: int | None = None) -> DataFrame:
+    """(qid, cnt) — point-in-convex-polygon count, d=2. polys: pandas with
+    columns qid, vx (list[int]), vy (list[int]), CCW."""
+    return _count(index, "polygon", polys, budget)
 
 
-def range_report_balls(index: SpatialIndex, balls: pd.DataFrame, budget: int = 512) -> DataFrame:
-    """(qid, doc_id, span_idx, key, x0..) — radius range report (R2/R4
-    combination: ball predicate, report semantics). Interior cells skip the
-    predicate; exact int dist^2 filter on boundary cells."""
-    spark = index.points.sparkSession
-    d = index.cfg.dims
-    covers = _covers_for_balls(spark, balls, index.cfg, budget)
-    cand = _boundary_candidates(index, covers, interior_too=True)
-    cols = ["qid", "doc_id", "span_idx", "key"] + [f"x{j}" for j in range(d)]
-    if cand is None:
-        return spark.createDataFrame([], schema="qid long, doc_id string, span_idx int, key long, "
-                                      + ", ".join(f"x{j} long" for j in range(d)))
-    small = len(balls) <= DISTRIBUTED_COVER_THRESHOLD
-    qdf = ball_queries_df(spark, balls)
-    return (
-        cand.join(F.broadcast(qdf) if small else qdf, "qid")
-        .where(F.col("interior") | _ball_pred(d))
-        .select(*cols)
-    )
+def range_report_boxes(index: SpatialIndex, boxes: pd.DataFrame, budget: int | None = None) -> DataFrame:
+    """(qid, doc_id, span_idx, key, x0..) — rectangle range report (R4/R5)."""
+    return _report(index, "box", boxes, budget)
 
 
-def range_count_polygons(index: SpatialIndex, polys: pd.DataFrame, budget: int = 512) -> DataFrame:
-    """(qid, cnt) — point-in-convex-polygon count, d=2.
-
-    polys: pandas with columns qid, vx (list[int]), vy (list[int]), CCW.
-    """
-    spark = index.points.sparkSession
-    assert index.cfg.dims == 2, "polygon queries are 2-D"
-    regions = [
-        (int(r.qid), ConvexPolygonRegion(np.stack([np.asarray(r.vx), np.asarray(r.vy)], axis=1)))
-        for r in polys.itertuples()
-    ]
-    covers = cover_regions(regions, index.cfg, budget)
-    qdf = spark.createDataFrame(polys)
-    return _count_plan(index, qdf, covers, _polygon_pred())
+def range_report_balls(index: SpatialIndex, balls: pd.DataFrame, budget: int | None = None) -> DataFrame:
+    """(qid, doc_id, span_idx, key, x0..) — radius range report (ball
+    predicate, report semantics)."""
+    return _report(index, "ball", balls, budget)
 
 
-def range_report_polygons(index: SpatialIndex, polys: pd.DataFrame, budget: int = 512) -> DataFrame:
-    """(qid, doc_id, span_idx, key, x0, x1) — convex-polygon range report
-    (R4 semantics over the polygon predicate; interior cover cells skip the
-    exact test, boundary cells evaluate the JVM-side edge-cross forall)."""
-    spark = index.points.sparkSession
-    assert index.cfg.dims == 2, "polygon queries are 2-D"
-    regions = [
-        (int(r.qid), ConvexPolygonRegion(np.stack([np.asarray(r.vx), np.asarray(r.vy)], axis=1)))
-        for r in polys.itertuples()
-    ]
-    covers = cover_regions(regions, index.cfg, budget)
-    cand = _boundary_candidates(index, covers, interior_too=True)
-    if cand is None:
-        return spark.createDataFrame([], schema="qid long, doc_id string, span_idx int, key long, x0 long, x1 long")
-    qdf = spark.createDataFrame(polys)
-    return (
-        cand.join(F.broadcast(qdf), "qid")
-        .where(F.col("interior") | _polygon_pred())
-        .select("qid", "doc_id", "span_idx", "key", "x0", "x1")
-    )
+def range_report_polygons(index: SpatialIndex, polys: pd.DataFrame, budget: int | None = None) -> DataFrame:
+    """(qid, doc_id, span_idx, key, x0, x1) — convex-polygon range report."""
+    return _report(index, "polygon", polys, budget)

@@ -60,13 +60,6 @@ __all__ = [
 # shuffled-hash fallback; measured at 38.4M@16c the single 5.5M-key
 # broadcast beats both that fallback and a 16-way sliced broadcast union.
 DELETE_BCAST_ROWS = 8_000_000
-# Oversized exact-rows batches (coords available) are ROUTED BY MORTON
-# BUCKET instead: each bucket's key slice broadcasts to an anti-join over
-# that bucket's Morton interval of the (range-partitioned, min/max-
-# prunable) table, so the table is STREAMED once with no full-table
-# shuffle — total broadcast bytes are bounded by the batch itself, hence
-# the cap (~1.3GB of hash relations at 32M keys). Past it, shuffled hash.
-DELETE_ROUTE_MAX_ROWS = 32_000_000
 # Survivors of a SMALL delete (batch under this fraction of the table) are
 # left LAZY instead of persisted: the broadcast anti-join over the cached
 # parent recomputes in one streamed pass, while the r6 eager persist paid
@@ -169,72 +162,19 @@ def merge_delete(
     # materialize + count the key set once: the count gates the broadcast
     # (a measured gate, not a guess — AQE's estimate of a derived batch can
     # miss) and the checkpoint stops the batch pipeline re-running per join
-    route = exact_rows and all(c in delete_keys.columns for c in xcols)
-    # ONE distinct pass: route-eligible batches keep the 8-byte morton of
-    # each identity alongside (the bucket-slice filters derive from it);
-    # coordinates are NEVER carried into the checkpoint — widening it
-    # costs every broadcast delete shuffle/checkpoint bytes for nothing
-    if route:
-        keys, key_ids = tracked_local_checkpoint(
-            _with_morton(delete_keys.select(*on, *xcols), cfg)
-            .select(*on, "morton")
-            .dropDuplicates(on)
-        )
-    else:
-        keys, key_ids = tracked_local_checkpoint(delete_keys.select(*on).distinct())
+    keys, key_ids = tracked_local_checkpoint(delete_keys.select(*on).distinct())
     nk = keys.count()
     keyside = None
     if nk <= DELETE_BCAST_ROWS:
-        keyside = F.broadcast(keys.select(*on))
+        keyside = F.broadcast(keys)
         pts = index.points.join(keyside, on, "left_anti")
-    elif route and nk <= DELETE_ROUTE_MAX_ROWS:
-        # bucket-route the oversized batch (VERDICT r6 #3): slice the keys
-        # by Morton bucket at a level where every slice broadcasts, then
-        # anti-join each slice against ITS interval of the table — the
-        # range-partitioned cache prunes batches per branch, so the table
-        # is streamed exactly once and NOTHING shuffles (the r6 fallback
-        # exchanged all 153.6M rows to delete 10% of them: 87s vs the
-        # matching insert's 17.5s @16c)
-        # as FEW slices as possible: every extra slice is another broadcast
-        # exchange built serially before the union job (measured: 16 slices
-        # of a 5.5M-key batch cost more in broadcast builds than the whole
-        # anti-join) — slices target the full broadcast cap
-        rl = 1
-        while nk >> (d * rl) > DELETE_BCAST_ROWS and rl < cfg.index_level:
-            rl += 1
-        shift = d * (cfg.grid_bits - rl)
-        keys_b = keys.withColumn("rb", F.shiftrightunsigned("morton", shift))
-        per = {
-            int(r["rb"]): int(r["n"])
-            for r in keys_b.groupBy("rb").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        if per and max(per.values()) <= DELETE_BCAST_ROWS:
-            import numpy as _np
-
-            from .index import morton_interval_pred
-
-            branches = []
-            for b in sorted(per):
-                pts_b = index.points.where(
-                    F.expr(f"morton BETWEEN {b << shift} AND {((b + 1) << shift) - 1}")
-                )
-                kb = F.broadcast(keys_b.where(F.col("rb") == b).select(*on))
-                branches.append(pts_b.join(kb, on, "left_anti"))
-            passthrough_pred = morton_interval_pred(
-                _np.array(sorted(per), dtype=_np.int64), shift, max_intervals=1 << 30
-            )
-            pts = index.points.where(~passthrough_pred)
-            for br in branches:
-                pts = pts.unionByName(br)
-        else:  # a single hot slice exceeds the broadcast cap: shuffle after all
-            pts = index.points.join(keys.select(*on).hint("shuffle_hash"), on, "left_anti")
     else:
-        pts = index.points.join(keys.select(*on).hint("shuffle_hash"), on, "left_anti")
+        pts = index.points.join(keys.hint("shuffle_hash"), on, "left_anti")
     if exact_rows:
         delta_src = _with_morton(delete_keys.select(*on, *xcols), cfg)
     else:
         if keyside is None:
-            keyside = keys.select(*on).hint("shuffle_hash")
+            keyside = keys.hint("shuffle_hash")
         delta_src = index.points.join(keyside, on, "left_semi")
     meta = _merge_meta(index.meta, _meta_of(delta_src, cfg), cfg, -1)
     if persist:
@@ -512,22 +452,7 @@ class PersistentIndex:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
 
         if hot:
-            def _refresh_meta():
-                # targeted: recompute meta rows ONLY for hot buckets' cells,
-                # keep the rest — O(points in hot buckets), not O(n)
-                shift = d * (cfg.index_level - self.bucket_level)
-                fresh_pts = spark.read.parquet(self.points_path).where(
-                    F.col("pbucket").isin([int(b) for b in hot])
-                )
-                fresh = _meta_of(fresh_pts.drop("pbucket"), cfg)
-                old = spark.read.parquet(self.meta_path).where(
-                    ~F.shiftrightunsigned("cell", shift).isin([int(b) for b in hot])
-                )
-                merged = old.unionByName(fresh).localCheckpoint(eager=True)
-                merged.write.mode("overwrite").parquet(self.meta_path)
-                return {"cells": merged.count()}
-
-            ckpt.run("refresh_meta_hot", _refresh_meta)
+            self._refresh_meta_buckets(spark, hot, ckpt, "hot")
         return {
             "buckets_total": buckets_total,
             "buckets_hot": len(hot),

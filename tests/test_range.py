@@ -28,6 +28,17 @@ def _box_oracle(pts: pd.DataFrame, boxes: pd.DataFrame) -> pd.Series:
     return pd.Series(out)
 
 
+def _ball_oracle(pts: pd.DataFrame, balls: pd.DataFrame) -> dict:
+    return {
+        r.qid: int((((pts.x0 - r.c0) ** 2 + (pts.x1 - r.c1) ** 2) <= r.r2).sum())
+        for r in balls.itertuples()
+    }
+
+
+def _diamond_oracle(pts: pd.DataFrame, polys: pd.DataFrame) -> dict:
+    return {r.qid: int(((pts.x0 - r.c0).abs() + (pts.x1 - r.c1).abs() <= r.r).sum()) for r in polys.itertuples()}
+
+
 @pytest.mark.parametrize("which", ["uniform", "varden"])
 def test_range_count_box(request, which):
     idx = request.getfixturevalue(f"index_{which}")
@@ -41,11 +52,7 @@ def test_range_count_box(request, which):
 def test_range_count_ball(index_uniform, points_uniform):
     balls = FX.ball_fixtures(NQ, 2)
     got = range_count_balls(index_uniform, balls).toPandas().set_index("qid")["cnt"].sort_index()
-    want = {}
-    for r in balls.itertuples():
-        d2 = (points_uniform.x0 - r.c0) ** 2 + (points_uniform.x1 - r.c1) ** 2
-        want[r.qid] = int((d2 <= r.r2).sum())
-    assert got.to_dict() == want
+    assert got.to_dict() == _ball_oracle(points_uniform, balls)
 
 
 def test_range_report_multiset(index_uniform, points_uniform):
@@ -73,11 +80,7 @@ def test_polygon_count_vs_l1(index_uniform, points_uniform):
         .set_index("qid")["cnt"]
         .sort_index()
     )
-    want = {}
-    for r in polys.itertuples():
-        l1 = (points_uniform.x0 - r.c0).abs() + (points_uniform.x1 - r.c1).abs()
-        want[r.qid] = int((l1 <= r.r).sum())
-    assert got.to_dict() == want
+    assert got.to_dict() == _diamond_oracle(points_uniform, polys)
 
 
 def test_empty_and_total_boxes(index_uniform, points_uniform):
@@ -95,39 +98,129 @@ def test_empty_and_total_boxes(index_uniform, points_uniform):
     assert got[1] == len(points_uniform)
 
 
-def test_distributed_covers_match_driver_side(spark):
-    """The mapInPandas cover path (used for large query batches) must
-    produce exactly the driver-side covers."""
-    from pkd_tree_spark.config import EngineConfig
-    from pkd_tree_spark.index import cover_regions
-    from pkd_tree_spark.ranges import _box_regions, _covers_distributed
+def _counts(df) -> dict:
+    return df.toPandas().set_index("qid")["cnt"].sort_index().to_dict()
 
-    cfg = EngineConfig(dims=2, index_level=5, knn_level=4, partitions=4)
-    boxes = FX.box_fixtures(50, 2)
-    want = (
-        cover_regions(_box_regions(boxes, 2), cfg, 256)
-        .sort_values(["qid", "level", "cell"])
-        .reset_index(drop=True)
+
+def _report_rows(df) -> pd.DataFrame:
+    cols = ["qid", "key", "span_idx", "x0", "x1"]
+    return df.toPandas()[cols].sort_values(cols).reset_index(drop=True)
+
+
+def _report_oracle(pts: pd.DataFrame, boxes: pd.DataFrame) -> pd.DataFrame:
+    parts = []
+    for r in boxes.itertuples():
+        m = (pts.x0 >= r.lo0) & (pts.x0 <= r.hi0) & (pts.x1 >= r.lo1) & (pts.x1 <= r.hi1)
+        parts.append(pts[m].assign(qid=r.qid))
+    cols = ["qid", "key", "span_idx", "x0", "x1"]
+    return pd.concat(parts)[cols].astype({"qid": "int64"}).sort_values(cols).reset_index(drop=True)
+
+
+def _range_calls(idx):
+    """Box count, ball count, polygon count and box report on one index."""
+    boxes, balls = FX.box_fixtures(NQ, 2), FX.ball_fixtures(NQ, 2)
+    polys = FX.diamond_fixtures(NQ)
+    return (
+        _counts(range_count_boxes(idx, boxes)),
+        _counts(range_count_balls(idx, balls)),
+        _counts(range_count_polygons(idx, polys[["qid", "vx", "vy"]])),
+        _report_rows(range_report_boxes(idx, boxes.head(12))),
     )
-    got = (
-        _covers_distributed(spark, boxes, "box", cfg, 256)  # now a DataFrame (never collected in prod)
-        .toPandas()
-        .sort_values(["qid", "level", "cell"])
-        .reset_index(drop=True)
+
+
+def _oracle_calls(pts):
+    boxes, balls = FX.box_fixtures(NQ, 2), FX.ball_fixtures(NQ, 2)
+    return (
+        _box_oracle(pts, boxes).sort_index().to_dict(),
+        _ball_oracle(pts, balls),
+        _diamond_oracle(pts, FX.diamond_fixtures(NQ)),
+        _report_oracle(pts, boxes.head(12)),
     )
-    pd.testing.assert_frame_equal(got.astype(want.dtypes.to_dict()), want)
 
 
-def test_large_batch_count_uses_dataframe_covers(index_uniform, points_uniform):
-    """Above DISTRIBUTED_COVER_THRESHOLD the covers feed the cell joins as a
-    DataFrame — never collected — and counts still match the small-batch
-    (driver-side covers) plan on the same queries."""
+def _assert_same(got, want):
+    for g, w in zip(got[:3], want[:3]):
+        assert g == w
+    pd.testing.assert_frame_equal(got[3], want[3], check_dtype=False)
+
+
+@pytest.fixture
+def executor_passes(monkeypatch):
+    """Records every mapInPandas cover pass the range calls make."""
     from pkd_tree_spark import ranges as R
 
-    nq = R.DISTRIBUTED_COVER_THRESHOLD + 200
-    boxes = FX.box_fixtures(nq, 2)
-    big = range_count_boxes(index_uniform, boxes).toPandas().set_index("qid")["cnt"]
-    # force the driver-side path on a subset and compare
-    sub = boxes.head(64)
-    small = range_count_boxes(index_uniform, sub).toPandas().set_index("qid")["cnt"]
-    assert (big.loc[small.index] == small).all()
+    seen: list[str] = []
+    real = R._executor_pass
+
+    def _rec(index, kind, *args, **kwargs):
+        seen.append(kind)
+        return real(index, kind, *args, **kwargs)
+
+    monkeypatch.setattr(R, "_executor_pass", _rec)
+    return seen
+
+
+def test_executor_path_matches_driver_and_brute_force(index_uniform, points_uniform, monkeypatch, executor_passes):
+    """Batches above DISTRIBUTED_COVER_THRESHOLD compute covers, interior
+    sums and resolved leaves in one mapInPandas pass against the broadcast
+    skeleton; every kind must equal the driver path and brute force."""
+    from pkd_tree_spark import ranges as R
+
+    driver = _range_calls(index_uniform)
+    assert executor_passes == []
+    monkeypatch.setattr(R, "DISTRIBUTED_COVER_THRESHOLD", 8)
+    executors = _range_calls(index_uniform)
+    assert executor_passes == ["box", "ball", "polygon", "box"]
+    _assert_same(executors, driver)
+    _assert_same(executors, _oracle_calls(points_uniform))
+
+
+def test_oversized_driver_resolution_takes_executor_path(index_uniform, points_uniform, monkeypatch, executor_passes):
+    """A driver-sized batch whose resolution would pass RESOLVED_BCAST_ROWS
+    is resolved in the executors (and then shuffle-joined), still exact."""
+    from pkd_tree_spark import ranges as R
+
+    monkeypatch.setattr(R, "RESOLVED_BCAST_ROWS", 10)
+    _assert_same(_range_calls(index_uniform), _oracle_calls(points_uniform))
+    assert executor_passes == ["box", "ball", "polygon", "box"]
+
+
+def test_over_memo_range_path(spark, cfg, points_uniform, executor_passes):
+    """A meta past META_MEMO_CELLS has no driver skeleton: covers come from
+    the executor pass and resolve by the meta-side join."""
+    from conftest import SF_DIR
+    from pkd_tree_spark.documents import load_points
+    from pkd_tree_spark.index import SpatialIndex
+
+    idx = SpatialIndex.build(load_points(spark, SF_DIR, dims=2, dist="uniform"), cfg)
+    object.__setattr__(idx, "_meta_np", {"cells": None})  # memo refusal
+    assert idx.meta_np() is None
+    _assert_same(_range_calls(idx), _oracle_calls(points_uniform))
+    assert executor_passes == ["box", "ball", "polygon", "box"]
+
+
+def test_range_leaves_no_broadcast(spark, index_varden, points_varden, monkeypatch):
+    """The skeleton broadcast of the executor pass is destroyed before the
+    range call returns, and consuming the returned frame makes none."""
+    from pyspark import SparkContext
+
+    from pkd_tree_spark import ranges as R
+
+    made = []
+    real = SparkContext.broadcast
+
+    def recording(self, value):
+        b = real(self, value)
+        made.append(b)
+        return b
+
+    monkeypatch.setattr(SparkContext, "broadcast", recording)
+    monkeypatch.setattr(R, "DISTRIBUTED_COVER_THRESHOLD", 0)
+    boxes = FX.box_fixtures(NQ, 2)
+    res = range_count_boxes(index_varden, boxes)
+    rep = range_report_boxes(index_varden, boxes.head(8))
+    assert made  # the skeleton ships as a broadcast
+    assert not any(b._jbroadcast.isValid() for b in made)
+    assert _counts(res) == _box_oracle(points_varden, boxes).sort_index().to_dict()
+    pd.testing.assert_frame_equal(_report_rows(rep), _report_oracle(points_varden, boxes.head(8)), check_dtype=False)
+    assert not any(b._jbroadcast.isValid() for b in made)

@@ -316,15 +316,12 @@ def test_checkpoint_index_release_frees_blocks(spark, cfg, index_uniform):
     assert n_persistent() == base
 
 
-def test_delete_bucket_routed_matches_broadcast(spark, cfg, index_uniform, points_uniform, monkeypatch):
-    """r7: oversized exact-rows batches route by Morton bucket (union of
-    per-interval broadcast anti-joins + negated-interval passthrough)
-    instead of shuffling the full table. Forced here by shrinking the
-    broadcast gate; the surviving multiset must equal the broadcast
-    path's, and the plan must contain NO shuffle of the points side."""
+def test_delete_oversized_batch_fallback_matches_broadcast(spark, cfg, index_uniform, points_uniform, monkeypatch):
+    """A key batch past DELETE_BCAST_ROWS takes the shuffled-hash
+    anti-join. Forced here by shrinking the broadcast gate; the surviving
+    multiset must equal the broadcast path's."""
     import pkd_tree_spark.updates as U
 
-    # spread batch (key-mod selection): slices stay under the shrunken gate
     batch_pd = (
         index_uniform.points.where(F.col("key") % 53 == 3)
         .select("key", "span_idx", "x0", "x1")
@@ -333,19 +330,19 @@ def test_delete_bucket_routed_matches_broadcast(spark, cfg, index_uniform, point
     want = merge_delete(
         index_uniform, spark.createDataFrame(batch_pd), exact_rows=True, persist=False
     ).points.toPandas()
-    monkeypatch.setattr(U, "DELETE_BCAST_ROWS", 500)
-    routed = U.merge_delete(
+    monkeypatch.setattr(U, "DELETE_BCAST_ROWS", 10)
+    assert len(batch_pd.drop_duplicates(["key", "span_idx"])) > U.DELETE_BCAST_ROWS
+    big = U.merge_delete(
         index_uniform, spark.createDataFrame(batch_pd), exact_rows=True, persist=False
     )
-    got = routed.points.toPandas()
+    got = big.points.toPandas()
     key = ["key", "span_idx", "x0", "x1"]
     pd.testing.assert_frame_equal(
         got.sort_values(key).reset_index(drop=True)[key],
         want.sort_values(key).reset_index(drop=True)[key],
     )
-    plan = routed.points._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    assert "SortMergeJoin" not in plan
+    plan = big.points._jdf.queryExecution().executedPlan().toString()
+    assert "ShuffledHashJoin" in plan and "LeftAnti" in plan
 
 
 def test_cow_delete_second_batch_not_skipped(tmp_path, spark, cfg, index_uniform, points_uniform):

@@ -98,6 +98,23 @@ def main() -> None:
         rc._jdf.queryExecution().executedPlan().toString(),
     )
 
+    # --- range count above DISTRIBUTED_COVER_THRESHOLD (executor pass) ---
+    from pkd_tree_spark.ranges import DISTRIBUTED_COVER_THRESHOLD
+
+    rcx = range_count_boxes(ix, FX.box_fixtures(DISTRIBUTED_COVER_THRESHOLD + 100, 2))
+    rcx.collect()
+    section(
+        f"range-count {DISTRIBUTED_COVER_THRESHOLD + 100} boxes (executor resolution pass)",
+        "Above DISTRIBUTED_COVER_THRESHOLD one mapInPandas pass over the "
+        "query frame computes covers, interior sums and resolved leaves "
+        "against a broadcast of the skeleton; its output is checkpointed "
+        "(the Scan ExistingRDD below) and the broadcast destroyed inside "
+        "the call. The resolved side is counted and broadcast-hinted when "
+        "it fits RESOLVED_BCAST_ROWS; the points side is the same single "
+        "leaf equi-join as the driver plan, without the Morton pre-filter.",
+        rcx._jdf.queryExecution().executedPlan().toString(),
+    )
+
     # --- kNN round-1 candidate join + window top-k ---
     plans: list = []
     res = knn(ix, FX.knn_fixtures(32, 2), k=10, plan_log=plans)
@@ -173,7 +190,7 @@ def main() -> None:
         "shuffled all rows on key twice: 165s vs insert's 19.5s @16c at "
         "153.6M). exact_rows: the meta delta aggregates the batch itself "
         "— no left_semi pass. Oversized key sets (> DELETE_BCAST_ROWS) "
-        "fall back to a shuffled HASH join.",
+        "fall back to a shuffled HASH join (LeftAnti).",
         dels.points._jdf.queryExecution().executedPlan().toString(),
     )
 
