@@ -160,6 +160,49 @@ def executor_passes(monkeypatch):
     return seen
 
 
+def test_distributed_covers_match_driver_side(index_uniform):
+    """The mapInPandas cover pass (used for large query batches) must
+    produce exactly the driver-side covers, for every region kind."""
+    from pkd_tree_spark.index import cover_regions
+    from pkd_tree_spark.ranges import _COVER_SCHEMA, _executor_pass, _regions
+
+    spark, cfg = index_uniform.points.sparkSession, index_uniform.cfg
+    cols = ["qid", "level", "cell"]
+    queries = {
+        "box": FX.box_fixtures(50, 2),
+        "ball": FX.ball_fixtures(50, 2),
+        "polygon": FX.diamond_fixtures(50)[["qid", "vx", "vy"]],
+    }
+    for kind, q in queries.items():
+        want = cover_regions(_regions(kind, q, 2), cfg, 256).sort_values(cols).reset_index(drop=True)
+        got = (
+            _executor_pass(index_uniform, kind, spark.createDataFrame(q), 256, lambda c, _m: c, _COVER_SCHEMA)
+            .toPandas()
+            .sort_values(cols)
+            .reset_index(drop=True)
+        )
+        assert len(want)
+        pd.testing.assert_frame_equal(got.astype(want.dtypes.to_dict()), want)
+
+
+def test_large_batch_count_uses_dataframe_covers(index_uniform, points_uniform, executor_passes):
+    """Above DISTRIBUTED_COVER_THRESHOLD the covers are computed and
+    resolved in the executors — never collected — and counts still match
+    the small-batch (driver-side covers) plan on the same queries."""
+    from pkd_tree_spark import ranges as R
+
+    nq = R.DISTRIBUTED_COVER_THRESHOLD + 200
+    boxes = FX.box_fixtures(nq, 2)
+    big = range_count_boxes(index_uniform, boxes).toPandas().set_index("qid")["cnt"]
+    assert executor_passes == ["box"]
+    # force the driver-side path on a subset and compare
+    sub = boxes.head(64)
+    small = range_count_boxes(index_uniform, sub).toPandas().set_index("qid")["cnt"]
+    assert executor_passes == ["box"]
+    assert (big.loc[small.index] == small).all()
+    assert small.to_dict() == _box_oracle(points_uniform, sub).to_dict()
+
+
 def test_executor_path_matches_driver_and_brute_force(index_uniform, points_uniform, monkeypatch, executor_passes):
     """Batches above DISTRIBUTED_COVER_THRESHOLD compute covers, interior
     sums and resolved leaves in one mapInPandas pass against the broadcast
