@@ -54,6 +54,12 @@ COORD_MULTS = (A1, A2, A3, A4, A5, A6, A7) + tuple(
 )
 COORD_ADDS = (B1, B2, B3, B4, B5, B6, B7) + tuple(100_003 * j + 7 for j in range(7, 16))
 
+# Bound on the level-``index_level`` skeleton: a meta holds at most
+# 2^(dims*index_level) cells, and every query batch resolves against a
+# driver-resident copy of it (SpatialIndex.meta_np). 300k cells x (2+2d)
+# longs ~ 15MB at d=2; a level-7 d=2 meta is <= 16384 rows.
+META_MEMO_CELLS = 300_000
+
 
 @dataclass(frozen=True)
 class EngineConfig:
@@ -63,7 +69,9 @@ class EngineConfig:
                     tests/test.cpp:569-617 — here a runtime parameter).
     index_level   : grid level of the cell metadata table; one metadata row per
                     non-empty level-``index_level`` cell. Plays the role of the
-                    kd-tree's top splitter levels (build_tree.hpp:19-45).
+                    kd-tree's top splitter levels (build_tree.hpp:19-45), and
+                    like them always fits on the driver: 2^(dims*index_level)
+                    must not exceed META_MEMO_CELLS (ValueError otherwise).
     knn_level     : grid level used for expanding-ring kNN candidate
                     generation (coarser than index_level so a ring holds
                     O(k) candidates).
@@ -91,6 +99,13 @@ class EngineConfig:
             object.__setattr__(self, "grid_bits", min(self.coord_bits, 63 // self.dims))
         assert self.grid_bits * self.dims <= 63
         assert self.index_level <= self.grid_bits and self.knn_level <= self.grid_bits
+        if 1 << (self.dims * self.index_level) > META_MEMO_CELLS:
+            deepest = (META_MEMO_CELLS.bit_length() - 1) // self.dims
+            raise ValueError(
+                f"index_level={self.index_level} at dims={self.dims} allows "
+                f"2^{self.dims * self.index_level} skeleton cells, over META_MEMO_CELLS="
+                f"{META_MEMO_CELLS}: the deepest allowed level is {deepest}"
+            )
 
     @property
     def coord_shift(self) -> int:

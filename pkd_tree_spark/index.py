@@ -15,10 +15,11 @@ Spark-first mapping (SURVEY.md §2.2):
      answers fully-contained subqueries without touching data — the
      containment short-circuit of range_count.hpp:79-80.
 
-At cluster scale the metadata table is itself a DataFrame (broadcastable,
-~n/leaf_target rows); covers are computed from query geometry alone
-(data-independent), driver-side here, or inside mapInPandas when the query
-set is itself large.
+The metadata table is a DataFrame, and its driver-resident copy (the
+skeleton, SpatialIndex.meta_np) always fits: EngineConfig bounds it at
+META_MEMO_CELLS cells. Covers are computed from query geometry alone
+(data-independent), driver-side, or inside mapInPandas against a
+broadcast of the skeleton when the query set is itself large.
 """
 
 from __future__ import annotations
@@ -40,13 +41,6 @@ __all__ = [
     "scan_intervals",
     "tracked_local_checkpoint",
 ]
-
-# meta tables up to this many cells are collected to the driver once per
-# index generation and reused by every query batch (leaf resolution,
-# interior prefix-sums, scan-interval pruning). A level-7 d=2 meta is
-# <= 16384 rows; 300k rows x (2+2d) longs ~ 15MB — still trivially
-# driver-resident. Larger metas fall back to Spark-side resolution joins.
-META_MEMO_CELLS = 300_000
 
 # build-input staging (see SpatialIndex.build): estimated input sizes above
 # this are cached before the range shuffle so repartitionByRange's sampling
@@ -121,59 +115,37 @@ class SpatialIndex:
                 pass
         self.release_staged()
 
-    def meta_np(self) -> dict | None:
-        """Driver-side snapshot of the (small) metadata table, memoized per
-        index generation: {"cells": sorted int64 cell ids, "cum": length
-        m+1 count prefix sums, "mn"/"mx": (m, d) per-cell occupied bounds}.
+    def meta_np(self) -> dict:
+        """Driver-side snapshot of the metadata table, memoized per index
+        generation: {"cells": sorted int64 cell ids, "cum": length m+1
+        count prefix sums, "mn"/"mx": (m, d) per-cell occupied bounds}.
 
         This is the distributed analog of the reference keeping its top
         skeleton in shared memory (build_tree.hpp:19-45): every query batch
         resolves its covers/shells against the skeleton WITHOUT a Spark
         job, so the points table is touched by exactly one equi-join per
-        batch. Returns None (and memoizes the refusal) when the meta
-        exceeds META_MEMO_CELLS — callers then use Spark-side resolution.
+        batch. Like the reference's, it exists at every n: EngineConfig
+        bounds the meta at META_MEMO_CELLS cells. Meta totals (points,
+        cells, per-cell counts) are read from it too.
         """
         if self._meta_np is not None:
-            return self._meta_np if self._meta_np.get("cells") is not None else None
+            return self._meta_np
         d = self.cfg.dims
-        n_cells = self.meta.count()
-        if n_cells > META_MEMO_CELLS:
-            object.__setattr__(self, "_meta_np", {"cells": None, "n_cells": n_cells})
-            return None
-        rows = self.meta.collect()
-        cells = np.array([r["cell"] for r in rows], dtype=np.int64)
-        order = np.argsort(cells)
-        cells = cells[order]
-        cnt = np.array([r["cnt"] for r in rows], dtype=np.int64)[order]
-        mn = np.stack(
-            [np.array([r[f"mn{j}"] for r in rows], dtype=np.int64)[order] for j in range(d)],
-            axis=1,
-        ) if rows else np.zeros((0, d), dtype=np.int64)
-        mx = np.stack(
-            [np.array([r[f"mx{j}"] for r in rows], dtype=np.int64)[order] for j in range(d)],
-            axis=1,
-        ) if rows else np.zeros((0, d), dtype=np.int64)
+        # one Arrow collect; cell ids are unique (the meta's group key)
+        m = self.meta.toPandas().sort_values("cell")
         memo = {
-            "cells": cells,
-            "cum": np.concatenate([[0], np.cumsum(cnt)]),
-            "mn": mn,
-            "mx": mx,
-            "n_cells": n_cells,
+            "cells": m["cell"].to_numpy(np.int64),
+            "cum": np.concatenate([[0], np.cumsum(m["cnt"].to_numpy(np.int64))]),
+            "mn": m[[f"mn{j}" for j in range(d)]].to_numpy(np.int64),
+            "mx": m[[f"mx{j}" for j in range(d)]].to_numpy(np.int64),
         }
         # frozen=False dataclass: plain assignment; keep setattr uniform
         object.__setattr__(self, "_meta_np", memo)
         return memo
 
     def meta_n_cells(self) -> int:
-        """Skeleton row count (memoized with meta_np — shared by the
-        broadcast gates in the Spark-side resolution paths)."""
-        if self._meta_np is None:
-            self.meta_np()
-        n = self._meta_np.get("n_cells")
-        if n is None:  # memo injected without a count (tests force refusal)
-            n = self.meta.count()
-            self._meta_np["n_cells"] = n
-        return int(n)
+        """Skeleton row count (the number of occupied level-L cells)."""
+        return len(self.meta_np()["cells"])
 
     def pruned_points(self, k: int) -> DataFrame | None:
         """Duplicate-position-collapsed candidate table for kNN — the
@@ -223,8 +195,8 @@ class SpatialIndex:
                 return df
         d = self.cfg.dims
         xcols = [f"x{j}" for j in range(d)]
-        s = self.meta.agg(F.sum("cnt").alias("s"), F.count(F.lit(1)).alias("m")).collect()[0]
-        tot, n_cells = s["s"] or 0, s["m"] or 0
+        mnp = self.meta_np()
+        tot, n_cells = int(mnp["cum"][-1]), len(mnp["cells"])
         if self._pruned is None:
             if tot == 0 or tot / max(1, n_cells) < PRUNE_MIN_DUP_FACTOR:
                 # zero-scan refusal: dup factor is bounded by cells' mean
@@ -339,28 +311,17 @@ class SpatialIndex:
 
     # -- introspection / invariants (validate() analog, validation.hpp:49-70)
     def validate(self) -> dict:
-        d = self.cfg.dims
-        n_pts = self.points.count()
-        m = self.meta.agg(F.sum("cnt").alias("s"), F.count(F.lit(1)).alias("cells")).collect()[0]
-        # every point's coords inside its cell's geometric bounds
+        mnp = self.meta_np()
+        # every cell's occupied bbox inside its cell's geometric bounds
         w = self.cfg.cell_width
-        viol: int | None = 0
-        mrows = self.meta.collect() if m["cells"] < 200_000 else None
-        if mrows is None:
-            viol = None  # too many cells for a driver-side check: report "not checked", never a silent 0
-        else:
-            cells = np.array([r["cell"] for r in mrows], dtype=np.int64)
-            gcoords = morton_decode_np(cells, d, bits=self.cfg.index_level)
-            for j in range(d):
-                mn = np.array([r[f"mn{j}"] for r in mrows])
-                mx = np.array([r[f"mx{j}"] for r in mrows])
-                viol += int(np.sum((mn < gcoords[:, j] * w) | (mx > (gcoords[:, j] + 1) * w - 1)))
+        lo = morton_decode_np(mnp["cells"], self.cfg.dims, bits=self.cfg.index_level) * w
+        viol = int(((mnp["mn"] < lo) | (mnp["mx"] > lo + (w - 1))).sum())
         return {
-            "n_points": n_pts,
-            "meta_sum": m["s"],
-            "n_cells": m["cells"],
+            "n_points": self.points.count(),
+            "meta_sum": int(mnp["cum"][-1]) if len(mnp["cells"]) else None,
+            "n_cells": len(mnp["cells"]),
             "bbox_violations": viol,
-            "bbox_checked": viol is not None,
+            "bbox_checked": True,
         }
 
 
@@ -515,7 +476,7 @@ def _intervals_pred(starts: np.ndarray, ends: np.ndarray, shift: int) -> Column:
     return F.expr(" OR ".join(terms))
 
 
-def scan_intervals(meta: dict | None, leaves: np.ndarray) -> tuple[np.ndarray, np.ndarray] | None:
+def scan_intervals(meta: dict, leaves: np.ndarray) -> tuple[np.ndarray, np.ndarray] | None:
     """The scan pre-filter decision: the capped leaf ranges to filter a
     points scan by, or None when the scan should read the whole table.
 
@@ -525,9 +486,8 @@ def scan_intervals(meta: dict | None, leaves: np.ndarray) -> tuple[np.ndarray, n
     subtrees (range_count.hpp:77-78, nn_search.hpp:121-123). It is
     emitted only when the ranges, capped at SCAN_PRED_MAX_INTERVALS,
     exclude at least SCAN_PRED_MIN_EXCLUDED of the index's rows — exact
-    from the memoized meta's count prefix sums. Without a memoized meta
-    there is no count to decide on, and nothing is emitted."""
-    if meta is None or np.size(leaves) == 0:
+    from the memoized meta's count prefix sums."""
+    if np.size(leaves) == 0:
         return None
     starts, ends = morton_intervals(leaves, SCAN_PRED_MAX_INTERVALS)
     cells, cum = meta["cells"], meta["cum"]
@@ -540,7 +500,7 @@ def scan_intervals(meta: dict | None, leaves: np.ndarray) -> tuple[np.ndarray, n
     return starts, ends
 
 
-def leaf_scan_pred(meta: dict | None, leaves: np.ndarray, shift: int) -> Column | None:
+def leaf_scan_pred(meta: dict, leaves: np.ndarray, shift: int) -> Column | None:
     """``scan_intervals`` as a ``morton`` predicate (None: scan everything)."""
     iv = scan_intervals(meta, leaves)
     return None if iv is None else _intervals_pred(*iv, shift)

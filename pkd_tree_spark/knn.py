@@ -29,13 +29,13 @@ therefore unconditional in O(log grid) rounds with bounded per-round work.
 ONE ring loop, whatever the batch size (the reference runs one traversal,
 nn_search.hpp:81-126). Its state is the pending queries (qid, coordinates,
 level, r, cnt) plus their carried top-k; only where a round runs varies:
-  * while more than DRIVER_CELLS_MAX_QUERIES queries are pending (or the
-    skeleton is too big to memoize) a round runs DISTRIBUTED — the query
-    set is a checkpointed DataFrame (the reference's headline batch is
-    10^7 queries, testFramework.h:470-520 with batchQueryRatio=0.01 at
-    n=10^9), shell cells are generated inside mapInPandas, per-round
-    termination is a join + column expressions, and the engine issues
-    O(1) driver actions per round independent of query count;
+  * while more than DRIVER_CELLS_MAX_QUERIES queries are pending a round
+    runs DISTRIBUTED — the query set is a checkpointed DataFrame (the
+    reference's headline batch is 10^7 queries, testFramework.h:470-520
+    with batchQueryRatio=0.01 at n=10^9), shell cells are generated
+    inside mapInPandas, per-round termination is a join + column
+    expressions, and the engine issues O(1) driver actions per round
+    independent of query count;
   * once the pending set is at or below that size it is collected ONCE
     (carried top-k exploded into rows) and the remaining rounds run on the
     DRIVER (_knn_driver): numpy shells and merge, one candidate collect
@@ -51,8 +51,8 @@ _assign_levels_np: the coarsest even level whose home-cell 3^d
 neighborhood fits the candidate target, or a closed-form deep level from
 the hot leaf's count and occupied bbox. Small batches run it on the
 driver; large batches run it inside mapInPandas against the broadcast
-skeleton. Without a memoized skeleton every query takes the fixed
-``level``: level choice never affects exactness, only the ring count.
+skeleton. With adaptive=False every query takes the fixed ``level``:
+level choice never affects exactness, only the ring count.
 
 Physical plan per distributed round: the shell-cell equi-joins against
 the candidate table (see _candidate_join), then a row_number() WINDOW
@@ -254,9 +254,7 @@ def _assign_levels_np(
     return lv_pick
 
 
-def _resolved_cells(
-    qpd: pd.DataFrame, d: int, coord_bits: int, L: int, meta: dict | None
-) -> pd.DataFrame:
+def _resolved_cells(qpd: pd.DataFrame, d: int, coord_bits: int, L: int, meta: dict) -> pd.DataFrame:
     """Shell cells for each query's Chebyshev SHELL (r_prev, r] at its grid
     ``level`` (r_prev = r//2; round 1 includes the home cell), RESOLVED
     against the index skeleton ``meta`` (see SpatialIndex.meta_np):
@@ -273,9 +271,7 @@ def _resolved_cells(
 
     Vectorized per (level, r) group; out-of-grid cells are DROPPED (no
     points live there), so shells never collide across rounds and the
-    carried top-k merge stays multiset-exact. With meta=None (skeleton too
-    big to memoize) all cells pass through unresolved as (qid, level,
-    cell) — the r3 behavior."""
+    carried top-k merge stays multiset-exact."""
     from .index import expand_ranges
 
     frames = []
@@ -300,9 +296,6 @@ def _resolved_cells(
             continue
         qids = qid_rep.reshape(-1)[ok.reshape(-1)]
         enc = morton_encode_np(flat, bits=level)
-        if meta is None:
-            frames.append(pd.DataFrame({"qid": qids, "lvl": np.int32(level), "cell": enc}))
-            continue
         mcells = meta["cells"]
         if level <= L:
             s = d * (L - level)
@@ -344,64 +337,6 @@ def _exh_cond(d: int):
     the query takes the exhaustive branch (shared by the branch split and
     the termination expression; both sides must agree row-for-row)."""
     return F.lit(float(d)) * F.log2(F.lit(2.0) * F.col("r") + F.lit(1.0)) > F.lit(MESH_CAP_LOG2)
-
-
-def _resolve_cells_spark(index, cells: DataFrame, d: int, L: int) -> DataFrame:
-    """Spark-side shell resolution for indexes whose meta exceeds the
-    driver memo (META_MEMO_CELLS) — the kNN mirror of the over-memo path in
-    ranges._resolve (the reference routes through its skeleton
-    at every n, inner_tree.hpp:42-55; r4 instead fell back to the full
-    points explode here, re-creating the r3 scale-killer exactly at the
-    scale the memo gives up).
-
-    Coarse shell cells (lvl <= L) resolve to their OCCUPIED level-L leaf
-    descendants via a per-level ancestor explode join against the meta
-    table -> (qid, -1, leaf), feeding the no-generate leaf equi-join.
-    Fine cells (lvl > L) survive as (qid, lvl, cell) only if their leaf
-    ancestor is occupied (exact emptiness proof — same check as the
-    memoized path minus the bbox refinement, which is an optimization
-    only). The meta side explodes, never the points side; its broadcast
-    is ROW-GATED (this path only engages when the meta already exceeds
-    the driver memo, so the exploded meta can reach 10^7+ rows — an
-    unconditional broadcast is exactly wrong here; oversized metas take
-    a shuffled join of the two small-ish sides instead)."""
-    lvls = sorted(
-        int(r["lvl"]) for r in cells.select("lvl").distinct().collect()
-    )
-    n_meta = index.meta_n_cells()
-    meta_bcast_rows = BROADCAST_BYTES // 24
-    coarse = [l for l in lvls if 0 <= l <= L]
-    parts: list[DataFrame] = []
-    if coarse:
-        m = (
-            index.meta.select("cell")
-            .select(
-                F.col("cell").alias("leaf"),
-                F.explode(F.array(*[F.lit(int(l)).cast("int") for l in coarse])).alias("lvl"),
-            )
-            .withColumn(
-                "cell", F.expr(f"shiftrightunsigned(leaf, CAST({d} * ({L} - lvl) AS INT))")
-            )
-        )
-        if n_meta * len(coarse) <= meta_bcast_rows:
-            m = F.broadcast(m)
-        parts.append(
-            cells.where(F.col("lvl").isin(coarse))
-            .join(m, ["lvl", "cell"])
-            .select("qid", F.lit(-1).cast("int").alias("lvl"), F.col("leaf").alias("cell"))
-        )
-    if any(l > L for l in lvls):
-        fine = cells.where(F.col("lvl") > L).withColumn(
-            "anc", F.expr(f"shiftrightunsigned(cell, CAST({d} * (lvl - {L}) AS INT))")
-        )
-        occ = index.meta.select(F.col("cell").alias("anc"))
-        if n_meta <= meta_bcast_rows:
-            occ = F.broadcast(occ)
-        parts.append(
-            fine.join(occ, "anc", "leftsemi").select("qid", "lvl", "cell")
-        )
-    return _union(parts) if parts else cells.where(F.lit(False))
-
 
 
 def _union(frames: list[DataFrame]) -> DataFrame:
@@ -454,7 +389,7 @@ def _candidate_join(
     cell_rel,
     lvl_counts: dict[int, int],
     leaves: dict[int, np.ndarray] | None,
-    mnp: dict | None,
+    mnp: dict,
     d: int,
     kb: int,
     L: int,
@@ -595,7 +530,7 @@ def _knn_driver(
     qcols = [f"q{j}" for j in range(d)]
     qschema = ", ".join(f"{q} long" for q in qcols)
     mnp = index.meta_np()
-    total_pts = int(mnp["cum"][-1]) if len(mnp["cells"]) else 0
+    total_pts = int(mnp["cum"][-1])
     pts_narrow, dist2 = _candidate_source(index, k, d)
 
     res_frames: list[pd.DataFrame] = []
@@ -829,16 +764,15 @@ def knn(
     # small batches run every round on the driver (see _knn_driver):
     # pandas query sets dispatch directly; Spark query frames are probed
     # with one LIMIT collect (complete iff it returns fewer rows than the
-    # cap). Large batches and over-memo metas take the distributed rounds.
+    # cap). Large batches take the distributed rounds.
     st = None
-    if mnp is not None:
-        if isinstance(queries, pd.DataFrame):
-            if len(queries) <= DRIVER_CELLS_MAX_QUERIES:
-                st = queries[["qid", *qcols]].reset_index(drop=True).astype("int64")
-        else:
-            probe = queries.select("qid", *qcols).limit(DRIVER_CELLS_MAX_QUERIES + 1).toPandas()
-            if len(probe) <= DRIVER_CELLS_MAX_QUERIES:
-                st = probe.astype("int64")
+    if isinstance(queries, pd.DataFrame):
+        if len(queries) <= DRIVER_CELLS_MAX_QUERIES:
+            st = queries[["qid", *qcols]].reset_index(drop=True).astype("int64")
+    else:
+        probe = queries.select("qid", *qcols).limit(DRIVER_CELLS_MAX_QUERIES + 1).toPandas()
+        if len(probe) <= DRIVER_CELLS_MAX_QUERIES:
+            st = probe.astype("int64")
     if st is not None:
         if adaptive:
             st["level"] = _assign_levels_np(mnp, st, d, cb, L, k, level, cap, target_candidates)
@@ -857,7 +791,7 @@ def knn(
 
     # ship the skeleton once per batch (not per task closure): level
     # assignment and every round's shell resolution share it
-    bc_meta = spark.sparkContext.broadcast(mnp) if mnp is not None else None
+    bc_meta = spark.sparkContext.broadcast(mnp)
     try:
         return _knn_rounds(
             index, qdf, bc_meta, k, level, cap, max_rounds, adaptive, target_candidates,
@@ -866,8 +800,7 @@ def knn(
     finally:
         # every frame the result derives from is checkpointed: the lazy
         # result no longer reads the skeleton broadcast
-        if bc_meta is not None:
-            bc_meta.destroy()
+        bc_meta.destroy()
 
 
 def _knn_rounds(
@@ -892,7 +825,7 @@ def _knn_rounds(
     qcols = [f"q{j}" for j in range(d)]
     qschema = ", ".join(f"{q} long" for q in qcols)
     mnp = index.meta_np()
-    if adaptive and bc_meta is not None:
+    if adaptive:
         def _levels(batches):
             meta = bc_meta.value
             for pdf in batches:
@@ -926,7 +859,7 @@ def _knn_rounds(
     pts_narrow, dist2 = _candidate_source(index, k, d)
 
     def _gen_cells(batches):
-        meta = bc_meta.value if bc_meta is not None else None
+        meta = bc_meta.value
         for pdf in batches:
             if len(pdf):
                 yield _resolved_cells(pdf, d, cb, L, meta)
@@ -938,7 +871,7 @@ def _knn_rounds(
     for rnd in range(1, max_rounds + 1):
         if n_pend == 0:
             break
-        if mnp is not None and n_pend <= DRIVER_CELLS_MAX_QUERIES:
+        if n_pend <= DRIVER_CELLS_MAX_QUERIES:
             # hand the small pending set to the driver rounds: ONE collect,
             # the carried top-k exploded into rows (a query with an empty
             # top-k keeps one row whose entry columns read -1)
@@ -956,7 +889,7 @@ def _knn_rounds(
         exh = _exh_cond(d)
         branches: list[DataFrame] = []
         cnt_parts: list[DataFrame] = []  # stats-only: candidate rows per qid
-        cells = raw_cells = None
+        cells = None
         lvl_counts: dict[int, int] = {}
 
         # --- mesh branch: shells resolved against the skeleton, joined by
@@ -965,34 +898,25 @@ def _knn_rounds(
             mesh_pend = pend.where(~exh)
             cells = mesh_pend.select("qid", *qcols, "level", "r").mapInPandas(
                 _gen_cells, schema="qid long, lvl int, cell long"
-            )
-            if mnp is None:
-                # meta too large for the driver memo: resolve shells via
-                # the meta-side join instead of reverting to the full
-                # points explode (r4's at-scale fallback defect)
-                raw_cells = cells.persist()
-                cells = _resolve_cells_spark(index, raw_cells, d, L)
-            cells = cells.persist()
+            ).persist()
             # ONE driver action serves both the per-level shell-cell counts
             # and the leaf sets: group by (lvl, leaf-ancestor) — bounded by
             # skeleton x levels, never by shell-cell count (r5 ran a second
             # full distinct+collect over the shell table every round)
-            rows = None
-            if mnp is not None:
-                anc = F.when(F.col("lvl") < 0, F.col("cell")).otherwise(
-                    F.expr(f"shiftrightunsigned(cell, CAST({d} * (lvl - {L}) AS INT))")
-                )
-                rows = (
-                    cells.groupBy("lvl", anc.alias("leaf"))
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .limit(LEAF_COLLECT_CAP + 1)
-                    .collect()
-                )
-                if len(rows) > LEAF_COLLECT_CAP:
-                    rows = None  # overflow: counts only, no scan pre-filter
-            leaf = None if rows is None else np.array([r["leaf"] for r in rows], dtype=np.int64)
-            if rows is None:
+            anc = F.when(F.col("lvl") < 0, F.col("cell")).otherwise(
+                F.expr(f"shiftrightunsigned(cell, CAST({d} * (lvl - {L}) AS INT))")
+            )
+            rows = (
+                cells.groupBy("lvl", anc.alias("leaf"))
+                .agg(F.count(F.lit(1)).alias("n"))
+                .limit(LEAF_COLLECT_CAP + 1)
+                .collect()
+            )
+            leaf = None
+            if len(rows) > LEAF_COLLECT_CAP:  # overflow: counts only, no scan pre-filter
                 rows = cells.groupBy("lvl").agg(F.count(F.lit(1)).alias("n")).collect()
+            else:
+                leaf = np.array([r["leaf"] for r in rows], dtype=np.int64)
             lvl_counts, leaves = _level_stats(
                 np.array([r["lvl"] for r in rows], dtype=np.int64),
                 np.array([r["n"] for r in rows], dtype=np.int64),
@@ -1128,8 +1052,6 @@ def _knn_rounds(
         n_pend, n_exh = _pend_counts(pend)
         if cells is not None:
             cells.unpersist()
-        if raw_cells is not None:
-            raw_cells.unpersist()
 
     return _finish(index, result_parts, res_pd, stats_pd, return_stats)
 

@@ -33,8 +33,8 @@ RESOLVED_BCAST_ROWS resolve on the driver — zero Spark jobs before the
 final query. Every other batch takes one mapInPandas pass over the query
 frame that computes covers, interior sums and resolved leaves inside the
 executors against a broadcast of the skeleton (covers are never
-collected). A meta past META_MEMO_CELLS has no skeleton: the same pass
-emits covers, which resolve by a meta-side explode join instead.
+collected). The skeleton always exists: EngineConfig bounds it at
+META_MEMO_CELLS cells.
 """
 
 from __future__ import annotations
@@ -73,7 +73,6 @@ DISTRIBUTED_COVER_THRESHOLD = 4000
 # resolved (qid, leaf, interior) rows are ~24B: 5M rows ≈ 120MB broadcast
 RESOLVED_BCAST_ROWS = 5_000_000
 
-_COVER_SCHEMA = "qid long, level int, cell long, interior boolean"
 _RESOLVED_SCHEMA = "qid long, leaf long, interior boolean, cnt long"
 
 
@@ -185,7 +184,7 @@ def _resolve(index: SpatialIndex, kind: str, q: pd.DataFrame, qdf: DataFrame, bu
     cfg = index.cfg
     d, L = cfg.dims, cfg.index_level
     mnp = index.meta_np()
-    if mnp is not None and len(q) <= DISTRIBUTED_COVER_THRESHOLD:
+    if len(q) <= DISTRIBUTED_COVER_THRESHOLD:
         cov = cover_regions(_regions(kind, q, d), cfg, budget)
         res = resolve_covers_np(mnp, cov[~cov.interior] if count else cov, d, L, RESOLVED_BCAST_ROWS)
         if res is not None:
@@ -199,29 +198,8 @@ def _resolve(index: SpatialIndex, kind: str, q: pd.DataFrame, qdf: DataFrame, bu
         # region-spanning covers can resolve to ~n_queries x occupied leaves:
         # too big for a driver frame and a broadcast, so the executors
         # resolve them and the gate below measures the result
-    if mnp is not None:
-        out = _executor_pass(index, kind, qdf, budget, partial(_resolve_batch, d=d, L=L, count=count),
-                             _RESOLVED_SCHEMA, mnp)
-    else:
-        # no skeleton (meta past META_MEMO_CELLS): resolve the executor
-        # covers by a meta-side join, one row per (qid, leaf) with the
-        # leaf's count, so interior sums aggregate downstream
-        cov = _executor_pass(index, kind, qdf, budget, lambda c, _m: c, _COVER_SCHEMA)
-        levels = sorted(r["level"] for r in cov.select("level").distinct().collect())
-        m = _with_lvl_cell(index.meta.select("cell", "cnt"), "cell", levels, d, L).select(
-            "lvl", "c", F.col("cell").alias("leaf"), "cnt"
-        )
-        # meta-side broadcast gated on rows (meta x levels): a meta past the
-        # driver memo can reach 10^7+ exploded rows — broadcasting it is the
-        # OOM-shaped mistake; both sides are then left to a shuffled join
-        if index.meta_n_cells() * max(1, len(levels)) <= RESOLVED_BCAST_ROWS:
-            m = F.broadcast(m)
-        out = (
-            cov.select("qid", F.col("level").alias("lvl"), F.col("cell").alias("c"), "interior")
-            .join(m, ["lvl", "c"])
-            .select("qid", "leaf", "interior", "cnt")
-            .localCheckpoint(eager=True)
-        )
+    out = _executor_pass(index, kind, qdf, budget, partial(_resolve_batch, d=d, L=L, count=count),
+                         _RESOLVED_SCHEMA, mnp)
     res = (out.where(~F.col("interior")) if count else out).select("qid", "leaf", "interior")
     # the resolved side is usually a few MB but can exceed AQE's broadcast
     # threshold (10k-box batches resolve to ~10^6 rows), which would fall
@@ -232,20 +210,6 @@ def _resolve(index: SpatialIndex, kind: str, q: pd.DataFrame, qdf: DataFrame, bu
         res = F.broadcast(res)
     inter = out.where(F.col("interior")).select("qid", "cnt") if count else None
     return inter, res if n_res else None, None
-
-
-def _with_lvl_cell(df: DataFrame, src_col: str, levels: list[int], d: int, top_bits_level: int) -> DataFrame:
-    """Append (lvl, c): ``src_col``'s ancestor cell at each cover level —
-    ONE explode instead of one scan per level. Applied ONLY to the small
-    metadata table (leaf resolution without a skeleton): r3 exploded the
-    full POINTS table over every distinct cover level, multiplying the
-    38.4M-row scan by 6-8x and inverting 4->16-core scaling. ``top_bits_level``
-    is the level src_col itself is encoded at."""
-    return df.select(
-        "*", F.explode(F.array(*[F.lit(int(l)).cast("int") for l in levels])).alias("lvl")
-    ).withColumn(
-        "c", F.expr(f"shiftrightunsigned({src_col}, CAST({d} * ({int(top_bits_level)} - lvl) AS INT))")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -32,6 +32,7 @@ import os
 import time
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -183,7 +184,7 @@ def merge_delete(
         # keeps its survivors LAZY — downstream consumers re-run the
         # streamed broadcast anti-join over the still-cached parent instead
         # of paying a full-table cache write per small delete
-        tot = index.meta.agg(F.sum("cnt").alias("s")).collect()[0]["s"] or 0
+        tot = int(index.meta_np()["cum"][-1])
         if nk > DELETE_LAZY_PERSIST_FRAC * tot:
             pts = pts.persist()
     out = SpatialIndex(points=pts, meta=meta, cfg=cfg, _staged_ids=key_ids)
@@ -228,16 +229,15 @@ def check_skew(index: SpatialIndex) -> dict:
     distributed analog flags the index when the hottest cell exceeds
     leaf_target * (1 + ratio/10) or partitions drift empty."""
     cfg = index.cfg
-    s = index.meta.agg(
-        F.max("cnt").alias("max_cnt"), F.avg("cnt").alias("avg_cnt"), F.count(F.lit(1)).alias("cells")
-    ).collect()[0]
+    cum = index.meta_np()["cum"]
+    max_cnt = int(np.diff(cum).max())
     threshold = cfg.leaf_target * (1 + cfg.imbalance_ratio / 10.0)
     return {
-        "max_cell": s["max_cnt"],
-        "avg_cell": float(s["avg_cnt"]),
-        "cells": s["cells"],
+        "max_cell": max_cnt,
+        "avg_cell": float(cum[-1]) / (len(cum) - 1),
+        "cells": len(cum) - 1,
         "threshold": threshold,
-        "needs_retile": bool(s["max_cnt"] and s["max_cnt"] > threshold),
+        "needs_retile": max_cnt > threshold,
     }
 
 

@@ -96,3 +96,39 @@ def test_duplicate_documents_fixture():
     idx = SpatialIndex.build(spark.createDataFrame(pts), cfg)
     v = idx.validate()
     assert v["n_points"] == 1000 and v["meta_sum"] == 1000 and v["n_cells"] == 1
+
+
+def test_meta_totals_read_the_skeleton(spark, cfg):
+    """check_skew, validate and pruned_points take their meta totals from
+    the memoized skeleton: once it is memoized, a meta frame that fails
+    when evaluated changes none of their results. Expected values are the
+    Spark aggregates over the real meta."""
+    from pkd_tree_spark.index import SpatialIndex
+    from pkd_tree_spark.documents import load_points
+    from pkd_tree_spark.updates import check_skew
+
+    pts = load_points(spark, SF_DIR, dims=2, dist="uniform")
+    # a duplicate lattice engages the pruned table; the raw points refuse it
+    lattice = pts.select("doc_id", "span_idx", "key", *[(F.col(f"x{j}") % 10 * 99_991).alias(f"x{j}") for j in range(2)])
+    for src, engages in ((pts, False), (lattice, True)):
+        idx = SpatialIndex.build(src, cfg)
+        m = idx.meta.agg(
+            F.max("cnt").alias("mx"), F.avg("cnt").alias("av"), F.count(F.lit(1)).alias("n"), F.sum("cnt").alias("s")
+        ).collect()[0]
+        threshold = cfg.leaf_target * (1 + cfg.imbalance_ratio / 10.0)
+        want_skew = {
+            "max_cell": m["mx"], "avg_cell": float(m["av"]), "cells": m["n"], "threshold": threshold,
+            "needs_retile": bool(m["mx"] > threshold),
+        }
+        want_val = {
+            "n_points": idx.points.count(), "meta_sum": m["s"], "n_cells": m["n"],
+            "bbox_violations": 0, "bbox_checked": True,
+        }
+        idx.meta_np()
+        idx.meta = idx.meta.where(F.raise_error("meta frame evaluated").isNull())
+        assert check_skew(idx) == want_skew
+        assert idx.validate() == want_val
+        pruned = idx.pruned_points(10)
+        assert (pruned is not None) == engages
+        if engages:
+            assert pruned.count() < want_val["n_points"]

@@ -90,7 +90,7 @@ def test_knn_offgrid_shell_still_terminates(spark):
 
 
 # ---------------------------------------------------------------------------
-# round 5: large-meta Spark-side resolution, duplicate collapse, empty index
+# distributed fixed-level rounds, duplicate collapse, empty index
 # ---------------------------------------------------------------------------
 
 _RESCOLS = ["qid", "rn", "key", "span_idx", "dist2"]
@@ -100,59 +100,29 @@ def _sorted(res) -> pd.DataFrame:
     return res.toPandas().sort_values(["qid", "rn"]).reset_index(drop=True)[_RESCOLS]
 
 
-def test_knn_large_meta_fallback_no_points_explode(spark, cfg, index_uniform, points_uniform):
-    """When the meta exceeds the driver memo (META_MEMO_CELLS), kNN must
-    resolve shells via the meta-side join — NOT revert to the full points
-    explode (VERDICT r4 'What's wrong' #2). Coarse shells resolve to
-    lvl==-1 leaf rows, which take the no-generate leaf equi-join."""
-    from pkd_tree_spark.documents import load_points
-    from pkd_tree_spark.index import SpatialIndex
+@pytest.mark.parametrize("grain", ["coarse", "fine"])
+def test_knn_distributed_fixed_level_matches_driver(request, cfg, monkeypatch, grain):
+    """A fixed level through the distributed rounds only (the handoff size
+    patched to 0) must match the driver rounds exactly. Coarse shells
+    (level <= index_level) resolve to lvl == -1 leaf rows only, which take
+    the no-generate leaf equi-join; fine shells (level > index_level)
+    survive as their own cells behind the skeleton's occupancy checks."""
+    import pkd_tree_spark.knn as K
 
-    idx = SpatialIndex.build(load_points(spark, "/root/testdata/sf0.001", dims=2, dist="uniform"), cfg)
-    object.__setattr__(idx, "_meta_np", {"cells": None})  # memo refusal
-    assert idx.meta_np() is None
+    idx = request.getfixturevalue("index_uniform" if grain == "coarse" else "index_varden")
+    lvl = 4 if grain == "coarse" else cfg.index_level + 2
     queries = FX.knn_fixtures(16, 2)
-    plans: list = []
-    got = _sorted(knn(idx, queries, k=10, level=4, adaptive=False, plan_log=plans))
-    want = _sorted(knn(index_uniform, queries, k=10, level=4, adaptive=False))
-    pd.testing.assert_frame_equal(got, want)
-    assert plans, "plan probe should capture at least one round"
-    for p in plans:
-        # every resolved shell cell is a leaf row (lvl==-1): the candidate
-        # join is the single-scan leaf equi-join, no points-side explode
-        assert set(p["lvl_counts"]) <= {-1}, p["lvl_counts"]
-
-
-def test_knn_large_meta_fallback_adaptive(spark, cfg, index_varden):
-    """Adaptive (mixed coarse/fine level) queries through the Spark-side
-    resolution path must match the memoized path exactly."""
-    from pkd_tree_spark.documents import load_points
-    from pkd_tree_spark.index import SpatialIndex
-
-    idx = SpatialIndex.build(load_points(spark, "/root/testdata/sf0.001", dims=2, dist="varden"), cfg)
-    object.__setattr__(idx, "_meta_np", {"cells": None})
-    queries = FX.knn_fixtures(16, 2)
-    got = _sorted(knn(idx, queries, k=10))
-    want = _sorted(knn(index_varden, queries, k=10))
-    pd.testing.assert_frame_equal(got, want)
-
-
-def test_knn_large_meta_fixed_fine_level(spark, cfg, index_varden):
-    """A fixed level above index_level through the Spark-side resolution
-    path: fine shell cells survive as (qid, lvl, cell) behind the
-    leaf-occupancy semi-join and must match the memoized path exactly."""
-    from pkd_tree_spark.documents import load_points
-    from pkd_tree_spark.index import SpatialIndex
-
-    idx = SpatialIndex.build(load_points(spark, "/root/testdata/sf0.001", dims=2, dist="varden"), cfg)
-    object.__setattr__(idx, "_meta_np", {"cells": None})
-    queries = FX.knn_fixtures(16, 2)
-    lvl = cfg.index_level + 2
+    want = _sorted(knn(idx, queries, k=10, level=lvl, adaptive=False))
+    monkeypatch.setattr(K, "DRIVER_CELLS_MAX_QUERIES", 0)
     plans: list = []
     got = _sorted(knn(idx, queries, k=10, level=lvl, adaptive=False, plan_log=plans))
-    want = _sorted(knn(index_varden, queries, k=10, level=lvl, adaptive=False))
     pd.testing.assert_frame_equal(got, want)
-    assert any(lv > cfg.index_level for p in plans for lv in p["lvl_counts"]), plans
+    assert plans, "plan probe should capture at least one round"
+    if grain == "coarse":
+        for p in plans:
+            assert set(p["lvl_counts"]) <= {-1}, p["lvl_counts"]
+    else:
+        assert any(lv > cfg.index_level for p in plans for lv in p["lvl_counts"]), plans
 
 
 def test_knn_pruned_duplicate_collapse(spark, cfg):

@@ -164,10 +164,11 @@ def test_distributed_covers_match_driver_side(index_uniform):
     """The mapInPandas cover pass (used for large query batches) must
     produce exactly the driver-side covers, for every region kind."""
     from pkd_tree_spark.index import cover_regions
-    from pkd_tree_spark.ranges import _COVER_SCHEMA, _executor_pass, _regions
+    from pkd_tree_spark.ranges import _executor_pass, _regions
 
     spark, cfg = index_uniform.points.sparkSession, index_uniform.cfg
     cols = ["qid", "level", "cell"]
+    schema = "qid long, level int, cell long, interior boolean"
     queries = {
         "box": FX.box_fixtures(50, 2),
         "ball": FX.ball_fixtures(50, 2),
@@ -176,7 +177,7 @@ def test_distributed_covers_match_driver_side(index_uniform):
     for kind, q in queries.items():
         want = cover_regions(_regions(kind, q, 2), cfg, 256).sort_values(cols).reset_index(drop=True)
         got = (
-            _executor_pass(index_uniform, kind, spark.createDataFrame(q), 256, lambda c, _m: c, _COVER_SCHEMA)
+            _executor_pass(index_uniform, kind, spark.createDataFrame(q), 256, lambda c, _m: c, schema)
             .toPandas()
             .sort_values(cols)
             .reset_index(drop=True)
@@ -225,20 +226,6 @@ def test_oversized_driver_resolution_takes_executor_path(index_uniform, points_u
 
     monkeypatch.setattr(R, "RESOLVED_BCAST_ROWS", 10)
     _assert_same(_range_calls(index_uniform), _oracle_calls(points_uniform))
-    assert executor_passes == ["box", "ball", "polygon", "box"]
-
-
-def test_over_memo_range_path(spark, cfg, points_uniform, executor_passes):
-    """A meta past META_MEMO_CELLS has no driver skeleton: covers come from
-    the executor pass and resolve by the meta-side join."""
-    from conftest import SF_DIR
-    from pkd_tree_spark.documents import load_points
-    from pkd_tree_spark.index import SpatialIndex
-
-    idx = SpatialIndex.build(load_points(spark, SF_DIR, dims=2, dist="uniform"), cfg)
-    object.__setattr__(idx, "_meta_np", {"cells": None})  # memo refusal
-    assert idx.meta_np() is None
-    _assert_same(_range_calls(idx), _oracle_calls(points_uniform))
     assert executor_passes == ["box", "ball", "polygon", "box"]
 
 

@@ -63,8 +63,6 @@ def test_scan_intervals_gate():
     assert starts.size <= I.SCAN_PRED_MAX_INTERVALS
     covered = sum(int(e - s + 1) for s, e in zip(starts, ends)) * 10
     assert covered <= (1 - I.SCAN_PRED_MIN_EXCLUDED) * int(meta["cum"][-1])
-    # no memoized meta (too large to collect): never a predicate
-    assert I.scan_intervals(None, corner) is None
 
 
 def test_scan_intervals_counts_rows_not_leaves():
