@@ -15,26 +15,29 @@ one report plan serve all three. Per query batch:
       |
       +-- resolve against the skeleton (SpatialIndex.meta_np):
       |     interior cells -> SUM of per-cell counts      [no row touched]
-      |     boundary cells -> occupied level-L leaves (qid, leaf, interior)
+      |     boundary cells -> occupied leaves (qid, leaf, interior, region)
       |
       +-- points (ONE scan, Morton pre-filter when it pays, one derived
-            leaf column) == resolved leaves  [broadcast when it fits]
+            leaf column) == resolved leaves  [one join, broadcast if it fits]
             -> exact predicate -> COUNT per qid / rows
-  count: interior sums UNION boundary counts -> SUM per qid (covers are
-  disjoint per qid, so nothing double counts); report: interior-cell rows
-  skip the predicate (the bulk-flatten path, range_query.hpp:99-102).
+  count: interior sums + the collected boundary counts, added per qid on
+  the driver (covers are disjoint per qid: nothing double counts); report:
+  interior-cell rows skip the predicate (range_query.hpp:99-102).
 
 The interior branch is the reference's containment short-circuit
-(`within_box -> return T->size`, range_count.hpp:79-80).
+(`within_box -> return T->size`, range_count.hpp:79-80). As there, a
+count returns numbers: the count operators run their query when called
+and return a local (qid, cnt) frame. Reports stay lazy.
 
 Where resolution runs (`_resolve`, the one place that decides): batches
-of at most DISTRIBUTED_COVER_THRESHOLD queries whose resolution fits
-RESOLVED_BCAST_ROWS resolve on the driver — zero Spark jobs before the
-final query. Every other batch takes one mapInPandas pass over the query
+of at most DISTRIBUTED_COVER_THRESHOLD queries whose resolved rows fit
+RESOLVED_BCAST_BYTES resolve on the driver — zero Spark jobs before the
+one query. Every other batch takes one mapInPandas pass over the query
 frame that computes covers, interior sums and resolved leaves inside the
 executors against a broadcast of the skeleton (covers are never
 collected). The skeleton always exists: EngineConfig bounds it at
-META_MEMO_CELLS cells.
+META_MEMO_CELLS cells. A repeated qid would multiply covers and join
+rows, so every operator rejects it.
 """
 
 from __future__ import annotations
@@ -70,8 +73,9 @@ __all__ = [
 # query batches above this size compute and resolve their covers in the
 # executors instead of on the driver
 DISTRIBUTED_COVER_THRESHOLD = 4000
-# resolved (qid, leaf, interior) rows are ~24B: 5M rows ≈ 120MB broadcast
-RESOLVED_BCAST_ROWS = 5_000_000
+# broadcast budget of the resolved relation: bare (qid, leaf, interior)
+# rows are ~24B (5M rows), the region columns each row carries widen them
+RESOLVED_BCAST_BYTES = 120_000_000
 
 _RESOLVED_SCHEMA = "qid long, leaf long, interior boolean, cnt long"
 
@@ -144,10 +148,10 @@ def _exact_pred(kind: str, d: int) -> Column:
 
 def _executor_pass(index: SpatialIndex, kind: str, qdf: DataFrame, budget: int, fn, schema: str,
                    meta: dict | None = None) -> DataFrame:
-    """``fn(covers, meta)`` over every batch of the query frame inside
-    mapInPandas: covers are computed in the executors and never collected.
-    The skeleton ships once as a broadcast; the output is checkpointed, so
-    the broadcast is destroyed before this returns."""
+    """``fn(batch, covers, meta)`` over every batch of the query frame
+    inside mapInPandas: covers are computed in the executors and never
+    collected. The skeleton ships once as a broadcast; the output is
+    checkpointed, so the broadcast is destroyed before this returns."""
     spark = index.points.sparkSession
     cfg = index.cfg
     bc = spark.sparkContext.broadcast(meta) if meta is not None else None
@@ -156,7 +160,7 @@ def _executor_pass(index: SpatialIndex, kind: str, qdf: DataFrame, budget: int, 
         m = bc.value if bc is not None else None
         for pdf in batches:
             if len(pdf):
-                yield fn(cover_regions(_regions(kind, pdf, cfg.dims), cfg, budget), m)
+                yield fn(pdf, cover_regions(_regions(kind, pdf, cfg.dims), cfg, budget), m)
 
     try:
         return qdf.mapInPandas(gen, schema=schema).localCheckpoint(eager=True)
@@ -165,51 +169,55 @@ def _executor_pass(index: SpatialIndex, kind: str, qdf: DataFrame, budget: int, 
             bc.destroy()
 
 
-def _resolve_batch(cov: pd.DataFrame, meta: dict, d: int, L: int, count: bool) -> pd.DataFrame:
+def _resolve_batch(q: pd.DataFrame, cov: pd.DataFrame, meta: dict, d: int, L: int, count: bool) -> pd.DataFrame:
     """One executor batch resolved against the skeleton: (qid, leaf,
-    interior, cnt). A count's interior cells arrive pre-summed, one row
-    per qid with leaf -1; every resolved leaf row carries cnt 0."""
-    if not count:
-        return resolve_covers_np(meta, cov, d, L).assign(cnt=0)
-    res = resolve_covers_np(meta, cov[~cov.interior], d, L).assign(cnt=0)
-    inter = interior_counts_np(meta, cov[cov.interior], d, L).assign(leaf=-1, interior=True)
-    return pd.concat([res, inter[res.columns]], ignore_index=True)
+    interior, cnt) plus the batch's region columns. A count's interior
+    cells arrive pre-summed, one row per qid with leaf -1; every resolved
+    leaf row carries cnt 0."""
+    res = resolve_covers_np(meta, cov[~cov.interior] if count else cov, d, L).assign(cnt=0)
+    if count:
+        inter = interior_counts_np(meta, cov[cov.interior], d, L).assign(leaf=-1, interior=True)
+        res = pd.concat([res, inter[res.columns]], ignore_index=True)
+    return res.merge(q, on="qid")
 
 
-def _resolve(index: SpatialIndex, kind: str, q: pd.DataFrame, qdf: DataFrame, budget: int, count: bool):
-    """(interior sums (qid, cnt) | None, resolved (qid, leaf, interior) |
-    None, Morton scan pre-filter | None) for a query batch. A count
-    resolves only its boundary cells; a report resolves every cover cell."""
+def _resolve(index: SpatialIndex, kind: str, q: pd.DataFrame, budget: int, count: bool):
+    """(interior sums (qid, cnt) | None, resolved rows (qid, leaf, interior,
+    region columns) | None, Morton scan pre-filter | None) for a batch: a
+    count resolves only its boundary cells, a report every cover cell."""
     spark = index.points.sparkSession
     cfg = index.cfg
     d, L = cfg.dims, cfg.index_level
     mnp = index.meta_np()
+    # the region columns _exact_pred reads travel on every resolved row
+    box, ball = [f"{b}{j}" for b in ("lo", "hi") for j in range(d)], [f"c{j}" for j in range(d)] + ["r2"]
+    q = q[["qid", *{"box": box, "ball": ball}.get(kind, ["vx", "vy"])]]
+    # 8B per qid, leaf, interior and region value (a polygon's longest list)
+    vals = 2 * q["vx"].map(len).max() if kind == "polygon" else len(q.columns) - 1
+    bcast_rows = RESOLVED_BCAST_BYTES // (8 * (3 + int(vals)))
     if len(q) <= DISTRIBUTED_COVER_THRESHOLD:
         cov = cover_regions(_regions(kind, q, d), cfg, budget)
-        res = resolve_covers_np(mnp, cov[~cov.interior] if count else cov, d, L, RESOLVED_BCAST_ROWS)
+        res = resolve_covers_np(mnp, cov[~cov.interior] if count else cov, d, L, bcast_rows)
         if res is not None:
             inter = interior_counts_np(mnp, cov[cov.interior], d, L) if count else None
             pred = leaf_scan_pred(mnp, res["leaf"].to_numpy(), d * (cfg.grid_bits - L))
-            return (
-                None if inter is None or inter.empty else spark.createDataFrame(inter),
-                None if res.empty else F.broadcast(spark.createDataFrame(res)),
-                pred,
-            )
+            res = None if res.empty else F.broadcast(spark.createDataFrame(res.merge(q, on="qid")))
+            return inter, res, pred
         # region-spanning covers can resolve to ~n_queries x occupied leaves:
         # too big for a driver frame and a broadcast, so the executors
         # resolve them and the gate below measures the result
-    out = _executor_pass(index, kind, qdf, budget, partial(_resolve_batch, d=d, L=L, count=count),
-                         _RESOLVED_SCHEMA, mnp)
-    res = (out.where(~F.col("interior")) if count else out).select("qid", "leaf", "interior")
+    qdf = spark.createDataFrame(q)
+    schema = _RESOLVED_SCHEMA + "".join(f", {f.name} {f.dataType.simpleString()}" for f in qdf.schema.fields[1:])
+    out = _executor_pass(index, kind, qdf, budget, partial(_resolve_batch, d=d, L=L, count=count), schema, mnp)
+    res = (out.where(~F.col("interior")) if count else out).drop("cnt")
     # the resolved side is usually a few MB but can exceed AQE's broadcast
     # threshold (10k-box batches resolve to ~10^6 rows), which would fall
     # back to SHUFFLING the full points table on the leaf key — measure it
     # (a scan of the checkpoint) and hint the broadcast explicitly when it fits
     n_res = res.count()
-    if n_res <= RESOLVED_BCAST_ROWS:
+    if n_res <= bcast_rows:
         res = F.broadcast(res)
-    inter = out.where(F.col("interior")).select("qid", "cnt") if count else None
-    return inter, res if n_res else None, None
+    return out.where(F.col("interior")).select("qid", "cnt").toPandas() if count else None, res if n_res else None, None
 
 
 # ---------------------------------------------------------------------------
@@ -217,49 +225,42 @@ def _resolve(index: SpatialIndex, kind: str, q: pd.DataFrame, qdf: DataFrame, bu
 # ---------------------------------------------------------------------------
 
 def _plan(index: SpatialIndex, kind: str, q: pd.DataFrame, budget: int | None, count: bool):
-    """(query frame, interior sums | None, candidate point rows tagged with
-    qid and interior | None, broadcast-the-query-side flag).
+    """(interior sums (qid, cnt) on the driver | None, candidate point rows
+    tagged with qid, interior and the query's region columns | None).
 
-    Candidates: the points table scanned ONCE — pre-filtered by the
-    resolved leaves' Morton intervals when they exclude most rows
-    (``leaf_scan_pred``), with ONE derived leaf column and NO generate —
-    equi-joined with the resolved (qid, leaf) pairs. A count carries only
-    the coordinate columns through the hot join."""
+    Candidates: the points scanned ONCE (``leaf_scan_pred`` when it pays,
+    ONE derived leaf column, NO generate) in the plan's only join, with
+    the resolved rows; a count carries only the coordinates through it."""
     if kind == "polygon" and index.cfg.dims != 2:
         raise ValueError("polygon queries are 2-D")
-    spark = index.points.sparkSession
+    if q["qid"].duplicated().any():
+        raise ValueError(f"query frame repeats qids: {q['qid'][q['qid'].duplicated()].unique()[:10].tolist()}")
+    if q.empty:
+        return None, None
     cfg = index.cfg
-    qdf = spark.createDataFrame(q)
-    inter, res, pred = _resolve(index, kind, q, qdf, _budget(cfg, budget), count)
-    small = len(q) <= DISTRIBUTED_COVER_THRESHOLD
+    inter, res, pred = _resolve(index, kind, q, _budget(cfg, budget), count)
     if res is None:
-        return qdf, inter, None, small
+        return inter, None
     base = [f"x{j}" for j in range(cfg.dims)] if count else [c for c in index.points.columns if c != "morton"]
     pts = index.points.select(*base, "morton")
     if pred is not None:
         pts = pts.where(pred)
     pts = pts.withColumn("pleaf", F.shiftrightunsigned("morton", cfg.dims * (cfg.grid_bits - cfg.index_level)))
-    cand = pts.join(res, F.col("pleaf") == F.col("leaf")).drop("pleaf", "leaf", "morton")
-    return qdf, inter, cand.join(F.broadcast(qdf) if small else qdf, "qid"), small
+    return inter, pts.join(res, F.col("pleaf") == F.col("leaf")).drop("pleaf", "leaf", "morton")
 
 
 def _count(index: SpatialIndex, kind: str, q: pd.DataFrame, budget: int | None) -> DataFrame:
-    """(qid, cnt) for every query: interior sums plus exact boundary counts."""
-    qdf, inter, cand, small = _plan(index, kind, q, budget, count=True)
+    """(qid, cnt) for every row of q: interior sums plus exact boundary
+    counts, added on the driver. Runs now and returns a local frame."""
+    inter, cand = _plan(index, kind, q, budget, count=True)
+    parts = [] if inter is None else [inter]
     if cand is not None:
-        cand = cand.where(_exact_pred(kind, index.cfg.dims)).groupBy("qid").agg(F.count(F.lit(1)).alias("cnt"))
-    live = [b for b in (inter, cand) if b is not None]
-    if not live:
-        return qdf.select("qid", F.lit(0).cast("long").alias("cnt"))
-    u = live[0] if len(live) == 1 else live[0].unionByName(live[1])
-    agg = u.groupBy("qid").agg(F.sum("cnt").alias("cnt"))
-    if small:
-        agg = F.broadcast(agg)  # agg is <= one row per query
-    return (
-        qdf.select("qid")
-        .join(agg, "qid", "left")
-        .select("qid", F.coalesce(F.col("cnt"), F.lit(0)).cast("long").alias("cnt"))
-    )
+        cand = cand.where(_exact_pred(kind, index.cfg.dims)).groupBy("qid").agg(F.count("*").alias("cnt"))
+        parts.append(cand.toPandas())
+    qid = q["qid"].to_numpy(dtype="int64")
+    cnt = pd.concat(parts).groupby("qid")["cnt"].sum() if parts else pd.Series(dtype="int64")
+    out = pd.DataFrame({"qid": qid, "cnt": cnt.reindex(qid, fill_value=0).to_numpy(dtype="int64")})
+    return index.points.sparkSession.createDataFrame(out, "qid long, cnt long")
 
 
 def _report(index: SpatialIndex, kind: str, q: pd.DataFrame, budget: int | None) -> DataFrame:
@@ -267,11 +268,10 @@ def _report(index: SpatialIndex, kind: str, q: pd.DataFrame, budget: int | None)
     predicate, boundary rows get the exact filter."""
     d = index.cfg.dims
     cols = ["qid", "doc_id", "span_idx", "key"] + [f"x{j}" for j in range(d)]
-    _, _, cand, _ = _plan(index, kind, q, budget, count=False)
+    _, cand = _plan(index, kind, q, budget, count=False)
     if cand is None:
-        return index.points.sparkSession.createDataFrame(
-            [], schema="qid long, doc_id string, span_idx int, key long, " + ", ".join(f"x{j} long" for j in range(d))
-        )
+        schema = "qid long, doc_id string, span_idx int, key long" + "".join(f", x{j} long" for j in range(d))
+        return index.points.sparkSession.createDataFrame([], schema)
     return cand.where(F.col("interior") | _exact_pred(kind, d)).select(*cols)
 
 
@@ -281,7 +281,7 @@ def range_cover_stats(index: SpatialIndex, boxes: pd.DataFrame, budget: int | No
     scanned) share — the distributed analog of nodes-visited counters.
     Summed per batch in the executors: covers are never collected."""
 
-    def summary(cov: pd.DataFrame, _meta) -> pd.DataFrame:
+    def summary(_q, cov: pd.DataFrame, _meta) -> pd.DataFrame:
         return pd.DataFrame({"n": [cov["qid"].nunique()], "cells": [len(cov)], "inter": [int(cov["interior"].sum())]})
 
     qdf = index.points.sparkSession.createDataFrame(boxes)
@@ -300,20 +300,20 @@ def range_cover_stats(index: SpatialIndex, boxes: pd.DataFrame, budget: int | No
 # ---------------------------------------------------------------------------
 
 def range_count_boxes(index: SpatialIndex, boxes: pd.DataFrame, budget: int | None = None) -> DataFrame:
-    """(qid, cnt) — rectangle range count (R1). boxes: pandas with columns
-    qid, lo0..lo{d-1}, hi0..hi{d-1} (int64)."""
+    """(qid, cnt), computed when called — rectangle range count (R1).
+    boxes: pandas with columns qid, lo0..lo{d-1}, hi0..hi{d-1} (int64)."""
     return _count(index, "box", boxes, budget)
 
 
 def range_count_balls(index: SpatialIndex, balls: pd.DataFrame, budget: int | None = None) -> DataFrame:
-    """(qid, cnt) — radius range count (R2). balls: pandas with columns
-    qid, c0..c{d-1}, r2 (int64)."""
+    """(qid, cnt), computed when called — radius range count (R2). balls:
+    pandas with columns qid, c0..c{d-1}, r2 (int64)."""
     return _count(index, "ball", balls, budget)
 
 
 def range_count_polygons(index: SpatialIndex, polys: pd.DataFrame, budget: int | None = None) -> DataFrame:
-    """(qid, cnt) — point-in-convex-polygon count, d=2. polys: pandas with
-    columns qid, vx (list[int]), vy (list[int]), CCW."""
+    """(qid, cnt), computed when called — point-in-convex-polygon count,
+    d=2. polys: pandas with columns qid, vx (list[int]), vy (list[int]), CCW."""
     return _count(index, "polygon", polys, budget)
 
 

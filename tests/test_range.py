@@ -177,7 +177,7 @@ def test_distributed_covers_match_driver_side(index_uniform):
     for kind, q in queries.items():
         want = cover_regions(_regions(kind, q, 2), cfg, 256).sort_values(cols).reset_index(drop=True)
         got = (
-            _executor_pass(index_uniform, kind, spark.createDataFrame(q), 256, lambda c, _m: c, schema)
+            _executor_pass(index_uniform, kind, spark.createDataFrame(q), 256, lambda _q, c, _m: c, schema)
             .toPandas()
             .sort_values(cols)
             .reset_index(drop=True)
@@ -188,7 +188,8 @@ def test_distributed_covers_match_driver_side(index_uniform):
 
 def test_large_batch_count_uses_dataframe_covers(index_uniform, points_uniform, executor_passes):
     """Above DISTRIBUTED_COVER_THRESHOLD the covers are computed and
-    resolved in the executors — never collected — and counts still match
+    resolved in the executors — never collected — in exactly one pass, and
+    the counts, finished on the driver, match brute force for every qid and
     the small-batch (driver-side covers) plan on the same queries."""
     from pkd_tree_spark import ranges as R
 
@@ -196,6 +197,7 @@ def test_large_batch_count_uses_dataframe_covers(index_uniform, points_uniform, 
     boxes = FX.box_fixtures(nq, 2)
     big = range_count_boxes(index_uniform, boxes).toPandas().set_index("qid")["cnt"]
     assert executor_passes == ["box"]
+    assert big.sort_index().to_dict() == _box_oracle(points_uniform, boxes).sort_index().to_dict()
     # force the driver-side path on a subset and compare
     sub = boxes.head(64)
     small = range_count_boxes(index_uniform, sub).toPandas().set_index("qid")["cnt"]
@@ -220,11 +222,12 @@ def test_executor_path_matches_driver_and_brute_force(index_uniform, points_unif
 
 
 def test_oversized_driver_resolution_takes_executor_path(index_uniform, points_uniform, monkeypatch, executor_passes):
-    """A driver-sized batch whose resolution would pass RESOLVED_BCAST_ROWS
-    is resolved in the executors (and then shuffle-joined), still exact."""
+    """A driver-sized batch whose resolved rows would pass
+    RESOLVED_BCAST_BYTES is resolved in the executors (and then
+    shuffle-joined), still exact."""
     from pkd_tree_spark import ranges as R
 
-    monkeypatch.setattr(R, "RESOLVED_BCAST_ROWS", 10)
+    monkeypatch.setattr(R, "RESOLVED_BCAST_BYTES", 1000)  # 11-20 rows at these widths
     _assert_same(_range_calls(index_uniform), _oracle_calls(points_uniform))
     assert executor_passes == ["box", "ball", "polygon", "box"]
 
@@ -254,3 +257,94 @@ def test_range_leaves_no_broadcast(spark, index_varden, points_varden, monkeypat
     assert _counts(res) == _box_oracle(points_varden, boxes).sort_index().to_dict()
     pd.testing.assert_frame_equal(_report_rows(rep), _report_oracle(points_varden, boxes.head(8)), check_dtype=False)
     assert not any(b._jbroadcast.isValid() for b in made)
+
+
+_OPERATORS = {
+    "range_count_boxes": ("box", "qid long, cnt long"),
+    "range_count_balls": ("ball", "qid long, cnt long"),
+    "range_count_polygons": ("polygon", "qid long, cnt long"),
+    "range_report_boxes": ("box", "qid long, doc_id string, span_idx int, key long, x0 long, x1 long"),
+    "range_report_balls": ("ball", "qid long, doc_id string, span_idx int, key long, x0 long, x1 long"),
+    "range_report_polygons": ("polygon", "qid long, doc_id string, span_idx int, key long, x0 long, x1 long"),
+}
+
+
+def _queries(kind: str, nq: int) -> pd.DataFrame:
+    if kind == "box":
+        return FX.box_fixtures(nq, 2)
+    if kind == "ball":
+        return FX.ball_fixtures(nq, 2)
+    return FX.diamond_fixtures(nq)[["qid", "vx", "vy"]]
+
+
+@pytest.mark.parametrize("name", sorted(_OPERATORS))
+def test_empty_batch_returns_typed_empty_frame(spark, index_uniform, name):
+    """An empty query batch gives an empty frame with the operator's
+    documented schema (spark.createDataFrame cannot infer one from it)."""
+    from pkd_tree_spark import ranges as R
+
+    kind, schema = _OPERATORS[name]
+    got = getattr(R, name)(index_uniform, _queries(kind, 4).iloc[0:0])
+    assert got.schema.simpleString() == spark.createDataFrame([], schema).schema.simpleString()
+    assert got.count() == 0
+
+
+@pytest.mark.parametrize("name", sorted(_OPERATORS))
+def test_repeated_qids_raise(index_uniform, name):
+    """A repeated qid would multiply covers and join rows (box qid 1 once
+    counted 554 instead of 194 when boxes 0-1 were passed twice): every
+    operator rejects it and names the repeated qids."""
+    from pkd_tree_spark import ranges as R
+
+    kind, _ = _OPERATORS[name]
+    q = _queries(kind, 8).head(2)
+    with pytest.raises(ValueError, match=r"repeats qids: \[0, 1\]"):
+        getattr(R, name)(index_uniform, pd.concat([q, q], ignore_index=True))
+
+
+def _jobs(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_range_jobs_per_call(spark, index_uniform, points_uniform):
+    """Job-count guard on a warm index: a small range count is one Spark
+    query (the boundary counts, collected) plus the read of the local
+    result frame — 4 jobs; a report is one query — 2 jobs. The interior
+    sums, the union, the second aggregate and the query-frame join that
+    used to run in Spark (6 and 3 jobs) must not come back."""
+    boxes = FX.box_fixtures(64, 2)
+    range_count_boxes(index_uniform, boxes).toPandas()  # warm: skeleton memo
+    n_count, got = _jobs(spark, "range-count-guard", lambda: range_count_boxes(index_uniform, boxes).toPandas())
+    n_report, _ = _jobs(spark, "range-report-guard", lambda: range_report_boxes(index_uniform, boxes).toPandas())
+    assert got.set_index("qid")["cnt"].to_dict() == _box_oracle(points_uniform, boxes).to_dict()
+    assert n_count == 4
+    assert n_report == 2
+
+
+@pytest.mark.parametrize("threshold", [4000, 0], ids=["driver", "executors"])
+def test_count_returns_every_qid(index_uniform, points_uniform, monkeypatch, threshold):
+    """Every qid gets a row: a batch with no boundary rows (the whole
+    domain, every cell interior; a box off the data) and a batch with no
+    interior cells (1x1 boxes), on both resolution paths."""
+    from pkd_tree_spark import ranges as R
+
+    monkeypatch.setattr(R, "DISTRIBUTED_COVER_THRESHOLD", threshold)
+    m = (1 << index_uniform.cfg.coord_bits) - 1
+    whole = pd.DataFrame({"qid": [7, 3], "lo0": [0, 2_000_000], "lo1": [0, 2_000_000],
+                          "hi0": [m, 3_000_000], "hi1": [m, 3_000_000]})
+    assert R._plan(index_uniform, "box", whole, None, count=True)[1] is None
+    assert _counts(range_count_boxes(index_uniform, whole)) == {3: 0, 7: len(points_uniform)}
+    p = points_uniform.head(3)
+    dots = pd.DataFrame({"qid": [10, 11, 12, 13], "lo0": [*p.x0, 5], "lo1": [*p.x1, 5],
+                         "hi0": [*p.x0, 5], "hi1": [*p.x1, 5]})
+    assert R._plan(index_uniform, "box", dots, None, count=True)[0].empty
+    got = _counts(range_count_boxes(index_uniform, dots))
+    assert got == _box_oracle(points_uniform, dots).sort_index().to_dict()
+    assert min(got[10], got[11], got[12]) > 0 and got[13] == 0

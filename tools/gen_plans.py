@@ -55,7 +55,7 @@ def main() -> None:
     from pkd_tree_spark.documents import load_points
     from pkd_tree_spark.index import SpatialIndex
     from pkd_tree_spark.knn import knn
-    from pkd_tree_spark.ranges import range_count_boxes
+    from pkd_tree_spark import ranges as R
     from pkd_tree_spark.session import get_spark
 
     spark = get_spark(app="gen-plans", cpus=8)
@@ -85,34 +85,53 @@ def main() -> None:
     ix.meta.count()
 
     # --- range count (leaf-resolved) ---
+    # a count returns a local frame, so record the one Spark query it runs:
+    # the boundary counts, built here exactly as ranges._count builds them
+    def boundary_count_plan(boxes) -> str:
+        _, cand = R._plan(ix, "box", boxes, None, count=True)
+        bq = cand.where(R._exact_pred("box", 2)).groupBy("qid").agg(F.count("*").alias("cnt"))
+        bq.collect()
+        return bq._jdf.queryExecution().executedPlan().toString()
+
     boxes = FX.box_fixtures(64, 2)
-    rc = range_count_boxes(ix, boxes)
-    rc.collect()
     section(
         "range-count 64 boxes (leaf-resolved single-scan plan)",
-        "Boundary branch: covers resolve DRIVER-SIDE to occupied leaf "
-        "cells (resolve_covers_np) -> ONE broadcast equi-join on the "
-        "derived leaf column; NO Generate over the points; interior "
-        "branch is driver prefix sums (zero jobs). Morton-interval "
-        "pre-filter prunes cached batches.",
-        rc._jdf.queryExecution().executedPlan().toString(),
+        "The count's one Spark query (its boundary counts; the interior "
+        "sums are driver prefix sums, zero jobs, and both are added per "
+        "qid on the driver). Covers resolve DRIVER-SIDE to occupied leaf "
+        "cells (resolve_covers_np) whose rows carry the box columns -> "
+        "ONE broadcast equi-join on the derived leaf column, the plan's "
+        "only join; NO Generate over the points; one qid shuffle. The "
+        "Morton-interval pre-filter prunes cached batches when it pays.",
+        boundary_count_plan(boxes),
     )
 
     # --- range count above DISTRIBUTED_COVER_THRESHOLD (executor pass) ---
-    from pkd_tree_spark.ranges import DISTRIBUTED_COVER_THRESHOLD
-
-    rcx = range_count_boxes(ix, FX.box_fixtures(DISTRIBUTED_COVER_THRESHOLD + 100, 2))
-    rcx.collect()
+    nbig = R.DISTRIBUTED_COVER_THRESHOLD + 100
     section(
-        f"range-count {DISTRIBUTED_COVER_THRESHOLD + 100} boxes (executor resolution pass)",
+        f"range-count {nbig} boxes (executor resolution pass)",
         "Above DISTRIBUTED_COVER_THRESHOLD one mapInPandas pass over the "
         "query frame computes covers, interior sums and resolved leaves "
-        "against a broadcast of the skeleton; its output is checkpointed "
-        "(the Scan ExistingRDD below) and the broadcast destroyed inside "
-        "the call. The resolved side is counted and broadcast-hinted when "
-        "it fits RESOLVED_BCAST_ROWS; the points side is the same single "
-        "leaf equi-join as the driver plan, without the Morton pre-filter.",
-        rcx._jdf.queryExecution().executedPlan().toString(),
+        "(carrying the box columns) against a broadcast of the skeleton; "
+        "its output is checkpointed (the Scan ExistingRDD below) and the "
+        "broadcast destroyed inside the call. Its interior rows (<= one "
+        "per query) are collected; the resolved side is counted and "
+        "broadcast-hinted when it fits RESOLVED_BCAST_BYTES. The boundary "
+        "query is the same single leaf equi-join as the driver plan, "
+        "without the Morton pre-filter.",
+        boundary_count_plan(FX.box_fixtures(nbig, 2)),
+    )
+
+    # --- range report ---
+    rr = R.range_report_boxes(ix, boxes)
+    rr.collect()
+    section(
+        "range-report 64 boxes",
+        "Lazy, like the count's boundary query: every cover cell resolves "
+        "driver-side to (qid, leaf, interior, box columns) rows -> ONE "
+        "broadcast equi-join with the points; interior-cell rows skip the "
+        "predicate. No query-frame join and no shuffle.",
+        rr._jdf.queryExecution().executedPlan().toString(),
     )
 
     # --- kNN round-1 candidate join + window top-k ---
