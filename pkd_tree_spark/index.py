@@ -54,8 +54,8 @@ STAGE_INPUT_BYTES = 512 << 20
 # ~the full table and persisting it doubles residency for nothing. The
 # pre-gate can't see the MULTIPLICITY SPREAD (a table of duplicate PAIRS
 # has dup factor ~2 but collapses nothing under a cap of 16 — the sf0.1
-# fixtures are exactly this), so a post-build check drops the table unless
-# it actually shrank.
+# fixtures are exactly this), so an exact spread probe refuses the table
+# before it is built unless it would shrink below PRUNE_KEEP_RATIO.
 PRUNE_MIN_DUP_FACTOR = 1.3
 PRUNE_KEEP_RATIO = 0.75
 PRUNE_CAP_MIN = 16
@@ -161,7 +161,8 @@ class SpatialIndex:
         pruned table is therefore multiset-exact for any query and any
         k <= cap, while duplicate-heavy inputs (varden clusters stack
         ~235 rows per lattice position at 153.6M) shrink candidate
-        volume by the duplication factor.
+        volume by the duplication factor. Rows keep doc_id, which kNN's
+        driver rounds collect with their candidates.
 
         Built lazily as INDEX STATE (memoized; rebuilt only if a later
         call needs a larger cap) as ONE JVM window pass — NO Python/Arrow:
@@ -227,7 +228,7 @@ class SpatialIndex:
             if int(probe["np"] or 0) > PRUNE_KEEP_RATIO * tot:
                 object.__setattr__(self, "_pruned", "refused")
                 return None
-        cols = ["key", "span_idx", *xcols, "morton"]
+        cols = ["key", "doc_id", "span_idx", *xcols, "morton"]
         narrow = self.points.select(*cols)
         w = Window.partitionBy(*xcols).orderBy("key", "span_idx")
         pruned = (

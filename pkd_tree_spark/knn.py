@@ -11,10 +11,16 @@ shells are disjoint and their union is the full radius-r disk. The running
 top-k is CARRIED with the pending query and merged with each shell's
 candidates — a cell is scanned at most once per query (the reference
 visits each tree node once; round 2 of this engine re-scanned the whole
-disk every round). After ring r any unscanned point is at distance
->= r*w + 1, so a query terminates once kth_dist^2 <= (r*w)^2 — exactly the
-`p2b_min_distance > bq.top()` prune of nn_search.hpp:121-123 lifted to
-ring granularity.
+disk every round). After ring r the scanned region is the radius-r BLOCK
+of cells [lo, hi] per dimension, and every unscanned point lies outside it
+in some dimension, so its distance is at least
+gap = min_j min(q_j - lo_j, hi_j - q_j) + 1 — the exact point-to-box
+distance from the query to the unscanned space. A query terminates once
+kth_dist^2 < gap^2 (_block_gap2): the `p2b_min_distance > bq.top()` prune
+of nn_search.hpp:121-123 with the block as the box. The inequality is
+strict, so an unscanned point tied with the k-th distance (and possibly a
+smaller key) is never missed; gap >= r*w + 1, so no query takes more
+rounds than under the worst-placement bound (r*w)^2.
 
 High-d / large-ring escape: when a round's offset mesh (2r+1)^d would
 exceed MESH_CAP cells (d=7 at r>=4, d=16 immediately — the reference
@@ -141,15 +147,19 @@ DRIVER_COLLECT_MAX_ROWS = 3_000_000
 
 RESULT_SCHEMA = "qid long, rn long, key long, doc_id string, span_idx long, dist2 long"
 STATS_SCHEMA = "qid long, rounds int, cand_rows long"
+_RESULT_COLS = ["qid", "rn", "key", "doc_id", "span_idx", "dist2"]
+_ROWS_COLS = ["qid", "rn", "key", "span_idx", "dist2"]
 _ROWS_SCHEMA = "qid long, rn long, key long, span_idx long, dist2 long"
 _ENTRY_COLS = ["dist2", "key", "span_idx"]
 
-# top-k entries are THREE LONGS — no doc_id string: (key, span_idx) is the
-# unique PointID, so (dist2, key, span_idx) is the same total order the
-# reference's bounded queue uses, and ~10^8 candidate entries per round
-# carry 24 bytes instead of a heap string each (the string made the agg
-# allocation-bound at 38.4M pts: 300M candidate structs -> GC, not compute).
-# doc_id is joined back onto the final nq*k result rows only.
+# distributed top-k entries are THREE LONGS — no doc_id string: (key,
+# span_idx) is the unique PointID, so (dist2, key, span_idx) is the same
+# total order the reference's bounded queue uses, and ~10^8 candidate
+# entries per round carry 24 bytes instead of a heap string each (the
+# string made the agg allocation-bound at 38.4M pts: 300M candidate structs
+# -> GC, not compute). The driver rounds collect doc_id with their (small)
+# candidates; rows finished or carried out of distributed rounds get it
+# from _finish's one key join.
 _ENTRY_ARR = "array<struct<dist2:bigint,key:bigint,span_idx:bigint>>"
 
 
@@ -175,7 +185,7 @@ def _assign_levels_np(
     """Per-query grid level from the memoized skeleton ``meta`` (see
     SpatialIndex.meta_np) — zero Spark jobs, so it runs on the driver for
     small batches and inside mapInPandas (against the broadcast skeleton)
-    for large ones. Level choice never affects exactness (the ring bound
+    for large ones. Level choice never affects exactness (the termination bound
     does), only the candidate volume and the ring count."""
     thresh = max(target, 3 * k)
     neigh = 3**d  # 3^d-neighborhood upper bound under local uniformity
@@ -344,17 +354,38 @@ def _union(frames: list[DataFrame]) -> DataFrame:
 
 
 def _candidate_source(index: SpatialIndex, k: int, d: int):
-    """(narrow candidate table, dist2 column), built once per loop: the
-    join/top-k hot path never touches doc_id, and duplicate-heavy indexes
-    swap in the pruned (position-collapsed) table — multiset-exact for
-    this k (see SpatialIndex.pruned_points). dist2 is the exact int64
+    """(narrow candidate table, dist2 column), built once per loop;
+    duplicate-heavy indexes swap in the pruned (position-collapsed) table —
+    multiset-exact for this k (see SpatialIndex.pruned_points). doc_id is
+    in the table for the driver rounds' collect; the distributed rounds
+    project three longs, so their scans prune it. dist2 is the exact int64
     squared-L2 between a candidate (x*) and its query (q*)."""
     xcols = [f"x{j}" for j in range(d)]
     dist2 = functools.reduce(
         lambda a, b: a + b, [(F.col(x) - F.col(f"q{j}")) * (F.col(x) - F.col(f"q{j}")) for j, x in enumerate(xcols)]
     )
-    pts = (index.pruned_points(k) or index.points).select("key", "span_idx", *xcols, "morton")
+    pts = (index.pruned_points(k) or index.points).select("key", "doc_id", "span_idx", *xcols, "morton")
     return pts, dist2.cast("long").alias("dist2")
+
+
+def _block_gap2(q: np.ndarray, level: np.ndarray, r: np.ndarray, cb: int) -> np.ndarray:
+    """Squared distance from each query q (m, d) to the space outside its
+    scanned radius-r block at ``level`` (see module docstring); a query is
+    done once kth_dist^2 < this. _knn_rounds states the same rule as
+    columns (_block_gap_col)."""
+    s, rr = (cb - level)[:, None], r[:, None]
+    g = q >> s
+    gap = np.minimum(q - ((g - rr) << s), ((g + rr + 1) << s) - 1 - q).min(axis=1) + 1
+    return gap * gap
+
+
+def _block_gap_col(d: int, cb: int):
+    """_block_gap2's gap (unsquared) as a column over (q*, level, r)."""
+    sh = f"CAST({cb} - level AS INT)"
+    return functools.reduce(F.least, [F.expr(
+        f"least(q{j} - shiftleft(shiftright(q{j}, {sh}) - r, {sh}), "
+        f"shiftleft(shiftright(q{j}, {sh}) + r + 1, {sh}) - 1 - q{j})"
+    ) for j in range(d)]) + F.lit(1)
 
 
 def _empty_result(spark, return_stats: bool):
@@ -509,21 +540,22 @@ def _knn_driver(
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
     """Driver rounds rnd0..max_rounds of the ring loop, for a pending set
     ``st`` (qid, q*, level, r, cnt) with carried top-k entries ``carried``
-    (qid, dist2, key, span_idx). Shell resolution, top-k merge and ring
-    termination run ON THE DRIVER; Spark contributes ONE candidate
+    (qid, dist2, key, span_idx, doc_id). Shell resolution, top-k merge and
+    ring termination run ON THE DRIVER; Spark contributes ONE candidate
     collection per ring round (scan + local-relation broadcast join +
-    Arrow collect). Rounds whose metadata-estimated candidate volume
-    exceeds DRIVER_COLLECT_MAX_ROWS reduce per-query top-k with the same
-    WindowGroupLimit plan the distributed rounds use before collecting, so
-    the driver never holds more than ~pend*k rows from such a round.
+    Arrow collect, doc_id included). Rounds whose metadata-estimated
+    candidate volume exceeds DRIVER_COLLECT_MAX_ROWS reduce per-query
+    top-k with the same WindowGroupLimit plan the distributed rounds use
+    before collecting, so the driver never holds more than ~pend*k rows
+    from such a round.
 
     The candidate multiset per round is the distributed round's (same
     _candidate_join / _exhaustive_part), the merge order is (dist2, key,
-    span_idx), and the termination rule is the same ring lower bound
-    ((r*w)^2 vs kth distance) plus the covered-mesh rule.
+    span_idx), and the termination rule is the same exact block bound
+    (_block_gap2) plus the covered-mesh rule.
 
-    Returns (rows (qid, rn, key, span_idx, dist2), stats (qid, rounds,
-    cand_rows)) of the queries finished here, as pandas."""
+    Returns (rows (qid, rn, key, doc_id, span_idx, dist2), stats (qid,
+    rounds, cand_rows)) of the queries finished here, as pandas."""
     spark = index.points.sparkSession
     cfg: EngineConfig = index.cfg
     d, kb, cb, L = cfg.dims, cfg.grid_bits, cfg.coord_bits, cfg.index_level
@@ -582,6 +614,7 @@ def _knn_driver(
                 dist2,
                 F.col("key").cast("long").alias("key"),
                 F.col("span_idx").cast("long").alias("span_idx"),
+                "doc_id",
             )
             if est > DRIVER_COLLECT_MAX_ROWS:
                 # the ancestor-occupancy bound is very loose on skewed data
@@ -624,13 +657,13 @@ def _knn_driver(
         sizes = st["qid"].map(allv.groupby("qid").size()).fillna(0).to_numpy(np.int64)
         kth_ser = allv.loc[pos == k - 1].set_index("qid")["dist2"]
         kth = st["qid"].map(kth_ser).fillna(-1).to_numpy(np.int64)
-        ring = (rv << (cb - lv)).astype(np.int64) ** 2
+        gap2 = _block_gap2(st[qcols].to_numpy(np.int64), lv, rv, cb)
         covered = exh | ((2 * rv + 1) >= (np.int64(2) << lv))
-        done = ((sizes >= k) & (kth >= 0) & (kth <= ring)) | (covered & (sizes > 0))
+        done = ((sizes >= k) & (kth >= 0) & (kth < gap2)) | (covered & (sizes > 0))
         dropm = covered & (sizes == 0)
         if done.any():  # done queries hold >= 1 entry
             dmask = allv["qid"].isin(st.loc[done, "qid"]).to_numpy()
-            resf = allv.loc[dmask, ["qid", "key", "span_idx", "dist2"]].copy()
+            resf = allv.loc[dmask, ["qid", "key", "doc_id", "span_idx", "dist2"]].copy()
             resf["rn"] = (pos[dmask] + 1).astype(np.int64)
             res_frames.append(resf)
             stf = st.loc[done, ["qid", "cnt"]].rename(columns={"cnt": "cand_rows"})
@@ -639,7 +672,7 @@ def _knn_driver(
         st = st.loc[~done & ~dropm].copy()
         if not len(st):
             break
-        carried = allv.loc[allv["qid"].isin(st["qid"]), ["qid", *_ENTRY_COLS]].reset_index(drop=True)
+        carried = allv.loc[allv["qid"].isin(st["qid"]), ["qid", *_ENTRY_COLS, "doc_id"]].reset_index(drop=True)
         st["r"] = st["r"].to_numpy(np.int64) * 2
 
     if not res_frames:
@@ -656,23 +689,21 @@ def _finish(
 ):
     """The batch result from the distributed rounds' finished rows
     ``tk_parts`` (qid, tk, rounds, cand_rows) and the driver rounds' rows
-    ``res_pd`` / ``stats_pd``, with doc_id re-attached ONCE.
-
-    doc_id re-attach: key -> doc_id is FUNCTIONAL by construction (the
-    loader derives key from doc_id, documents.py:162; update batches
-    shift unique keys, preserving the dependence), but (key, span_idx) is
-    NOT a unique row id — fixtures carry duplicate spans — so the join is
-    on key against the DISTINCT (key, doc_id) projection, NARROWED first
-    by a broadcast semi-join on the <= nq*k result keys: r4 ran
-    dropDuplicates over the FULL points table per batch (a full-table
-    shuffle to decorate a tiny result — 2.6s at 38.4M); now only the
-    semi-filtered handful of rows reaches the distinct."""
+    ``res_pd`` / ``stats_pd``. Driver rows hold the doc_id their candidate
+    collect brought, so a batch finished on the driver runs no Spark query
+    here. Rows without one (finished in distributed rounds, or entries
+    carried across the handoff) get it from ONE key join: key -> doc_id is
+    FUNCTIONAL (the loader derives key from doc_id, documents.py:162) but
+    (key, span_idx) is NOT a unique row id, so the join is on key against
+    the DISTINCT (key, doc_id) projection, NARROWED first by a broadcast
+    semi-join on the rows' keys (r4's full-table dropDuplicates: 2.6s)."""
     spark = index.points.sparkSession
     finals: list[DataFrame] = []
     stats: list[DataFrame] = []
+    lack: list[DataFrame] = []
     if tk_parts:
         done = _union(tk_parts)
-        finals.append(done.select("qid", F.posexplode("tk").alias("pos", "s")).select(
+        lack.append(done.select("qid", F.posexplode("tk").alias("pos", "s")).select(
             "qid",
             (F.col("pos") + 1).cast("long").alias("rn"),
             F.col("s.key").alias("key"),
@@ -681,28 +712,23 @@ def _finish(
         ))
         stats.append(done.select("qid", "rounds", "cand_rows"))
     if len(res_pd):
-        finals.append(spark.createDataFrame(
-            res_pd[["qid", "rn", "key", "span_idx", "dist2"]].astype("int64"), schema=_ROWS_SCHEMA
-        ))
+        miss = res_pd["doc_id"].isna()
+        if miss.any():
+            lack.append(spark.createDataFrame(res_pd.loc[miss, _ROWS_COLS], schema=_ROWS_SCHEMA))
+        finals.append(spark.createDataFrame(res_pd.loc[~miss, _RESULT_COLS], schema=RESULT_SCHEMA))
         if return_stats:  # a local relation costs a driver round trip: only on request
             stats.append(spark.createDataFrame(stats_pd[["qid", "rounds", "cand_rows"]], schema=STATS_SCHEMA))
+    if lack:
+        rows = _union(lack)
+        ids = (
+            index.points.select("key", "doc_id")
+            .join(F.broadcast(rows.select("key").distinct()), "key", "leftsemi")
+            .dropDuplicates(["key"])
+        )
+        finals.append(rows.hint("shuffle_hash").join(ids, "key").select(*_RESULT_COLS))
     if not finals:
         return _empty_result(spark, return_stats)
-    final = _union(finals)
-    if tk_parts:
-        res_keys = final.select("key").distinct()
-    else:  # driver rounds only: the key list is already on the driver
-        res_keys = spark.createDataFrame(
-            pd.DataFrame({"key": np.unique(res_pd["key"].to_numpy(np.int64))}), schema="key long"
-        )
-    ids = (
-        index.points.select("key", "doc_id")
-        .join(F.broadcast(res_keys), "key", "leftsemi")
-        .dropDuplicates(["key"])
-    )
-    out = final.hint("shuffle_hash").join(ids, "key").select(
-        "qid", "rn", "key", "doc_id", "span_idx", "dist2"
-    )
+    out = _union(finals)
     return (out, _union(stats)) if return_stats else out
 
 
@@ -727,7 +753,9 @@ def knn(
     (multiset semantics — dummy-leaf multiplicity, build_tree.hpp:183-186).
     With return_stats=True returns (result, stats) where stats is a
     per-query (qid, rounds, cand_rows) DataFrame (V3 introspection;
-    cand_rows is cumulative across rounds).
+    cand_rows is cumulative across rounds). Rows finished in driver rounds
+    (every row of a small batch) are computed before knn returns, doc_id
+    included, and come back as a local relation; reading one costs one job.
 
     With return_stats a distributed round's candidate counts run as ONE
     extra narrow hash-count pass over the candidate join (the window top-k
@@ -781,6 +809,7 @@ def knn(
         st["r"] = np.int64(1)
         st["cnt"] = np.int64(0)
         carried = pd.DataFrame({c: pd.Series(dtype="int64") for c in ("qid", *_ENTRY_COLS)})
+        carried["doc_id"] = pd.Series(dtype=object)
         res_pd, stats_pd = _knn_driver(index, st, carried, k, 1, max_rounds, plan_log)
         return _finish(index, [], res_pd, stats_pd, return_stats)
 
@@ -874,7 +903,7 @@ def _knn_rounds(
         if n_pend <= DRIVER_CELLS_MAX_QUERIES:
             # hand the small pending set to the driver rounds: ONE collect,
             # the carried top-k exploded into rows (a query with an empty
-            # top-k keeps one row whose entry columns read -1)
+            # top-k keeps one row whose entry columns read -1; doc_id: _finish)
             flat = pend.select(
                 "qid", *qcols, "level", "r", "cnt", F.explode_outer("tk").alias("e")
             ).select(
@@ -882,7 +911,7 @@ def _knn_rounds(
                 *[F.coalesce(F.col(f"e.{c}"), F.lit(-1)).alias(c) for c in _ENTRY_COLS],
             ).toPandas().astype("int64")
             st = flat.drop_duplicates("qid")[["qid", *qcols, "level", "r", "cnt"]].reset_index(drop=True)
-            carried = flat.loc[flat["dist2"] >= 0, ["qid", *_ENTRY_COLS]].reset_index(drop=True)
+            carried = flat.loc[flat["dist2"] >= 0, ["qid", *_ENTRY_COLS]].assign(doc_id=None).reset_index(drop=True)
             res_pd, stats_pd = _knn_driver(index, st, carried, k, rnd, max_rounds, plan_log)
             break
 
@@ -1001,8 +1030,8 @@ def _knn_rounds(
             )
 
         # termination as COLUMN expressions over pend ⋈ round-stats: merge
-        # the carried top-k with this shell's, then apply the ring lower
-        # bound (r*w)^2 vs kth distance (nn_search.hpp:121-123). ONE eager
+        # the carried top-k with this shell's, then apply the exact block
+        # bound kth < gap^2 (_block_gap2; nn_search.hpp:121-123). ONE eager
         # checkpoint materializes the round; results and the next pending
         # set derive from it lazily (heavy join runs once; 3 driver
         # actions/round independent of query count).
@@ -1014,6 +1043,7 @@ def _knn_rounds(
             .withColumn("tk_m", merged)
             .withColumn("cnt_m", F.col("cnt") + F.coalesce(F.col("c_new"), F.lit(0)))
             .withColumn("kth", F.try_element_at(F.col("tk_m"), F.lit(k)).getField("dist2"))
+            .withColumn("_gap", _block_gap_col(d, cb))
             .withColumn(
                 "_covered",
                 _exh_cond(d)
@@ -1026,15 +1056,7 @@ def _knn_rounds(
                 # and the count column stays stats-only (null without
                 # return_stats)
                 "_done",
-                (
-                    (F.size("tk_m") >= k)
-                    & (
-                        F.col("kth")
-                        <= F.expr(
-                            f"shiftleft(r, CAST({cb} - level AS INT)) * shiftleft(r, CAST({cb} - level AS INT))"
-                        )
-                    )
-                )
+                ((F.size("tk_m") >= k) & (F.col("kth") < F.col("_gap") * F.col("_gap")))
                 | (F.col("_covered") & (F.size("tk_m") > 0)),
             )
             .withColumn("_drop", F.col("_covered") & (F.size("tk_m") == 0))

@@ -82,7 +82,7 @@ def test_knn_offgrid_shell_still_terminates(spark):
     )
     idx = SpatialIndex.build(spark.createDataFrame(pts), cfg)
     # far-corner query at level 1: round 1 scans the whole 2x2 grid but the
-    # kth distance exceeds (r*w)^2, so round 2's shell is fully off-grid
+    # kth distance exceeds the block gap, so round 2's shell is fully off-grid
     q = pd.DataFrame({"qid": [0], "q0": [999_999], "q1": [999_999]})
     res = knn(idx, q, k=3, level=1, adaptive=False).toPandas()
     assert len(res) == 3
@@ -143,8 +143,10 @@ def test_knn_pruned_duplicate_collapse(spark, cfg):
     raw = SpatialIndex.build(lattice, cfg)
     object.__setattr__(raw, "_pruned", "refused")
     queries = FX.knn_fixtures(16, 2)
-    got = _sorted(knn(idx, queries, k=10))
+    res = knn(idx, queries, k=10)
+    got = _sorted(res)
     assert isinstance(idx._pruned, tuple), "pruned table should engage on the lattice"
+    _assert_doc_ids(res, idx)  # the pruned table carries doc_id to the driver rounds
     n_full, n_pruned = idx.points.count(), idx._pruned[0].count()
     assert n_pruned < n_full
     # the collapse must be the JVM window form with the map-side partial
@@ -247,20 +249,34 @@ def test_knn_leaves_no_broadcast(spark, index_varden, monkeypatch):
 def test_knn_driver_loop_jobs_per_round(spark, index_uniform):
     """Job-count guard: on a warm index a pandas batch in the driver rounds
     issues two Spark jobs per ring round at this shape (one coarse leaf
-    join per round; both jobs run under the round's candidate collect)."""
+    join per round), both under the round's candidate collect. The first
+    is the BroadcastExchange of the local cell relation: createDataFrame
+    turns the pandas cells into a defaultParallelism-partition RDD, and
+    the broadcast collects it in a job of its own (defaultParallelism
+    tasks). The second scans the points, probes the broadcast and runs the
+    Arrow collect. The rows, doc_id included, are finished on the driver,
+    so reading the result costs exactly one job (its local relation's
+    scan)."""
     queries = FX.knn_fixtures(32, 2)
     knn(index_uniform, queries, k=10)  # warm: skeleton memo, pruned-table decision
     sc = spark.sparkContext
-    sc.setJobGroup("knn-job-guard", "kNN job-count guard")
-    try:
-        _, st = knn(index_uniform, queries, k=10, return_stats=True)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("knn-job-guard")
+
+    def jobs_of(group: str, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    (res, st), n_knn = jobs_of("knn-job-guard", lambda: knn(index_uniform, queries, k=10, return_stats=True))
     rounds = int(st.toPandas()["rounds"].max())
     assert rounds == 2
-    assert len(jobs) == 2 * rounds
+    assert n_knn == 2 * rounds
+    out, n_read = jobs_of("knn-read-guard", res.toPandas)
+    assert n_read == 1
+    assert len(out) == 32 * 10 and out["doc_id"].notna().all()
 
 
 def test_knn_cells_join_over_gate_equivalence(spark, cfg, index_varden):
@@ -282,3 +298,137 @@ def test_knn_cells_join_over_gate_equivalence(spark, cfg, index_varden):
             b, sb = _sorted(res_b), st_b.toPandas().sort_values("qid").reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
     pd.testing.assert_frame_equal(sa, sb)
+
+
+# ---------------------------------------------------------------------------
+# doc_id on every path; the exact block termination bound
+# ---------------------------------------------------------------------------
+
+
+def _assert_doc_ids(res, idx) -> None:
+    """Every result row's doc_id is that point's doc_id in index.points."""
+    out = res.toPandas()
+    ids = idx.points.select("key", "doc_id").distinct().toPandas()
+    assert not ids["key"].duplicated().any()  # key -> doc_id is functional
+    assert len(out) and out["doc_id"].notna().all()
+    want = out["key"].map(ids.set_index("key")["doc_id"])
+    assert (out["doc_id"] == want).all()
+
+
+@pytest.mark.parametrize("max_driver", ["default", 0], ids=["driver_only", "distributed_only"])
+def test_knn_doc_id_matches_points(index_varden, monkeypatch, max_driver):
+    """doc_id of rows finished in driver rounds (collected with the
+    candidates) and in distributed rounds (re-attached by key)."""
+    import pkd_tree_spark.knn as K
+
+    if max_driver == 0:
+        monkeypatch.setattr(K, "DRIVER_CELLS_MAX_QUERIES", 0)
+    _assert_doc_ids(knn(index_varden, FX.knn_fixtures(16, 2), k=10), index_varden)
+
+
+def test_knn_doc_id_carried_across_handoff(cfg, index_uniform, points_uniform, monkeypatch):
+    """Every query is still pending when the distributed rounds hand off,
+    so no distributed round finishes a row and every row is finished on
+    the driver; the top-k entries carried across the handoff leave the
+    distributed rounds without a doc_id and must still get theirs. A fine
+    fixed level leaves every query short of k=20 after round 1; the
+    handoff size rises once round 1 has passed its check, so round 2
+    starts on the driver."""
+    import pkd_tree_spark.knn as K
+
+    queries = FX.knn_fixtures(16, 2)
+    real_join, real_driver = K._candidate_join, K._knn_driver
+    handoffs: list = []
+
+    def join_then_hand_off(*args, **kwargs):
+        monkeypatch.setattr(K, "DRIVER_CELLS_MAX_QUERIES", 1 << 20)
+        return real_join(*args, **kwargs)
+
+    def spy(index, st, carried, k, rnd0, *args):
+        handoffs.append((len(st), len(carried), rnd0))
+        return real_driver(index, st, carried, k, rnd0, *args)
+
+    monkeypatch.setattr(K, "DRIVER_CELLS_MAX_QUERIES", 0)
+    monkeypatch.setattr(K, "_candidate_join", join_then_hand_off)
+    monkeypatch.setattr(K, "_knn_driver", spy)
+    res = knn(index_uniform, queries, k=20, level=cfg.index_level + 2, adaptive=False)
+    [(n_st, n_carried, rnd0)] = handoffs
+    assert (n_st, rnd0) == (16, 2) and n_carried > 0, handoffs
+    _assert_doc_ids(res, index_uniform)
+    got = res.toPandas()
+    assert len(got) == 16 * 20
+    assert got[got.rn == 20].set_index("qid")["dist2"].to_dict() == _kth_oracle(points_uniform, queries, 20)
+
+
+# level-2 cells of the default 2^20 coordinate grid are W wide; a query at
+# the centre of home cell (1, 1) has scanned the block [0, 3W - 1]^2 after
+# round 1, whose boundary lies GAP = 1.5W away (q - lo = 1.5W, hi - q + 1 =
+# 1.5W), while the worst-placement bound r*W is only W
+_W = 1 << 18
+_GAP = 3 * _W // 2
+_Q = _W + _W // 2
+
+
+def _tiny_index(spark, xy: list[tuple[int, int]]):
+    from pkd_tree_spark.config import EngineConfig
+    from pkd_tree_spark.index import SpatialIndex
+
+    pts = pd.DataFrame({
+        "doc_id": [f"d{i}" for i in range(len(xy))], "span_idx": [0] * len(xy),
+        "key": list(range(len(xy))), "x0": [p[0] for p in xy], "x1": [p[1] for p in xy],
+    })
+    cfg = EngineConfig(dims=2, index_level=3, knn_level=2, partitions=4)
+    return SpatialIndex.build(spark.createDataFrame(pts), cfg), pts
+
+
+def _brute(pts: pd.DataFrame, q: tuple[int, int], k: int) -> list[tuple[int, int, int]]:
+    d2 = (pts["x0"] - q[0]) ** 2 + (pts["x1"] - q[1]) ** 2
+    rows = sorted(zip(d2.tolist(), pts["key"].tolist(), pts["span_idx"].tolist()))[:k]
+    return [(key, sp, dd) for dd, key, sp in rows]
+
+
+@pytest.mark.parametrize("loop", ["driver", "distributed"])
+def test_knn_block_bound_tie_with_smaller_key(spark, monkeypatch, loop):
+    """After round 1 the k-th distance equals the block gap exactly, and
+    two UNSCANNED points (just past the block, one per dimension) tie with
+    it at smaller keys. The bound is strict (kth < gap^2), so the query
+    must take round 2 and return them in (dist2, key, span_idx) order."""
+    import pkd_tree_spark.knn as K
+
+    q = (_Q, _Q)
+    xy = [
+        (3 * _W, _Q), (_Q, 3 * _W),  # keys 0, 1: outside the block, at GAP
+        (3 * _W + 5, 3 * _W + 5), (900_000, 10),  # keys 2, 3: far
+        (0, _Q), (0, _Q),  # keys 4, 5: duplicates inside the block, at GAP
+        (_Q + 7, _Q - 3),  # key 6: inside, near
+    ]
+    idx, pts = _tiny_index(spark, xy)
+    if loop == "distributed":
+        monkeypatch.setattr(K, "DRIVER_CELLS_MAX_QUERIES", 0)
+    res, st = knn(idx, pd.DataFrame({"qid": [0], "q0": [q[0]], "q1": [q[1]]}), k=3, level=2,
+                  adaptive=False, return_stats=True)
+    got = _sorted(res)
+    assert list(zip(got["key"], got["span_idx"], got["dist2"])) == _brute(pts, q, 3)
+    assert got["key"].tolist() == [6, 0, 1] and got["dist2"].tolist()[1:] == [_GAP**2] * 2
+    assert st.toPandas()["rounds"].tolist() == [2]
+
+
+@pytest.mark.parametrize("loop", ["driver", "distributed"])
+def test_knn_block_bound_centre_query_one_round(spark, monkeypatch, loop):
+    """A query at the centre of its home cell whose k-th neighbour lies
+    between r*w and the block gap: the worst-placement rule (kth <= (r*w)^2)
+    needed a second round, the exact block bound finishes in round 1."""
+    import pkd_tree_spark.knn as K
+
+    q, dd = (_Q, _Q), 6 * _W // 5  # W < dd < GAP
+    xy = [(_Q - dd, _Q), (_Q, _Q - dd), (_Q + dd, _Q), (_Q, _Q + dd), (1_000_000, 1_000_000)]
+    idx, pts = _tiny_index(spark, xy)
+    if loop == "distributed":
+        monkeypatch.setattr(K, "DRIVER_CELLS_MAX_QUERIES", 0)
+    res, st = knn(idx, pd.DataFrame({"qid": [0], "q0": [q[0]], "q1": [q[1]]}), k=4, level=2,
+                  adaptive=False, return_stats=True)
+    got = _sorted(res)
+    assert list(zip(got["key"], got["span_idx"], got["dist2"])) == _brute(pts, q, 4)
+    kth = int(got["dist2"].max())
+    assert _W**2 < kth < _GAP**2  # the old rule would not fire, the new one does
+    assert st.toPandas()["rounds"].tolist() == [1]

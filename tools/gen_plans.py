@@ -141,7 +141,9 @@ def main() -> None:
     cand_note = (
         "Round-1 candidate join (optimized logical plan, via the knn "
         "plan_log probe): shells leaf-resolved; lvl==-1 rows take the "
-        "no-generate leaf equi-join. lvl_counts per round: "
+        "no-generate leaf equi-join; the join projects doc_id, which the "
+        "driver rounds collect with the candidates (no re-attach query "
+        "for a batch finished on the driver). lvl_counts per round: "
         + json.dumps([p["lvl_counts"] for p in plans])
     )
     section("kNN round-1 candidate join", cand_note, plans[0]["plan"])
