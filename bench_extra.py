@@ -78,6 +78,7 @@ def study_cow() -> dict:
 
     from pkd_tree_spark.index import SpatialIndex
     from pkd_tree_spark.updates import PersistentIndex
+    from pkd_tree_spark.zorder import cell_col
 
     spark = _spark()
     cfg = _cfg()
@@ -120,9 +121,10 @@ def study_cow() -> dict:
         # CLUSTERED delete: a batch confined to one Morton bucket — the
         # case COW exists for ("a 1% delete rewrites ~1% of files"): only
         # that bucket's files are rewritten
+        bucket = cell_col(F.col("morton"), cfg.dims, p.bucket_level, cfg.grid_bits)
         clustered = (
-            spark.read.parquet(p.points_path)
-            .where((F.col("pbucket") == 5) & (F.col("key") % 2 == 0))
+            p.load(spark).points
+            .where((bucket == 5) & (F.col("key") % 2 == 0))
             .select("key", "span_idx", "x0", "x1")
             .localCheckpoint(eager=True)
         )

@@ -94,7 +94,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from .config import EngineConfig
@@ -342,11 +342,13 @@ def _resolved_cells(qpd: pd.DataFrame, d: int, coord_bits: int, L: int, meta: di
     return pd.concat(frames, ignore_index=True)
 
 
-def _exh_cond(d: int):
-    """Column predicate: this round's offset mesh would exceed MESH_CAP —
-    the query takes the exhaustive branch (shared by the branch split and
-    the termination expression; both sides must agree row-for-row)."""
-    return F.lit(float(d)) * F.log2(F.lit(2.0) * F.col("r") + F.lit(1.0)) > F.lit(MESH_CAP_LOG2)
+def _exh_cond(d: int, r=None):
+    """Column predicate: the offset mesh at ring ``r`` (default: the ``r``
+    column) would exceed MESH_CAP — the query takes the exhaustive branch
+    (shared by the branch split, the termination expression and the
+    pending-set count; all must agree row-for-row)."""
+    r = F.col("r") if r is None else r
+    return F.lit(float(d)) * F.log2(F.lit(2.0) * r + F.lit(1.0)) > F.lit(MESH_CAP_LOG2)
 
 
 def _union(frames: list[DataFrame]) -> DataFrame:
@@ -741,7 +743,6 @@ def knn(
     adaptive: bool = True,
     target_candidates: int = 64,
     return_stats: bool = False,
-    reliable_checkpoints: bool = False,
     plan_log: list | None = None,
 ):
     """Exact batch kNN. queries: pandas OR Spark DataFrame (qid, q0..q{d-1})
@@ -764,17 +765,6 @@ def knn(
     list, collects the optimized plan text of each round's candidate join
     (test/diagnostic hook — lets callers assert plan shape, e.g. no
     points-side Generate).
-
-    Distributed round frames are localCheckpoint'ed by default (fast;
-    blocks release when the result is GC'd). localCheckpoint is NOT
-    fault-tolerant: on a real cluster an executor loss mid-batch fails the
-    job. For long multi-round batches set reliable_checkpoints=True with
-    spark.sparkContext.setCheckpointDir(...) — round frames then persist
-    to reliable storage (falls back to localCheckpoint if no dir is set).
-    Reliable checkpoint files are NOT deleted by this function; enable
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (or clean the
-    checkpoint dir between batches) or long-lived sessions accumulate one
-    round-frame directory per round per call.
     """
     spark = index.points.sparkSession
     cfg: EngineConfig = index.cfg
@@ -824,7 +814,7 @@ def knn(
     try:
         return _knn_rounds(
             index, qdf, bc_meta, k, level, cap, max_rounds, adaptive, target_candidates,
-            return_stats, reliable_checkpoints, plan_log,
+            return_stats, plan_log,
         )
     finally:
         # every frame the result derives from is checkpointed: the lazy
@@ -843,7 +833,6 @@ def _knn_rounds(
     adaptive: bool,
     target_candidates: int,
     return_stats: bool,
-    reliable_checkpoints: bool,
     plan_log: list | None,
 ):
     """The ring loop's distributed rounds over the query frame ``qdf``
@@ -866,24 +855,27 @@ def _knn_rounds(
     else:
         qdf = qdf.withColumn("level", F.lit(level).cast("int"))
 
-    def _ckpt(df: DataFrame) -> DataFrame:
-        if reliable_checkpoints and spark.sparkContext._jsc.sc().getCheckpointDir().isDefined():
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    def _pend_counts(pend: DataFrame) -> tuple[int, int]:
-        row = pend.agg(
-            F.count(F.lit(1)).alias("n"), F.sum(_exh_cond(d).cast("long")).alias("ne")
-        ).collect()[0]  # cheap: scans the checkpointed round frame
-        return int(row["n"]), int(row["ne"] or 0)
+    def _ckpt(df: DataFrame, pending, exh) -> tuple[DataFrame, int, int]:
+        """Materialize a round frame in ONE job; the pending-set size and
+        how many pending rows take the exhaustive branch next round ride
+        along as observed metrics of that job (no separate count pass)."""
+        obs = Observation()
+        df = df.observe(
+            obs,
+            F.sum(pending.cast("long")).alias("n"),
+            F.sum((pending & exh).cast("long")).alias("ne"),
+        ).localCheckpoint(eager=True)
+        m = obs.get
+        return df, int(m["n"] or 0), int(m["ne"] or 0)
 
     empty_tk = F.expr(f"CAST(array() AS {_ENTRY_ARR})")
-    pend = _ckpt(
+    pend, n_pend, n_exh = _ckpt(
         qdf.withColumn("r", F.lit(1).cast("long"))
         .withColumn("tk", empty_tk)
-        .withColumn("cnt", F.lit(0).cast("long"))
+        .withColumn("cnt", F.lit(0).cast("long")),
+        F.lit(True),
+        _exh_cond(d),
     )
-    n_pend, n_exh = _pend_counts(pend)
 
     pts_narrow, dist2 = _candidate_source(index, k, d)
 
@@ -1032,9 +1024,9 @@ def _knn_rounds(
         # termination as COLUMN expressions over pend ⋈ round-stats: merge
         # the carried top-k with this shell's, then apply the exact block
         # bound kth < gap^2 (_block_gap2; nn_search.hpp:121-123). ONE eager
-        # checkpoint materializes the round; results and the next pending
-        # set derive from it lazily (heavy join runs once; 3 driver
-        # actions/round independent of query count).
+        # checkpoint materializes the round and observes the next pending
+        # set's counts; results and that set derive from it lazily (heavy
+        # join runs once; 2 driver actions/round independent of query count).
         merged = F.slice(
             F.array_sort(F.concat(F.col("tk"), F.coalesce(F.col("tk_new"), empty_tk))), 1, k
         )
@@ -1061,7 +1053,8 @@ def _knn_rounds(
             )
             .withColumn("_drop", F.col("_covered") & (F.size("tk_m") == 0))
         )
-        j = _ckpt(j)
+        still = F.expr("NOT _done AND NOT _drop")
+        j, n_pend, n_exh = _ckpt(j, still, _exh_cond(d, F.col("r") * 2))
 
         result_parts.append(j.where("_done").select(
             "qid", F.col("tk_m").alias("tk"), F.lit(rnd).cast("int").alias("rounds"),
@@ -1071,7 +1064,6 @@ def _knn_rounds(
             "qid", *qcols, "level", (F.col("r") * 2).alias("r"),
             F.col("tk_m").alias("tk"), F.col("cnt_m").alias("cnt"),
         )
-        n_pend, n_exh = _pend_counts(pend)
         if cells is not None:
             cells.unpersist()
 

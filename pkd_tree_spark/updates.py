@@ -1,5 +1,6 @@
 """Batch updates: MERGE-style insert/delete, skew-triggered re-tiling,
-sliding-window maintenance, and resumable lineage checkpoints.
+sliding-window maintenance, and a persistent index whose updates each
+publish through one manifest commit.
 
 Reference operators reproduced (SURVEY.md §2.5-2.6):
   U1 batchInsert  (batch_op/batch_insert.hpp:59-191)
@@ -16,9 +17,10 @@ produces a new SpatialIndex whose metadata was refreshed *incrementally*
 only tagged skeleton nodes). In a real deployment the points table is an
 Iceberg table and insert/delete are `MERGE INTO` with copy-on-write of the
 touched cell files; here the same dataflow runs on DataFrames/parquet, and
-``PersistentIndex`` shows the on-disk layout (points partitioned by Morton
-bucket, per-bucket lineage markers so a killed run resumes without
-recomputation).
+``PersistentIndex`` shows the on-disk layout: points partitioned by Morton
+bucket into generation directories, and a CURRENT manifest swapped by one
+``os.replace`` per update, so readers never see a half-applied batch and
+a killed update resumes by asking whether its fingerprint was committed.
 
 Delete metadata note: per-cell counts stay exact; per-cell min/max bounds
 become conservative supersets after deletes (still correct for pruning —
@@ -27,14 +29,16 @@ covers use *geometric* cell bounds). A retile/compact recomputes them.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
-import time
+import shutil
 from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .config import EngineConfig, DEFAULT_CONFIG
 from .index import SpatialIndex, release_rdd_ids, tracked_local_checkpoint
@@ -47,7 +51,6 @@ __all__ = [
     "check_skew",
     "retile",
     "sliding_window",
-    "Checkpoint",
     "PersistentIndex",
 ]
 
@@ -304,52 +307,54 @@ def sliding_window(
 
 
 # ---------------------------------------------------------------------------
-# persistence + lineage
+# persistence: one manifest commit per update
 # ---------------------------------------------------------------------------
 
-class Checkpoint:
-    """Per-stage lineage markers (JSON file per completed stage + metrics).
-
-    Any pipeline stage wrapped in ``run(stage, fn)`` is skipped on re-run if
-    its marker exists — the resumability requirement (north rule): a killed
-    job resumes at the last completed stage without recomputation.
-    """
-
-    def __init__(self, path: str):
-        self.path = path
-        os.makedirs(path, exist_ok=True)
-
-    def _marker(self, stage: str) -> str:
-        return os.path.join(self.path, f"{stage}.done.json")
-
-    def has(self, stage: str) -> bool:
-        return os.path.exists(self._marker(stage))
-
-    def info(self, stage: str) -> dict | None:
-        if not self.has(stage):
-            return None
-        with open(self._marker(stage)) as f:
-            return json.load(f)
-
-    def run(self, stage: str, fn, **metrics):
-        if self.has(stage):
-            return self.info(stage)
-        t0 = time.time()
-        payload = fn() or {}
-        rec = {"stage": stage, "elapsed_sec": time.time() - t0, **metrics, **payload}
-        tmp = self._marker(stage) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(rec, f)
-        os.replace(tmp, self._marker(stage))  # atomic: no half-written markers
-        return rec
+def _fingerprint(batch: DataFrame, cols: list[str]) -> tuple[str, int, list[int]]:
+    """(content hash, row count, sorted pbuckets) of ``batch`` in ONE job.
+    The hash is order-independent and duplicate-sensitive: a pmod-bounded
+    sum of row hashes (no int64 overflow under ANSI even at 10^12 rows),
+    their bit_xor, and the count. The manifest records the last commit's
+    fingerprint, so re-running a committed call is a no-op while a
+    different batch (or the same one after another commit) does real work."""
+    cs = ", ".join(cols)
+    r = batch.agg(
+        F.expr(f"sum(pmod(xxhash64({cs}), 1048576))").alias("s"),
+        F.expr(f"bit_xor(xxhash64({cs}))").alias("x"),
+        F.count(F.lit(1)).alias("n"),
+        F.collect_set("pbucket").alias("b"),
+    ).collect()[0]
+    n = int(r["n"])
+    h = f"{int(r['s'] or 0):x}_{int(r['x'] or 0) & 0xFFFFFFFFFFFFFFFF:016x}_{n}"
+    return h, n, sorted(int(b) for b in r["b"])
 
 
 @dataclass
 class PersistentIndex:
-    """On-disk layout: points parquet partitioned by coarse Morton bucket
-    (pbucket = cell at bucket_level), sorted by morton within files, plus a
-    meta parquet. Buckets are the unit of copy-on-write for updates and of
-    per-partition lineage."""
+    """On-disk index under ``path``:
+
+      points/g<N>/pbucket=<b>/  bucket b's point files (pbucket = cell at
+                                bucket_level), sorted by morton
+      meta/g<N>/                the per-cell meta
+      CURRENT                   the manifest: each live bucket's directory
+                                and row count, the meta directory, both
+                                schemas, and the last commit's fingerprint
+                                and result
+
+    Every update (write, merge_insert_cow, merge_delete_cow, retile_hot) is
+    ONE generation commit (``_commit``): the rewritten buckets go into a
+    fresh generation directory in one staged Spark write, the new meta
+    into its own fresh directory, and a single ``os.replace`` of CURRENT
+    publishes both — the analog of an Iceberg copy-on-write MERGE swapping
+    its metadata pointer. Untouched buckets are referenced by the new
+    manifest where they already are, never copied; a bucket an update
+    empties is simply absent. Directories the new manifest does not
+    reference are deleted after the swap, so ``points_path`` holds exactly
+    the live point files. ``load`` reads CURRENT once: it sees the state
+    before an update or after it, never a mix. Resume is one question: is
+    this call's fingerprint the last one committed? If so its recorded
+    result comes back and nothing is rewritten; if not, the uncommitted
+    work is redone into the same (never published) generation number."""
 
     path: str
     cfg: EngineConfig
@@ -359,312 +364,253 @@ class PersistentIndex:
     def points_path(self) -> str:
         return os.path.join(self.path, "points")
 
-    @property
-    def meta_path(self) -> str:
-        return os.path.join(self.path, "meta")
+    def manifest(self) -> dict:
+        """The committed manifest (FileNotFoundError before the first write)."""
+        with open(os.path.join(self.path, "CURRENT")) as f:
+            return json.load(f)
 
-    def write(self, index: SpatialIndex, ckpt: Checkpoint | None = None) -> "PersistentIndex":
-        ckpt = ckpt or Checkpoint(os.path.join(self.path, "_lineage"))
+    def _with_bucket(self, df: DataFrame) -> DataFrame:
         cfg = self.cfg
+        return df.withColumn(
+            "pbucket", cell_col(F.col("morton"), cfg.dims, self.bucket_level, cfg.grid_bits)
+        )
 
-        def _write_points():
-            pts = index.points.withColumn(
-                "pbucket", cell_col(F.col("morton"), cfg.dims, self.bucket_level, cfg.grid_bits)
-            )
-            (
-                pts.repartitionByRange(cfg.partitions, "morton")
-                .sortWithinPartitions("morton")
-                .write.mode("overwrite")
-                .partitionBy("pbucket")
-                .parquet(self.points_path)
-            )
-            return {"rows": index.points.count()}
+    def _scan(self, spark: SparkSession, schema: dict, dirs: list[str]) -> DataFrame:
+        """Read manifest directories with their recorded schema: no
+        schema-inference job, and no directories is an empty frame."""
+        st = StructType.fromJson(schema)
+        if not dirs:
+            return spark.createDataFrame([], st)
+        return spark.read.schema(st).parquet(*[os.path.join(self.path, d) for d in dirs])
 
-        def _write_meta():
-            index.meta.write.mode("overwrite").parquet(self.meta_path)
-            return {"cells": index.meta.count()}
-
-        ckpt.run("write_points", _write_points)
-        ckpt.run("write_meta", _write_meta)
-        return self
+    def _buckets(self, spark: SparkSession, man: dict, buckets: list[int]) -> DataFrame:
+        """The committed rows of ``buckets``, with their pbucket column."""
+        dirs = [e["dir"] for b, e in man["buckets"].items() if int(b) in buckets]
+        return self._with_bucket(self._scan(spark, man["schema"], dirs))
 
     def load(self, spark: SparkSession, persist: bool = False) -> SpatialIndex:
-        pts = spark.read.parquet(self.points_path).drop("pbucket")
-        meta = spark.read.parquet(self.meta_path)
+        man = self.manifest()
+        pts = self._scan(spark, man["schema"], [e["dir"] for e in man["buckets"].values()])
+        meta = self._scan(spark, man["meta_schema"], [man["meta"]])
         if persist:
             pts, meta = pts.persist(), meta.persist()
         return SpatialIndex(points=pts, meta=meta, cfg=self.cfg)
 
-    def retile_hot(
-        self,
-        spark: SparkSession,
-        ckpt: Checkpoint | None = None,
-        file_target_rows: int = 1_000_000,
-    ) -> dict:
+    def write(self, index: SpatialIndex) -> "PersistentIndex":
+        """Replace whatever ``path`` holds with ``index`` (one commit; its
+        meta is written verbatim). Writing the same index again is a no-op."""
+        pts = self._with_bucket(index.points)
+        h, n, _ = _fingerprint(pts, index.points.columns)
+        fp = f"write:{self.bucket_level}:{self.cfg.index_level}:{h}"
+        try:
+            base = self.manifest()
+        except FileNotFoundError:
+            base = None
+        if self._committed(base, fp) is None:
+            files = pts.repartitionByRange(self.cfg.partitions, "morton")
+            self._commit(base, fp, files, None, lambda _: {"rows": n}, index.meta)
+        return self
+
+    def retile_hot(self, spark: SparkSession, file_target_rows: int = 1_000_000) -> dict:
         """M3/U3 TARGETED analog: rewrite ONLY imbalanced buckets.
 
         The reference rebuilds just the subtree that trips the
         weight-balance test (inner_tree.hpp:78-95, tree_node.hpp:126-131);
         round 2's retile() rewrote the whole table. Here a bucket is hot
-        when its row count exceeds (n/buckets) * (1 + imbalance_ratio/10)
-        (the M1 criterion at bucket granularity); each hot bucket is
-        re-sorted and SPLIT into ceil(rows/file_target_rows) morton-range
-        files — one Morton level deeper in effect — via dynamic partition
-        overwrite of that bucket alone. Cold buckets' files are untouched
-        (verified by the pytest on file mtimes). Exact per-cell bounds for
-        the hot buckets' cells are recomputed into the meta parquet
+        when its row count (read off the manifest) exceeds
+        (n/buckets) * (1 + imbalance_ratio/10) — the M1 criterion at bucket
+        granularity. The hot buckets take one identity rewrite through the
+        shared commit, each range-split on morton into exactly
+        max(2, ceil(rows/file_target_rows)) files — one Morton level
+        deeper in effect — and their cells' meta is recomputed exactly
         (deletes leave conservative bounds; the compaction tightens them).
-        One lineage marker per hot bucket -> a killed retile resumes
-        bucket-wise. Returns {buckets_total, buckets_hot, rows_rewritten}.
+        Cold buckets' files are untouched (verified by the pytest on file
+        mtimes). Returns {buckets_total, buckets_hot, rows_rewritten}.
         """
         cfg = self.cfg
-        d = cfg.dims
-        ckpt = ckpt or Checkpoint(os.path.join(self.path, "_lineage_retile"))
-        pts = spark.read.parquet(self.points_path)
-        per_bucket = {
-            int(r["pbucket"]): int(r["rows"])
-            for r in pts.groupBy("pbucket").agg(F.count(F.lit(1)).alias("rows")).collect()
-        }
-        n = sum(per_bucket.values())
-        buckets_total = max(1, 1 << (d * self.bucket_level))
-        threshold = (n / buckets_total) * (1 + cfg.imbalance_ratio / 10.0)
-        hot = sorted(b for b, rows in per_bucket.items() if rows > threshold)
-        rows_rewritten = 0
-        prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            for b in hot:
-                nfiles = max(2, -(-per_bucket[b] // file_target_rows))
-
-                def _rewrite(b=b, nfiles=nfiles):
-                    part = (
-                        pts.where(F.col("pbucket") == b)
-                        .localCheckpoint(eager=True)  # snapshot before overwrite
-                        .repartitionByRange(nfiles, "morton")
-                        .sortWithinPartitions("morton")
-                    )
-                    part.write.mode("overwrite").partitionBy("pbucket").parquet(self.points_path)
-                    return {"bucket": int(b), "files": nfiles}
-
-                ckpt.run(f"retile_bucket_{b}", _rewrite)
-                rows_rewritten += per_bucket[b]
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-
-        if hot:
-            self._refresh_meta_buckets(spark, hot, ckpt, "hot")
-        return {
+        base = self.manifest()
+        fp = f"retile:{file_target_rows}"
+        done = self._committed(base, fp)
+        if done is not None:
+            return done
+        rows = {int(b): e["rows"] for b, e in base["buckets"].items()}
+        buckets_total = max(1, 1 << (cfg.dims * self.bucket_level))
+        threshold = (sum(rows.values()) / buckets_total) * (1 + cfg.imbalance_ratio / 10.0)
+        hot = sorted(b for b, r in rows.items() if r > threshold)
+        result = {
             "buckets_total": buckets_total,
             "buckets_hot": len(hot),
-            "rows_rewritten": rows_rewritten,
+            "rows_rewritten": sum(rows[b] for b in hot),
         }
-
-    def _batch_fingerprint(self, batch: DataFrame, cols: list[str]) -> str:
-        """Order-independent content hash of the batch (sum of row hashes
-        + count): lineage markers are NAMESPACED by it, so a marker only
-        short-circuits a resumed run of the SAME batch — a second COW call
-        with a different batch can never silently skip work against stale
-        markers from an earlier completed run (ADVICE r6 #1)."""
-        cs = ", ".join(cols)
-        r = batch.agg(
-            # pmod-bounded sum (no int64 overflow under ANSI even at 10^12
-            # rows) + bit_xor + count: order-independent, duplicate-row-
-            # sensitive via the sum
-            F.expr(f"sum(pmod(xxhash64({cs}), 1048576))").alias("s"),
-            F.expr(f"bit_xor(xxhash64({cs}))").alias("x"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        return (
-            f"{int(r['s'] or 0):x}_"
-            f"{(int(r['x'] or 0)) & 0xFFFFFFFFFFFFFFFF:016x}_{int(r['n'])}"
-        )
-
-    def _swap_staged(
-        self, staging: str, touched: list[int], staged: list[int], ckpt: Checkpoint, fp: str
-    ) -> None:
-        """Commit phase of the two-phase-manifest COW: move each touched
-        bucket's STAGED directory into place with an idempotent per-bucket
-        swap. ``staged`` (recorded in the stage marker) disambiguates the
-        two src-absent cases on resume: a bucket the batch EMPTIED (never
-        staged -> remove its dest, the thin-subtree tombstone erase,
-        inner_tree.hpp:109-148) vs a swap that crashed after its rename but
-        before its marker (staged and consumed -> dest already holds the
-        new data, keep it). Local-FS assumption: swaps are os/shutil
-        renames; an object-store / Iceberg deployment commits the same
-        manifest as a metadata swap instead."""
-        import shutil
-
-        staged_set = set(staged)
-        for b in touched:
-            src = os.path.join(staging, f"pbucket={b}")
-            dst = os.path.join(self.points_path, f"pbucket={b}")
-
-            def _swap(b=b, src=src, dst=dst):
-                if b not in staged_set:
-                    shutil.rmtree(dst, ignore_errors=True)  # emptied bucket
-                    return {"emptied": True}
-                if os.path.exists(src):
-                    shutil.rmtree(dst, ignore_errors=True)
-                    os.rename(src, dst)
-                return {"emptied": False}  # src consumed: rename already done
-
-            ckpt.run(f"swap_{fp}_pbucket={b}", _swap)
-
-    def _cow_write(
-        self,
-        spark: SparkSession,
-        batch: DataFrame,
-        ckpt: Checkpoint,
-        fp: str,
-        merge: bool,
-        on: list[str] | None = None,
-    ) -> dict:
-        """Shared COW engine for insert (merge=True) and delete
-        (merge=False): ONE Spark job stages the rewritten rows of every
-        touched bucket into a fresh staging directory (no dynamic-
-        partition-overwrite loop — the r6 code ran one job per touched
-        bucket, 64+ scheduler round-trips and 64 meta reads for a batch
-        touching every bucket; the reference processes buckets in a single
-        parlay::parallel_for, batch_insert.hpp:166-187), then swaps the
-        staged directories in (idempotent, resumable, per-bucket markers
-        namespaced by the batch fingerprint). Because the stage WRITES TO
-        A NEW PATH, the job never overwrites files it is reading — the
-        per-bucket localCheckpoint snapshots of the r6 loop are gone
-        entirely. Untouched buckets' files are never opened or rewritten
-        (pytest-verified via mtimes)."""
-        cfg = self.cfg
-        staging = os.path.join(self.path, f"_staged_{fp}")
-
-        def _plan():
-            touched = sorted(
-                int(r["pbucket"]) for r in batch.select("pbucket").distinct().collect()
-            )
-            return {"touched": touched}
-
-        plan = ckpt.run(f"plan_{fp}", _plan)
-        touched = [int(b) for b in plan["touched"]]
-        if not touched:
-            return {"buckets_touched": 0, "rows_deleted": 0}
-
-        def _stage():
-            src = spark.read.parquet(self.points_path)
-            existing = src.where(F.col("pbucket").isin(touched))
-            n_before = existing.count()
-            key_ids: list = []
-            if merge:
-                out = existing.unionByName(batch.select(*existing.columns))
-            else:
-                keyside, key_ids = tracked_local_checkpoint(batch.select(*on).distinct())
-                nk = keyside.count()
-                keyside = (
-                    F.broadcast(keyside) if nk <= DELETE_BCAST_ROWS else keyside.hint("shuffle_hash")
+        if hot:
+            # one union, so one write: each bucket's own range split keeps
+            # its file count exact (a shared split follows the global quantiles)
+            files = functools.reduce(DataFrame.union, [
+                self._buckets(spark, base, [b]).repartitionByRange(
+                    max(2, -(-rows[b] // file_target_rows)), "morton"
                 )
-                out = existing.join(keyside, on, "left_anti")
-            parts = max(1, min(cfg.partitions, len(touched) * 2))
-            (
-                out.repartitionByRange(parts, "morton")
-                .sortWithinPartitions("morton")
-                .write.mode("overwrite")
-                .partitionBy("pbucket")
-                .parquet(staging)
-            )
-            release_rdd_ids(spark, key_ids)
-            staged = sorted(
-                int(e.name.split("=", 1)[1])
-                for e in os.scandir(staging)
-                if e.is_dir() and e.name.startswith("pbucket=")
-            )
-            # explicit schema: a batch that empties every touched bucket
-            # leaves a staging dir with no parquet files to infer from
-            n_after = (
-                spark.read.schema(src.schema).parquet(staging).count() if staged else 0
-            )
-            return {"rows_before": n_before, "rows_after": n_after, "staged": staged}
+                for b in hot
+            ])
+            self._commit(base, fp, files, hot, lambda _: result)
+        return result
 
-        st = ckpt.run(f"stage_{fp}", _stage)
-        self._swap_staged(staging, touched, [int(b) for b in st.get("staged", [])], ckpt, fp)
-        self._refresh_meta_buckets(spark, touched, ckpt, fp)
-        import shutil
-
-        shutil.rmtree(staging, ignore_errors=True)
-        return {
-            "buckets_touched": len(touched),
-            "rows_deleted": int(st.get("rows_before", 0)) - int(st.get("rows_after", 0)),
-        }
-
-    def merge_insert_cow(self, spark: SparkSession, new_points: DataFrame, ckpt: Checkpoint | None = None) -> dict:
+    def merge_insert_cow(self, spark: SparkSession, new_points: DataFrame) -> dict:
         """Copy-on-write insert: rewrite ONLY the buckets the batch touches,
-        in ONE staged write job + idempotent directory swaps (see
-        _cow_write — the Iceberg MERGE copy-on-write analog). Lineage
-        markers are namespaced by the batch fingerprint, so a killed merge
-        resumes and a different batch never matches stale markers."""
-        cfg = self.cfg
-        ckpt = ckpt or Checkpoint(os.path.join(self.path, "_lineage_merge"))
-        batch = _with_morton(new_points, cfg).withColumn(
-            "pbucket", cell_col(F.col("morton"), cfg.dims, self.bucket_level, cfg.grid_bits)
-        )
-        fp = self._batch_fingerprint(batch, [c for c in batch.columns if c != "pbucket"])
-        return self._cow_write(spark, batch, ckpt, fp, merge=True)
+        in one staged write and one manifest commit (see _cow_write — the
+        Iceberg MERGE copy-on-write analog)."""
+        batch = self._with_bucket(_with_morton(new_points, self.cfg))
+        return self._cow_write(spark, batch, [c for c in batch.columns if c != "pbucket"])
 
-    def merge_delete_cow(
-        self, spark: SparkSession, del_rows: DataFrame, ckpt: Checkpoint | None = None
-    ) -> dict:
+    def merge_delete_cow(self, spark: SparkSession, del_rows: DataFrame) -> dict:
         """Copy-on-write DELETE: the batch carries the rows' COORDINATES
         (the reference's native batchDelete contract — it deletes points,
         batch_delete.hpp:59-76), so each row routes by Morton to its
-        pbucket and ONLY the touched buckets' files are rewritten — in ONE
-        staged anti-join write job + idempotent swaps (see _cow_write).
+        pbucket and ONLY the touched buckets' files are rewritten, in one
+        staged anti-join write and one manifest commit (see _cow_write).
         Within a bucket the match is (key, span_idx) if present else key;
         batch rows matching nothing are a no-op (PartialCover,
-        batch_delete.hpp:93-107). A fully-emptied bucket's directory is
-        removed by the swap phase (thin-subtree tombstone erase), and a
-        batch emptying EVERY bucket leaves a consistent empty table (the
-        meta refresh guards the no-files case). At 100 TB a 1% delete thus
-        rewrites ~1% of files in one job, not 64 jobs.
+        batch_delete.hpp:93-107). A fully-emptied bucket drops out of the
+        manifest and its directory is deleted (thin-subtree tombstone
+        erase, inner_tree.hpp:109-148); a batch emptying EVERY bucket
+        leaves a consistent empty table. At 100 TB a 1% delete thus
+        rewrites ~1% of files in one job.
         Returns {buckets_touched, rows_deleted}."""
-        cfg = self.cfg
-        ckpt = ckpt or Checkpoint(os.path.join(self.path, "_lineage_delete"))
         on = [c for c in ("key", "span_idx") if c in del_rows.columns]
-        xcols = [f"x{j}" for j in range(cfg.dims)]
-        batch = _with_morton(del_rows.select(*on, *xcols), cfg).withColumn(
-            "pbucket", cell_col(F.col("morton"), cfg.dims, self.bucket_level, cfg.grid_bits)
-        )
-        fp = self._batch_fingerprint(batch, [*on, *xcols])
-        return self._cow_write(spark, batch, ckpt, fp, merge=False, on=on)
+        xcols = [f"x{j}" for j in range(self.cfg.dims)]
+        batch = self._with_bucket(_with_morton(del_rows.select(*on, *xcols), self.cfg))
+        return self._cow_write(spark, batch, [*on, *xcols], on)
 
-    def _refresh_meta_buckets(
-        self, spark: SparkSession, touched: list, ckpt: Checkpoint, fp: str = ""
-    ) -> None:
-        """Targeted metadata refresh shared by COW insert/delete (like
-        retile_hot's): recompute meta rows ONLY for the touched buckets'
-        cells (partition pruning keeps untouched buckets' files unread —
-        O(points in touched buckets), not O(n)); keep the rest as-is.
-        Exact bounds: deletes never leave conservative supersets here.
-        The marker is fingerprint-namespaced, so a second update's refresh
-        is never skipped against an earlier batch's marker (ADVICE r6 #1),
-        and a delete that emptied EVERY bucket skips the fresh read
-        entirely instead of failing schema inference on an empty directory
-        (ADVICE r6 #3)."""
+    def _cow_write(
+        self, spark: SparkSession, batch: DataFrame, cols: list[str], on: list[str] | None = None
+    ) -> dict:
+        """Shared COW engine for insert (``on`` None) and delete (``on`` =
+        match columns): ONE staged write rewrites every touched bucket (the
+        reference processes buckets in a single parlay::parallel_for,
+        batch_insert.hpp:166-187). Untouched buckets' files are never
+        opened or rewritten (pytest-verified via mtimes)."""
+        base = self.manifest()
+        h, _, touched = _fingerprint(batch, cols)
+        fp = f"{'delete' if on else 'insert'}:{h}"
+        done = self._committed(base, fp)
+        if done is not None:
+            return done
+        if not touched:
+            return {"buckets_touched": 0, "rows_deleted": 0}
+        existing = self._buckets(spark, base, touched)
+        key_ids: list = []
+        if on is None:
+            out = existing.unionByName(batch.select(*existing.columns))
+        else:
+            keys, key_ids = tracked_local_checkpoint(batch.select(*on).distinct())
+            keyside = F.broadcast(keys) if keys.count() <= DELETE_BCAST_ROWS else keys.hint("shuffle_hash")
+            out = existing.join(keyside, on, "left_anti")
+        before = sum(e["rows"] for b, e in base["buckets"].items() if int(b) in touched)
+
+        def result(rows: dict) -> dict:
+            after = sum(rows.get(b, 0) for b in touched)
+            return {"buckets_touched": len(touched), "rows_deleted": before - after}
+
+        files = out.repartitionByRange(max(1, min(self.cfg.partitions, len(touched) * 2)), "morton")
+        try:
+            return self._commit(base, fp, files, touched, result)
+        finally:
+            release_rdd_ids(spark, key_ids)
+
+    def _committed(self, base: dict | None, fp: str) -> dict | None:
+        """The recorded result if ``fp`` is the last commit (the call
+        already completed: rewrite nothing), else None."""
+        if base is None or base["fingerprint"] != fp:
+            return None
+        self._sweep(base)  # a fault between the swap and the cleanup leaves superseded dirs
+        return base["result"]
+
+    def _commit(
+        self,
+        base: dict | None,
+        fp: str,
+        files: DataFrame,
+        touched: list[int] | None,
+        result,
+        meta: DataFrame | None = None,
+    ) -> dict:
+        """Publish ``files`` — the full new content of buckets ``touched``,
+        with a pbucket column (``touched`` None: of every bucket), one
+        Spark partition per file — as generation N = base's + 1, and
+        return ``result(rows per bucket)``:
+
+          1. one staged write of ``files`` into points/g<N>/, each file
+             sorted by morton;
+          2. the meta into meta/g<N>/: ``meta`` if given, else the base
+             meta's rows of untouched cells plus rows aggregated from the
+             staged files (exact bounds). Both paths are new, so nothing
+             is overwritten while it is read and no snapshot is needed;
+          3. one os.replace of CURRENT;
+          4. delete every directory the new manifest does not reference.
+        A fault before step 3 leaves the base state committed; a re-run
+        overwrites the unpublished generation N."""
+        spark = files.sparkSession
         cfg = self.cfg
+        gen = base["gen"] + 1 if base else 0
+        gdir, mdir = f"points/g{gen}", f"meta/g{gen}"
+        (
+            files.sortWithinPartitions("morton")
+            .write.mode("overwrite")
+            .partitionBy("pbucket")
+            .parquet(os.path.join(self.path, gdir))
+        )
+        schema = json.loads(files.drop("pbucket").schema.json())
+        staged = {
+            int(e.name.split("=", 1)[1]): f"{gdir}/{e.name}"
+            for e in os.scandir(os.path.join(self.path, gdir))
+            if e.is_dir() and e.name.startswith("pbucket=")
+        }
+        shift = cfg.dims * (cfg.index_level - self.bucket_level)
+        if meta is None:
+            old = self._scan(spark, base["meta_schema"], [base["meta"]])
+            fresh = _meta_of(self._scan(spark, schema, list(staged.values())), cfg)
+            meta = old.where(~F.shiftrightunsigned("cell", shift).isin(touched)).unionByName(fresh)
+        meta_schema = json.loads(meta.schema.json())
+        meta.write.mode("overwrite").parquet(os.path.join(self.path, mdir))
+        per_bucket = {
+            int(r["b"]): int(r["n"])
+            for r in self._scan(spark, meta_schema, [mdir])
+            .groupBy(F.shiftrightunsigned("cell", shift).alias("b"))
+            .agg(F.sum("cnt").alias("n"))
+            .collect()
+        }
+        buckets = {} if touched is None else {
+            b: e for b, e in base["buckets"].items() if int(b) not in touched
+        }
+        buckets.update({str(b): {"dir": d, "rows": per_bucket.get(b, 0)} for b, d in staged.items()})
+        man = {
+            "gen": gen,
+            "fingerprint": fp,
+            "result": result(per_bucket),
+            "buckets": dict(sorted(buckets.items(), key=lambda kv: int(kv[0]))),
+            "schema": schema,
+            "meta": mdir,
+            "meta_schema": meta_schema,
+        }
+        cur = os.path.join(self.path, "CURRENT")
+        with open(cur + ".tmp", "w") as f:
+            json.dump(man, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(cur + ".tmp", cur)
+        self._sweep(man)
+        return man["result"]
 
-        def _refresh_meta():
-            d = cfg.dims
-            shift = d * (cfg.index_level - self.bucket_level)
-            have_data = any(
-                e.name.startswith("pbucket=") for e in os.scandir(self.points_path)
-            ) if os.path.isdir(self.points_path) else False
-            old = spark.read.parquet(self.meta_path).where(
-                ~F.shiftrightunsigned("cell", shift).isin([int(b) for b in touched])
-            )
-            if have_data:
-                fresh_pts = spark.read.parquet(self.points_path).where(
-                    F.col("pbucket").isin([int(b) for b in touched])
-                )
-                merged = old.unionByName(_meta_of(fresh_pts.drop("pbucket"), cfg))
-            else:
-                merged = old  # every bucket emptied: nothing fresh to scan
-            merged = merged.localCheckpoint(eager=True)
-            merged.write.mode("overwrite").parquet(self.meta_path)
-            return {"cells": merged.count()}
-
-        ckpt.run(f"refresh_meta_{fp}" if fp else "refresh_meta", _refresh_meta)
+    def _sweep(self, man: dict) -> None:
+        """Delete every generation directory, and every bucket directory in
+        a kept generation, that ``man`` does not reference."""
+        live = {man["meta"], *(e["dir"] for e in man["buckets"].values())}
+        for top in ("points", "meta"):
+            root = os.path.join(self.path, top)
+            for g in os.scandir(root) if os.path.isdir(root) else ():
+                gen = f"{top}/{g.name}"
+                if not g.is_dir() or gen in live:
+                    continue
+                kids = [e for e in os.scandir(g.path) if e.is_dir()]
+                dead = [e.path for e in kids if f"{gen}/{e.name}" not in live]
+                for p in [g.path] if len(dead) == len(kids) else dead:
+                    shutil.rmtree(p)

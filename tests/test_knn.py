@@ -432,3 +432,40 @@ def test_knn_block_bound_centre_query_one_round(spark, monkeypatch, loop):
     kth = int(got["dist2"].max())
     assert _W**2 < kth < _GAP**2  # the old rule would not fire, the new one does
     assert st.toPandas()["rounds"].tolist() == [1]
+
+
+def test_knn_distributed_round_actions(spark, index_uniform, monkeypatch):
+    """Driver actions per distributed round: the shell-cell collect and
+    the round's eager checkpoint, whose observed metrics carry the next
+    pending set's counts (no separate count pass), plus one checkpoint of
+    the initial pending set."""
+    import pkd_tree_spark.knn as K
+
+    monkeypatch.setattr(K, "DRIVER_CELLS_MAX_QUERIES", 0)
+    queries = FX.knn_fixtures(32, 2)
+    kw = dict(k=10, level=6, adaptive=False, return_stats=True)
+    want, want_st = knn(index_uniform, queries, **kw)  # warm: skeleton memo, pruned-table decision
+    cls = type(index_uniform.points)
+    actions: list[str] = []
+
+    def spy(name):
+        real = getattr(cls, name)
+
+        def wrapped(self, *a, **k):
+            eager = k.get("eager", a[0] if a else True)
+            if not name.endswith("heckpoint") or eager:
+                actions.append(name)
+            return real(self, *a, **k)
+
+        monkeypatch.setattr(cls, name, wrapped)
+
+    for name in ("collect", "toPandas", "count", "localCheckpoint", "checkpoint"):
+        spy(name)
+    res, st = knn(index_uniform, queries, **kw)
+    seen = list(actions)
+    monkeypatch.undo()
+    rounds = int(st.toPandas()["rounds"].max())
+    assert rounds >= 2
+    assert seen.count("localCheckpoint") == 1 + rounds
+    assert len(seen) == 1 + 2 * rounds, seen
+    pd.testing.assert_frame_equal(_sorted(res), _sorted(want))

@@ -178,13 +178,16 @@ def test_retile_hot_rewrites_only_hot_buckets(spark, tmp_path):
     assert 0 < rep["buckets_hot"] < 0.2 * rep["buckets_total"]
     post = _file_mtimes()
 
-    # cold buckets: identical files, untouched mtimes
-    hot_dirs = set()
-    for p in set(post) - set(pre):
-        hot_dirs.add(os.path.dirname(p))
+    # cold buckets: identical files, untouched mtimes. A rewritten bucket
+    # lands in a new generation directory, so hot vs cold goes by bucket
+    def _bucket(p):
+        return next(part for part in p.split(os.sep) if part.startswith("pbucket="))
+
+    hot_dirs = {os.path.dirname(p) for p in set(post) - set(pre)}
+    hot_buckets = {_bucket(p) for p in set(post) - set(pre)}
     changed_cold = [
         p for p in pre
-        if os.path.dirname(p) not in hot_dirs and (p not in post or post[p] != pre[p])
+        if _bucket(p) not in hot_buckets and (p not in post or post[p] != pre[p])
     ]
     assert changed_cold == []
     assert len(hot_dirs) >= 1

@@ -4,15 +4,21 @@
 
 from __future__ import annotations
 
+import math
+import os
+import shutil
+
 import pandas as pd
+import pytest
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from pkd_tree_spark import fixtures as FX
+from pkd_tree_spark.config import COORD_BITS
 from pkd_tree_spark.documents import load_points
 from pkd_tree_spark.index import SpatialIndex
 from pkd_tree_spark.ranges import range_count_boxes
 from pkd_tree_spark.updates import (
-    Checkpoint,
     PersistentIndex,
     check_skew,
     merge_delete,
@@ -20,13 +26,50 @@ from pkd_tree_spark.updates import (
     retile,
     sliding_window,
 )
+from pkd_tree_spark.zorder import cell_col
 from tests.conftest import SF_DIR
 
 BOXES = FX.box_fixtures(8, 2)
 
 
+def _bucket_rows(spark, p: PersistentIndex, b: int):
+    """The committed rows of bucket ``b``, read through the manifest."""
+    cfg = p.cfg
+    bucket = cell_col(F.col("morton"), cfg.dims, p.bucket_level, cfg.grid_bits)
+    return p.load(spark).points.where(bucket == b)
+
+
 def _counts(idx) -> dict:
     return range_count_boxes(idx, BOXES).toPandas().set_index("qid")["cnt"].to_dict()
+
+
+def _tree_mtimes(root: str) -> dict:
+    """Every file under ``root`` with its mtime: a rewrite changes one or both."""
+    return {
+        os.path.join(r, f): os.stat(os.path.join(r, f)).st_mtime_ns
+        for r, _, fs in os.walk(root)
+        for f in fs
+    }
+
+
+def _live_only(p: PersistentIndex) -> bool:
+    """points_path holds exactly the manifest's bucket directories."""
+    live = {os.path.join(p.path, e["dir"]) for e in p.manifest()["buckets"].values()}
+    dirs = {r for r, _, fs in os.walk(p.points_path) if any(f.endswith(".parquet") for f in fs)}
+    return dirs == live
+
+
+def _corner(points: pd.DataFrame, n: int, key_base: int, far: bool = False) -> pd.DataFrame:
+    """``n`` copies of base points squeezed into the first (or, ``far``,
+    the last) Morton bucket at bucket_level 3, under fresh keys."""
+    out = points.head(n).copy()
+    out["key"] = key_base + pd.RangeIndex(n)
+    out["doc_id"] = "ins_" + out["key"].astype(str)
+    for c in ("x0", "x1"):
+        out[c] = out[c] % 1000
+        if far:
+            out[c] = (1 << COORD_BITS) - 1 - out[c]
+    return out
 
 
 def _box_oracle(pts: pd.DataFrame) -> dict:
@@ -101,12 +144,14 @@ def test_skew_detect_and_retile(spark, points_uniform):
 def test_persistent_index_and_lineage(tmp_path, spark, cfg, index_uniform, points_uniform):
     p = PersistentIndex(path=str(tmp_path / "idx"), cfg=cfg)
     p.write(index_uniform)
-    # lineage markers exist -> a second write is a resume no-op
-    ck = Checkpoint(str(tmp_path / "idx/_lineage"))
-    assert ck.has("write_points") and ck.has("write_meta")
-    before = ck.info("write_points")
+    # the manifest records the commit -> a second write is a resume no-op
+    before = p.manifest()
+    assert before["fingerprint"].startswith("write:")
+    assert before["result"] == {"rows": len(points_uniform)}
+    files = _tree_mtimes(p.path)
     p.write(index_uniform)
-    assert ck.info("write_points") == before  # not recomputed
+    assert p.manifest() == before  # not recomputed
+    assert _tree_mtimes(p.path) == files
 
     loaded = p.load(spark)
     assert loaded.points.count() == len(points_uniform)
@@ -126,10 +171,12 @@ def test_cow_merge_rewrites_only_touched_buckets(tmp_path, spark, cfg, index_uni
             "x1": list(range(10)),
         }
     )
+    before = p.manifest()["buckets"]
     p.merge_insert_cow(spark, spark.createDataFrame(batch))
-    ck = Checkpoint(str(tmp_path / "idx/_lineage_merge"))
-    done = [f for f in __import__("os").listdir(ck.path) if f.startswith("swap_")]
-    assert len(done) == 1  # copy-on-write granularity: one bucket swapped
+    after = p.manifest()["buckets"]
+    moved = [b for b, e in after.items() if before.get(b) != e]
+    assert moved == ["0"]  # copy-on-write granularity: one bucket rewritten
+    assert {b: e for b, e in after.items() if b != "0"} == {b: e for b, e in before.items() if b != "0"}
     loaded = p.load(spark)
     assert loaded.points.count() == len(points_uniform) + 10
 
@@ -138,17 +185,14 @@ def test_cow_meta_refresh_reads_only_touched_buckets(
     tmp_path, spark, cfg, index_uniform, points_uniform
 ):
     """The meta refresh after a COW merge must be TARGETED: only touched
-    buckets' point files are read (partition pruning), untouched cells'
-    meta rows are carried over verbatim. Proven behaviorally: delete an
+    buckets' point files are read (their manifest directories), untouched
+    cells' meta rows are carried over verbatim. Proven behaviorally: delete an
     UNTOUCHED bucket's data files before the merge — a full-table refresh
     would silently drop that bucket's meta rows (or fail); the targeted
     refresh never reads it, so its meta rows survive unchanged."""
-    import os
-    import shutil
-
     p = PersistentIndex(path=str(tmp_path / "idx"), cfg=cfg)
     p.write(index_uniform)
-    meta_before = spark.read.parquet(p.meta_path).toPandas().set_index("cell").sort_index()
+    meta_before = p.load(spark).meta.toPandas().set_index("cell").sort_index()
 
     batch = pd.DataFrame(
         {
@@ -160,16 +204,14 @@ def test_cow_meta_refresh_reads_only_touched_buckets(
         }
     )
     # remove a far-away bucket's files entirely (untouched by the batch)
-    bucket_dirs = sorted(
-        d for d in os.listdir(p.points_path) if d.startswith("pbucket=") and d != "pbucket=0"
-    )
-    victim = bucket_dirs[-1]
-    victim_bucket = int(victim.split("=")[1])
-    shutil.rmtree(os.path.join(p.points_path, victim))
+    victim_bucket = max(int(b) for b in p.manifest()["buckets"])
+    shutil.rmtree(os.path.join(p.path, p.manifest()["buckets"][str(victim_bucket)]["dir"]))
 
     p.merge_insert_cow(spark, spark.createDataFrame(batch))
 
-    meta_after = spark.read.parquet(p.meta_path).toPandas().set_index("cell").sort_index()
+    # the manifest's meta directory: a full load would list the deleted files
+    meta_dir = os.path.join(p.path, p.manifest()["meta"])
+    meta_after = spark.read.parquet(meta_dir).toPandas().set_index("cell").sort_index()
     d, shift = cfg.dims, cfg.dims * (cfg.index_level - p.bucket_level)
     # the deleted (untouched) bucket's cells are still present, bit-for-bit
     victim_cells = [c for c in meta_before.index if (c >> shift) == victim_bucket]
@@ -225,12 +267,10 @@ def test_cow_delete_rewrites_only_touched_buckets(tmp_path, spark, cfg, index_un
     rewritten; cold buckets' files keep their mtimes; the surviving point
     set and targeted meta refresh are exact (batch_delete.hpp:146-265 —
     the reference rewrites only touched subtrees)."""
-    import os
 
     p = PersistentIndex(path=str(tmp_path / "idx"), cfg=cfg)
     p.write(index_uniform)
-    with_bucket = spark.read.parquet(p.points_path)
-    victims = with_bucket.where(F.col("pbucket") == 0).limit(50).select(
+    victims = _bucket_rows(spark, p, 0).limit(50).select(
         "key", "span_idx", "x0", "x1"
     ).toPandas()
     assert len(victims) == 50
@@ -259,26 +299,23 @@ def test_cow_delete_rewrites_only_touched_buckets(tmp_path, spark, cfg, index_un
     v = loaded.validate()
     assert v["meta_sum"] == v["n_points"]
     assert _counts(loaded) == _box_oracle(expected)
-    # resumability: a second call with the same lineage is a no-op
+    # resumability: re-running the committed call returns its result
     rep2 = p.merge_delete_cow(spark, spark.createDataFrame(victims))
-    assert rep2["rows_deleted"] == 0 or rep2["rows_deleted"] == rep["rows_deleted"]
+    assert rep2 == rep
 
 
 def test_cow_delete_empties_bucket(tmp_path, spark, cfg, index_uniform, points_uniform):
     """Deleting EVERY row of a bucket removes its partition directory (the
     thin-subtree collapse / tombstone erase, inner_tree.hpp:109-148) and
     drops its meta rows."""
-    import os
 
     p = PersistentIndex(path=str(tmp_path / "idx2"), cfg=cfg)
     p.write(index_uniform)
-    with_bucket = spark.read.parquet(p.points_path)
-    victims = with_bucket.where(F.col("pbucket") == 0).select(
-        "key", "span_idx", "x0", "x1"
-    ).toPandas()
+    victims = _bucket_rows(spark, p, 0).select("key", "span_idx", "x0", "x1").toPandas()
     assert len(victims) > 0
     p.merge_delete_cow(spark, spark.createDataFrame(victims))
-    assert not os.path.exists(os.path.join(p.points_path, "pbucket=0"))
+    assert "0" not in p.manifest()["buckets"]
+    assert not [r for r, _, _ in os.walk(p.points_path) if r.endswith("pbucket=0")]
     loaded = p.load(spark)
     shift = cfg.dims * (cfg.index_level - p.bucket_level)
     assert loaded.meta.where(F.shiftrightunsigned("cell", shift) == 0).count() == 0
@@ -346,25 +383,17 @@ def test_delete_oversized_batch_fallback_matches_broadcast(spark, cfg, index_uni
 
 
 def test_cow_delete_second_batch_not_skipped(tmp_path, spark, cfg, index_uniform, points_uniform):
-    """ADVICE r6 #1 regression: lineage markers are namespaced by a batch
-    fingerprint, so a SECOND delete with a DIFFERENT batch must do real
-    work (the r6 markers would have silently skipped any bucket touched
-    by the first batch)."""
-    from pkd_tree_spark.updates import PersistentIndex
+    """ADVICE r6 #1 regression: a SECOND delete with a DIFFERENT batch must
+    do real work (only a re-run of the last committed batch is a no-op;
+    the r6 markers silently skipped any bucket touched by the first
+    batch)."""
 
     p = PersistentIndex(path=str(tmp_path / "idx"), cfg=cfg)
     p.write(index_uniform)
-    rows = spark.read.parquet(p.points_path).where(F.col("pbucket") == 0)
-    a = rows.limit(20).select("key", "span_idx", "x0", "x1").toPandas()
+    a = _bucket_rows(spark, p, 0).limit(20).select("key", "span_idx", "x0", "x1").toPandas()
     rep_a = p.merge_delete_cow(spark, spark.createDataFrame(a))
     n_after_a = p.load(spark).points.count()
-    b = (
-        spark.read.parquet(p.points_path)
-        .where(F.col("pbucket") == 0)
-        .limit(20)
-        .select("key", "span_idx", "x0", "x1")
-        .toPandas()
-    )
+    b = _bucket_rows(spark, p, 0).limit(20).select("key", "span_idx", "x0", "x1").toPandas()
     rep_b = p.merge_delete_cow(spark, spark.createDataFrame(b))
     assert rep_a["rows_deleted"] > 0 and rep_b["rows_deleted"] > 0
     assert p.load(spark).points.count() == n_after_a - rep_b["rows_deleted"]
@@ -387,3 +416,211 @@ def test_small_delete_survivors_stay_lazy(spark, cfg, index_uniform):
     n = dels.points.count()
     assert n == index_uniform.points.count() - len(batch_pd)
     assert dels.meta.agg(F.sum("cnt")).collect()[0][0] == n
+
+
+def test_write_replaces_previously_written_index(tmp_path, spark, cfg, index_uniform, points_uniform):
+    """write(A) then write(B) to the same path loads as B (a stale
+    "write done" marker once made the second write a silent no-op), and
+    A's files are gone."""
+    p = PersistentIndex(path=str(tmp_path / "idx"), cfg=cfg)
+    p.write(index_uniform)
+    half = points_uniform[points_uniform.key % 2 == 0]
+    pts = load_points(spark, SF_DIR, dims=2, dist="uniform")
+    p.write(SpatialIndex.build(pts.where(F.col("key") % 2 == 0), cfg))
+    loaded = p.load(spark)
+    assert loaded.points.count() == len(half)
+    v = loaded.validate()
+    assert v["meta_sum"] == v["n_points"]
+    assert _counts(loaded) == _box_oracle(half)
+    assert _live_only(p)
+
+
+def test_each_update_publishes_one_manifest_replace(
+    tmp_path, spark, cfg, index_uniform, points_uniform, monkeypatch
+):
+    """write, merge_insert_cow, retile_hot and merge_delete_cow each
+    publish through exactly one os.replace of CURRENT, one generation
+    apart."""
+    real = os.replace
+    seen: list[str] = []
+
+    def spy(src, dst, *a, **k):
+        seen.append(os.path.basename(dst))
+        return real(src, dst, *a, **k)
+
+    monkeypatch.setattr(os, "replace", spy)
+    p = PersistentIndex(path=str(tmp_path / "idx"), cfg=cfg)
+    corner = spark.createDataFrame(_corner(points_uniform, 2000, 70_000_000))
+    calls = [
+        ("write", lambda: p.write(index_uniform)),
+        ("insert", lambda: p.merge_insert_cow(spark, corner)),
+        ("retile", lambda: p.retile_hot(spark, file_target_rows=500)),
+        ("delete", lambda: p.merge_delete_cow(spark, corner.select("key", "span_idx", "x0", "x1"))),
+    ]
+    for gen, (name, call) in enumerate(calls):
+        seen.clear()
+        out = call()
+        assert seen == ["CURRENT"], name
+        assert p.manifest()["gen"] == gen, name
+        if name == "retile":
+            assert out["buckets_hot"] >= 1
+    assert p.load(spark).points.count() == len(points_uniform)
+    assert _live_only(p)
+
+
+def _file_counts(p: PersistentIndex, target: int) -> dict:
+    """Per bucket: (its files, the files a fresh split would make)."""
+    out = {}
+    for b, e in p.manifest()["buckets"].items():
+        files = [f for f in os.listdir(os.path.join(p.path, e["dir"])) if f.endswith(".parquet")]
+        out[int(b)] = (len(files), max(2, math.ceil(e["rows"] / target)))
+    return out
+
+
+def test_retile_hot_second_run_splits_new_hot_bucket(tmp_path, spark, cfg, index_uniform, points_uniform):
+    """A second retile_hot after a skewed insert grows the first hot bucket
+    and makes a second one hot must split BOTH and refresh their meta (a
+    stale per-bucket marker once skipped the first bucket, and a stale
+    "meta refreshed" marker skipped the whole refresh)."""
+    from pkd_tree_spark.updates import _meta_of
+
+    target = 500
+    p = PersistentIndex(path=str(tmp_path / "idx"), cfg=cfg)
+    p.write(index_uniform)
+    p.merge_insert_cow(spark, spark.createDataFrame(_corner(points_uniform, 3000, 60_000_000)))
+    assert p.retile_hot(spark, file_target_rows=target)["buckets_hot"] == 1
+    grow = pd.concat([
+        _corner(points_uniform, 1500, 61_000_000),
+        _corner(points_uniform, 1500, 62_000_000, far=True),
+    ])
+    p.merge_insert_cow(spark, spark.createDataFrame(grow))
+    rep = p.retile_hot(spark, file_target_rows=target)
+    assert rep["buckets_hot"] == 2
+    splits = _file_counts(p, target)
+    rows = {b: e["rows"] for b, e in p.manifest()["buckets"].items()}
+    threshold = sum(rows.values()) / rep["buckets_total"] * (1 + cfg.imbalance_ratio / 10)
+    hot = [b for b, r in rows.items() if r > threshold]
+    assert sorted(int(b) for b in hot) == [0, (1 << (2 * p.bucket_level)) - 1]
+    for b in hot:
+        files, want = splits[int(b)]
+        assert files == want, (b, files, want)
+    # the hot buckets' meta is exact: it equals a fresh aggregate
+    loaded = p.load(spark)
+    shift = cfg.dims * (cfg.index_level - p.bucket_level)
+    hot_cells = F.shiftrightunsigned("cell", shift).isin([int(b) for b in hot])
+    got = loaded.meta.where(hot_cells).toPandas().sort_values("cell").reset_index(drop=True)
+    want = _meta_of(loaded.points, cfg).where(hot_cells).toPandas().sort_values("cell").reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want, check_like=True, check_dtype=False)
+    assert loaded.points.count() == len(points_uniform) + 6000
+
+
+# ---------------------------------------------------------------------------
+# fault injection: a fault at any step leaves the old or the new state
+# committed, and a re-run converges on a clean run's state
+# ---------------------------------------------------------------------------
+
+class _Fault(Exception):
+    pass
+
+
+def _inject(m: pytest.MonkeyPatch, point: str) -> None:
+    """Raise at ``point``: right after the staged point write or the meta
+    write lands (files on disk, unpublished), just before the manifest
+    replace, or just after it (before the cleanup)."""
+    if point in ("stage", "meta"):
+        real_parquet = DataFrameWriter.parquet
+        mark = f"{os.sep}{'points' if point == 'stage' else 'meta'}{os.sep}g"
+
+        def parquet(self, path, *a, **k):
+            real_parquet(self, path, *a, **k)
+            if mark in path:
+                raise _Fault(point)
+
+        m.setattr(DataFrameWriter, "parquet", parquet)
+        return
+    real_replace = os.replace
+
+    def replace(src, dst, *a, **k):
+        commit = os.path.basename(dst) == "CURRENT"
+        if commit and point == "swap":
+            raise _Fault(point)
+        real_replace(src, dst, *a, **k)
+        if commit and point == "sweep":
+            raise _Fault(point)
+
+    m.setattr(os, "replace", replace)
+
+
+def _state(spark, p: PersistentIndex):
+    ix = p.load(spark)
+    cols = ["key", "span_idx", "x0", "x1", "doc_id"]
+    pts = ix.points.select(*cols).toPandas().sort_values(cols).reset_index(drop=True)
+    meta = ix.meta.toPandas().sort_values("cell").reset_index(drop=True)
+    return pts, meta
+
+
+def _assert_state(got, want) -> None:
+    pd.testing.assert_frame_equal(got[0], want[0])
+    pd.testing.assert_frame_equal(got[1], want[1])
+
+
+@pytest.fixture(scope="module")
+def fault_env(tmp_path_factory, spark, cfg, index_uniform, points_uniform):
+    """A written template with one hot bucket whose meta bounds are
+    conservative (an in-memory delete left them), the four updates, the
+    template's state, and each update's clean-run (result, state)."""
+    from pkd_tree_spark.updates import merge_delete, merge_insert
+
+    root = tmp_path_factory.mktemp("faults")
+    corner = _corner(points_uniform, 2000, 50_000_000)
+    skewed = merge_insert(index_uniform, spark.createDataFrame(corner), persist=False)
+    # the corner's upper half: the delete keeps its cell's old upper bounds
+    gone = spark.createDataFrame(corner[corner.x0 >= 500][["key", "span_idx", "x0", "x1"]])
+    stale = merge_delete(skewed, gone, persist=False, exact_rows=True)
+    template = PersistentIndex(path=str(root / "template"), cfg=cfg)
+    template.write(stale)
+    ins = points_uniform.sample(300, random_state=7).assign(key=lambda f: f.key + 40_000_000)
+    dels = points_uniform[points_uniform.key % 11 == 4][["key", "span_idx", "x0", "x1"]]
+    ops = {
+        "insert": lambda p: p.merge_insert_cow(spark, spark.createDataFrame(ins)),
+        "delete": lambda p: p.merge_delete_cow(spark, spark.createDataFrame(dels)),
+        "write": lambda p: p.write(index_uniform).manifest()["result"],
+        "retile": lambda p: p.retile_hot(spark, file_target_rows=500),
+    }
+
+    def fresh(name: str) -> PersistentIndex:
+        shutil.copytree(template.path, root / name)
+        return PersistentIndex(path=str(root / name), cfg=cfg)
+
+    clean = {}
+    for op, call in ops.items():
+        p = fresh(f"clean_{op}")
+        clean[op] = (call(p), _state(spark, p))
+    return {"fresh": fresh, "ops": ops, "pre": _state(spark, template), "clean": clean}
+
+
+@pytest.mark.parametrize(
+    "op,point",
+    [(op, pt) for op in ("insert", "delete") for pt in ("stage", "meta", "swap", "sweep")]
+    + [("write", "stage"), ("retile", "meta")],
+)
+def test_fault_then_rerun_matches_clean_run(spark, fault_env, op, point):
+    p = fault_env["fresh"](f"{op}_{point}")
+    call = fault_env["ops"][op]
+    result, post = fault_env["clean"][op]
+    pre = fault_env["pre"]
+    assert not (post[0].equals(pre[0]) and post[1].equals(pre[1]))  # the update changes the state
+    with pytest.MonkeyPatch.context() as m:
+        _inject(m, point)
+        with pytest.raises(_Fault):
+            call(p)
+    # a reader after the fault sees one whole state: the old one, or the
+    # new one once the manifest was replaced
+    _assert_state(_state(spark, p), post if point == "sweep" else pre)
+    assert call(p) == result
+    _assert_state(_state(spark, p), post)
+    assert _live_only(p)
+    # a re-run of the completed call rewrites nothing
+    files = _tree_mtimes(p.path)
+    assert call(p) == result
+    assert _tree_mtimes(p.path) == files
