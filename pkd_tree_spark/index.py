@@ -48,14 +48,18 @@ __all__ = [
 # the cache — staging a 30MB sf0.1 input costs more than the double eval.
 STAGE_INPUT_BYTES = 512 << 20
 
-# duplicate-position collapse (pruned_points): only engage when the table
-# holds meaningfully stacked coordinates, estimated with one narrow
-# approx_count_distinct pass. Below the threshold the pruned table would be
-# ~the full table and persisting it doubles residency for nothing. The
+# duplicate-position collapse (pruned_points). The pre-gate: engage only
+# when points / distinct positions reaches PRUNE_MIN_DUP_FACTOR; below it
+# the pruned table would be ~the full table and persisting it doubles
+# residency for nothing. Its refusals run 0 or 1 scans: the zero-scan one
+# reads a lower bound on distinct positions off the index (the occupied
+# cell count, or the bound an update carried from its parent generation),
+# the other estimates them with one narrow approx_count_distinct pass. The
 # pre-gate can't see the MULTIPLICITY SPREAD (a table of duplicate PAIRS
 # has dup factor ~2 but collapses nothing under a cap of 16 — the sf0.1
-# fixtures are exactly this), so an exact spread probe refuses the table
-# before it is built unless it would shrink below PRUNE_KEEP_RATIO.
+# fixtures are exactly this), so a table that passes it pays one more
+# scan, an exact spread probe that refuses it before it is built unless
+# it would shrink below PRUNE_KEEP_RATIO; only then is the table built.
 PRUNE_MIN_DUP_FACTOR = 1.3
 PRUNE_KEEP_RATIO = 0.75
 PRUNE_CAP_MIN = 16
@@ -70,7 +74,13 @@ class SpatialIndex:
     which kNN picks its per-query levels and resolves its shells — INDEX
     state, like the reference kd-tree's depth structure, computed at most
     once per index generation (updates produce a new SpatialIndex, so the
-    memo invalidates naturally)."""
+    memo invalidates naturally).
+
+    ``_min_positions`` is a lower bound on the table's distinct coordinate
+    positions (None: unknown), the evidence behind pruned_points'
+    decision. Unlike the memos it outlives a generation: updates pass it
+    to the index they make without a Spark job, as they refresh the meta
+    (see updates.py)."""
 
     points: DataFrame
     meta: DataFrame
@@ -78,6 +88,7 @@ class SpatialIndex:
     _meta_np: dict | None = None
     _staged_ids: list = field(default_factory=list)
     _pruned: object = None  # None | "refused" | (DataFrame, cap)
+    _min_positions: int | None = None
 
     def release_staged(self) -> None:
         """Drop the staged-build-input blocks (localCheckpoint RDDs,
@@ -182,11 +193,20 @@ class SpatialIndex:
         even on post-update indexes that aren't perfectly co-partitioned).
 
         Returns None (memoizing the refusal) when duplication is too low
-        to pay for the pass — proven free from the metadata alone when
-        possible (dup factor <= points/occupied-cells, since every
-        occupied cell holds >= 1 distinct position), else estimated with
-        one narrow approx_count_distinct scan — or when k exceeds a
-        practical cap."""
+        to pay for the pass, or when k exceeds a practical cap. Scans per
+        first call, by outcome:
+          * 0 — the zero-scan refusal: points / _min_positions is below
+            PRUNE_MIN_DUP_FACTOR. The bound is at least the occupied cell
+            count (every occupied cell holds >= 1 distinct position), and
+            on an updated index also what the update carried from its
+            parent, so a child of a refused parent usually refuses here;
+          * 1 — the estimate refusal: one narrow approx_count_distinct
+            scan, whose estimate becomes _min_positions whatever it
+            decides (an estimate, not a proven bound: HyperLogLog++ errs
+            a few percent either way, which only moves the gate);
+          * 2 — the spread-probe refusal (below), which no child inherits:
+            an insert can change the multiplicity profile;
+          * 2 + the build otherwise."""
         if self._pruned == "refused" or k > 4096:
             return None
         cap = max(PRUNE_CAP_MIN, k)
@@ -199,14 +219,17 @@ class SpatialIndex:
         mnp = self.meta_np()
         tot, n_cells = int(mnp["cum"][-1]), len(mnp["cells"])
         if self._pruned is None:
-            if tot == 0 or tot / max(1, n_cells) < PRUNE_MIN_DUP_FACTOR:
-                # zero-scan refusal: dup factor is bounded by cells' mean
-                # occupancy — no probe pass at all (the sf0.1 varden drift)
+            # zero-scan refusal: the sf0.1 varden drift, and a child of a
+            # refused parent
+            known = max(n_cells, self._min_positions or 0)
+            if tot == 0 or tot / known < PRUNE_MIN_DUP_FACTOR:
+                object.__setattr__(self, "_min_positions", known)
                 object.__setattr__(self, "_pruned", "refused")
                 return None
             apx = self.points.agg(
                 F.approx_count_distinct(F.xxhash64(*xcols)).alias("a")
             ).collect()[0]["a"] or 0
+            object.__setattr__(self, "_min_positions", apx)
             if tot / max(1, apx) < PRUNE_MIN_DUP_FACTOR:
                 object.__setattr__(self, "_pruned", "refused")
                 return None

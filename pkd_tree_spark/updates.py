@@ -14,9 +14,18 @@ Reference operators reproduced (SURVEY.md §2.5-2.6):
 Spark-first semantics: the index is immutable data + metadata; an update
 produces a new SpatialIndex whose metadata was refreshed *incrementally*
 (delta aggregation over only the touched cells — the analog of re-linking
-only tagged skeleton nodes). In a real deployment the points table is an
-Iceberg table and insert/delete are `MERGE INTO` with copy-on-write of the
-touched cell files; here the same dataflow runs on DataFrames/parquet, and
+only tagged skeleton nodes). The same incremental refresh covers the
+index's lower bound on distinct coordinate positions, which decides
+kNN's duplicate collapse (SpatialIndex.pruned_points) and which the
+reference keeps as tree state too (dummy-leaf multiplicity): an insert,
+checkpoint or retile passes the parent's bound on unchanged, an
+``exact_rows`` delete passes it less the rows removed, and a new
+generation's first kNN then refuses the collapse with no probe scan. Any
+other delete, and ``PersistentIndex.load``, start it unknown.
+
+In a real deployment the points table is an Iceberg table and
+insert/delete are `MERGE INTO` with copy-on-write of the touched cell
+files; here the same dataflow runs on DataFrames/parquet, and
 ``PersistentIndex`` shows the on-disk layout: points partitioned by Morton
 bucket into generation directories, and a CURRENT manifest swapped by one
 ``os.replace`` per update, so readers never see a half-applied batch and
@@ -36,7 +45,7 @@ import shutil
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -127,7 +136,8 @@ def merge_insert(index: SpatialIndex, new_points: DataFrame, persist: bool = Tru
     meta = _merge_meta(index.meta, _meta_of(batch, cfg), cfg, +1)
     if persist:
         pts, meta = pts.persist(), meta.persist()
-    return SpatialIndex(points=pts, meta=meta, cfg=cfg)
+    # an insert removes no position: the parent's distinct-position bound holds
+    return SpatialIndex(points=pts, meta=meta, cfg=cfg, _min_positions=index._min_positions)
 
 
 def merge_delete(
@@ -158,15 +168,21 @@ def merge_delete(
     with a broadcast anti-join a 1% delete then costs ONE streamed pass
     over the table plus an O(batch) aggregate. Use only when the batch is
     known to match (e.g. deleting rows previously read from, or inserted
-    into, this index); a stale batch would corrupt the per-cell counts."""
+    into, this index); a stale batch would corrupt the per-cell counts.
+    It also carries the parent's distinct-position bound, less the rows
+    removed, to the new index; any other delete leaves the bound unknown."""
     cfg = index.cfg
     d = cfg.dims
     xcols = [f"x{j}" for j in range(d)]
     on = [c for c in ("key", "span_idx") if c in delete_keys.columns]
     # materialize + count the key set once: the count gates the broadcast
     # (a measured gate, not a guess — AQE's estimate of a derived batch can
-    # miss) and the checkpoint stops the batch pipeline re-running per join
-    keys, key_ids = tracked_local_checkpoint(delete_keys.select(*on).distinct())
+    # miss) and the checkpoint stops the batch pipeline re-running per join.
+    # The batch's row count rides that checkpoint job as an observed metric.
+    rows = Observation()
+    keys, key_ids = tracked_local_checkpoint(
+        delete_keys.observe(rows, F.count(F.lit(1)).alias("n")).select(*on).distinct()
+    )
     nk = keys.count()
     keyside = None
     if nk <= DELETE_BCAST_ROWS:
@@ -190,8 +206,12 @@ def merge_delete(
         tot = int(index.meta_np()["cum"][-1])
         if nk > DELETE_LAZY_PERSIST_FRAC * tot:
             pts = pts.persist()
-    out = SpatialIndex(points=pts, meta=meta, cfg=cfg, _staged_ids=key_ids)
-    return out
+    # an exact batch's rows are the rows removed, so at most that many
+    # positions go; any other batch may name rows the table lacks
+    bound = None
+    if exact_rows and index._min_positions is not None:
+        bound = index._min_positions - int(rows.get["n"])
+    return SpatialIndex(points=pts, meta=meta, cfg=cfg, _staged_ids=key_ids, _min_positions=bound)
 
 
 def checkpoint_index(index: SpatialIndex) -> SpatialIndex:
@@ -223,7 +243,9 @@ def checkpoint_index(index: SpatialIndex) -> SpatialIndex:
         f_meta = pool.submit(tracked_local_checkpoint, index.meta)
         pts, ids_p = f_pts.result()
         meta, ids_m = f_meta.result()
-    return SpatialIndex(points=pts, meta=meta, cfg=index.cfg, _staged_ids=ids_p + ids_m)
+    return SpatialIndex(
+        points=pts, meta=meta, cfg=index.cfg, _staged_ids=ids_p + ids_m, _min_positions=index._min_positions
+    )
 
 
 def check_skew(index: SpatialIndex) -> dict:
@@ -253,7 +275,7 @@ def retile(index: SpatialIndex) -> SpatialIndex:
     cfg = index.cfg
     pts = index.points.repartitionByRange(cfg.partitions, "morton").sortWithinPartitions("morton").persist()
     meta = _meta_of(pts, cfg).persist()
-    return SpatialIndex(points=pts, meta=meta, cfg=cfg)
+    return SpatialIndex(points=pts, meta=meta, cfg=cfg, _min_positions=index._min_positions)
 
 
 def sliding_window(
@@ -540,10 +562,11 @@ class PersistentIndex:
 
           1. one staged write of ``files`` into points/g<N>/, each file
              sorted by morton;
-          2. the meta into meta/g<N>/: ``meta`` if given, else the base
-             meta's rows of untouched cells plus rows aggregated from the
-             staged files (exact bounds). Both paths are new, so nothing
-             is overwritten while it is read and no snapshot is needed;
+          2. the meta into meta/g<N>/ as ONE file: ``meta`` if given, else
+             the base meta's rows of untouched cells plus rows aggregated
+             from the staged files (exact bounds). Both paths are new, so
+             nothing is overwritten while it is read and no snapshot is
+             needed;
           3. one os.replace of CURRENT;
           4. delete every directory the new manifest does not reference.
         A fault before step 3 leaves the base state committed; a re-run
@@ -570,7 +593,11 @@ class PersistentIndex:
             fresh = _meta_of(self._scan(spark, schema, list(staged.values())), cfg)
             meta = old.where(~F.shiftrightunsigned("cell", shift).isin(touched)).unionByName(fresh)
         meta_schema = json.loads(meta.schema.json())
-        meta.write.mode("overwrite").parquet(os.path.join(self.path, mdir))
+        # one file: the meta is a few thousand rows, and every load() and
+        # commit lists and opens each file (the union kept the aggregate's
+        # shuffle partitions). coalesce is narrow, so the aggregate's map
+        # side over the staged files stays parallel.
+        meta.coalesce(1).write.mode("overwrite").parquet(os.path.join(self.path, mdir))
         per_bucket = {
             int(r["b"]): int(r["n"])
             for r in self._scan(spark, meta_schema, [mdir])

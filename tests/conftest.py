@@ -47,3 +47,19 @@ def index_varden(spark, cfg):
 @pytest.fixture(scope="session")
 def points_varden(spark) -> pd.DataFrame:
     return load_points(spark, SF_DIR, dims=2, dist="varden").toPandas()
+
+
+def job_sites(spark, group: str, fn):
+    """Run ``fn`` under a Spark job group; return its result and each job's
+    call site (the name of the job's result stage, e.g. "collect at
+    .../index.py:229"), in job-id order."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    sites = [st.getStageInfo(max(st.getJobInfo(j).stageIds)).name for j in sorted(st.getJobIdsForGroup(group))]
+    return out, sites

@@ -162,6 +162,48 @@ def test_knn_pruned_duplicate_collapse(spark, cfg):
     pd.testing.assert_frame_equal(got20, _sorted(knn(raw, queries, k=20)))
 
 
+@pytest.mark.parametrize("outcome", ["occupancy", "estimate", "spread", "build"])
+def test_knn_pruned_gate_outcomes(spark, cfg, outcome):
+    """Each side of the duplicate-collapse gates, with the Spark jobs its
+    decision costs on a memoized skeleton:
+      occupancy  ~1 point per occupied cell, below PRUNE_MIN_DUP_FACTOR
+                 from the skeleton alone: 0 jobs;
+      estimate   ~6 points per cell, nearly all at distinct positions:
+                 the approx_count_distinct probe refuses, 2 jobs;
+      spread     every position exactly twice: dup factor 2 passes the
+                 estimate, and the spread probe finds nothing to collapse
+                 under cap 16 (more than PRUNE_KEEP_RATIO stays): 2+ jobs;
+      build      the lattice: the pruned table is built.
+    kNN over the decision equals the raw path."""
+    from pyspark.sql import functions as F
+    from pkd_tree_spark.config import EngineConfig
+    from pkd_tree_spark.documents import load_points
+    from pkd_tree_spark.index import SpatialIndex
+    from tests.conftest import SF_DIR, job_sites
+
+    pts = load_points(spark, SF_DIR, dims=2, dist="uniform")
+    c = cfg
+    if outcome == "occupancy":
+        pts = pts.where(F.col("key") % 2 == 0)
+        c = EngineConfig(dims=2, index_level=9, knn_level=8, partitions=8)
+    elif outcome == "spread":
+        once = pts.dropDuplicates(["x0", "x1"])
+        pts = once.unionByName(once.withColumn("key", F.col("key") + 1_000_000_000))
+    elif outcome == "build":
+        pts = pts.select("doc_id", "span_idx", "key", *[(F.col(f"x{j}") % 10 * 99_991).alias(f"x{j}") for j in range(2)])
+    idx = SpatialIndex.build(pts, c)
+    idx.meta_np()
+    _, jobs = job_sites(spark, f"prune-gate-{outcome}", lambda: idx.pruned_points(10))
+    assert isinstance(idx._pruned, tuple) if outcome == "build" else idx._pruned == "refused"
+    if outcome in ("occupancy", "estimate"):
+        assert len(jobs) == {"occupancy": 0, "estimate": 2}[outcome], jobs
+    elif outcome == "spread":
+        assert len(jobs) > 2, jobs
+    raw = SpatialIndex(points=idx.points, meta=idx.meta, cfg=c, _pruned="refused")
+    queries = FX.knn_fixtures(16, 2)
+    pd.testing.assert_frame_equal(_sorted(knn(idx, queries, k=10)), _sorted(knn(raw, queries, k=10)))
+
+
 def test_knn_empty_index_fine_level(spark, cfg):
     """ADVICE r4 (knn.py:323): a query at level > index_level against an
     EMPTY index must produce zero rows, not IndexError inside mapInPandas."""

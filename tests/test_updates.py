@@ -4,10 +4,13 @@
 
 from __future__ import annotations
 
+import inspect
 import math
 import os
+import re
 import shutil
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import DataFrameWriter
@@ -17,17 +20,19 @@ from pkd_tree_spark import fixtures as FX
 from pkd_tree_spark.config import COORD_BITS
 from pkd_tree_spark.documents import load_points
 from pkd_tree_spark.index import SpatialIndex
+from pkd_tree_spark.knn import knn
 from pkd_tree_spark.ranges import range_count_boxes
 from pkd_tree_spark.updates import (
     PersistentIndex,
     check_skew,
+    checkpoint_index,
     merge_delete,
     merge_insert,
     retile,
     sliding_window,
 )
 from pkd_tree_spark.zorder import cell_col
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, job_sites
 
 BOXES = FX.box_fixtures(8, 2)
 
@@ -418,6 +423,146 @@ def test_small_delete_survivors_stay_lazy(spark, cfg, index_uniform):
     assert dels.meta.agg(F.sum("cnt")).collect()[0][0] == n
 
 
+def test_delete_survivors_lazy_or_persisted_agree(spark, cfg, index_uniform, monkeypatch):
+    """Both sides of DELETE_LAZY_PERSIST_FRAC: a batch under the fraction
+    keeps its survivors lazy, and with the fraction patched to 0 the same
+    batch persists them. Rows, meta and range counts are equal; only the
+    persisted side caches the points."""
+    import pkd_tree_spark.updates as U
+
+    batch = spark.createDataFrame(
+        index_uniform.points.where(F.col("key") % 97 == 3).select("key", "span_idx", "x0", "x1").toPandas()
+    )
+    lazy = U.merge_delete(index_uniform, batch, exact_rows=True)
+    monkeypatch.setattr(U, "DELETE_LAZY_PERSIST_FRAC", 0)
+    kept = U.merge_delete(index_uniform, batch, exact_rows=True)
+    assert not lazy.points.storageLevel.useMemory
+    assert kept.points.storageLevel.useMemory
+    cols = ["key", "span_idx", "x0", "x1", "doc_id"]
+
+    def rows(ix):
+        return ix.points.select(*cols).toPandas().sort_values(cols).reset_index(drop=True)
+
+    def meta(ix):
+        return ix.meta.toPandas().sort_values("cell").reset_index(drop=True)
+
+    pd.testing.assert_frame_equal(rows(lazy), rows(kept))
+    pd.testing.assert_frame_equal(meta(lazy), meta(kept))
+    assert _counts(lazy) == _counts(kept)
+    kept.release()
+    lazy.release()
+
+
+# ---------------------------------------------------------------------------
+# the duplicate-collapse decision across generations
+# ---------------------------------------------------------------------------
+
+ROW_SCHEMA = "doc_id string, span_idx int, key long, x0 long, x1 long"
+GRID = 4000  # distinct lattice positions in _stacked_grid
+STACK = 600  # copies of one more position
+
+
+def _rows(x0, x1, key0: int) -> pd.DataFrame:
+    key = key0 + np.arange(len(x0), dtype=np.int64)
+    return pd.DataFrame({"doc_id": [f"d{k}" for k in key], "span_idx": 0, "key": key, "x0": x0, "x1": x1})
+
+
+def _stacked_grid() -> pd.DataFrame:
+    """GRID lattice positions once each (keys 0..GRID-1) plus STACK copies
+    of one off-lattice position: points / distinct positions is
+    4600 / 4001 = 1.15, so kNN refuses the duplicate collapse, and several
+    points per occupied cell keep the skeleton from refusing it alone."""
+    i = np.arange(GRID, dtype=np.int64)
+    grid = _rows(i % 64 * 15_000 + 7, i // 64 * 15_000 + 11, 0)
+    return pd.concat([grid, _rows(np.full(STACK, 500_003), np.full(STACK, 500_009), GRID)], ignore_index=True)
+
+
+def _knn_probes(spark, ix, pts: pd.DataFrame, k: int = 10) -> list[str]:
+    """Run a kNN batch on ``ix``, check it against brute force over
+    ``pts``, and return the call sites of the jobs pruned_points ran."""
+    src, first = inspect.getsourcelines(SpatialIndex.pruned_points)
+    lines = range(first, first + len(src))
+    q = FX.knn_fixtures(16, 2)
+    out, sites = job_sites(spark, f"knn-probes-{id(ix)}", lambda: knn(ix, q, k=k).toPandas())
+    px = pts[["x0", "x1"]].to_numpy()
+    for r in q.itertuples():
+        want = np.sort(((px - np.array([r.q0, r.q1])) ** 2).sum(axis=1))[:k].tolist()
+        assert sorted(out.loc[out.qid == r.qid, "dist2"].tolist()) == want, r.qid
+    return [s for s in sites if (m := re.search(r"index\.py:(\d+)", s)) and int(m.group(1)) in lines]
+
+
+def _del_rows(spark, rows: pd.DataFrame):
+    return spark.createDataFrame(rows[["key", "span_idx", "x0", "x1"]])
+
+
+@pytest.fixture
+def refused_parent(spark, cfg):
+    """A built _stacked_grid index whose first kNN ran the estimate probe
+    and refused the duplicate collapse."""
+    base = _stacked_grid()
+    g = SpatialIndex.build(spark.createDataFrame(base, schema=ROW_SCHEMA), cfg)
+    assert _knn_probes(spark, g, base)
+    assert g._pruned == "refused" and g._min_positions is not None
+    yield g, base
+    g.release()
+
+
+def test_children_inherit_the_collapse_refusal(spark, refused_parent):
+    """kNN on g, then an exact delete, a checkpoint and an insert: each
+    child's first kNN refuses the collapse from the bound it inherited,
+    with no pruned_points job, and matches brute force."""
+    g, base = refused_parent
+    gone = base[(base.key < GRID) & (base.key % 100 == 3)]
+    dl = merge_delete(g, _del_rows(spark, gone), exact_rows=True)
+    assert dl._min_positions == g._min_positions - len(gone)
+    live = base[~base.key.isin(gone.key)]
+    ck = checkpoint_index(dl)
+    i = np.arange(100, dtype=np.int64)
+    new = _rows(i * 9_001 + 3, i * 7_001 + 5, 10 * GRID)
+    ins = merge_insert(ck, spark.createDataFrame(new, schema=ROW_SCHEMA))
+    for name, child, pts in (("delete", dl, live), ("checkpoint", ck, live), ("insert", ins, pd.concat([live, new]))):
+        assert _knn_probes(spark, child, pts) == [], name
+        assert child._pruned == "refused", name
+    for ix in (ins, ck, dl):
+        ix.release()
+
+
+def test_stacked_insert_on_refused_parent_engages(spark, refused_parent):
+    """An insert of many copies of one position takes points / bound past
+    PRUNE_MIN_DUP_FACTOR: its child probes and builds the pruned table."""
+    g, base = refused_parent
+    stack = _rows(np.full(3000, 250_001), np.full(3000, 750_001), 10 * GRID)
+    child = merge_insert(g, spark.createDataFrame(stack, schema=ROW_SCHEMA))
+    assert _knn_probes(spark, child, pd.concat([base, stack]))
+    assert isinstance(child._pruned, tuple)
+    child.release()
+
+
+def test_key_delete_child_probes(spark, refused_parent):
+    """A delete by keys alone may name rows the table lacks, so its child
+    starts with no bound and its first kNN probes."""
+    g, base = refused_parent
+    gone = base[(base.key < GRID) & (base.key % 100 == 3)]
+    child = merge_delete(g, spark.createDataFrame(gone[["key"]]))
+    assert child._min_positions is None
+    assert _knn_probes(spark, child, base[~base.key.isin(gone.key)])
+    assert child._pruned == "refused"
+    child.release()
+
+
+def test_exact_delete_subtracts_removed_rows(spark, refused_parent):
+    """Deleting 3000 lattice rows leaves 1000 + STACK points over ~1000
+    positions: the bound less the removed rows puts points / bound past
+    PRUNE_MIN_DUP_FACTOR, so the child probes and builds the pruned table
+    (an unreduced bound would refuse it with no probe)."""
+    g, base = refused_parent
+    gone = base[base.key < 3000]
+    child = merge_delete(g, _del_rows(spark, gone), exact_rows=True)
+    assert _knn_probes(spark, child, base[base.key >= 3000])
+    assert isinstance(child._pruned, tuple)
+    child.release()
+
+
 def test_write_replaces_previously_written_index(tmp_path, spark, cfg, index_uniform, points_uniform):
     """write(A) then write(B) to the same path loads as B (a stale
     "write done" marker once made the second write a silent no-op), and
@@ -440,7 +585,7 @@ def test_each_update_publishes_one_manifest_replace(
 ):
     """write, merge_insert_cow, retile_hot and merge_delete_cow each
     publish through exactly one os.replace of CURRENT, one generation
-    apart."""
+    apart, and write their generation's meta as one parquet file."""
     real = os.replace
     seen: list[str] = []
 
@@ -462,6 +607,8 @@ def test_each_update_publishes_one_manifest_replace(
         out = call()
         assert seen == ["CURRENT"], name
         assert p.manifest()["gen"] == gen, name
+        mdir = os.path.join(p.path, p.manifest()["meta"])
+        assert len([f for f in os.listdir(mdir) if f.endswith(".parquet")]) == 1, name
         if name == "retile":
             assert out["buckets_hot"] >= 1
     assert p.load(spark).points.count() == len(points_uniform)
