@@ -150,12 +150,17 @@ def extract_points(docs: DataFrame, dims: int = 2) -> DataFrame:
     # serializing it into the single-split source stage AND evaluating the
     # array twice. Outer explode is semantically identical here (every doc
     # has >= 1 span) and keeps the heavy projection in the parallel stage.
+    is_geo = F.col("span.kind") == "geo"
     exploded = docs.select(
         "doc_id",
         F.posexplode_outer("spans").alias("span_idx", "span"),
-    ).where(F.col("span.kind") == "geo")
+    ).where(is_geo)
     parts = F.split(F.col("span.text"), " ")
-    cols = [F.element_at(parts, j + 1).cast("long").alias(f"x{j}") for j in range(dims)]
+    # the kind guard travels with the cast: the optimizer may evaluate a
+    # coordinate in a filter pushed below the kind filter (an uncached
+    # index's kNN scan did, failing on a media span's '' text), and ANSI
+    # casts still fail on malformed geo text
+    cols = [F.when(is_geo, F.element_at(parts, j + 1).cast("long")).alias(f"x{j}") for j in range(dims)]
     return exploded.select(
         "doc_id",
         F.col("span_idx").cast("int").alias("span_idx"),

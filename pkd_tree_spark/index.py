@@ -158,6 +158,14 @@ class SpatialIndex:
         """Skeleton row count (the number of occupied level-L cells)."""
         return len(self.meta_np()["cells"])
 
+    def scan_batch_rows(self) -> int:
+        """Rows per cached columnar batch of the points table as the scan
+        pre-filter rule (scan_intervals) models them: the session's batch
+        size, or a partition's share of the rows when that is smaller (a
+        partition's cache never shares a batch with another's)."""
+        size = int(self.points.sparkSession.conf.get("spark.sql.inMemoryColumnarStorage.batchSize"))
+        return max(1, min(size, -(-int(self.meta_np()["cum"][-1]) // self.cfg.partitions)))
+
     def pruned_points(self, k: int) -> DataFrame | None:
         """Duplicate-position-collapsed candidate table for kNN — the
         distributed analog of the reference's dummy leaves with
@@ -500,33 +508,42 @@ def _intervals_pred(starts: np.ndarray, ends: np.ndarray, shift: int) -> Column:
     return F.expr(" OR ".join(terms))
 
 
-def scan_intervals(meta: dict, leaves: np.ndarray) -> tuple[np.ndarray, np.ndarray] | None:
+def scan_intervals(meta: dict, leaves: np.ndarray, batch_rows: int) -> tuple[np.ndarray, np.ndarray] | None:
     """The scan pre-filter decision: the capped leaf ranges to filter a
     points scan by, or None when the scan should read the whole table.
 
     Against the range-partitioned, morton-sorted cached points a Morton
     range filter skips whole cached batches via min/max stats — the
     distributed analog of the kd-tree descending only into intersecting
-    subtrees (range_count.hpp:77-78, nn_search.hpp:121-123). It is
-    emitted only when the ranges, capped at SCAN_PRED_MAX_INTERVALS,
-    exclude at least SCAN_PRED_MIN_EXCLUDED of the index's rows — exact
-    from the memoized meta's count prefix sums."""
-    if np.size(leaves) == 0:
+    subtrees (range_count.hpp:77-78, nn_search.hpp:121-123). Only whole
+    batches are skipped, so the rule models the table as runs of
+    ``batch_rows`` consecutive Morton-ordered rows (``scan_batch_rows``)
+    and emits the ranges, capped at SCAN_PRED_MAX_INTERVALS, only when
+    the batches no range touches hold at least SCAN_PRED_MIN_EXCLUDED of
+    the index's rows — exact from the memoized meta's count prefix sums.
+    A filter that skips no batch still costs its per-row test and, since
+    its literals change with every call, a freshly compiled scan class."""
+    total = int(meta["cum"][-1])
+    if np.size(leaves) == 0 or total == 0:
         return None
     starts, ends = morton_intervals(leaves, SCAN_PRED_MAX_INTERVALS)
     cells, cum = meta["cells"], meta["cum"]
-    covered = int(
-        (cum[np.searchsorted(cells, ends, side="right")] - cum[np.searchsorted(cells, starts)]).sum()
-    )
-    total = int(cum[-1])
-    if total - covered < SCAN_PRED_MIN_EXCLUDED * total:
+    r0 = cum[np.searchsorted(cells, starts)]
+    r1 = cum[np.searchsorted(cells, ends, side="right")]
+    n_batches = -(-total // batch_rows)
+    touched = np.zeros(n_batches, dtype=bool)
+    for a, b in zip(r0.tolist(), r1.tolist()):
+        if b > a:  # rows [a, b) lie in batches a // B .. (b - 1) // B
+            touched[a // batch_rows:(b - 1) // batch_rows + 1] = True
+    sizes = np.minimum(batch_rows, total - np.arange(n_batches, dtype=np.int64) * batch_rows)
+    if int(sizes[~touched].sum()) < SCAN_PRED_MIN_EXCLUDED * total:
         return None
     return starts, ends
 
 
-def leaf_scan_pred(meta: dict, leaves: np.ndarray, shift: int) -> Column | None:
+def leaf_scan_pred(meta: dict, leaves: np.ndarray, shift: int, batch_rows: int) -> Column | None:
     """``scan_intervals`` as a ``morton`` predicate (None: scan everything)."""
-    iv = scan_intervals(meta, leaves)
+    iv = scan_intervals(meta, leaves, batch_rows)
     return None if iv is None else _intervals_pred(*iv, shift)
 
 

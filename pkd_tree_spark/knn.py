@@ -427,6 +427,7 @@ def _candidate_join(
     kb: int,
     L: int,
     rel_cols: int,
+    batch_rows: int,
 ) -> list[DataFrame]:
     """Candidate-join parts for one round's resolved shell cells, for the
     driver rounds (local cell relations that carry the query coordinates)
@@ -435,7 +436,8 @@ def _candidate_join(
     ``cell_rel(levels)`` returns the (qid, lvl, cell, ...) rows at those
     levels, ``rel_cols`` columns wide (the broadcast gate is rows- and
     bytes-based, see CELLS_BCAST_ROWS / BROADCAST_BYTES); ``lvl_counts``
-    and ``leaves`` come from _level_stats.
+    and ``leaves`` come from _level_stats; ``batch_rows`` is the index's
+    SpatialIndex.scan_batch_rows.
 
     AT MOST TWO parts: coarse rows (lvl == -1, resolved level-L leaves)
     take ONE leaf equi-join — no points-side generate; all fine levels
@@ -462,7 +464,7 @@ def _candidate_join(
         if not levels:
             continue
         pred = None if leaves is None else leaf_scan_pred(
-            mnp, np.unique(np.concatenate([leaves[lv] for lv in levels])), leaf_shift
+            mnp, np.unique(np.concatenate([leaves[lv] for lv in levels])), leaf_shift, batch_rows
         )
         p = pts_narrow if pred is None else pts_narrow.where(pred)
         if levels == [-1]:
@@ -564,6 +566,7 @@ def _knn_driver(
     qcols = [f"q{j}" for j in range(d)]
     qschema = ", ".join(f"{q} long" for q in qcols)
     mnp = index.meta_np()
+    batch_rows = index.scan_batch_rows()
     total_pts = int(mnp["cum"][-1])
     pts_narrow, dist2 = _candidate_source(index, k, d)
 
@@ -595,7 +598,7 @@ def _knn_driver(
                     schema=f"qid long, lvl int, cell long, {qschema}",
                 )
 
-            parts = _candidate_join(pts_narrow, cell_rel, lvl_counts, leaves, mnp, d, kb, L, 3 + d)
+            parts = _candidate_join(pts_narrow, cell_rel, lvl_counts, leaves, mnp, d, kb, L, 3 + d, batch_rows)
         if exh.any():
             ex = st.loc[exh, ["qid", *qcols, "level", "r"]]
             exq = spark.createDataFrame(ex, schema=f"qid long, {qschema}, level int, r long")
@@ -843,6 +846,7 @@ def _knn_rounds(
     qcols = [f"q{j}" for j in range(d)]
     qschema = ", ".join(f"{q} long" for q in qcols)
     mnp = index.meta_np()
+    batch_rows = index.scan_batch_rows()
     if adaptive:
         def _levels(batches):
             meta = bc_meta.value
@@ -945,7 +949,7 @@ def _knn_rounds(
             )
             mesh_parts = _candidate_join(
                 pts_narrow, lambda levels: cells.where(F.col("lvl").isin(levels)),
-                lvl_counts, leaves, mnp, d, kb, L, 3,
+                lvl_counts, leaves, mnp, d, kb, L, 3, batch_rows,
             )
             if mesh_parts:
                 mesh_cand = _union(mesh_parts)

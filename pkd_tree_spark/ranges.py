@@ -200,7 +200,9 @@ def _resolve(index: SpatialIndex, kind: str, q: pd.DataFrame, budget: int, count
         res = resolve_covers_np(mnp, cov[~cov.interior] if count else cov, d, L, bcast_rows)
         if res is not None:
             inter = interior_counts_np(mnp, cov[cov.interior], d, L) if count else None
-            pred = leaf_scan_pred(mnp, res["leaf"].to_numpy(), d * (cfg.grid_bits - L))
+            pred = leaf_scan_pred(
+                mnp, res["leaf"].to_numpy(), d * (cfg.grid_bits - L), index.scan_batch_rows()
+            )
             res = None if res.empty else F.broadcast(spark.createDataFrame(res.merge(q, on="qid")))
             return inter, res, pred
         # region-spanning covers can resolve to ~n_queries x occupied leaves:

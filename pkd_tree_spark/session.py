@@ -25,6 +25,13 @@ def get_spark(app: str = "pkd_tree_spark", cpus: int | None = None, shuffle_part
         # 81->39s @16c). Shuffle/broadcast compression is already on by
         # default; this flag covers only storage-level-serialized blocks.
         .config("spark.rdd.compress", "true")
+        # Janino class cache (static conf, LRU). One merge_insert -> reads
+        # -> exact delete -> reads -> checkpoint -> COW insert/delete ->
+        # load cycle needs ~100 distinct stage classes: at Spark's default
+        # of 100 the LRU evicted each class before the next cycle reused it,
+        # so every update call compiled 6-20 fresh classes and started
+        # their stages interpreted. 1000 holds that working set ten times.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -190,6 +190,10 @@ def merge_delete(
         pts = index.points.join(keyside, on, "left_anti")
     else:
         pts = index.points.join(keys.hint("shuffle_hash"), on, "left_anti")
+    # the join moves its keys to the front: keep the parent's column order,
+    # so a generation after a delete has the plan shapes (and compiled
+    # classes) of one after a build
+    pts = pts.select(*index.points.columns)
     if exact_rows:
         delta_src = _with_morton(delete_keys.select(*on, *xcols), cfg)
     else:

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 
@@ -9,6 +11,11 @@ from pkd_tree_spark.index import SpatialIndex
 from pkd_tree_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
+
+# get_spark's 16g default would let the test JVM's heap outgrow a 15 GB
+# machine once cached fixtures are lost and rebuilt; the suite peaks near
+# 5.7 GB resident with its caches intact
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
 
 @pytest.fixture(scope="session")
@@ -63,3 +70,12 @@ def job_sites(spark, group: str, fn):
     st = sc.statusTracker()
     sites = [st.getStageInfo(max(st.getJobInfo(j).stageIds)).name for j in sorted(st.getJobIdsForGroup(group))]
     return out, sites
+
+
+def compiles(spark, fn):
+    """Run ``fn``; return its result and the number of classes Spark's code
+    generator compiled meanwhile (CodegenMetrics, JVM-wide)."""
+    hist = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    before = hist.getCount()
+    out = fn()
+    return out, hist.getCount() - before

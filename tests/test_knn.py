@@ -6,9 +6,15 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from pkd_tree_spark import fixtures as FX
+from pkd_tree_spark.documents import load_points
+from pkd_tree_spark.index import SpatialIndex
 from pkd_tree_spark.knn import auto_knn_level, knn
+from pkd_tree_spark.ranges import range_count_boxes
+
+from tests.conftest import SF_DIR
 
 
 def _kth_oracle(pts: pd.DataFrame, queries: pd.DataFrame, k: int) -> dict[int, int]:
@@ -49,6 +55,30 @@ def test_knn_k_exceeds_candidates_in_home_cell(index_uniform, points_uniform):
     res = knn(index_uniform, queries, k=k, level=6).toPandas()
     got = res[res.rn == k].set_index("qid")["dist2"].to_dict()
     assert got == _kth_oracle(points_uniform, queries, k)
+
+
+def test_uncached_index_answers_like_persisted(spark, cfg):
+    """An index whose points are not cached answers kNN and range count
+    exactly as the cached one: the coordinate cast must never meet a
+    non-geo span, wherever the optimizer places the scans' filters. The
+    uncached side runs first, on a subset no session fixture caches, so
+    its scans read the documents."""
+    pts = load_points(spark, SF_DIR, dims=2, dist="uniform").where(F.col("key") % 3 != 0)
+    queries, boxes = FX.knn_fixtures(32, 2), FX.box_fixtures(64, 2)
+
+    def answers(ix):
+        return _sorted(knn(ix, queries, k=10)), range_count_boxes(ix, boxes).toPandas().sort_values("qid", ignore_index=True)
+
+    lazy = SpatialIndex.build(pts, cfg, persist=False)
+    assert not lazy.points.storageLevel.useMemory
+    got = answers(lazy)
+    cached = SpatialIndex.build(pts, cfg)
+    try:
+        want = answers(cached)
+    finally:
+        cached.release()
+    for g, w in zip(got, want):
+        pd.testing.assert_frame_equal(g, w)
 
 
 def test_knn_duplicate_points_multiset(index_uniform, points_uniform):

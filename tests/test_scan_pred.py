@@ -52,12 +52,13 @@ def _uniform_meta(d: int = 2, L: int = 5, per_cell: int = 10) -> dict:
 def test_scan_intervals_gate():
     meta = _uniform_meta()
     # leaves strided across the whole Morton range: after capping, the
-    # intervals cover nearly every row, so no predicate
-    assert I.scan_intervals(meta, np.arange(0, 1024, 7)) is None
+    # intervals cover nearly every row, so no predicate (one-row batches:
+    # the rule then weighs rows exactly)
+    assert I.scan_intervals(meta, np.arange(0, 1024, 7), 1) is None
     # a clustered corner set (the first 64 Morton cells = one corner
     # quadrant-of-a-quadrant, with holes) excludes most rows
     corner = np.array([c for c in range(64) if c % 3 != 1], dtype=np.int64)
-    iv = I.scan_intervals(meta, corner)
+    iv = I.scan_intervals(meta, corner, 1)
     assert iv is not None
     starts, ends = iv
     assert starts.size <= I.SCAN_PRED_MAX_INTERVALS
@@ -71,8 +72,50 @@ def test_scan_intervals_counts_rows_not_leaves():
     cells = np.array([0, 1, 2, 100, 200, 300], dtype=np.int64)
     cnt = np.array([1000, 1000, 1000, 1, 1, 1])
     meta = {"cells": cells, "cum": np.concatenate([[0], np.cumsum(cnt)])}
-    assert I.scan_intervals(meta, np.array([0, 1])) is None
-    assert I.scan_intervals(meta, np.array([100, 200, 300])) is not None
+    assert I.scan_intervals(meta, np.array([0, 1]), 1) is None
+    assert I.scan_intervals(meta, np.array([100, 200, 300]), 1) is not None
+
+
+def _batch_rows(meta: dict, partitions: int, batch_size: int = 10_000) -> int:
+    """SpatialIndex.scan_batch_rows without a session."""
+    return min(batch_size, -(-int(meta["cum"][-1]) // partitions))
+
+
+def test_scan_intervals_no_skippable_batch_gives_none():
+    """One leaf in each partition of a table with one cached batch per
+    partition excludes 99% of the rows but no whole batch: no predicate."""
+    meta = _uniform_meta()  # 1024 cells x 10 rows
+    b = _batch_rows(meta, partitions=8)
+    assert b == 1280
+    leaves = np.arange(0, 1024, 128)  # the first leaf of each partition
+    assert I.scan_intervals(meta, leaves, 1) is not None  # the row-granular rule would filter
+    assert I.scan_intervals(meta, leaves, b) is None
+    # a leaf in every partition but one still leaves < half the rows skippable
+    assert I.scan_intervals(meta, leaves[:-1], b) is None
+
+
+def test_scan_intervals_corner_emits_at_batch_grain():
+    """The Morton-corner set lies in the first of eight batches."""
+    meta = _uniform_meta()
+    corner = np.array([c for c in range(64) if c % 3 != 1], dtype=np.int64)
+    iv = I.scan_intervals(meta, corner, _batch_rows(meta, partitions=8))
+    assert iv is not None
+    assert iv[0].size <= I.SCAN_PRED_MAX_INTERVALS
+    # the session batch size caps the batch when partitions are large
+    assert I.scan_intervals(meta, corner, _batch_rows(meta, partitions=1, batch_size=1000)) is not None
+
+
+def test_scan_intervals_row_skew_at_batch_grain():
+    """Skewed occupancy: the batches are runs of rows, not of leaves. Two
+    hot leaves touch six of eight batches; the three cold leaves touch
+    only the last."""
+    cells = np.array([0, 1, 2, 100, 200, 300], dtype=np.int64)
+    cnt = np.array([1000, 1000, 1000, 1, 1, 1])
+    meta = {"cells": cells, "cum": np.concatenate([[0], np.cumsum(cnt)])}
+    b = _batch_rows(meta, partitions=8)
+    assert b == 376
+    assert I.scan_intervals(meta, np.array([0, 1]), b) is None
+    assert I.scan_intervals(meta, np.array([100, 200, 300]), b) is not None
 
 
 @pytest.fixture
@@ -82,8 +125,8 @@ def decisions(monkeypatch):
     seen: list[bool] = []
     orig = I.scan_intervals
 
-    def _rec(meta, leaves):
-        iv = orig(meta, leaves)
+    def _rec(meta, leaves, batch_rows):
+        iv = orig(meta, leaves, batch_rows)
         seen.append(iv is not None)
         return iv
 
