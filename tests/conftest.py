@@ -13,8 +13,8 @@ from pkd_tree_spark.session import get_spark
 SF_DIR = "/root/testdata/sf0.001"
 
 # get_spark's 16g default would let the test JVM's heap outgrow a 15 GB
-# machine once cached fixtures are lost and rebuilt; the suite peaks near
-# 5.7 GB resident with its caches intact
+# machine once cached fixtures are lost and rebuilt; with a 6g heap the
+# suite's JVM peaked at 4.5-6.2 GB resident
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
 

@@ -67,7 +67,8 @@ def test_uncached_index_answers_like_persisted(spark, cfg):
     queries, boxes = FX.knn_fixtures(32, 2), FX.box_fixtures(64, 2)
 
     def answers(ix):
-        return _sorted(knn(ix, queries, k=10)), range_count_boxes(ix, boxes).toPandas().sort_values("qid", ignore_index=True)
+        counts = range_count_boxes(ix, boxes).toPandas().sort_values("qid", ignore_index=True)
+        return _sorted(knn(ix, queries, k=10)), counts
 
     lazy = SpatialIndex.build(pts, cfg, persist=False)
     assert not lazy.points.storageLevel.useMemory
