@@ -19,6 +19,10 @@ bench.py, and appends its record to a JSON file under BENCH/.
                  shuffle+persist / meta agg) for uniform AND varden at
                  this core count — run it at 4 and 16 cores to localize
                  the varden build's 0.50 scaling efficiency.
+  range_scan     both sides of ranges.DRIVER_FINISH_MAX_ROWS (driver-
+                 finished boundary scan vs leaf join) for 64/1000/4000
+                 boxes over 0.1M-4.8M synthetic points, interleaved pairs;
+                 the bound is patched in-process per call.
 """
 
 from __future__ import annotations
@@ -322,6 +326,90 @@ def study_varden_profile() -> dict:
     return rec
 
 
+RANGE_SCAN_SIZES = (("uniform", 100_000), ("uniform", 400_000), ("uniform", 1_600_000),
+                    ("uniform", 4_800_000), ("varden", 1_600_000))
+RANGE_SCAN_BOXES = (64, 1000, 4000)
+RANGE_SCAN_PAIRS = 5
+
+
+def _mixed_boxes(nb: int, n: int):
+    """nb boxes cycling through the three selectivity brackets by qid."""
+    from pkd_tree_spark import fixtures as FX
+
+    out = FX.box_fixtures_bracketed(nb, 2, n, 0)
+    for b in (1, 2):
+        sel = out["qid"] % 3 == b
+        out.loc[sel] = FX.box_fixtures_bracketed(nb, 2, n, b).loc[sel]
+    return out
+
+
+def study_range_scan() -> dict:
+    """Both sides of ranges.DRIVER_FINISH_MAX_ROWS for driver-resolved
+    range counts: the boundary scan collected and finished on the driver
+    (bound patched to 2^62) against the leaf join (bound patched to 0),
+    RANGE_SCAN_PAIRS interleaved pairs per (points, boxes) cell, first
+    side alternating, on indexes built from synthetic keys (perfbench's
+    recipe; SF_DIR and REPLICATE are not read). Each cell records the
+    rows the scan returns and the (row, query) pairs it tests, exact from
+    the skeleton, and the side the shipped bound picks."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from pkd_tree_spark import ranges as R
+    from pkd_tree_spark.config import EngineConfig
+    from pkd_tree_spark.documents import load_points
+    from pkd_tree_spark.index import SpatialIndex
+
+    spark = _spark()
+    shipped = R.DRIVER_FINISH_MAX_ROWS
+    rec = {"study": "range_scan", "cpus": CPUS, "pairs": RANGE_SCAN_PAIRS, "bound": shipped, "cells": []}
+
+    def run(ix, bx, bound):
+        R.DRIVER_FINISH_MAX_ROWS = bound
+        t0 = time.perf_counter()
+        out = R.range_count_boxes(ix, bx).toPandas()
+        return time.perf_counter() - t0, out.set_index("qid")["cnt"].sort_index()
+
+    try:
+        for dist, n in RANGE_SCAN_SIZES:
+            cfg = EngineConfig(dims=2, index_level=7, knn_level=6, partitions=max(2 * CPUS, n // 150_000))
+            keys = spark.range(0, n, 1, CPUS).select((F.lit(7_000_001) + F.col("id") * 3).alias("k"))
+            ix = SpatialIndex.build(load_points(spark, "", dims=2, dist=dist, keys_df=keys), cfg)
+            ix.points.count()
+            ix.release_staged()
+            for nb in RANGE_SCAN_BOXES:
+                bx = _mixed_boxes(nb, n)
+                _, res = R._resolve(ix, "box", bx, None, count=True)
+                if not isinstance(res, pd.DataFrame):  # resolved in the executors: the join either way
+                    continue
+                rows = R._scan(ix, res, ["x0", "x1"])[1]
+                pairs = R._pairs(ix.meta_np(), res)
+                walls = {"driver": [], "join": []}
+                _, a = run(ix, bx, 1 << 62)  # warm both sides, and check them
+                _, b = run(ix, bx, 0)
+                assert a.equals(b), f"{dist} {n} {nb}: the two sides' counts differ"
+                for i in range(RANGE_SCAN_PAIRS):
+                    for side in (("driver", "join") if i % 2 == 0 else ("join", "driver")):
+                        walls[side].append(round(run(ix, bx, 1 << 62 if side == "driver" else 0)[0], 4))
+                med = {k: float(np.median(v)) for k, v in walls.items()}
+                wins = sum(d < j for d, j in zip(walls["driver"], walls["join"]))
+                cell = {
+                    "dist": dist, "n_points": n, "partitions": cfg.partitions, "boxes": nb,
+                    "scan_rows": rows, "pairs": pairs, "pulled": rows + pairs,
+                    "shipped_side": "driver" if rows + pairs <= shipped else "join",
+                    "driver_s": walls["driver"], "join_s": walls["join"],
+                    "driver_p50_s": round(med["driver"], 4), "join_p50_s": round(med["join"], 4),
+                    "driver_over_join": round(med["driver"] / med["join"], 3), "driver_wins": wins,
+                }
+                print(json.dumps(cell), file=sys.stderr)
+                rec["cells"].append(cell)
+            ix.release()
+    finally:
+        R.DRIVER_FINISH_MAX_ROWS = shipped
+    return rec
+
+
 def main():
     study = sys.argv[1] if len(sys.argv) > 1 else "cow"
     fn = {
@@ -329,6 +417,7 @@ def main():
         "window": study_window,
         "ann": study_ann,
         "varden-profile": study_varden_profile,
+        "range_scan": study_range_scan,
     }[study]
     rec = fn()
     rec["sf_dir"] = SF_DIR

@@ -37,6 +37,7 @@ from .zorder import morton_col, morton_decode_np, cell_col
 __all__ = [
     "SpatialIndex",
     "cover_regions",
+    "leaf_scan",
     "leaf_scan_pred",
     "scan_intervals",
     "tracked_local_checkpoint",
@@ -541,10 +542,20 @@ def scan_intervals(meta: dict, leaves: np.ndarray, batch_rows: int) -> tuple[np.
     return starts, ends
 
 
-def leaf_scan_pred(meta: dict, leaves: np.ndarray, shift: int, batch_rows: int) -> Column | None:
-    """``scan_intervals`` as a ``morton`` predicate (None: scan everything)."""
+def leaf_scan(meta: dict, leaves: np.ndarray, shift: int, batch_rows: int) -> tuple[Column | None, int]:
+    """``scan_intervals`` as a ``morton`` predicate (None: scan everything),
+    and the exact number of rows that scan returns (from the prefix sums)."""
     iv = scan_intervals(meta, leaves, batch_rows)
-    return None if iv is None else _intervals_pred(*iv, shift)
+    if iv is None:
+        return None, int(meta["cum"][-1])
+    cells, cum = meta["cells"], meta["cum"]
+    rows = cum[np.searchsorted(cells, iv[1], side="right")] - cum[np.searchsorted(cells, iv[0])]
+    return _intervals_pred(*iv, shift), int(rows.sum())
+
+
+def leaf_scan_pred(meta: dict, leaves: np.ndarray, shift: int, batch_rows: int) -> Column | None:
+    """``leaf_scan``'s predicate alone."""
+    return leaf_scan(meta, leaves, shift, batch_rows)[0]
 
 
 class _Region:

@@ -17,12 +17,23 @@ one report plan serve all three. Per query batch:
       |     interior cells -> SUM of per-cell counts      [no row touched]
       |     boundary cells -> occupied leaves (qid, leaf, interior, region)
       |
-      +-- points (ONE scan, Morton pre-filter when it pays, one derived
-            leaf column) == resolved leaves  [one join, broadcast if it fits]
-            -> exact predicate -> COUNT per qid / rows
-  count: interior sums + the collected boundary counts, added per qid on
-  the driver (covers are disjoint per qid: nothing double counts); report:
+      +-- points (ONE scan of x0.., morton, Morton pre-filter when it pays)
+            +-- driver-resolved count, small: collected once; each resolved
+            |     leaf's rows by searchsorted on the Morton-sorted rows,
+            |     numpy twin of the exact predicate, bincount per qid
+            +-- otherwise: one derived leaf column == resolved leaves
+                  [one join, broadcast if it fits] -> exact predicate
+                  -> COUNT per qid / rows
+  count: interior sums + the boundary counts, added per qid on the driver
+  (covers are disjoint per qid: nothing double counts); report:
   interior-cell rows skip the predicate (range_query.hpp:99-102).
+
+The driver-finished count is the reference's boundary-leaf point test
+(range_count.hpp:77-96) on the driver: it runs one Spark job (the scan)
+instead of four (a broadcast of the resolved rows, the join stages, the
+qid aggregate), and it is taken only while the rows the scan returns plus
+the (row, query) pairs it tests, both exact from the skeleton's prefix
+sums before any job, stay within DRIVER_FINISH_MAX_ROWS.
 
 The interior branch is the reference's containment short-circuit
 (`within_box -> return T->size`, range_count.hpp:79-80). As there, a
@@ -32,10 +43,10 @@ and return a local (qid, cnt) frame. Reports stay lazy.
 Where resolution runs (`_resolve`, the one place that decides): batches
 of at most DISTRIBUTED_COVER_THRESHOLD queries whose resolved rows fit
 RESOLVED_BCAST_BYTES resolve on the driver — zero Spark jobs before the
-one query. Every other batch takes one mapInPandas pass over the query
-frame that computes covers, interior sums and resolved leaves inside the
-executors against a broadcast of the skeleton (covers are never
-collected). The skeleton always exists: EngineConfig bounds it at
+one query or scan. Every other batch takes one mapInPandas pass over the
+query frame that computes covers, interior sums and resolved leaves
+inside the executors against a broadcast of the skeleton (covers are
+never collected). The skeleton always exists: EngineConfig bounds it at
 META_MEMO_CELLS cells. A repeated qid would multiply covers and join
 rows, so every operator rejects it.
 """
@@ -44,6 +55,7 @@ from __future__ import annotations
 
 from functools import partial
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -54,9 +66,11 @@ from .index import (
     BoxRegion,
     ConvexPolygonRegion,
     SpatialIndex,
+    _Region,
     cover_regions,
+    expand_ranges,
     interior_counts_np,
-    leaf_scan_pred,
+    leaf_scan,
     resolve_covers_np,
 )
 
@@ -76,6 +90,16 @@ DISTRIBUTED_COVER_THRESHOLD = 4000
 # broadcast budget of the resolved relation: bare (qid, leaf, interior)
 # rows are ~24B (5M rows), the region columns each row carries widen them
 RESOLVED_BCAST_BYTES = 120_000_000
+# a driver-resolved count finishes its boundary on the driver (one scan,
+# collected; numpy point tests) while the rows that scan returns plus the
+# (row, query) pairs it tests stay within this, else it runs the leaf join.
+# Both sides measured at local[4] (bench_extra.py range_scan, two sweeps of
+# 5 interleaved pairs per cell, BENCH/RANGE_SCAN_r14.json): the driver side
+# took 0.37-0.81x the join's wall up to 1.9M rows + pairs, tied it at
+# 1.7-2.2M (0.97-1.02x) and lost from 2.6M (1.08-1.24x; 1.5-2.7x at 6-17M)
+DRIVER_FINISH_MAX_ROWS = 2_000_000
+# (row, query) pairs tested per numpy pass of a driver-finished count
+PAIR_CHUNK = 1 << 20
 
 _RESOLVED_SCHEMA = "qid long, leaf long, interior boolean, cnt long"
 
@@ -181,17 +205,30 @@ def _resolve_batch(q: pd.DataFrame, cov: pd.DataFrame, meta: dict, d: int, L: in
     return res.merge(q, on="qid")
 
 
-def _resolve(index: SpatialIndex, kind: str, q: pd.DataFrame, budget: int, count: bool):
-    """(interior sums (qid, cnt) | None, resolved rows (qid, leaf, interior,
-    region columns) | None, Morton scan pre-filter | None) for a batch: a
-    count resolves only its boundary cells, a report every cover cell."""
-    spark = index.points.sparkSession
+def _region_cols(kind: str, d: int) -> list[str]:
+    """The query columns a region is made of: those _exact_pred reads."""
+    if kind == "box":
+        return [f"{b}{j}" for b in ("lo", "hi") for j in range(d)]
+    return [f"c{j}" for j in range(d)] + ["r2"] if kind == "ball" else ["vx", "vy"]
+
+
+def _resolve(index: SpatialIndex, kind: str, q: pd.DataFrame, budget: int | None, count: bool):
+    """(interior sums (qid, cnt) | None, resolved rows | None) for a batch:
+    a count resolves only its boundary cells, a report every cover cell.
+    Rows resolved on the driver are a pandas (qid, leaf, interior) frame;
+    the executors' are a DataFrame that also carries the region columns."""
     cfg = index.cfg
+    if kind == "polygon" and cfg.dims != 2:
+        raise ValueError("polygon queries are 2-D")
+    if q["qid"].duplicated().any():
+        raise ValueError(f"query frame repeats qids: {q['qid'][q['qid'].duplicated()].unique()[:10].tolist()}")
+    if q.empty:
+        return None, None
+    spark = index.points.sparkSession
     d, L = cfg.dims, cfg.index_level
+    budget = _budget(cfg, budget)
     mnp = index.meta_np()
-    # the region columns _exact_pred reads travel on every resolved row
-    box, ball = [f"{b}{j}" for b in ("lo", "hi") for j in range(d)], [f"c{j}" for j in range(d)] + ["r2"]
-    q = q[["qid", *{"box": box, "ball": ball}.get(kind, ["vx", "vy"])]]
+    q = q[["qid", *_region_cols(kind, d)]]
     # 8B per qid, leaf, interior and region value (a polygon's longest list)
     vals = 2 * q["vx"].map(len).max() if kind == "polygon" else len(q.columns) - 1
     bcast_rows = RESOLVED_BCAST_BYTES // (8 * (3 + int(vals)))
@@ -200,11 +237,7 @@ def _resolve(index: SpatialIndex, kind: str, q: pd.DataFrame, budget: int, count
         res = resolve_covers_np(mnp, cov[~cov.interior] if count else cov, d, L, bcast_rows)
         if res is not None:
             inter = interior_counts_np(mnp, cov[cov.interior], d, L) if count else None
-            pred = leaf_scan_pred(
-                mnp, res["leaf"].to_numpy(), d * (cfg.grid_bits - L), index.scan_batch_rows()
-            )
-            res = None if res.empty else F.broadcast(spark.createDataFrame(res.merge(q, on="qid")))
-            return inter, res, pred
+            return inter, None if res.empty else res
         # region-spanning covers can resolve to ~n_queries x occupied leaves:
         # too big for a driver frame and a broadcast, so the executors
         # resolve them and the gate below measures the result
@@ -219,46 +252,110 @@ def _resolve(index: SpatialIndex, kind: str, q: pd.DataFrame, budget: int, count
     n_res = res.count()
     if n_res <= bcast_rows:
         res = F.broadcast(res)
-    return out.where(F.col("interior")).select("qid", "cnt").toPandas() if count else None, res if n_res else None, None
+    return out.where(F.col("interior")).select("qid", "cnt").toPandas() if count else None, res if n_res else None
 
 
 # ---------------------------------------------------------------------------
-# the count plan and the report plan
+# the boundary scan, finished in one join or on the driver
 # ---------------------------------------------------------------------------
+
+def _scan(index: SpatialIndex, res, cols: list[str]) -> tuple[DataFrame, int]:
+    """The points' ``cols`` and ``morton`` in ONE scan, pre-filtered to the
+    driver-resolved leaves when that pays (``leaf_scan``), and the exact
+    number of rows it returns."""
+    pts = index.points.select(*cols, "morton")
+    if not isinstance(res, pd.DataFrame):
+        return pts, int(index.meta_np()["cum"][-1])
+    cfg = index.cfg
+    shift = cfg.dims * (cfg.grid_bits - cfg.index_level)
+    pred, rows = leaf_scan(index.meta_np(), res["leaf"].to_numpy(), shift, index.scan_batch_rows())
+    return (pts if pred is None else pts.where(pred)), rows
+
+
+def _join(index: SpatialIndex, kind: str, q: pd.DataFrame, res, pts: DataFrame) -> DataFrame:
+    """Scanned rows tagged with qid, interior and the query's region
+    columns: the plan's only join, on ONE derived leaf column (NO generate),
+    against the resolved rows (broadcast when resolved on the driver)."""
+    cfg = index.cfg
+    if isinstance(res, pd.DataFrame):
+        region = q[["qid", *_region_cols(kind, cfg.dims)]]
+        res = F.broadcast(index.points.sparkSession.createDataFrame(res.merge(region, on="qid")))
+    pts = pts.withColumn("pleaf", F.shiftrightunsigned("morton", cfg.dims * (cfg.grid_bits - cfg.index_level)))
+    return pts.join(res, F.col("pleaf") == F.col("leaf")).drop("pleaf", "leaf", "morton")
+
 
 def _plan(index: SpatialIndex, kind: str, q: pd.DataFrame, budget: int | None, count: bool):
     """(interior sums (qid, cnt) on the driver | None, candidate point rows
-    tagged with qid, interior and the query's region columns | None).
-
-    Candidates: the points scanned ONCE (``leaf_scan_pred`` when it pays,
-    ONE derived leaf column, NO generate) in the plan's only join, with
-    the resolved rows; a count carries only the coordinates through it."""
-    if kind == "polygon" and index.cfg.dims != 2:
-        raise ValueError("polygon queries are 2-D")
-    if q["qid"].duplicated().any():
-        raise ValueError(f"query frame repeats qids: {q['qid'][q['qid'].duplicated()].unique()[:10].tolist()}")
-    if q.empty:
-        return None, None
-    cfg = index.cfg
-    inter, res, pred = _resolve(index, kind, q, _budget(cfg, budget), count)
+    tagged with qid, interior and the query's region columns | None); a
+    count carries only the coordinates through the join."""
+    inter, res = _resolve(index, kind, q, budget, count)
     if res is None:
         return inter, None
-    base = [f"x{j}" for j in range(cfg.dims)] if count else [c for c in index.points.columns if c != "morton"]
-    pts = index.points.select(*base, "morton")
-    if pred is not None:
-        pts = pts.where(pred)
-    pts = pts.withColumn("pleaf", F.shiftrightunsigned("morton", cfg.dims * (cfg.grid_bits - cfg.index_level)))
-    return inter, pts.join(res, F.col("pleaf") == F.col("leaf")).drop("pleaf", "leaf", "morton")
+    d = index.cfg.dims
+    cols = [f"x{j}" for j in range(d)] if count else [c for c in index.points.columns if c != "morton"]
+    return inter, _join(index, kind, q, res, _scan(index, res, cols)[0])
+
+
+def _pairs(meta: dict, res: pd.DataFrame) -> int:
+    """The (row, query) pairs a driver finish tests: the rows of every
+    resolved leaf, once per query it is resolved for."""
+    return int(np.diff(meta["cum"])[np.searchsorted(meta["cells"], res["leaf"].to_numpy())].sum())
+
+
+def _inside_np(kind: str, q: pd.DataFrame, qsel: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """_exact_pred's numpy twin: whether point ``x[i]`` (int64, (m, d)) lies
+    in the region of query row ``qsel[i]`` of ``q``. A region's ``classify``
+    of the degenerate cell lo = hi = point is CONTAINED exactly then."""
+    regions = [r for _, r in _regions(kind, q, x.shape[1])]
+    cls = type(regions[0])
+    params = cls.params(regions)
+    out = np.zeros(len(qsel), dtype=bool)
+    for a in range(0, len(qsel), PAIR_CHUNK):  # bounded temporaries (a polygon's are (m, 4) per edge)
+        p = x[a:a + PAIR_CHUNK]
+        out[a:a + PAIR_CHUNK] = cls.classify(params, qsel[a:a + PAIR_CHUNK], p, p) == _Region.CONTAINED
+    return out
+
+
+def _boundary_counts_np(index: SpatialIndex, kind: str, q: pd.DataFrame, res: pd.DataFrame,
+                        pts: pd.DataFrame) -> pd.DataFrame:
+    """(qid, cnt) of the scanned rows ``pts`` (x0.., morton) inside each
+    query's region, over its resolved boundary leaves ``res`` (qid, leaf):
+    each leaf's rows are one searchsorted run of the Morton-sorted rows."""
+    cfg = index.cfg
+    m = pts["morton"].to_numpy(np.int64)
+    x = pts[[f"x{j}" for j in range(cfg.dims)]].to_numpy(np.int64)
+    if (m[1:] < m[:-1]).any():  # an insert's appended rows, a loaded index's files
+        o = np.argsort(m, kind="stable")
+        m, x = m[o], x[o]
+    # runs by the rows' leaf ids, not by interval ends: (leaf + 1) << s
+    # overflows int64 at dims * grid_bits = 63
+    rl = m >> (cfg.dims * (cfg.grid_bits - cfg.index_level))
+    leaf = res["leaf"].to_numpy(np.int64)
+    idx, n = expand_ranges(np.searchsorted(rl, leaf), np.searchsorted(rl, leaf, side="right"))
+    qsel = np.repeat(pd.Index(q["qid"]).get_indexer(res["qid"]), n)
+    hit = _inside_np(kind, q, qsel, x[idx])
+    return pd.DataFrame({"qid": q["qid"].to_numpy(np.int64), "cnt": np.bincount(qsel[hit], minlength=len(q))})
 
 
 def _count(index: SpatialIndex, kind: str, q: pd.DataFrame, budget: int | None) -> DataFrame:
     """(qid, cnt) for every row of q: interior sums plus exact boundary
-    counts, added on the driver. Runs now and returns a local frame."""
-    inter, cand = _plan(index, kind, q, budget, count=True)
+    counts, added on the driver. Runs now and returns a local frame.
+
+    A driver-resolved batch finishes its boundary on the driver from ONE
+    collected scan while the scanned rows plus the (row, query) pairs to
+    test, both exact from the prefix sums before any job, stay within
+    DRIVER_FINISH_MAX_ROWS; otherwise its boundary runs as one Spark
+    query (the leaf join, the exact predicate, a qid count)."""
+    inter, res = _resolve(index, kind, q, budget, count=True)
     parts = [] if inter is None else [inter]
-    if cand is not None:
-        cand = cand.where(_exact_pred(kind, index.cfg.dims)).groupBy("qid").agg(F.count("*").alias("cnt"))
-        parts.append(cand.toPandas())
+    if res is not None:
+        xcols = [f"x{j}" for j in range(index.cfg.dims)]
+        pts, rows = _scan(index, res, xcols)
+        if isinstance(res, pd.DataFrame) and rows + _pairs(index.meta_np(), res) <= DRIVER_FINISH_MAX_ROWS:
+            parts.append(_boundary_counts_np(index, kind, q, res, pts.toPandas()))
+        else:
+            cand = _join(index, kind, q, res, pts).where(_exact_pred(kind, index.cfg.dims))
+            parts.append(cand.groupBy("qid").agg(F.count("*").alias("cnt")).toPandas())
     qid = q["qid"].to_numpy(dtype="int64")
     cnt = pd.concat(parts).groupby("qid")["cnt"].sum() if parts else pd.Series(dtype="int64")
     out = pd.DataFrame({"qid": qid, "cnt": cnt.reindex(qid, fill_value=0).to_numpy(dtype="int64")})

@@ -115,14 +115,16 @@ def _merge_meta(old: DataFrame, delta: DataFrame, cfg: EngineConfig, sign: int) 
         *[f"mx{j} AS dmx{j}" for j in range(d)],
     )
     j = o.join(dl, "cell", "full_outer")
-    exprs = ["cell", f"coalesce(ocnt, 0) + ({sign}) * coalesce(dcnt, 0) AS cnt"]
-    for jj in range(d):
-        if sign > 0:
-            exprs.append(f"least(coalesce(omn{jj}, dmn{jj}), coalesce(dmn{jj}, omn{jj})) AS mn{jj}")
-            exprs.append(f"greatest(coalesce(omx{jj}, dmx{jj}), coalesce(dmx{jj}, omx{jj})) AS mx{jj}")
-        else:  # delete: keep old (conservative) bounds
-            exprs.append(f"coalesce(omn{jj}, dmn{jj}) AS mn{jj}")
-            exprs.append(f"coalesce(omx{jj}, dmx{jj}) AS mx{jj}")
+    # the column order of _meta_of and SpatialIndex.build: one meta schema
+    # for every generation, so an update cycle started from a build runs
+    # the plan shapes (and compiled classes) of one started from a checkpoint
+    if sign > 0:
+        mn = [f"least(coalesce(omn{jj}, dmn{jj}), coalesce(dmn{jj}, omn{jj})) AS mn{jj}" for jj in range(d)]
+        mx = [f"greatest(coalesce(omx{jj}, dmx{jj}), coalesce(dmx{jj}, omx{jj})) AS mx{jj}" for jj in range(d)]
+    else:  # delete: keep old (conservative) bounds
+        mn = [f"coalesce(omn{jj}, dmn{jj}) AS mn{jj}" for jj in range(d)]
+        mx = [f"coalesce(omx{jj}, dmx{jj}) AS mx{jj}" for jj in range(d)]
+    exprs = ["cell", f"coalesce(ocnt, 0) + ({sign}) * coalesce(dcnt, 0) AS cnt", *mn, *mx]
     return j.selectExpr(*exprs).where("cnt > 0")
 
 

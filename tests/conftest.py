@@ -5,6 +5,7 @@ import os
 import pandas as pd
 import pytest
 
+from pkd_tree_spark import ranges as R
 from pkd_tree_spark.config import EngineConfig
 from pkd_tree_spark.documents import load_points, synth_documents
 from pkd_tree_spark.index import SpatialIndex
@@ -54,6 +55,31 @@ def index_varden(spark, cfg):
 @pytest.fixture(scope="session")
 def points_varden(spark) -> pd.DataFrame:
     return load_points(spark, SF_DIR, dims=2, dist="varden").toPandas()
+
+
+@pytest.fixture
+def finishes(monkeypatch):
+    """Records the region kind of every boundary count finished on the
+    driver (ranges._boundary_counts_np) and whether its scanned rows
+    arrived in Morton order."""
+    seen: list[tuple[str, bool]] = []
+    real = R._boundary_counts_np
+
+    def _rec(index, kind, q, res, pts):
+        seen.append((kind, bool((pts["morton"].diff().dropna() >= 0).all())))
+        return real(index, kind, q, res, pts)
+
+    monkeypatch.setattr(R, "_boundary_counts_np", _rec)
+    return seen
+
+
+@pytest.fixture
+def joined(monkeypatch, finishes):
+    """The other side of DRIVER_FINISH_MAX_ROWS: with the bound at 0 every
+    driver-resolved count runs the leaf join (the returned list of driver
+    finishes must stay empty)."""
+    monkeypatch.setattr(R, "DRIVER_FINISH_MAX_ROWS", 0)
+    return finishes
 
 
 def job_sites(spark, group: str, fn):

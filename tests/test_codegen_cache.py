@@ -55,9 +55,7 @@ def _cycle(spark, ix, points: pd.DataFrame, n: int):
 def test_second_update_cycle_compiles_nothing(spark, points_uniform):
     """On a one-partition index the table is one cached batch, so no scan
     can skip a batch and none may carry per-call literals. Both measured
-    cycles start from a generation an earlier cycle left (a built index's
-    meta has other nullabilities, so the first cycle after a build
-    compiles a few classes once)."""
+    cycles start from a generation an earlier cycle left."""
     cfg = EngineConfig(dims=2, index_level=5, knn_level=4, partitions=1)
     base = SpatialIndex.build(load_points(spark, SF_DIR, dims=2, dist="uniform"), cfg)
     ix, done = _cycle(spark, base, points_uniform, 0)
@@ -70,3 +68,26 @@ def test_second_update_cycle_compiles_nothing(spark, points_uniform):
         g.release()
     assert counts[0] > 0, "the first cycle should compile its classes"
     assert counts[1] == 0, f"the second cycle compiled {counts[1]} classes"
+
+
+def test_cycle_from_a_build_compiles_only_its_cached_scans(spark, points_uniform):
+    """Once cycles started from checkpoints compile nothing, a cycle started
+    from a fresh build compiles only the scans of the build's own cached
+    tables: its points (read by the insert's materialization) and its meta
+    (read by the first skeleton collect), two classes each; a checkpoint
+    reads both as RDD scans instead. Every generation's meta has one
+    column order (cell, cnt, mn0.., mx0..): when the merged meta
+    interleaved mn0, mx0, mn1, mx1, this cycle compiled 10 classes."""
+    cfg = EngineConfig(dims=2, index_level=5, knn_level=4, partitions=1)
+    build = lambda: SpatialIndex.build(load_points(spark, SF_DIR, dims=2, dist="uniform"), cfg)  # noqa: E731
+    base = build()
+    ix, done = checkpoint_index(base), [base]
+    for n in (3, 4, 5):
+        (ix, old), c = compiles(spark, lambda: _cycle(spark, ix, points_uniform, n))
+        done += old
+    fresh = build()
+    (out, old), c_build = compiles(spark, lambda: _cycle(spark, fresh, points_uniform, 6))
+    for g in [*done, ix, fresh, *old, out]:
+        g.release()
+    assert c == 0, f"the last checkpoint-started cycle compiled {c} classes"
+    assert c_build <= 4, f"the build-started cycle compiled {c_build} classes"

@@ -3,11 +3,15 @@ role of tests/checkCorrectParallel.cpp:327-366)."""
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
 
 from pkd_tree_spark import fixtures as FX
+from pkd_tree_spark.config import EngineConfig
+from pkd_tree_spark.index import SpatialIndex
 from pkd_tree_spark.ranges import (
     range_count_balls,
     range_count_boxes,
@@ -39,20 +43,45 @@ def _diamond_oracle(pts: pd.DataFrame, polys: pd.DataFrame) -> dict:
     return {r.qid: int(((pts.x0 - r.c0).abs() + (pts.x1 - r.c1).abs() <= r.r).sum()) for r in polys.itertuples()}
 
 
-@pytest.mark.parametrize("which", ["uniform", "varden"])
-def test_range_count_box(request, which):
-    idx = request.getfixturevalue(f"index_{which}")
-    pts = request.getfixturevalue(f"points_{which}")
+def _check_box(idx, pts):
     boxes = FX.box_fixtures(NQ, 2)
     got = range_count_boxes(idx, boxes).toPandas().set_index("qid")["cnt"].sort_index()
     want = _box_oracle(pts, boxes).sort_index()
     assert got.to_dict() == want.to_dict()
 
 
-def test_range_count_ball(index_uniform, points_uniform):
+def _check_ball(idx, pts):
     balls = FX.ball_fixtures(NQ, 2)
-    got = range_count_balls(index_uniform, balls).toPandas().set_index("qid")["cnt"].sort_index()
-    assert got.to_dict() == _ball_oracle(points_uniform, balls)
+    got = range_count_balls(idx, balls).toPandas().set_index("qid")["cnt"].sort_index()
+    assert got.to_dict() == _ball_oracle(pts, balls)
+
+
+def _check_polygon(idx, pts):
+    polys = FX.diamond_fixtures(NQ)
+    got = range_count_polygons(idx, polys[["qid", "vx", "vy"]]).toPandas().set_index("qid")["cnt"].sort_index()
+    assert got.to_dict() == _diamond_oracle(pts, polys)
+
+
+@pytest.mark.parametrize("which", ["uniform", "varden"])
+def test_range_count_box(request, which, finishes):
+    _check_box(request.getfixturevalue(f"index_{which}"), request.getfixturevalue(f"points_{which}"))
+    assert [k for k, _ in finishes] == ["box"]
+
+
+@pytest.mark.parametrize("which", ["uniform", "varden"])
+def test_range_count_box_joined(request, which, joined):
+    _check_box(request.getfixturevalue(f"index_{which}"), request.getfixturevalue(f"points_{which}"))
+    assert joined == []
+
+
+def test_range_count_ball(index_uniform, points_uniform, finishes):
+    _check_ball(index_uniform, points_uniform)
+    assert [k for k, _ in finishes] == ["ball"]
+
+
+def test_range_count_ball_joined(index_uniform, points_uniform, joined):
+    _check_ball(index_uniform, points_uniform)
+    assert joined == []
 
 
 def test_range_report_multiset(index_uniform, points_uniform):
@@ -71,16 +100,15 @@ def test_range_report_multiset(index_uniform, points_uniform):
         pd.testing.assert_frame_equal(g, want)
 
 
-def test_polygon_count_vs_l1(index_uniform, points_uniform):
+def test_polygon_count_vs_l1(index_uniform, points_uniform, finishes):
     """Diamond polygons == L1 balls: generic convex machinery vs direct L1."""
-    polys = FX.diamond_fixtures(NQ)
-    got = (
-        range_count_polygons(index_uniform, polys[["qid", "vx", "vy"]])
-        .toPandas()
-        .set_index("qid")["cnt"]
-        .sort_index()
-    )
-    assert got.to_dict() == _diamond_oracle(points_uniform, polys)
+    _check_polygon(index_uniform, points_uniform)
+    assert [k for k, _ in finishes] == ["polygon"]
+
+
+def test_polygon_count_vs_l1_joined(index_uniform, points_uniform, joined):
+    _check_polygon(index_uniform, points_uniform)
+    assert joined == []
 
 
 def test_empty_and_total_boxes(index_uniform, points_uniform):
@@ -314,25 +342,23 @@ def _jobs(spark, group: str, fn):
 
 
 def test_range_jobs_per_call(spark, index_uniform, points_uniform):
-    """Job-count guard on a warm index: a small range count is one Spark
-    query (the boundary counts, collected) plus the read of the local
-    result frame — 4 jobs; a report is one query — 2 jobs. The interior
-    sums, the union, the second aggregate and the query-frame join that
-    used to run in Spark (6 and 3 jobs) must not come back."""
+    """Job-count guard on a warm index: a small range count is one scan
+    (the boundary rows, collected and finished on the driver) plus the
+    read of the local result frame — 2 jobs; a report is one query — 2
+    jobs. The boundary join (a broadcast job and the qid aggregate's
+    stages: 4 jobs in all), and the interior sums, the union, the second
+    aggregate and the query-frame join that ran in Spark before it (6 and
+    3 jobs) must not come back."""
     boxes = FX.box_fixtures(64, 2)
     range_count_boxes(index_uniform, boxes).toPandas()  # warm: skeleton memo
     n_count, got = _jobs(spark, "range-count-guard", lambda: range_count_boxes(index_uniform, boxes).toPandas())
     n_report, _ = _jobs(spark, "range-report-guard", lambda: range_report_boxes(index_uniform, boxes).toPandas())
     assert got.set_index("qid")["cnt"].to_dict() == _box_oracle(points_uniform, boxes).to_dict()
-    assert n_count == 4
+    assert n_count == 2
     assert n_report == 2
 
 
-@pytest.mark.parametrize("threshold", [4000, 0], ids=["driver", "executors"])
-def test_count_returns_every_qid(index_uniform, points_uniform, monkeypatch, threshold):
-    """Every qid gets a row: a batch with no boundary rows (the whole
-    domain, every cell interior; a box off the data) and a batch with no
-    interior cells (1x1 boxes), on both resolution paths."""
+def _check_every_qid(index_uniform, points_uniform, monkeypatch, threshold):
     from pkd_tree_spark import ranges as R
 
     monkeypatch.setattr(R, "DISTRIBUTED_COVER_THRESHOLD", threshold)
@@ -348,3 +374,163 @@ def test_count_returns_every_qid(index_uniform, points_uniform, monkeypatch, thr
     got = _counts(range_count_boxes(index_uniform, dots))
     assert got == _box_oracle(points_uniform, dots).sort_index().to_dict()
     assert min(got[10], got[11], got[12]) > 0 and got[13] == 0
+
+
+@pytest.mark.parametrize("threshold", [4000, 0], ids=["driver", "executors"])
+def test_count_returns_every_qid(index_uniform, points_uniform, monkeypatch, threshold, finishes):
+    """Every qid gets a row: a batch with no boundary rows (the whole
+    domain, every cell interior; a box off the data) and a batch with no
+    interior cells (1x1 boxes), on both resolution paths."""
+    _check_every_qid(index_uniform, points_uniform, monkeypatch, threshold)
+    # only the 1x1 boxes have boundary rows, and only the driver resolves them
+    assert [k for k, _ in finishes] == (["box"] if threshold else [])
+
+
+def test_count_returns_every_qid_joined(index_uniform, points_uniform, monkeypatch, joined):
+    _check_every_qid(index_uniform, points_uniform, monkeypatch, 4000)
+    assert joined == []
+
+
+# ---------------------------------------------------------------------------
+# the driver-finished count: its point test, its row order, its key width
+# ---------------------------------------------------------------------------
+
+def _near(p: np.ndarray) -> np.ndarray:
+    """Every point of ``p`` (m, d) and its neighbours one unit away in each
+    axis: the boundary points and the first ones on either side."""
+    d = p.shape[1]
+    steps = np.concatenate([np.zeros((1, d), np.int64), np.eye(d, dtype=np.int64), -np.eye(d, dtype=np.int64)])
+    return (p[:, None, :] + steps[None]).reshape(-1, d)
+
+
+def _parity_case(kind: str, d: int) -> tuple[pd.DataFrame, np.ndarray]:
+    """(queries, points) for one region kind: seeded random regions plus a
+    degenerate one, and seeded random points plus each region's vertices
+    and boundary points with their unit neighbours."""
+    rng = np.random.default_rng([14, d, len(kind)])
+    lo = rng.integers(1_000, 500_000, (5, d))
+    if kind == "box":
+        hi = lo + rng.integers(0, 300_000, (5, d))
+        lo, hi = np.vstack([lo, [[777] * d]]), np.vstack([hi, [[777] * d]])  # + a 1x1 box
+        q = pd.DataFrame({"qid": np.arange(6) * 3, **{f"lo{j}": lo[:, j] for j in range(d)},
+                          **{f"hi{j}": hi[:, j] for j in range(d)}})
+        corners = np.array([[(lo if (c >> j) & 1 else hi)[:, j] for j in range(d)] for c in range(1 << d)])
+        mids = (lo + hi) // 2
+        faces = np.vstack([np.where(np.arange(d) == j, b[:, [j]], mids) for j in range(d) for b in (lo, hi)])
+        edge = np.vstack([corners.transpose(0, 2, 1).reshape(-1, d), faces])
+    elif kind == "ball":
+        r = np.array([5, 13, 25, 65, 1000, 0])  # lattice points on every sphere, + r2 = 0
+        c = np.vstack([lo, [[777] * d]])
+        q = pd.DataFrame({"qid": np.arange(6) * 3, **{f"c{j}": c[:, j] for j in range(d)}, "r2": r * r})
+        edge = []
+        for c_, rr in zip(c, r.tolist()):
+            for a in range(-rr, rr + 1):
+                b = math.isqrt(rr * rr - a * a)
+                if a * a + b * b == rr * rr:
+                    for v in ([a, b], [a, -b]):
+                        edge.append(c_ + np.array(v + [0] * (d - 2)))
+                        edge.append(c_ + np.array([0] * (d - 2) + v))
+        edge = np.array(edge)
+    else:
+        tri = [(0, 0), (60, 0), (0, 90)]
+        quad = [(10, 10), (70, 16), (64, 76), (4, 70)]
+        padded = [(0, 0), (40, 0), (40, 0), (40, 40), (0, 40)]  # a repeated vertex
+        five = [(20, 0), (50, 10), (60, 40), (30, 60), (0, 30)]
+        polys = [[(x + 3_000 * i, y + 5_000 * i) for x, y in p] for i, p in enumerate([tri, quad, padded, five])]
+        q = pd.DataFrame({"qid": np.arange(len(polys)) * 3, "vx": [[x for x, _ in p] for p in polys],
+                          "vy": [[y for _, y in p] for p in polys]})
+        pts = []
+        for p in polys:
+            for (ax, ay), (bx, by) in zip(p, p[1:] + p[:1]):
+                g = max(1, int(np.gcd(bx - ax, by - ay)))
+                t = np.arange(g + 1)
+                pts.append(np.stack([ax + t * (bx - ax) // g, ay + t * (by - ay) // g], axis=1))
+        edge = np.vstack(pts)
+    return q, np.vstack([rng.integers(0, 900_000, (300, d)), _near(edge)]).astype(np.int64)
+
+
+@pytest.mark.parametrize("kind,d", [("box", 2), ("box", 3), ("ball", 2), ("ball", 3), ("polygon", 2)])
+def test_inside_np_matches_exact_pred(spark, kind, d):
+    """The driver-side point test equals _exact_pred row for row, on
+    every (point, region) pair of _parity_case."""
+    from pkd_tree_spark import ranges as R
+
+    q, x = _parity_case(kind, d)
+    qsel = np.repeat(np.arange(len(q)), len(x))
+    xs = np.tile(x, (len(q), 1))
+    want = R._inside_np(kind, q, qsel, xs)
+    pairs = q.iloc[qsel].reset_index(drop=True).assign(
+        row=np.arange(len(qsel)), **{f"x{j}": xs[:, j] for j in range(d)}
+    )
+    got = (
+        spark.createDataFrame(pairs).select("row", R._exact_pred(kind, d).alias("inside"))
+        .toPandas().sort_values("row")["inside"].to_numpy()
+    )
+    assert 0 < want.sum() < len(want)
+    for i in range(len(q)):  # each region, the degenerate one too, has points on both sides
+        assert want[qsel == i].any() and not want[qsel == i].all()
+    np.testing.assert_array_equal(got, want)
+
+
+@pytest.mark.parametrize("bound", ["default", "joined"])
+def test_count_at_63_bit_morton_keys(spark, monkeypatch, finishes, bound):
+    """dims * grid_bits = 63 with boxes touching the last leaf, whose end
+    ((leaf + 1) << s) - 1 overflows int64: counts equal numpy on both sides."""
+    from pkd_tree_spark import ranges as R
+
+    cfg = EngineConfig(dims=3, coord_bits=21, index_level=4, knn_level=3, partitions=2)
+    assert cfg.dims * cfg.grid_bits == 63
+    top = 1 << 21
+    rng = np.random.default_rng(63)
+    x = np.vstack([rng.integers(0, top, (3000, 3)), rng.integers(top - (1 << 16), top, (1000, 3))])
+    pts = pd.DataFrame({"doc_id": [f"d{i}" for i in range(len(x))], "span_idx": 0, "key": np.arange(len(x)),
+                        **{f"x{j}": x[:, j] for j in range(3)}})
+    ix = SpatialIndex.build(spark.createDataFrame(pts), cfg)
+    lo = np.vstack([rng.integers(top - (1 << 18), top - 10, (8, 3)), rng.integers(0, top // 2, (4, 3))])
+    hi = np.vstack([np.full((8, 3), top - 1), lo[8:] + (1 << 19)])
+    boxes = pd.DataFrame({"qid": np.arange(12), **{f"lo{j}": lo[:, j] for j in range(3)},
+                          **{f"hi{j}": hi[:, j] for j in range(3)}})
+    if bound == "joined":
+        monkeypatch.setattr(R, "DRIVER_FINISH_MAX_ROWS", 0)
+    try:
+        got = _counts(range_count_boxes(ix, boxes))
+    finally:
+        ix.release()
+    inside = ((x[None] >= lo[:, None]) & (x[None] <= hi[:, None])).all(axis=2)
+    assert got == dict(enumerate(inside.sum(axis=1).tolist()))
+    assert [k for k, _ in finishes] == (["box"] if bound == "default" else [])
+
+
+def test_count_on_rows_out_of_morton_order(tmp_path, spark, cfg, index_uniform, points_uniform, monkeypatch, finishes):
+    """An insert appends its batch after the sorted table, so its lazy
+    delete survivors stream out of Morton order, and a loaded
+    PersistentIndex reads its bucket files in split order: counts on both
+    equal brute force on both sides of the bound."""
+    from pkd_tree_spark import ranges as R
+    from pkd_tree_spark.updates import PersistentIndex, merge_delete, merge_insert
+
+    batch = points_uniform.iloc[3::40].copy()
+    batch["key"] = 97_000_000 + np.arange(len(batch))
+    batch["doc_id"] = "ins_" + batch["key"].astype(str)
+    # exact_rows deletes rows by (key, span_idx): only ids no other row shares
+    gone = points_uniform[~points_uniform.duplicated(["key", "span_idx"], keep=False)].iloc[5::90]
+    g = merge_insert(index_uniform, spark.createDataFrame(batch))
+    dl = merge_delete(g, spark.createDataFrame(gone[["key", "span_idx", "x0", "x1"]]), exact_rows=True)
+    assert not dl.points.is_cached  # a small delete leaves its survivors lazy
+    live = pd.concat([points_uniform.drop(gone.index), batch])
+    p = PersistentIndex(path=str(tmp_path / "idx"), cfg=cfg)
+    p.write(dl)
+    loaded = p.load(spark)
+    boxes = FX.box_fixtures(NQ, 2)
+    want = _box_oracle(live, boxes).sort_index().to_dict()
+    try:
+        assert _counts(range_count_boxes(dl, boxes)) == want
+        assert _counts(range_count_boxes(loaded, boxes)) == want
+        assert finishes == [("box", False), ("box", False)]
+        monkeypatch.setattr(R, "DRIVER_FINISH_MAX_ROWS", 0)
+        assert _counts(range_count_boxes(dl, boxes)) == want
+        assert _counts(range_count_boxes(loaded, boxes)) == want
+        assert len(finishes) == 2
+    finally:
+        for ix in (g, dl, loaded):
+            ix.release()

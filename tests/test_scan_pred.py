@@ -158,6 +158,13 @@ def test_range_count_exact_both_sides(index_uniform, points_uniform, decisions, 
 
 
 @pytest.mark.parametrize("side", ["corner", "spanning"])
+def test_range_count_exact_both_sides_joined(index_uniform, points_uniform, decisions, joined, side):
+    """The same counts through the leaf join (DRIVER_FINISH_MAX_ROWS at 0)."""
+    test_range_count_exact_both_sides(index_uniform, points_uniform, decisions, side)
+    assert joined == []
+
+
+@pytest.mark.parametrize("side", ["corner", "spanning"])
 def test_range_report_exact_both_sides(index_uniform, points_uniform, decisions, side):
     boxes = _corner_boxes(8) if side == "corner" else FX.box_fixtures(24, 2)
     got = range_report_boxes(index_uniform, boxes).toPandas()

@@ -5,17 +5,23 @@ Captures, per operator, the executed/optimized plan and a node-count
 summary (unique plan_ids for Exchange — cached lineage re-prints inflate
 raw text counts). Run from the repo root:
 
-    python tools/gen_plans.py
+    PYTHONPATH=. python tools/gen_plans.py
+
+Each section is one entry of SECTIONS: a title, a note and a function of
+(spark, index, sf dir) returning the plan, so tests/test_plans.py can
+rebuild every plan on its own session and check it against the recorded
+counts.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import re
 
 HEAD = """# Physical plans of the headline operators (sf0.001, local[8])
 
-Regenerated round 6 (tools/gen_plans.py). Checks per plan: join
+Regenerated by tools/gen_plans.py. Checks per plan: join
 strategies, shuffle count (unique Exchange plan_ids), window-group-limit
 presence, and that `Generate` never sits above the points table in the
 query hot path (`BatchEvalPython`/`ArrowEval` = 0 in every JVM row path;
@@ -47,111 +53,82 @@ def trimmed(plan: str, max_lines: int = 45) -> str:
     return "\n".join(lines)
 
 
-def main() -> None:
-    from pyspark.sql import functions as F
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
-    from pkd_tree_spark import fixtures as FX
+
+def _cfg():
     from pkd_tree_spark.config import EngineConfig
+
+    return EngineConfig(dims=2, index_level=5, knn_level=4, partitions=8)
+
+
+def _boxes(n: int):
+    from pkd_tree_spark import fixtures as FX
+
+    return FX.box_fixtures(n, 2)
+
+
+def build_plan(spark, ix, sf) -> str:
+    """A fresh build's points layout, before anything runs it."""
     from pkd_tree_spark.documents import load_points
     from pkd_tree_spark.index import SpatialIndex
-    from pkd_tree_spark.knn import knn
+
+    return _executed(SpatialIndex.build(load_points(spark, sf, dims=2, dist="uniform"), _cfg()).points)
+
+
+def boundary_scan_plan(spark, ix, sf, n: int = 64) -> str:
+    """A driver-finished count's one Spark query: the boundary scan that
+    ranges._count collects (the driver does the rest)."""
     from pkd_tree_spark import ranges as R
-    from pkd_tree_spark.session import get_spark
 
-    spark = get_spark(app="gen-plans", cpus=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    sf = "/root/testdata/sf0.001"
-    cfg = EngineConfig(dims=2, index_level=5, knn_level=4, partitions=8)
+    _, res = R._resolve(ix, "box", _boxes(n), None, count=True)
+    scan, _ = R._scan(ix, res, ["x0", "x1"])
+    scan.toPandas()
+    return _executed(scan)
 
-    out = [HEAD]
 
-    def section(title: str, note: str, plan: str) -> None:
-        out.append(f"\n## {title}\n")
-        out.append(note + "\n")
-        out.append("`" + json.dumps(op_counts(plan)) + "`\n")
-        out.append("```\n" + trimmed(plan) + "\n```\n")
+def boundary_join_plan(spark, ix, sf, n: int = 64) -> str:
+    """A count's boundary query on the join side, built exactly as
+    ranges._count builds it."""
+    from pyspark.sql import functions as F
 
-    # --- build ---
-    pts = load_points(spark, sf, dims=2, dist="uniform")
-    ix = SpatialIndex.build(pts, cfg)
-    section(
-        "index build (points layout)",
-        "One rangepartitioning exchange (the counting-sort shuffle, "
-        "build_tree.hpp:83-121); JVM-only derivation upstream; staging "
-        "auto-gated OFF at this input size (index.py STAGE_INPUT_BYTES).",
-        ix.points._jdf.queryExecution().executedPlan().toString(),
-    )
-    ix.points.count()
-    ix.meta.count()
+    from pkd_tree_spark import ranges as R
 
-    # --- range count (leaf-resolved) ---
-    # a count returns a local frame, so record the one Spark query it runs:
-    # the boundary counts, built here exactly as ranges._count builds them
-    def boundary_count_plan(boxes) -> str:
-        _, cand = R._plan(ix, "box", boxes, None, count=True)
-        bq = cand.where(R._exact_pred("box", 2)).groupBy("qid").agg(F.count("*").alias("cnt"))
-        bq.collect()
-        return bq._jdf.queryExecution().executedPlan().toString()
+    _, cand = R._plan(ix, "box", _boxes(n), None, count=True)
+    bq = cand.where(R._exact_pred("box", 2)).groupBy("qid").agg(F.count("*").alias("cnt"))
+    bq.collect()
+    return _executed(bq)
 
-    boxes = FX.box_fixtures(64, 2)
-    section(
-        "range-count 64 boxes (leaf-resolved single-scan plan)",
-        "The count's one Spark query (its boundary counts; the interior "
-        "sums are driver prefix sums, zero jobs, and both are added per "
-        "qid on the driver). Covers resolve DRIVER-SIDE to occupied leaf "
-        "cells (resolve_covers_np) whose rows carry the box columns -> "
-        "ONE broadcast equi-join on the derived leaf column, the plan's "
-        "only join; NO Generate over the points; one qid shuffle. The "
-        "Morton-interval pre-filter prunes cached batches when it pays.",
-        boundary_count_plan(boxes),
-    )
 
-    # --- range count above DISTRIBUTED_COVER_THRESHOLD (executor pass) ---
-    nbig = R.DISTRIBUTED_COVER_THRESHOLD + 100
-    section(
-        f"range-count {nbig} boxes (executor resolution pass)",
-        "Above DISTRIBUTED_COVER_THRESHOLD one mapInPandas pass over the "
-        "query frame computes covers, interior sums and resolved leaves "
-        "(carrying the box columns) against a broadcast of the skeleton; "
-        "its output is checkpointed (the Scan ExistingRDD below) and the "
-        "broadcast destroyed inside the call. Its interior rows (<= one "
-        "per query) are collected; the resolved side is counted and "
-        "broadcast-hinted when it fits RESOLVED_BCAST_BYTES. The boundary "
-        "query is the same single leaf equi-join as the driver plan, "
-        "without the Morton pre-filter.",
-        boundary_count_plan(FX.box_fixtures(nbig, 2)),
-    )
+def executor_pass_plan(spark, ix, sf) -> str:
+    from pkd_tree_spark import ranges as R
 
-    # --- range report ---
-    rr = R.range_report_boxes(ix, boxes)
+    return boundary_join_plan(spark, ix, sf, R.DISTRIBUTED_COVER_THRESHOLD + 100)
+
+
+def report_plan(spark, ix, sf) -> str:
+    from pkd_tree_spark import ranges as R
+
+    rr = R.range_report_boxes(ix, _boxes(64))
     rr.collect()
-    section(
-        "range-report 64 boxes",
-        "Lazy, like the count's boundary query: every cover cell resolves "
-        "driver-side to (qid, leaf, interior, box columns) rows -> ONE "
-        "broadcast equi-join with the points; interior-cell rows skip the "
-        "predicate. No query-frame join and no shuffle.",
-        rr._jdf.queryExecution().executedPlan().toString(),
-    )
+    return _executed(rr)
 
-    # --- kNN round-1 candidate join + window top-k ---
+
+def knn_round1_plan(spark, ix, sf) -> str:
+    from pkd_tree_spark import fixtures as FX
+    from pkd_tree_spark.knn import knn
+
     plans: list = []
-    res = knn(ix, FX.knn_fixtures(32, 2), k=10, plan_log=plans)
-    res.count()
-    cand_note = (
-        "Round-1 candidate join (optimized logical plan, via the knn "
-        "plan_log probe): shells leaf-resolved; lvl==-1 rows take the "
-        "no-generate leaf equi-join; the join projects doc_id, which the "
-        "driver rounds collect with the candidates (no re-attach query "
-        "for a batch finished on the driver). lvl_counts per round: "
-        + json.dumps([p["lvl_counts"] for p in plans])
-    )
-    section("kNN round-1 candidate join", cand_note, plans[0]["plan"])
+    knn(ix, FX.knn_fixtures(32, 2), k=10, plan_log=plans).count()
+    return plans[0]["plan"]
 
-    # Window top-k physical shape (reproduced standalone on the same
-    # schema the round uses — the in-loop plan is consumed by the round
-    # checkpoint and not directly printable):
+
+def window_topk_plan(spark, ix, sf) -> str:
+    """The window top-k shape, reproduced standalone on the schema the
+    round uses (the in-loop plan is consumed by the round checkpoint)."""
     from pyspark.sql import Window
+    from pyspark.sql import functions as F
 
     df = ix.points.select(
         (F.col("key") % 32).alias("qid"),
@@ -167,44 +144,123 @@ def main() -> None:
         .agg(F.collect_list(F.struct("dist2", "key", "span_idx")).alias("tk"))
     )
     topk.count()
-    section(
+    return _executed(topk)
+
+
+def pruned_plan(spark, ix, sf) -> str | None:
+    from pyspark.sql import functions as F
+
+    from pkd_tree_spark.documents import load_points
+    from pkd_tree_spark.index import SpatialIndex
+
+    lattice = load_points(spark, sf, dims=2, dist="uniform").select(
+        "doc_id", "span_idx", "key",
+        *[(F.col(f"x{j}") % 10 * 99_991).alias(f"x{j}") for j in range(2)],
+    )
+    lix = SpatialIndex.build(lattice, _cfg())
+    lix.points.count()
+    pruned = lix.pruned_points(10)
+    plan = None if pruned is None else _executed(pruned)
+    lix.release()
+    return plan
+
+
+def delete_plan(spark, ix, sf) -> str:
+    from pkd_tree_spark.updates import merge_delete
+
+    bpd = ix.points.limit(256).select("key", "span_idx", "x0", "x1")
+    return _executed(merge_delete(ix, bpd, exact_rows=True, persist=False).points)
+
+
+def ann_plan(spark, ix, sf) -> str | None:
+    if not os.path.exists(f"{sf}/embeddings.parquet"):
+        return None
+    from pkd_tree_spark.pipeline.similarity import ann_lsh
+
+    ann = ann_lsh(spark.read.parquet(f"{sf}/embeddings.parquet"))
+    ann.count()
+    return _executed(ann)
+
+
+SECTIONS = [
+    (
+        "index build (points layout)",
+        "One rangepartitioning exchange (the counting-sort shuffle, "
+        "build_tree.hpp:83-121); JVM-only derivation upstream; staging "
+        "auto-gated OFF at this input size (index.py STAGE_INPUT_BYTES).",
+        build_plan,
+    ),
+    (
+        "range-count 64 boxes (driver-finished boundary scan)",
+        "The count's one Spark query. Covers resolve DRIVER-SIDE to occupied "
+        "leaf cells (resolve_covers_np); the interior sums are driver prefix "
+        "sums. While the scanned rows plus the (row, query) pairs stay within "
+        "DRIVER_FINISH_MAX_ROWS (exact from the prefix sums), the points' "
+        "x0, x1 and morton are scanned ONCE (the Morton-interval pre-filter "
+        "prunes cached batches when it pays) and collected; each resolved "
+        "leaf's rows are found by searchsorted and tested in numpy. No join, "
+        "no shuffle, NO Generate over the points.",
+        boundary_scan_plan,
+    ),
+    (
+        "range-count 64 boxes (leaf join, above DRIVER_FINISH_MAX_ROWS)",
+        "The same batch past the bound (forced here by building the join "
+        "plan directly): the resolved rows carry the box columns -> ONE "
+        "broadcast equi-join on the derived leaf column, the plan's only "
+        "join; NO Generate over the points; one qid shuffle.",
+        boundary_join_plan,
+    ),
+    (
+        "range-count 4100 boxes (executor resolution pass)",
+        "Above DISTRIBUTED_COVER_THRESHOLD one mapInPandas pass over the "
+        "query frame computes covers, interior sums and resolved leaves "
+        "(carrying the box columns) against a broadcast of the skeleton; "
+        "its output is checkpointed (the Scan ExistingRDD below) and the "
+        "broadcast destroyed inside the call. Its interior rows (<= one "
+        "per query) are collected; the resolved side is counted and "
+        "broadcast-hinted when it fits RESOLVED_BCAST_BYTES. The boundary "
+        "query is the leaf equi-join of the section above, without the "
+        "Morton pre-filter.",
+        executor_pass_plan,
+    ),
+    (
+        "range-report 64 boxes",
+        "Lazy: every cover cell resolves driver-side to (qid, leaf, "
+        "interior, box columns) rows -> ONE broadcast equi-join with the "
+        "points; interior-cell rows skip the predicate. No query-frame join "
+        "and no shuffle.",
+        report_plan,
+    ),
+    (
+        "kNN round-1 candidate join",
+        "Round-1 candidate join (optimized logical plan, via the knn "
+        "plan_log probe): shells leaf-resolved; lvl==-1 rows take the "
+        "no-generate leaf equi-join; the join projects doc_id, which the "
+        "driver rounds collect with the candidates (no re-attach query "
+        "for a batch finished on the driver).",
+        knn_round1_plan,
+    ),
+    (
         "kNN window top-k (bounded queue, nn_search_helpers.h:18-93)",
         "row_number rank filter -> WindowGroupLimit(Partial) BELOW the "
         "exchange: Tungsten map-side partial top-k, <= k rows per qid per "
         "partition cross the shuffle; no per-entry object aggregation "
         "(r4's collect_list ObjectHashAggregate — the 38.4M varden "
         "bottleneck — is gone from the hot path).",
-        topk._jdf.queryExecution().executedPlan().toString(),
-    )
-
-    # --- duplicate collapse (pruned_points window form) ---
-    lattice = pts.select(
-        "doc_id", "span_idx", "key",
-        *[(F.col(f"x{j}") % 10 * 99_991).alias(f"x{j}") for j in range(2)],
-    )
-    lix = SpatialIndex.build(lattice, cfg)
-    lix.points.count()
-    pruned = lix.pruned_points(10)
-    if pruned is not None:
-        section(
-            "duplicate collapse (dummy-leaf analog, build_tree.hpp:183-186)",
-            "JVM row_number window over the position columns: "
-            "WindowGroupLimit(Partial) keeps <= cap rows per position "
-            "map-side (duplicate groups are partition-local after the "
-            "morton sort), so only the collapsed rows cross the exchange; "
-            "a small rangepartitioning pass restores the morton layout "
-            "for cached-batch min/max skipping. r5's Arrow mapInPandas "
-            "pass (pd.concat per partition) is gone.",
-            pruned._jdf.queryExecution().executedPlan().toString(),
-        )
-    lix.release()
-
-    # --- batch delete (broadcast anti-join, no full-table shuffle) ---
-    from pkd_tree_spark.updates import merge_delete
-
-    bpd = ix.points.limit(256).select("key", "span_idx", "x0", "x1")
-    dels = merge_delete(ix, bpd, exact_rows=True, persist=False)
-    section(
+        window_topk_plan,
+    ),
+    (
+        "duplicate collapse (dummy-leaf analog, build_tree.hpp:183-186)",
+        "JVM row_number window over the position columns: "
+        "WindowGroupLimit(Partial) keeps <= cap rows per position "
+        "map-side (duplicate groups are partition-local after the "
+        "morton sort), so only the collapsed rows cross the exchange; "
+        "a small rangepartitioning pass restores the morton layout "
+        "for cached-batch min/max skipping. r5's Arrow mapInPandas "
+        "pass (pd.concat per partition) is gone.",
+        pruned_plan,
+    ),
+    (
         "batch delete survivors (U4, batch_delete.hpp:59-76 point-batch)",
         "Key set counted+broadcast -> BroadcastHashJoin LeftAnti streams "
         "the points in ONE pass, zero full-table shuffle (r5 sort-merge-"
@@ -212,34 +268,68 @@ def main() -> None:
         "153.6M). exact_rows: the meta delta aggregates the batch itself "
         "— no left_semi pass. Oversized key sets (> DELETE_BCAST_ROWS) "
         "fall back to a shuffled HASH join (LeftAnti).",
-        dels.points._jdf.queryExecution().executedPlan().toString(),
-    )
+        delete_plan,
+    ),
+    (
+        "ann_lsh (bucketed MIPS)",
+        "The query rows are collected once and the sorted Hamming-0/1/2 "
+        "probe table is broadcast; the corpus makes ONE MapInPandas pass "
+        "in its own partitioning (8-table keys, probe lookup, exact dots "
+        "in bounded tiles, per-partition top-k) with no explode and no "
+        "corpus shuffle; only <= k rows per query per partition reach "
+        "the row_number window. That <= n_queries x k result is "
+        "materialized inside the call and the broadcast destroyed, so "
+        "the plan below is a scan of the local result. Corpus max-norm "
+        "is memoized per corpus (no per-call full-table aggregate after "
+        "the first).",
+        ann_plan,
+    ),
+]
 
-    # --- ann_lsh ---
-    import os
 
-    if os.path.exists(f"{sf}/embeddings.parquet"):
-        from pkd_tree_spark.pipeline.similarity import ann_lsh
+PLANS_MD = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH", "PLANS.md")
 
-        emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-        ann = ann_lsh(emb)
-        ann.count()
-        section(
-            "ann_lsh (bucketed MIPS)",
-            "The query rows are collected once and the sorted Hamming-0/1/2 "
-            "probe table is broadcast; the corpus makes ONE MapInPandas pass "
-            "in its own partitioning (8-table keys, probe lookup, exact dots "
-            "in bounded tiles, per-partition top-k) with no explode and no "
-            "corpus shuffle; only <= k rows per query per partition reach "
-            "the row_number window. That <= n_queries x k result is "
-            "materialized inside the call and the broadcast destroyed, so "
-            "the plan below is a scan of the local result. Corpus max-norm "
-            "is memoized per corpus (no per-call full-table aggregate after "
-            "the first).",
-            ann._jdf.queryExecution().executedPlan().toString(),
-        )
 
-    with open("BENCH/PLANS.md", "w") as f:
+def recorded_counts() -> dict:
+    """{section title: the op_counts recorded under it in BENCH/PLANS.md}."""
+    with open(PLANS_MD) as f:
+        text = f.read()
+    return {
+        m.group(1): json.loads(m.group(2))
+        for m in re.finditer(r"^## (.+?)\n.*?^`(\{.*?\})`$", text, re.M | re.S)
+    }
+
+
+def index(spark, sf: str):
+    """The uniform index every section but the build reads, materialized."""
+    from pkd_tree_spark.documents import load_points
+    from pkd_tree_spark.index import SpatialIndex
+
+    ix = SpatialIndex.build(load_points(spark, sf, dims=2, dist="uniform"), _cfg())
+    ix.points.count()
+    ix.meta.count()
+    return ix
+
+
+def main() -> None:
+    from pkd_tree_spark.session import get_spark
+
+    spark = get_spark(app="gen-plans", cpus=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    # the data the tests read, so tests/test_plans.py rebuilds these plans
+    from tests.conftest import SF_DIR as sf
+
+    ix = index(spark, sf)
+    out = [HEAD]
+    for title, note, fn in SECTIONS:
+        plan = fn(spark, ix, sf)
+        if plan is None:
+            continue
+        out.append(f"\n## {title}\n")
+        out.append(note + "\n")
+        out.append("`" + json.dumps(op_counts(plan)) + "`\n")
+        out.append("```\n" + trimmed(plan) + "\n```\n")
+    with open(PLANS_MD, "w") as f:
         f.write("\n".join(out))
     print("wrote BENCH/PLANS.md")
 
