@@ -289,8 +289,7 @@ def study_ann(
 def study_varden_profile() -> dict:
     from pyspark.storagelevel import StorageLevel
 
-    from pkd_tree_spark.index import tracked_local_checkpoint, release_rdd_ids, _plan_size_bytes
-    from pkd_tree_spark.zorder import morton_col
+    from pkd_tree_spark.index import meta_of, tracked_local_checkpoint, release_rdd_ids, _plan_size_bytes, with_morton
 
     from pyspark.sql import functions as F
 
@@ -299,8 +298,7 @@ def study_varden_profile() -> dict:
     rec = {"study": "varden-profile", "cpus": CPUS, "replicate": REPLICATE, "stages": {}}
     for dist in ("uniform", "varden"):
         pts = _points(spark, dist)
-        gcols = [f"shiftrightunsigned(x{j}, {cfg.coord_shift})" for j in range(2)]
-        enc = pts.withColumn("morton", morton_col(gcols, 2, cfg.grid_bits))
+        enc = with_morton(pts, cfg)
         t0 = time.time()
         staged, ids = tracked_local_checkpoint(enc, StorageLevel.DISK_ONLY)
         t_stage = time.time() - t0
@@ -309,9 +307,7 @@ def study_varden_profile() -> dict:
         n = shuffled.count()
         t_shuffle = time.time() - t0
         t0 = time.time()
-        from pkd_tree_spark.updates import _meta_of
-
-        meta = _meta_of(shuffled, cfg).persist()
+        meta = meta_of(shuffled, cfg).persist()
         meta.count()
         t_meta = time.time() - t0
         rec["stages"][dist] = {

@@ -20,6 +20,12 @@ skeleton, SpatialIndex.meta_np) always fits: EngineConfig bounds it at
 META_MEMO_CELLS cells. Covers are computed from query geometry alone
 (data-independent), driver-side, or inside mapInPandas against a
 broadcast of the skeleton when the query set is itself large.
+
+Every generation (a build, an update, a retile, a PersistentIndex commit)
+encodes its points with with_morton and aggregates its meta with meta_of,
+so the meta schema is decided here once. The build's one size gate: it
+stages its encoded input on disk only when Catalyst estimates the input
+above STAGE_INPUT_BYTES.
 """
 
 from __future__ import annotations
@@ -281,24 +287,13 @@ class SpatialIndex:
         return pruned
 
     @classmethod
-    def build(
-        cls,
-        points_df: DataFrame,
-        cfg: EngineConfig = DEFAULT_CONFIG,
-        persist: bool = True,
-        stage_input: bool | None = None,
-    ) -> "SpatialIndex":
-        d = cfg.dims
-        xcols = [f"x{j}" for j in range(d)]
-        gcols = [f"shiftrightunsigned({c}, {cfg.coord_shift})" for c in xcols]
-        pts = points_df.withColumn("morton", morton_col(gcols, d, cfg.grid_bits))
-        if stage_input is None:
-            # auto gate (r4 staged unconditionally, regressing the small-
-            # input build 7.2->15.1s): stage only when the estimated input
-            # is big enough that re-deriving it is the larger cost
-            stage_input = _plan_size_bytes(pts) > STAGE_INPUT_BYTES
+    def build(cls, points_df: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG, persist: bool = True) -> "SpatialIndex":
+        pts = with_morton(points_df, cfg)
         staged_ids: list = []
-        if stage_input:
+        # r4 staged unconditionally, regressing the small-input build
+        # 7.2->15.1s: stage only when the estimated input is big enough
+        # that re-deriving it is the larger cost
+        if _plan_size_bytes(pts) > STAGE_INPUT_BYTES:
             # repartitionByRange evaluates its child TWICE — once for the
             # range-bound sampling pass, once for the shuffle. When the
             # input is a derived pipeline (span synthesis + extraction +
@@ -330,14 +325,7 @@ class SpatialIndex:
         pts = pts.repartitionByRange(cfg.partitions, "morton").sortWithinPartitions("morton")
         if persist:
             pts = pts.persist()
-        meta = (
-            pts.groupBy(cell_col(F.col("morton"), d, cfg.index_level, cfg.grid_bits).alias("cell"))
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                *[F.min(c).alias(f"mn{j}") for j, c in enumerate(xcols)],
-                *[F.max(c).alias(f"mx{j}") for j, c in enumerate(xcols)],
-            )
-        )
+        meta = meta_of(pts, cfg)
         if persist:
             meta = meta.persist()
         return cls(points=pts, meta=meta, cfg=cfg, _staged_ids=staged_ids)
@@ -356,6 +344,26 @@ class SpatialIndex:
             "bbox_violations": viol,
             "bbox_checked": True,
         }
+
+
+def with_morton(points_df: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """``points_df`` with its ``morton`` column: the Z-order key of each
+    point's grid cell, the one encoding every index generation uses."""
+    gcols = [f"shiftrightunsigned(x{j}, {cfg.coord_shift})" for j in range(cfg.dims)]
+    return points_df.withColumn("morton", morton_col(gcols, cfg.dims, cfg.grid_bits))
+
+
+def meta_of(points: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """The per-cell meta (cell, cnt, mn0..mn{d-1}, mx0..mx{d-1}) of
+    ``points`` at ``cfg.index_level``. Builds, updates and commits all
+    aggregate through it, so every generation's meta has one schema and
+    one column order (and so its scans share compiled classes)."""
+    xcols = [f"x{j}" for j in range(cfg.dims)]
+    return points.groupBy(cell_col(F.col("morton"), cfg.dims, cfg.index_level, cfg.grid_bits).alias("cell")).agg(
+        F.count(F.lit(1)).alias("cnt"),
+        *[F.min(c).alias(f"mn{j}") for j, c in enumerate(xcols)],
+        *[F.max(c).alias(f"mx{j}") for j, c in enumerate(xcols)],
+    )
 
 
 def release_rdd_ids(spark, ids) -> None:

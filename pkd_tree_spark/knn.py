@@ -50,6 +50,13 @@ Both run the same candidate join (_candidate_join), exhaustive branch and
 termination rule, so rows and per-query stats do not depend on where the
 handoff happens.
 
+Size gates, each with a test that takes both sides: where a round runs
+(DRIVER_CELLS_MAX_QUERIES); broadcast or shuffled cell relations
+(CELLS_BCAST_ROWS, BROADCAST_BYTES) and exhaustive query sides
+(BROADCAST_BYTES); and how a driver round collects (DRIVER_COLLECT_MAX_ROWS:
+raw, exact count then raw, or a per-query top-k in Spark first). None
+changes a row or a stat.
+
 Skew adaptivity (the kd-tree's density-adaptive depth, which a fixed grid
 lacks): a per-query level is chosen from the driver-memoized skeleton
 (SpatialIndex.meta_np — index state, like the reference's tree depth) by
@@ -84,7 +91,8 @@ V3 introspection (validation.hpp:72-124, visited counter nn_search.hpp:85):
 with return_stats=True the result is accompanied by a per-query stats
 DataFrame (qid, rounds, cand_rows) — ring rounds taken and TOTAL candidate
 rows scanned across all rounds (cumulative, carried with the pending query).
-Queries in an empty index produce no result row and no stats row.
+Queries in an empty index produce no result row and no stats row. Tests and
+tools/gen_plans.py read a round's plan by wrapping _candidate_join.
 """
 
 from __future__ import annotations
@@ -110,12 +118,6 @@ BROADCAST_BYTES = 128 << 20
 # a round whose offset mesh (2r+1)^d exceeds this switches to an exhaustive
 # filtered scan (see module docstring); 2^18 cells * 8B = 2MB per query mesh
 MESH_CAP_LOG2 = 18.0
-# each distributed round collects the shells' DISTINCT leaf ancestors
-# (bounded by the skeleton size, not the shell-cell count) so that
-# _candidate_join can pre-filter a level's points scan by their Morton
-# intervals where index.leaf_scan_pred finds that worth it. Skipped if the
-# distinct set somehow exceeds this cap.
-LEAF_COLLECT_CAP = 100_000
 # pending sets at or below this many queries run their rounds ON THE
 # DRIVER (one small Arrow collect of the pending set, numpy shell
 # resolution, local cell relations) instead of mapInPandas on executors:
@@ -152,10 +154,12 @@ _ROWS_COLS = ["qid", "rn", "key", "span_idx", "dist2"]
 _ROWS_SCHEMA = "qid long, rn long, key long, span_idx long, dist2 long"
 _ENTRY_COLS = ["dist2", "key", "span_idx"]
 
-# distributed top-k entries are THREE LONGS — no doc_id string: (key,
-# span_idx) is the unique PointID, so (dist2, key, span_idx) is the same
-# total order the reference's bounded queue uses, and ~10^8 candidate
-# entries per round carry 24 bytes instead of a heap string each (the
+# distributed top-k entries are THREE LONGS — no doc_id string: (dist2,
+# key, span_idx) is the total order the reference's bounded queue uses.
+# (key, span_idx) is not a unique row id, but rows sharing it are full
+# duplicates (same doc_id and coordinates, from repeated lineitem keys), so
+# ties among them are unobservable. ~10^8 candidate entries per round
+# carry 24 bytes instead of a heap string each (the
 # string made the agg allocation-bound at 38.4M pts: 300M candidate structs
 # -> GC, not compute). The driver rounds collect doc_id with their (small)
 # candidates; rows finished or carried out of distributed rounds get it
@@ -402,18 +406,16 @@ def _leaf_ancestors(lvl: np.ndarray, cell: np.ndarray, d: int, L: int) -> np.nda
 
 
 def _level_stats(
-    lvl: np.ndarray, n: np.ndarray, leaf: np.ndarray | None
-) -> tuple[dict[int, int], dict[int, np.ndarray] | None]:
+    lvl: np.ndarray, n: np.ndarray, leaf: np.ndarray
+) -> tuple[dict[int, int], dict[int, np.ndarray]]:
     """(cell rows per lvl, distinct leaf ancestors per lvl) of one round's
-    resolved shell cells, from (lvl, leaf, n) group rows; ``leaf=None``
-    means the leaf sets are unknown (no scan pre-filter)."""
+    resolved shell cells, from (lvl, leaf, n) group rows."""
     counts: dict[int, int] = {}
-    leaves: dict[int, np.ndarray] | None = None if leaf is None else {}
+    leaves: dict[int, np.ndarray] = {}
     for lv in np.unique(lvl):
         m = lvl == lv
         counts[int(lv)] = int(n[m].sum())
-        if leaves is not None:
-            leaves[int(lv)] = np.unique(leaf[m])
+        leaves[int(lv)] = np.unique(leaf[m])
     return counts, leaves
 
 
@@ -421,7 +423,7 @@ def _candidate_join(
     pts_narrow: DataFrame,
     cell_rel,
     lvl_counts: dict[int, int],
-    leaves: dict[int, np.ndarray] | None,
+    leaves: dict[int, np.ndarray],
     mnp: dict,
     d: int,
     kb: int,
@@ -463,9 +465,7 @@ def _candidate_join(
     for levels in ([-1] if -1 in lvl_counts else [], fine):
         if not levels:
             continue
-        pred = None if leaves is None else leaf_scan_pred(
-            mnp, np.unique(np.concatenate([leaves[lv] for lv in levels])), leaf_shift, batch_rows
-        )
+        pred = leaf_scan_pred(mnp, np.unique(np.concatenate([leaves[lv] for lv in levels])), leaf_shift, batch_rows)
         p = pts_narrow if pred is None else pts_narrow.where(pred)
         if levels == [-1]:
             p = p.withColumn("pcell", F.shiftrightunsigned("morton", leaf_shift))
@@ -540,7 +540,6 @@ def _knn_driver(
     k: int,
     rnd0: int,
     max_rounds: int,
-    plan_log: list | None,
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
     """Driver rounds rnd0..max_rounds of the ring loop, for a pending set
     ``st`` (qid, q*, level, r, cnt) with carried top-k entries ``carried``
@@ -580,7 +579,6 @@ def _knn_driver(
         lv = st["level"].to_numpy(np.int64)
         exh = (d * np.log2(2.0 * rv + 1.0)) > MESH_CAP_LOG2
         parts: list[DataFrame] = []
-        lvl_counts: dict[int, int] = {}
         est = 0
         if (~exh).any():
             sub = st.loc[~exh, ["qid", *qcols, "level", "r"]]
@@ -606,15 +604,7 @@ def _knn_driver(
             est += int(exh.sum()) * total_pts
         new_sizes = None
         if parts:
-            cand = _union(parts)
-            if plan_log is not None:
-                plan_log.append(
-                    {
-                        "plan": str(cand._jdf.queryExecution().optimizedPlan()),
-                        "lvl_counts": dict(lvl_counts),
-                    }
-                )
-            sel = cand.select(
+            sel = _union(parts).select(
                 "qid",
                 dist2,
                 F.col("key").cast("long").alias("key"),
@@ -746,7 +736,6 @@ def knn(
     adaptive: bool = True,
     target_candidates: int = 64,
     return_stats: bool = False,
-    plan_log: list | None = None,
 ):
     """Exact batch kNN. queries: pandas OR Spark DataFrame (qid, q0..q{d-1})
     int64 — the DataFrame path is the scale path (a large query set never
@@ -764,10 +753,7 @@ def knn(
     With return_stats a distributed round's candidate counts run as ONE
     extra narrow hash-count pass over the candidate join (the window top-k
     can't produce exact group counts without forfeiting its map-side
-    limit); without stats such a round is single-pass. ``plan_log``, if a
-    list, collects the optimized plan text of each round's candidate join
-    (test/diagnostic hook — lets callers assert plan shape, e.g. no
-    points-side Generate).
+    limit); without stats such a round is single-pass.
     """
     spark = index.points.sparkSession
     cfg: EngineConfig = index.cfg
@@ -803,7 +789,7 @@ def knn(
         st["cnt"] = np.int64(0)
         carried = pd.DataFrame({c: pd.Series(dtype="int64") for c in ("qid", *_ENTRY_COLS)})
         carried["doc_id"] = pd.Series(dtype=object)
-        res_pd, stats_pd = _knn_driver(index, st, carried, k, 1, max_rounds, plan_log)
+        res_pd, stats_pd = _knn_driver(index, st, carried, k, 1, max_rounds)
         return _finish(index, [], res_pd, stats_pd, return_stats)
 
     if isinstance(queries, pd.DataFrame):
@@ -816,8 +802,7 @@ def knn(
     bc_meta = spark.sparkContext.broadcast(mnp)
     try:
         return _knn_rounds(
-            index, qdf, bc_meta, k, level, cap, max_rounds, adaptive, target_candidates,
-            return_stats, plan_log,
+            index, qdf, bc_meta, k, level, cap, max_rounds, adaptive, target_candidates, return_stats
         )
     finally:
         # every frame the result derives from is checkpointed: the lazy
@@ -836,7 +821,6 @@ def _knn_rounds(
     adaptive: bool,
     target_candidates: int,
     return_stats: bool,
-    plan_log: list | None,
 ):
     """The ring loop's distributed rounds over the query frame ``qdf``
     (qid, q*), until the pending set is small enough for _knn_driver."""
@@ -908,14 +892,13 @@ def _knn_rounds(
             ).toPandas().astype("int64")
             st = flat.drop_duplicates("qid")[["qid", *qcols, "level", "r", "cnt"]].reset_index(drop=True)
             carried = flat.loc[flat["dist2"] >= 0, ["qid", *_ENTRY_COLS]].assign(doc_id=None).reset_index(drop=True)
-            res_pd, stats_pd = _knn_driver(index, st, carried, k, rnd, max_rounds, plan_log)
+            res_pd, stats_pd = _knn_driver(index, st, carried, k, rnd, max_rounds)
             break
 
         exh = _exh_cond(d)
         branches: list[DataFrame] = []
         cnt_parts: list[DataFrame] = []  # stats-only: candidate rows per qid
         cells = None
-        lvl_counts: dict[int, int] = {}
 
         # --- mesh branch: shells resolved against the skeleton, joined by
         # _candidate_join; the query coordinates arrive by a qside join
@@ -924,29 +907,18 @@ def _knn_rounds(
             cells = mesh_pend.select("qid", *qcols, "level", "r").mapInPandas(
                 _gen_cells, schema="qid long, lvl int, cell long"
             ).persist()
-            # ONE driver action serves both the per-level shell-cell counts
-            # and the leaf sets: group by (lvl, leaf-ancestor) — bounded by
-            # skeleton x levels, never by shell-cell count (r5 ran a second
-            # full distinct+collect over the shell table every round)
+            # ONE Arrow collect serves both the per-level shell-cell counts
+            # and the leaf sets: group by (lvl, leaf-ancestor). Every
+            # resolved cell's leaf ancestor is an occupied skeleton cell
+            # (_resolved_cells), so the rows are at most the round's
+            # distinct levels x META_MEMO_CELLS, never the shell-cell count
+            # (r5 ran a second full distinct+collect over the shell table
+            # every round)
             anc = F.when(F.col("lvl") < 0, F.col("cell")).otherwise(
                 F.expr(f"shiftrightunsigned(cell, CAST({d} * (lvl - {L}) AS INT))")
             )
-            rows = (
-                cells.groupBy("lvl", anc.alias("leaf"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .limit(LEAF_COLLECT_CAP + 1)
-                .collect()
-            )
-            leaf = None
-            if len(rows) > LEAF_COLLECT_CAP:  # overflow: counts only, no scan pre-filter
-                rows = cells.groupBy("lvl").agg(F.count(F.lit(1)).alias("n")).collect()
-            else:
-                leaf = np.array([r["leaf"] for r in rows], dtype=np.int64)
-            lvl_counts, leaves = _level_stats(
-                np.array([r["lvl"] for r in rows], dtype=np.int64),
-                np.array([r["n"] for r in rows], dtype=np.int64),
-                leaf,
-            )
+            g = cells.groupBy("lvl", anc.alias("leaf")).agg(F.count(F.lit(1)).alias("n")).toPandas()
+            lvl_counts, leaves = _level_stats(*(g[c].to_numpy(np.int64) for c in ("lvl", "n", "leaf")))
             mesh_parts = _candidate_join(
                 pts_narrow, lambda levels: cells.where(F.col("lvl").isin(levels)),
                 lvl_counts, leaves, mnp, d, kb, L, 3, batch_rows,
@@ -970,17 +942,6 @@ def _knn_rounds(
 
         if branches:
             cand = _union(branches)
-            if plan_log is not None:
-                # lvl_counts is the structural evidence: lvl==-1 rows take
-                # the no-generate leaf equi-join; only shared fine levels
-                # ever explode the candidate table
-                plan_log.append(
-                    {
-                        "plan": str(cand._jdf.queryExecution().optimizedPlan()),
-                        "lvl_counts": dict(lvl_counts),
-                    }
-                )
-
             # WINDOW top-k (nn_search_helpers.h:18-93 as a window-group
             # limit): the rn<=k filter on a rank-only window lets Spark
             # insert WindowGroupLimit(Partial) below the shuffle — a

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import contextlib
 import os
+from unittest import mock
 
 import pandas as pd
 import pytest
@@ -105,3 +107,25 @@ def compiles(spark, fn):
     before = hist.getCount()
     out = fn()
     return out, hist.getCount() - before
+
+
+@contextlib.contextmanager
+def candidate_joins():
+    """Record every kNN round's candidate join, driver and distributed
+    rounds alike, by wrapping knn._candidate_join: yields a list that gets
+    one {"lvl_counts", "plan"} entry per round with a mesh branch, the plan
+    being the optimized logical plan of the union of the returned parts."""
+    from pkd_tree_spark import knn as K
+
+    seen: list[dict] = []
+    real = K._candidate_join
+
+    def spy(pts_narrow, cell_rel, lvl_counts, *args):
+        parts = real(pts_narrow, cell_rel, lvl_counts, *args)
+        if parts:
+            plan = str(K._union(parts)._jdf.queryExecution().optimizedPlan())
+            seen.append({"lvl_counts": dict(lvl_counts), "plan": plan})
+        return parts
+
+    with mock.patch.object(K, "_candidate_join", spy):
+        yield seen

@@ -132,3 +132,35 @@ def test_meta_totals_read_the_skeleton(spark, cfg):
         assert (pruned is not None) == engages
         if engages:
             assert pruned.count() < want_val["n_points"]
+
+
+def test_build_staged_input_matches_unstaged(spark, cfg, monkeypatch):
+    """Both sides of STAGE_INPUT_BYTES. With the gate at -1 the build
+    stages its encoded input (a DISK_ONLY localCheckpoint) before the
+    range shuffle; the sf0.001 input is far below the real gate, so the
+    default build does not. Both builds must give the same points in the
+    same Morton order (rows that share a Morton key may swap: the range
+    bounds come from a sample of the input) and the same meta;
+    release_staged() then frees the staged RDD."""
+    import pkd_tree_spark.index as I
+    from pkd_tree_spark.documents import load_points
+
+    def snapshot(ix):
+        pts = ix.points.toPandas()  # partition order
+        assert pts["morton"].is_monotonic_increasing
+        meta = ix.meta.toPandas().sort_values("cell", ignore_index=True)
+        return pts.sort_values(list(pts.columns), ignore_index=True), meta
+
+    pts = load_points(spark, SF_DIR, dims=2, dist="uniform")
+    plain = I.SpatialIndex.build(pts, cfg, persist=False)
+    assert plain._staged_ids == []
+    monkeypatch.setattr(I, "STAGE_INPUT_BYTES", -1)
+    staged = I.SpatialIndex.build(pts, cfg, persist=False)
+    [rid] = staged._staged_ids
+    held = spark.sparkContext._jsc.getPersistentRDDs()
+    assert held.get(rid) is not None
+    for got, want in zip(snapshot(staged), snapshot(plain)):
+        pd.testing.assert_frame_equal(got, want)
+    staged.release_staged()
+    assert staged._staged_ids == []
+    assert spark.sparkContext._jsc.getPersistentRDDs().get(rid) is None

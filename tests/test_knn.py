@@ -14,7 +14,7 @@ from pkd_tree_spark.index import SpatialIndex
 from pkd_tree_spark.knn import auto_knn_level, knn
 from pkd_tree_spark.ranges import range_count_boxes
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, candidate_joins
 
 
 def _kth_oracle(pts: pd.DataFrame, queries: pd.DataFrame, k: int) -> dict[int, int]:
@@ -145,10 +145,10 @@ def test_knn_distributed_fixed_level_matches_driver(request, cfg, monkeypatch, g
     queries = FX.knn_fixtures(16, 2)
     want = _sorted(knn(idx, queries, k=10, level=lvl, adaptive=False))
     monkeypatch.setattr(K, "DRIVER_CELLS_MAX_QUERIES", 0)
-    plans: list = []
-    got = _sorted(knn(idx, queries, k=10, level=lvl, adaptive=False, plan_log=plans))
+    with candidate_joins() as plans:
+        got = _sorted(knn(idx, queries, k=10, level=lvl, adaptive=False))
     pd.testing.assert_frame_equal(got, want)
-    assert plans, "plan probe should capture at least one round"
+    assert plans, "the spy should capture at least one round"
     if grain == "coarse":
         for p in plans:
             assert set(p["lvl_counts"]) <= {-1}, p["lvl_counts"]
@@ -371,6 +371,138 @@ def test_knn_cells_join_over_gate_equivalence(spark, cfg, index_varden):
             b, sb = _sorted(res_b), st_b.toPandas().sort_values("qid").reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
     pd.testing.assert_frame_equal(sa, sb)
+
+
+def test_knn_driver_count_then_collect_matches_raw(index_varden, monkeypatch):
+    """The middle rung of _knn_driver's collect ladder: the metadata
+    estimate is over DRIVER_COLLECT_MAX_ROWS (forced through
+    _cand_estimate) while the exact count is under it, so each round runs
+    one exact per-qid count and then collects its candidates raw. Rows and
+    stats must equal the raw path's, at one more collect per round and
+    with no window top-k (the third rung)."""
+    from unittest import mock
+
+    import pkd_tree_spark.knn as K
+
+    queries = FX.knn_fixtures(32, 2)
+    knn(index_varden, queries, k=10)  # warm: skeleton memo, pruned-table decision
+    cls = type(index_varden.points)
+    real = cls.toPandas
+
+    def run():
+        windows: list[bool] = []
+
+        def recording(self):
+            windows.append("Window" in self._jdf.queryExecution().optimizedPlan().toString())
+            return real(self)
+
+        with mock.patch.object(cls, "toPandas", recording):
+            res, st = knn(index_varden, queries, k=10, return_stats=True)
+        return _sorted(res), st.toPandas().sort_values("qid").reset_index(drop=True), windows
+
+    raw, raw_st, raw_collects = run()
+    monkeypatch.setattr(K, "_cand_estimate", lambda *a: K.DRIVER_COLLECT_MAX_ROWS + 1)
+    got, got_st, collects = run()
+    rounds = int(raw_st["rounds"].max())
+    assert raw_collects == [False] * rounds
+    assert collects == [False] * (2 * rounds)
+    pd.testing.assert_frame_equal(got, raw)
+    pd.testing.assert_frame_equal(got_st, raw_st)
+
+
+# ---------------------------------------------------------------------------
+# high dimension: mesh rounds, then the exhaustive round; BROADCAST_BYTES
+# ---------------------------------------------------------------------------
+
+_D = 7
+
+
+@pytest.fixture(scope="module")
+def index_7d(spark):
+    """2000 uniform random 7-d points and 8 queries. At the fixed level 3
+    a query's rings r = 1, 2 run offset meshes (3^7, 5^7 cells) and r = 4
+    would need 9^7 > 2^MESH_CAP_LOG2, so a query still pending then takes
+    the exhaustive round."""
+    from pkd_tree_spark.config import EngineConfig
+
+    rng = np.random.default_rng(16)
+    x, q = rng.integers(0, 1 << 20, size=(2000, _D)), rng.integers(0, 1 << 20, size=(8, _D))
+    pts = pd.DataFrame({
+        "doc_id": [f"d{i}" for i in range(len(x))], "span_idx": 0, "key": np.arange(len(x)),
+        **{f"x{j}": x[:, j] for j in range(_D)},
+    })
+    queries = pd.DataFrame({"qid": np.arange(len(q)), **{f"q{j}": q[:, j] for j in range(_D)}})
+    cfg = EngineConfig(dims=_D, index_level=2, knn_level=3, partitions=4)
+    idx = SpatialIndex.build(spark.createDataFrame(pts), cfg)
+    yield idx, pts, queries
+    idx.release()
+
+
+def _brute_nd(pts: pd.DataFrame, queries: pd.DataFrame, k: int) -> pd.DataFrame:
+    """numpy brute force in (dist2, key, span_idx) order, as _sorted lays out."""
+    x = pts[[f"x{j}" for j in range(_D)]].to_numpy(np.int64)
+    rows = []
+    for qid, *q in queries[["qid", *[f"q{j}" for j in range(_D)]]].itertuples(index=False):
+        d2 = ((x - np.array(q)) ** 2).sum(axis=1)
+        top = np.lexsort((pts["span_idx"], pts["key"], d2))[:k]
+        rows += [(qid, rn, pts["key"].iat[i], pts["span_idx"].iat[i], d2[i]) for rn, i in enumerate(top, 1)]
+    return pd.DataFrame(rows, columns=_RESCOLS).astype("int64")
+
+
+def _knn_7d(idx, queries, monkeypatch):
+    """kNN at level 3 with the round's exhaustive query counts and the
+    executed plan of each exhaustive part."""
+    import pkd_tree_spark.knn as K
+
+    exh: list[tuple[int, str]] = []
+    real = K._exhaustive_part
+
+    def spy(pts_narrow, exq, n_exq, *args):
+        part = real(pts_narrow, exq, n_exq, *args)
+        exh.append((n_exq, part._jdf.queryExecution().executedPlan().toString()))
+        return part
+
+    with monkeypatch.context() as m:
+        m.setattr(K, "_exhaustive_part", spy)
+        res, st = knn(idx, queries, k=5, level=3, adaptive=False, return_stats=True)
+    return _sorted(res), st.toPandas().sort_values("qid").reset_index(drop=True), exh
+
+
+@pytest.mark.parametrize("loop", ["driver", "distributed"])
+def test_knn_7d_exhaustive_round_matches_brute_force(index_7d, monkeypatch, loop):
+    """Mesh rounds then the exhaustive round, in the driver rounds and in
+    the distributed rounds (DRIVER_CELLS_MAX_QUERIES at 0), against numpy
+    brute force."""
+    import pkd_tree_spark.knn as K
+
+    idx, pts, queries = index_7d
+    if loop == "distributed":
+        monkeypatch.setattr(K, "DRIVER_CELLS_MAX_QUERIES", 0)
+    got, st, exh = _knn_7d(idx, queries, monkeypatch)
+    pd.testing.assert_frame_equal(got, _brute_nd(pts, queries, 5))
+    assert exh and st["rounds"].max() == 3, (exh, st)
+
+
+@pytest.mark.parametrize("loop", ["driver", "distributed"])
+def test_knn_over_broadcast_budget_matches(index_7d, monkeypatch, loop):
+    """Both sides of BROADCAST_BYTES. Within it the exhaustive query side
+    is broadcast (a BroadcastNestedLoopJoin); at 0 it takes the
+    shuffle_replicate_nl hint, a CartesianProduct, and never a
+    BroadcastNestedLoopJoin (VERDICT r6 #5). In the distributed rounds the
+    mesh rounds' query side then joins unhinted as well. Rows and stats
+    must not change."""
+    import pkd_tree_spark.knn as K
+
+    idx, _, queries = index_7d
+    if loop == "distributed":
+        monkeypatch.setattr(K, "DRIVER_CELLS_MAX_QUERIES", 0)
+    want, want_st, exh_in = _knn_7d(idx, queries, monkeypatch)
+    monkeypatch.setattr(K, "BROADCAST_BYTES", 0)
+    got, got_st, exh_over = _knn_7d(idx, queries, monkeypatch)
+    pd.testing.assert_frame_equal(got, want)
+    pd.testing.assert_frame_equal(got_st, want_st)
+    assert exh_in and all("BroadcastNestedLoopJoin" in p for _, p in exh_in)
+    assert exh_over and all("CartesianProduct" in p and "BroadcastNestedLoopJoin" not in p for _, p in exh_over)
 
 
 # ---------------------------------------------------------------------------

@@ -253,6 +253,25 @@ def test_exact_rows_delete_matches_key_delete(spark, cfg, index_uniform, points_
     pd.testing.assert_frame_equal(mr, mk, check_like=True)
     assert _counts(by_rows) == _box_oracle(points_uniform)
 
+    # shared identities: repeated lineitem keys give full duplicates (same
+    # doc_id and coordinates) that share (key, span_idx). An exact batch
+    # carries every copy of each identity it names, as the contract asks
+    ids = points_uniform.iloc[5::90][["key", "span_idx"]].drop_duplicates()
+    named = points_uniform.merge(ids, on=["key", "span_idx"])
+    assert len(named) > len(ids)  # the batch really holds shared identities
+    by_key = merge_delete(index_uniform, spark.createDataFrame(ids[["key"]]))
+    by_rows = merge_delete(
+        index_uniform, spark.createDataFrame(named[["key", "span_idx", "x0", "x1"]]), exact_rows=True
+    )
+    mk = by_key.meta.toPandas().set_index("cell").sort_index()
+    mr = by_rows.meta.toPandas().set_index("cell").sort_index()
+    pd.testing.assert_frame_equal(mr, mk, check_like=True)
+    left = points_uniform.merge(ids, on=["key", "span_idx"], how="left", indicator=True)
+    want = _box_oracle(left[left["_merge"] == "left_only"])
+    assert _counts(by_rows) == _counts(by_key) == want
+    v = by_rows.validate()
+    assert v["meta_sum"] == v["n_points"] == len(points_uniform) - len(named)
+
 
 def test_delete_broadcast_anti_join_no_points_shuffle(spark, cfg, index_uniform):
     """The 1%-scale delete plan: the key set is broadcast, so the surviving
@@ -629,7 +648,7 @@ def test_retile_hot_second_run_splits_new_hot_bucket(tmp_path, spark, cfg, index
     and makes a second one hot must split BOTH and refresh their meta (a
     stale per-bucket marker once skipped the first bucket, and a stale
     "meta refreshed" marker skipped the whole refresh)."""
-    from pkd_tree_spark.updates import _meta_of
+    from pkd_tree_spark.index import meta_of
 
     target = 500
     p = PersistentIndex(path=str(tmp_path / "idx"), cfg=cfg)
@@ -656,7 +675,7 @@ def test_retile_hot_second_run_splits_new_hot_bucket(tmp_path, spark, cfg, index
     shift = cfg.dims * (cfg.index_level - p.bucket_level)
     hot_cells = F.shiftrightunsigned("cell", shift).isin([int(b) for b in hot])
     got = loaded.meta.where(hot_cells).toPandas().sort_values("cell").reset_index(drop=True)
-    want = _meta_of(loaded.points, cfg).where(hot_cells).toPandas().sort_values("cell").reset_index(drop=True)
+    want = meta_of(loaded.points, cfg).where(hot_cells).toPandas().sort_values("cell").reset_index(drop=True)
     pd.testing.assert_frame_equal(got, want, check_like=True, check_dtype=False)
     assert loaded.points.count() == len(points_uniform) + 6000
 

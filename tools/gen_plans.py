@@ -118,10 +118,11 @@ def report_plan(spark, ix, sf) -> str:
 def knn_round1_plan(spark, ix, sf) -> str:
     from pkd_tree_spark import fixtures as FX
     from pkd_tree_spark.knn import knn
+    from tests.conftest import candidate_joins
 
-    plans: list = []
-    knn(ix, FX.knn_fixtures(32, 2), k=10, plan_log=plans).count()
-    return plans[0]["plan"]
+    with candidate_joins() as rounds:
+        knn(ix, FX.knn_fixtures(32, 2), k=10).count()
+    return rounds[0]["plan"]
 
 
 def window_topk_plan(spark, ix, sf) -> str:
@@ -233,8 +234,8 @@ SECTIONS = [
     ),
     (
         "kNN round-1 candidate join",
-        "Round-1 candidate join (optimized logical plan, via the knn "
-        "plan_log probe): shells leaf-resolved; lvl==-1 rows take the "
+        "Round-1 candidate join (optimized logical plan of the parts "
+        "knn._candidate_join returns, read by wrapping it): shells leaf-resolved; lvl==-1 rows take the "
         "no-generate leaf equi-join; the join projects doc_id, which the "
         "driver rounds collect with the candidates (no re-attach query "
         "for a batch finished on the driver).",
