@@ -19,10 +19,14 @@ bench.py, and appends its record to a JSON file under BENCH/.
                  shuffle+persist / meta agg) for uniform AND varden at
                  this core count — run it at 4 and 16 cores to localize
                  the varden build's 0.50 scaling efficiency.
-  range_scan     both sides of ranges.DRIVER_FINISH_MAX_ROWS (driver-
+  range_scan     both sides of index.DRIVER_FINISH_MAX_ROWS (driver-
                  finished boundary scan vs leaf join) for 64/1000/4000
                  boxes over 0.1M-4.8M synthetic points, interleaved pairs;
                  the bound is patched in-process per call.
+  knn_scan       both sides of the same bound for kNN driver rounds (one
+                 collected scan matched in numpy vs the candidate join)
+                 for 64-20,000 queries over 0.1M-1.6M synthetic points,
+                 interleaved pairs; the bound is patched in-process.
 """
 
 from __future__ import annotations
@@ -339,8 +343,25 @@ def _mixed_boxes(nb: int, n: int):
     return out
 
 
+def _synthetic_index(spark, dist: str, n: int):
+    """A materialized index over ``n`` points from synthetic keys
+    (perfbench's recipe; SF_DIR and REPLICATE are not read)."""
+    from pyspark.sql import functions as F
+
+    from pkd_tree_spark.config import EngineConfig
+    from pkd_tree_spark.documents import load_points
+    from pkd_tree_spark.index import SpatialIndex
+
+    cfg = EngineConfig(dims=2, index_level=7, knn_level=6, partitions=max(2 * CPUS, n // 150_000))
+    keys = spark.range(0, n, 1, CPUS).select((F.lit(7_000_001) + F.col("id") * 3).alias("k"))
+    ix = SpatialIndex.build(load_points(spark, "", dims=2, dist=dist, keys_df=keys), cfg)
+    ix.points.count()
+    ix.release_staged()
+    return ix
+
+
 def study_range_scan() -> dict:
-    """Both sides of ranges.DRIVER_FINISH_MAX_ROWS for driver-resolved
+    """Both sides of index.DRIVER_FINISH_MAX_ROWS for driver-resolved
     range counts: the boundary scan collected and finished on the driver
     (bound patched to 2^62) against the leaf join (bound patched to 0),
     RANGE_SCAN_PAIRS interleaved pairs per (points, boxes) cell, first
@@ -350,37 +371,30 @@ def study_range_scan() -> dict:
     the skeleton, and the side the shipped bound picks."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import functions as F
 
+    from pkd_tree_spark import index as I
     from pkd_tree_spark import ranges as R
-    from pkd_tree_spark.config import EngineConfig
-    from pkd_tree_spark.documents import load_points
-    from pkd_tree_spark.index import SpatialIndex
 
     spark = _spark()
-    shipped = R.DRIVER_FINISH_MAX_ROWS
+    shipped = I.DRIVER_FINISH_MAX_ROWS
     rec = {"study": "range_scan", "cpus": CPUS, "pairs": RANGE_SCAN_PAIRS, "bound": shipped, "cells": []}
 
     def run(ix, bx, bound):
-        R.DRIVER_FINISH_MAX_ROWS = bound
+        I.DRIVER_FINISH_MAX_ROWS = bound
         t0 = time.perf_counter()
         out = R.range_count_boxes(ix, bx).toPandas()
         return time.perf_counter() - t0, out.set_index("qid")["cnt"].sort_index()
 
     try:
         for dist, n in RANGE_SCAN_SIZES:
-            cfg = EngineConfig(dims=2, index_level=7, knn_level=6, partitions=max(2 * CPUS, n // 150_000))
-            keys = spark.range(0, n, 1, CPUS).select((F.lit(7_000_001) + F.col("id") * 3).alias("k"))
-            ix = SpatialIndex.build(load_points(spark, "", dims=2, dist=dist, keys_df=keys), cfg)
-            ix.points.count()
-            ix.release_staged()
+            ix = _synthetic_index(spark, dist, n)
             for nb in RANGE_SCAN_BOXES:
                 bx = _mixed_boxes(nb, n)
                 _, res = R._resolve(ix, "box", bx, None, count=True)
                 if not isinstance(res, pd.DataFrame):  # resolved in the executors: the join either way
                     continue
                 rows = R._scan(ix, res, ["x0", "x1"])[1]
-                pairs = R._pairs(ix.meta_np(), res)
+                pairs = I.leaf_rows(ix.meta_np(), res["leaf"].to_numpy())
                 walls = {"driver": [], "join": []}
                 _, a = run(ix, bx, 1 << 62)  # warm both sides, and check them
                 _, b = run(ix, bx, 0)
@@ -391,7 +405,7 @@ def study_range_scan() -> dict:
                 med = {k: float(np.median(v)) for k, v in walls.items()}
                 wins = sum(d < j for d, j in zip(walls["driver"], walls["join"]))
                 cell = {
-                    "dist": dist, "n_points": n, "partitions": cfg.partitions, "boxes": nb,
+                    "dist": dist, "n_points": n, "partitions": ix.cfg.partitions, "boxes": nb,
                     "scan_rows": rows, "pairs": pairs, "pulled": rows + pairs,
                     "shipped_side": "driver" if rows + pairs <= shipped else "join",
                     "driver_s": walls["driver"], "join_s": walls["join"],
@@ -402,7 +416,86 @@ def study_range_scan() -> dict:
                 rec["cells"].append(cell)
             ix.release()
     finally:
-        R.DRIVER_FINISH_MAX_ROWS = shipped
+        I.DRIVER_FINISH_MAX_ROWS = shipped
+    return rec
+
+
+KNN_SCAN_SIZES = (("uniform", 100_000), ("uniform", 400_000), ("uniform", 1_600_000), ("varden", 1_600_000))
+KNN_SCAN_QUERIES = (64, 1000, 4000, 20_000)
+KNN_SCAN_PAIRS = 5
+
+
+def study_knn_scan() -> dict:
+    """Both sides of index.DRIVER_FINISH_MAX_ROWS for kNN driver rounds:
+    each round's candidates from one collected scan matched in numpy
+    (bound patched to 2^62) against the collected candidate join (bound
+    patched to 0), KNN_SCAN_PAIRS interleaved pairs per (points, queries)
+    cell, first side alternating, on perfbench-style synthetic indexes.
+    Pandas query batches (varden queries on varden points), k = 10, the
+    kNN call plus its result collect timed. Each cell records every
+    round's scan rows and (row, query) pairs (the bound's inputs, exact
+    from the skeleton) and the side the shipped bound picks per round."""
+    import numpy as np
+
+    from pkd_tree_spark import fixtures as FX
+    from pkd_tree_spark import index as I
+    from pkd_tree_spark import knn as K
+
+    spark = _spark()
+    shipped = I.DRIVER_FINISH_MAX_ROWS
+    rec = {"study": "knn_scan", "cpus": CPUS, "pairs": KNN_SCAN_PAIRS, "bound": shipped, "k": 10, "cells": []}
+    rounds: list[list[int]] = []
+    real_scan, real_rows = K.leaf_scan, K.leaf_rows
+
+    def scan_spy(*a):
+        out = real_scan(*a)
+        rounds.append([out[1]])
+        return out
+
+    def rows_spy(*a):
+        out = real_rows(*a)
+        rounds[-1].append(out)
+        return out
+
+    def run(ix, q, bound):
+        I.DRIVER_FINISH_MAX_ROWS = bound
+        t0 = time.perf_counter()
+        res, st = K.knn(ix, q, k=10, return_stats=True)
+        out = res.toPandas()
+        wall = time.perf_counter() - t0
+        return wall, out.sort_values(["qid", "rn"], ignore_index=True), st.toPandas().sort_values("qid", ignore_index=True)
+
+    K.leaf_scan, K.leaf_rows = scan_spy, rows_spy
+    try:
+        for dist, n in KNN_SCAN_SIZES:
+            ix = _synthetic_index(spark, dist, n)
+            for nq in KNN_SCAN_QUERIES:
+                q = (FX.knn_fixtures_varden if dist == "varden" else FX.knn_fixtures)(nq, 2)
+                rounds.clear()
+                _, a, sa = run(ix, q, 1 << 62)  # warm both sides, and check them
+                pulled = [r + p for r, p in (x for x in rounds if len(x) == 2)]
+                _, b, sb = run(ix, q, 0)
+                assert a.equals(b) and sa.equals(sb), f"{dist} {n} {nq}: the two sides differ"
+                walls = {"scan": [], "join": []}
+                for i in range(KNN_SCAN_PAIRS):
+                    for side in (("scan", "join") if i % 2 == 0 else ("join", "scan")):
+                        walls[side].append(round(run(ix, q, 1 << 62 if side == "scan" else 0)[0], 4))
+                med = {k: float(np.median(v)) for k, v in walls.items()}
+                cell = {
+                    "dist": dist, "n_points": n, "partitions": ix.cfg.partitions, "queries": nq,
+                    "rounds": int(sa["rounds"].max()), "round_pulled": pulled,
+                    "shipped_sides": ["scan" if p <= shipped else "join" for p in pulled],
+                    "scan_s": walls["scan"], "join_s": walls["join"],
+                    "scan_p50_s": round(med["scan"], 4), "join_p50_s": round(med["join"], 4),
+                    "scan_over_join": round(med["scan"] / med["join"], 3),
+                    "scan_wins": sum(x < y for x, y in zip(walls["scan"], walls["join"])),
+                }
+                print(json.dumps(cell), file=sys.stderr)
+                rec["cells"].append(cell)
+            ix.release()
+    finally:
+        I.DRIVER_FINISH_MAX_ROWS = shipped
+        K.leaf_scan, K.leaf_rows = real_scan, real_rows
     return rec
 
 
@@ -414,6 +507,7 @@ def main():
         "ann": study_ann,
         "varden-profile": study_varden_profile,
         "range_scan": study_range_scan,
+        "knn_scan": study_knn_scan,
     }[study]
     rec = fn()
     rec["sf_dir"] = SF_DIR

@@ -429,6 +429,29 @@ def expand_ranges(i0: np.ndarray, i1: np.ndarray) -> tuple[np.ndarray, np.ndarra
     return np.cumsum(steps), n
 
 
+def morton_runs(morton: np.ndarray, cells: np.ndarray, shifts) -> tuple[np.ndarray, np.ndarray]:
+    """The rows of each Morton-prefix cell among collected rows: cell i
+    holds the rows whose ``morton >> shifts[i]`` equals ``cells[i]`` (a
+    scalar shift serves every cell). Returns (rows, counts) as
+    expand_ranges does, ``rows`` indexing ``morton`` as given. Rows are
+    sorted once, only when they arrive out of Morton order (an insert's
+    appended rows, a loaded index's files); each cell is then one
+    searchsorted run of its shifted keys, never an interval end
+    ``(cell + 1) << shift``, which overflows int64 at dims * grid_bits = 63."""
+    order = None
+    if (morton[1:] < morton[:-1]).any():
+        order = np.argsort(morton, kind="stable")
+        morton = morton[order]
+    shifts = np.broadcast_to(np.asarray(shifts, dtype=np.int64), cells.shape)
+    i0, i1 = np.zeros(len(cells), dtype=np.int64), np.zeros(len(cells), dtype=np.int64)
+    for s in np.unique(shifts):
+        m = shifts == s
+        p = morton >> s
+        i0[m], i1[m] = np.searchsorted(p, cells[m]), np.searchsorted(p, cells[m], side="right")
+    rows, counts = expand_ranges(i0, i1)
+    return (rows if order is None else order[rows]), counts
+
+
 def _leaf_spans(meta: dict, sel: pd.DataFrame, d: int, L: int) -> tuple[np.ndarray, np.ndarray]:
     """Each cover cell's occupied level-L leaves as the index range
     [i0, i1) of the memoized meta's sorted cells (cells at a level are
@@ -468,6 +491,29 @@ def interior_counts_np(meta: dict, sel: pd.DataFrame, d: int, L: int) -> pd.Data
     out = pd.DataFrame({"qid": sel["qid"].to_numpy(dtype=np.int64), "cnt": meta["cum"][i1] - meta["cum"][i0]})
     out = out.groupby("qid", as_index=False)["cnt"].sum()
     return out[out["cnt"] > 0].astype({"qid": "int64", "cnt": "int64"})
+
+
+# A driver-resolved range count's boundary and a kNN driver round finish
+# on the driver from ONE collected scan (matching in numpy) while the rows
+# that scan returns plus the (row, query) pairs it tests, both from the
+# skeleton's prefix sums before any job (exact, but an upper bound for
+# kNN cells finer than index_level), stay within this; past it they join
+# in Spark. Both sides measured at local[4] in interleaved pairs:
+#  * range counts (bench_extra.py range_scan, BENCH/RANGE_SCAN_r14.json):
+#    the driver side took 0.37-0.81x the join's wall up to 1.9M rows +
+#    pairs, tied it at 1.7-2.2M (0.97-1.02x), lost from 2.6M (1.08-1.24x);
+#  * kNN (bench_extra.py knn_scan, BENCH/KNN_SCAN_r16.json): the scan side
+#    took 0.57-0.86x the join's wall in every cell up to 1.7M and first
+#    tied it at 2.6M (1.03x); past that the loose fine-cell pair bound no
+#    longer orders the cost (0.52-0.99x, but 1.26x at 20,000 varden
+#    queries), so one bound serves both.
+DRIVER_FINISH_MAX_ROWS = 2_000_000
+
+
+def leaf_rows(meta: dict, leaves: np.ndarray) -> int:
+    """The rows of the given occupied level-L leaves, a leaf counted once
+    per time it is given: exact from the prefix sums."""
+    return int(np.diff(meta["cum"])[np.searchsorted(meta["cells"], leaves)].sum())
 
 
 # Scan pre-filter rule (scan_intervals / leaf_scan_pred). Whole-stage

@@ -44,18 +44,27 @@ level, r, cnt) plus their carried top-k; only where a round runs varies:
     independent of query count;
   * once the pending set is at or below that size it is collected ONCE
     (carried top-k exploded into rows) and the remaining rounds run on the
-    DRIVER (_knn_driver): numpy shells and merge, one candidate collect
-    per round. Small batches start there.
-Both run the same candidate join (_candidate_join), exhaustive branch and
-termination rule, so rows and per-query stats do not depend on where the
-handoff happens.
+    DRIVER (_knn_driver): numpy shells and merge, ONE candidate collection
+    per round. Small batches start there. While a round's scan rows plus
+    the (row, query) pairs it must test fit index.DRIVER_FINISH_MAX_ROWS,
+    that collection is one pre-filtered scan of the candidate table, and
+    the shells meet their rows in numpy (_scan_candidates: the reference
+    visiting a leaf and computing its distances in place,
+    nn_search.hpp:81-126): one Spark job, no join. Larger rounds, and
+    rounds holding an exhaustive query, collect the candidate join.
+Every round yields its shell cells' rows (the candidate join's multiset,
+_candidate_join), and all share the exhaustive branch and termination
+rule, so rows and per-query stats do not depend on where the handoff
+happens or on which side of the bound a round runs.
 
 Size gates, each with a test that takes both sides: where a round runs
-(DRIVER_CELLS_MAX_QUERIES); broadcast or shuffled cell relations
+(DRIVER_CELLS_MAX_QUERIES); whether a driver round meets its shells in
+numpy from one scan or joins them (index.DRIVER_FINISH_MAX_ROWS, shared
+with the range count); broadcast or shuffled cell relations
 (CELLS_BCAST_ROWS, BROADCAST_BYTES) and exhaustive query sides
-(BROADCAST_BYTES); and how a driver round collects (DRIVER_COLLECT_MAX_ROWS:
-raw, exact count then raw, or a per-query top-k in Spark first). None
-changes a row or a stat.
+(BROADCAST_BYTES); and how a joined driver round collects
+(DRIVER_COLLECT_MAX_ROWS: raw, exact count then raw, or a per-query top-k
+in Spark first). None changes a row or a stat.
 
 Skew adaptivity (the kd-tree's density-adaptive depth, which a fixed grid
 lacks): a per-query level is chosen from the driver-memoized skeleton
@@ -106,7 +115,8 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from .config import EngineConfig
-from .index import SpatialIndex, leaf_scan_pred
+from . import index as I
+from .index import SpatialIndex, leaf_rows, leaf_scan, leaf_scan_pred, morton_runs
 from .zorder import morton_encode_np
 
 __all__ = ["auto_knn_level", "knn", "knn_join"]
@@ -142,9 +152,11 @@ DRIVER_CELLS_MAX_QUERIES = 20_000
 # with cores. 1M rows ≈ 24MB of relation — comfortably broadcastable when
 # under; straggler rounds and bench-sized batches stay broadcast/local.
 CELLS_BCAST_ROWS = 1_000_000
-# raw-collect cap for the driver rounds: rounds whose exact-from-metadata
-# candidate estimate exceeds this reduce per-query top-k in Spark (window
-# group limit) before collecting, instead of pulling raw candidates
+# raw-collect cap for the joined driver rounds (past
+# index.DRIVER_FINISH_MAX_ROWS, or holding an exhaustive query): rounds
+# whose exact-from-metadata candidate estimate exceeds this reduce
+# per-query top-k in Spark (window group limit) before collecting, instead
+# of pulling raw candidates
 DRIVER_COLLECT_MAX_ROWS = 3_000_000
 
 RESULT_SCHEMA = "qid long, rn long, key long, doc_id string, span_idx long, dist2 long"
@@ -533,6 +545,34 @@ def _cand_estimate(lvl: np.ndarray, anc: np.ndarray, mnp: dict, d: int, cb: int,
     return int(occ.sum())
 
 
+def _scan_candidates(tbl, st: pd.DataFrame, cells: pd.DataFrame, d: int, kb: int, L: int) -> pd.DataFrame:
+    """One driver round's candidates from ONE collected scan ``tbl`` (an
+    Arrow table of the candidate table's rows): the rows of each resolved
+    shell cell ``cells`` (qid, lvl, cell) are one Morton run of the scanned
+    rows (index.morton_runs; a cell at lvl > L is a prefix of its own
+    level, lvl == -1 a level-L leaf), and their exact int64 dist2 to the
+    cell's query in ``st`` is computed in numpy: the multiset the candidate
+    join yields. Returns (qid, dist2, key, span_idx, doc_id, row) with
+    doc_id unset and ``row`` the candidate's position in ``tbl``: strings
+    are made only for the rows that enter a top-k."""
+
+    def col(c: str) -> np.ndarray:
+        return tbl.column(c).to_numpy().astype(np.int64, copy=False)
+
+    lvl = cells["lvl"].to_numpy(np.int64)
+    shifts = d * (kb - np.where(lvl < 0, L, lvl))
+    rows, n = morton_runs(col("morton"), cells["cell"].to_numpy(np.int64), shifts)
+    qi = np.repeat(pd.Index(st["qid"]).get_indexer(cells["qid"]), n)
+    dist2 = np.zeros(len(rows), dtype=np.int64)
+    for j in range(d):
+        t = col(f"x{j}")[rows] - st[f"q{j}"].to_numpy(np.int64)[qi]
+        dist2 += t * t
+    return pd.DataFrame({
+        "qid": st["qid"].to_numpy(np.int64)[qi], "dist2": dist2, "key": col("key")[rows],
+        "span_idx": col("span_idx")[rows], "doc_id": None, "row": rows,
+    })
+
+
 def _knn_driver(
     index: SpatialIndex,
     st: pd.DataFrame,
@@ -545,15 +585,23 @@ def _knn_driver(
     ``st`` (qid, q*, level, r, cnt) with carried top-k entries ``carried``
     (qid, dist2, key, span_idx, doc_id). Shell resolution, top-k merge and
     ring termination run ON THE DRIVER; Spark contributes ONE candidate
-    collection per ring round (scan + local-relation broadcast join +
-    Arrow collect, doc_id included). Rounds whose metadata-estimated
-    candidate volume exceeds DRIVER_COLLECT_MAX_ROWS reduce per-query
-    top-k with the same WindowGroupLimit plan the distributed rounds use
-    before collecting, so the driver never holds more than ~pend*k rows
-    from such a round.
+    collection per ring round.
+
+    A round of mesh queries whose scan rows plus (row, query) pairs stay
+    within index.DRIVER_FINISH_MAX_ROWS — both from the skeleton before
+    any job: leaf_scan's rows, and the leaf occupancy under the resolved
+    cells (exact for coarse cells, an upper bound for fine ones) — is ONE
+    Spark job: one pre-filtered scan of the candidate table collected
+    through Arrow, matched to its shell cells in numpy (_scan_candidates).
+    Other rounds (past the bound, or holding an exhaustive query) collect
+    the candidate join (a local cell relation broadcast against the scan)
+    instead. Those whose metadata-estimated candidate volume exceeds
+    DRIVER_COLLECT_MAX_ROWS reduce per-query top-k with the same
+    WindowGroupLimit plan the distributed rounds use before collecting, so
+    the driver never holds more than ~pend*k rows from such a round.
 
     The candidate multiset per round is the distributed round's (same
-    _candidate_join / _exhaustive_part), the merge order is (dist2, key,
+    shell cells, _exhaustive_part), the merge order is (dist2, key,
     span_idx), and the termination rule is the same exact block bound
     (_block_gap2) plus the covered-mesh rule.
 
@@ -580,30 +628,40 @@ def _knn_driver(
         exh = (d * np.log2(2.0 * rv + 1.0)) > MESH_CAP_LOG2
         parts: list[DataFrame] = []
         est = 0
+        cand_pd = new_sizes = None
         if (~exh).any():
             sub = st.loc[~exh, ["qid", *qcols, "level", "r"]]
-            # the cell relations carry the query coordinates, so the
-            # candidate join needs no separate query-side join
-            cells_pdf = _resolved_cells(sub, d, cb, L, mnp).merge(sub[["qid", *qcols]], on="qid")
-            lvlv = cells_pdf["lvl"].to_numpy().astype(np.int64)
-            anc = _leaf_ancestors(lvlv, cells_pdf["cell"].to_numpy().astype(np.int64), d, L)
-            est += _cand_estimate(lvlv, anc, mnp, d, cb, L)
-            lvl_counts, leaves = _level_stats(lvlv, np.ones(len(lvlv), dtype=np.int64), anc)
+            cells_pdf = _resolved_cells(sub, d, cb, L, mnp)
+            lvlv = cells_pdf["lvl"].to_numpy(np.int64)
+            anc = _leaf_ancestors(lvlv, cells_pdf["cell"].to_numpy(np.int64), d, L)
+            scan = None
+            if len(anc) and not exh.any():
+                pred, rows = leaf_scan(mnp, anc, d * (kb - L), batch_rows)
+                if rows + leaf_rows(mnp, anc) <= I.DRIVER_FINISH_MAX_ROWS:
+                    scan = pts_narrow if pred is None else pts_narrow.where(pred)
+            if scan is not None:
+                tbl = scan.toArrow()
+                cand_pd = _scan_candidates(tbl, sub, cells_pdf, d, kb, L)
+            else:
+                est += _cand_estimate(lvlv, anc, mnp, d, cb, L)
+                lvl_counts, leaves = _level_stats(lvlv, np.ones(len(lvlv), dtype=np.int64), anc)
+                # the cell relations carry the query coordinates, so the
+                # candidate join needs no separate query-side join
+                cells_q = cells_pdf.merge(sub[["qid", *qcols]], on="qid")
 
-            def cell_rel(levels: list[int]) -> DataFrame:
-                return spark.createDataFrame(
-                    cells_pdf.loc[cells_pdf["lvl"].isin(levels), ["qid", "lvl", "cell", *qcols]],
-                    schema=f"qid long, lvl int, cell long, {qschema}",
-                )
+                def cell_rel(levels: list[int]) -> DataFrame:
+                    return spark.createDataFrame(
+                        cells_q.loc[cells_q["lvl"].isin(levels), ["qid", "lvl", "cell", *qcols]],
+                        schema=f"qid long, lvl int, cell long, {qschema}",
+                    )
 
-            parts = _candidate_join(pts_narrow, cell_rel, lvl_counts, leaves, mnp, d, kb, L, 3 + d, batch_rows)
+                parts = _candidate_join(pts_narrow, cell_rel, lvl_counts, leaves, mnp, d, kb, L, 3 + d, batch_rows)
         if exh.any():
             ex = st.loc[exh, ["qid", *qcols, "level", "r"]]
             exq = spark.createDataFrame(ex, schema=f"qid long, {qschema}, level int, r long")
             parts.append(_exhaustive_part(pts_narrow, exq, int(exh.sum()), d, cb))
             est += int(exh.sum()) * total_pts
-        new_sizes = None
-        if parts:
+        if cand_pd is None and parts:
             sel = _union(parts).select(
                 "qid",
                 dist2,
@@ -632,16 +690,13 @@ def _knn_driver(
                     )
             else:
                 cand_pd = sel.toPandas()
-                new_sizes = cand_pd.groupby("qid").size()
-        else:
+        elif cand_pd is None:
             cand_pd = carried.iloc[0:0]
+        if new_sizes is None:
+            new_sizes = cand_pd.groupby("qid").size()
 
         # ---- driver-side merge + termination (exact int64 throughout) ----
-        if new_sizes is not None:
-            st["cnt"] = (
-                st["cnt"].to_numpy(np.int64)
-                + st["qid"].map(new_sizes).fillna(0).to_numpy(np.int64)
-            )
+        st["cnt"] = st["cnt"].to_numpy(np.int64) + st["qid"].map(new_sizes).fillna(0).to_numpy(np.int64)
         allv = pd.concat([carried, cand_pd], ignore_index=True) if len(cand_pd) else carried
         allv = allv.iloc[np.lexsort([allv[c].to_numpy(np.int64) for c in ("span_idx", "key", "dist2", "qid")])]
         # rank within each qid group of the sorted rows
@@ -649,6 +704,10 @@ def _knn_driver(
         row = np.arange(len(qv))
         pos = row - np.maximum.accumulate(np.where(np.diff(qv, prepend=qv[:1] - 1) != 0, row, 0))
         allv, pos = allv.loc[pos < k].reset_index(drop=True), pos[pos < k]
+        if "row" in allv:  # this round's scanned rows: doc_id for the top-k only
+            src = allv.pop("row").to_numpy(np.float64)  # NaN: a carried entry
+            new = ~np.isnan(src)
+            allv.loc[new, "doc_id"] = tbl.column("doc_id").take(src[new].astype(np.int64)).to_pylist()
         sizes = st["qid"].map(allv.groupby("qid").size()).fillna(0).to_numpy(np.int64)
         kth_ser = allv.loc[pos == k - 1].set_index("qid")["dist2"]
         kth = st["qid"].map(kth_ser).fillna(-1).to_numpy(np.int64)
@@ -749,6 +808,8 @@ def knn(
     cand_rows is cumulative across rounds). Rows finished in driver rounds
     (every row of a small batch) are computed before knn returns, doc_id
     included, and come back as a local relation; reading one costs one job.
+    A driver round within index.DRIVER_FINISH_MAX_ROWS costs one Spark job
+    (its collected scan), a joined one two or more.
 
     With return_stats a distributed round's candidate counts run as ONE
     extra narrow hash-count pass over the candidate join (the window top-k

@@ -33,7 +33,7 @@ The driver-finished count is the reference's boundary-leaf point test
 instead of four (a broadcast of the resolved rows, the join stages, the
 qid aggregate), and it is taken only while the rows the scan returns plus
 the (row, query) pairs it tests, both exact from the skeleton's prefix
-sums before any job, stay within DRIVER_FINISH_MAX_ROWS.
+sums before any job, stay within index.DRIVER_FINISH_MAX_ROWS.
 
 The interior branch is the reference's containment short-circuit
 (`within_box -> return T->size`, range_count.hpp:79-80). As there, a
@@ -60,6 +60,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import index as I
 from .config import EngineConfig
 from .index import (
     BallRegion,
@@ -68,9 +69,10 @@ from .index import (
     SpatialIndex,
     _Region,
     cover_regions,
-    expand_ranges,
     interior_counts_np,
+    leaf_rows,
     leaf_scan,
+    morton_runs,
     resolve_covers_np,
 )
 
@@ -90,14 +92,6 @@ DISTRIBUTED_COVER_THRESHOLD = 4000
 # broadcast budget of the resolved relation: bare (qid, leaf, interior)
 # rows are ~24B (5M rows), the region columns each row carries widen them
 RESOLVED_BCAST_BYTES = 120_000_000
-# a driver-resolved count finishes its boundary on the driver (one scan,
-# collected; numpy point tests) while the rows that scan returns plus the
-# (row, query) pairs it tests stay within this, else it runs the leaf join.
-# Both sides measured at local[4] (bench_extra.py range_scan, two sweeps of
-# 5 interleaved pairs per cell, BENCH/RANGE_SCAN_r14.json): the driver side
-# took 0.37-0.81x the join's wall up to 1.9M rows + pairs, tied it at
-# 1.7-2.2M (0.97-1.02x) and lost from 2.6M (1.08-1.24x; 1.5-2.7x at 6-17M)
-DRIVER_FINISH_MAX_ROWS = 2_000_000
 # (row, query) pairs tested per numpy pass of a driver-finished count
 PAIR_CHUNK = 1 << 20
 
@@ -296,12 +290,6 @@ def _plan(index: SpatialIndex, kind: str, q: pd.DataFrame, budget: int | None, c
     return inter, _join(index, kind, q, res, _scan(index, res, cols)[0])
 
 
-def _pairs(meta: dict, res: pd.DataFrame) -> int:
-    """The (row, query) pairs a driver finish tests: the rows of every
-    resolved leaf, once per query it is resolved for."""
-    return int(np.diff(meta["cum"])[np.searchsorted(meta["cells"], res["leaf"].to_numpy())].sum())
-
-
 def _inside_np(kind: str, q: pd.DataFrame, qsel: np.ndarray, x: np.ndarray) -> np.ndarray:
     """_exact_pred's numpy twin: whether point ``x[i]`` (int64, (m, d)) lies
     in the region of query row ``qsel[i]`` of ``q``. A region's ``classify``
@@ -320,18 +308,11 @@ def _boundary_counts_np(index: SpatialIndex, kind: str, q: pd.DataFrame, res: pd
                         pts: pd.DataFrame) -> pd.DataFrame:
     """(qid, cnt) of the scanned rows ``pts`` (x0.., morton) inside each
     query's region, over its resolved boundary leaves ``res`` (qid, leaf):
-    each leaf's rows are one searchsorted run of the Morton-sorted rows."""
+    each leaf's rows are one Morton run (index.morton_runs)."""
     cfg = index.cfg
-    m = pts["morton"].to_numpy(np.int64)
     x = pts[[f"x{j}" for j in range(cfg.dims)]].to_numpy(np.int64)
-    if (m[1:] < m[:-1]).any():  # an insert's appended rows, a loaded index's files
-        o = np.argsort(m, kind="stable")
-        m, x = m[o], x[o]
-    # runs by the rows' leaf ids, not by interval ends: (leaf + 1) << s
-    # overflows int64 at dims * grid_bits = 63
-    rl = m >> (cfg.dims * (cfg.grid_bits - cfg.index_level))
-    leaf = res["leaf"].to_numpy(np.int64)
-    idx, n = expand_ranges(np.searchsorted(rl, leaf), np.searchsorted(rl, leaf, side="right"))
+    shift = cfg.dims * (cfg.grid_bits - cfg.index_level)
+    idx, n = morton_runs(pts["morton"].to_numpy(np.int64), res["leaf"].to_numpy(np.int64), shift)
     qsel = np.repeat(pd.Index(q["qid"]).get_indexer(res["qid"]), n)
     hit = _inside_np(kind, q, qsel, x[idx])
     return pd.DataFrame({"qid": q["qid"].to_numpy(np.int64), "cnt": np.bincount(qsel[hit], minlength=len(q))})
@@ -344,14 +325,17 @@ def _count(index: SpatialIndex, kind: str, q: pd.DataFrame, budget: int | None) 
     A driver-resolved batch finishes its boundary on the driver from ONE
     collected scan while the scanned rows plus the (row, query) pairs to
     test, both exact from the prefix sums before any job, stay within
-    DRIVER_FINISH_MAX_ROWS; otherwise its boundary runs as one Spark
+    index.DRIVER_FINISH_MAX_ROWS; otherwise its boundary runs as one Spark
     query (the leaf join, the exact predicate, a qid count)."""
     inter, res = _resolve(index, kind, q, budget, count=True)
     parts = [] if inter is None else [inter]
     if res is not None:
         xcols = [f"x{j}" for j in range(index.cfg.dims)]
         pts, rows = _scan(index, res, xcols)
-        if isinstance(res, pd.DataFrame) and rows + _pairs(index.meta_np(), res) <= DRIVER_FINISH_MAX_ROWS:
+        # the (row, query) pairs tested: each resolved leaf's rows, once per query
+        if isinstance(res, pd.DataFrame) and (
+            rows + leaf_rows(index.meta_np(), res["leaf"].to_numpy()) <= I.DRIVER_FINISH_MAX_ROWS
+        ):
             parts.append(_boundary_counts_np(index, kind, q, res, pts.toPandas()))
         else:
             cand = _join(index, kind, q, res, pts).where(_exact_pred(kind, index.cfg.dims))

@@ -7,6 +7,7 @@ from unittest import mock
 import pandas as pd
 import pytest
 
+from pkd_tree_spark import index as I
 from pkd_tree_spark import ranges as R
 from pkd_tree_spark.config import EngineConfig
 from pkd_tree_spark.documents import load_points, synth_documents
@@ -77,11 +78,41 @@ def finishes(monkeypatch):
 
 @pytest.fixture
 def joined(monkeypatch, finishes):
-    """The other side of DRIVER_FINISH_MAX_ROWS: with the bound at 0 every
-    driver-resolved count runs the leaf join (the returned list of driver
-    finishes must stay empty)."""
-    monkeypatch.setattr(R, "DRIVER_FINISH_MAX_ROWS", 0)
+    """The other side of index.DRIVER_FINISH_MAX_ROWS: with the bound at 0
+    every driver-resolved count runs the leaf join (the returned list of
+    driver finishes must stay empty)."""
+    monkeypatch.setattr(I, "DRIVER_FINISH_MAX_ROWS", 0)
     return finishes
+
+
+@pytest.fixture
+def knn_scans(monkeypatch):
+    """Records every kNN driver round finished from one collected scan
+    (knn._scan_candidates): its pending mesh queries, the levels of its
+    resolved shell cells (-1: a level-L leaf), the rows the scan returned
+    and whether they arrived in Morton order."""
+    from pkd_tree_spark import knn as K
+
+    seen: list[dict] = []
+    real = K._scan_candidates
+
+    def _rec(tbl, st, cells, *args):
+        m = tbl.column("morton").to_numpy()
+        seen.append({"queries": len(st), "levels": sorted(set(cells["lvl"].tolist())), "rows": tbl.num_rows,
+                     "sorted": bool((m[1:] >= m[:-1]).all())})
+        return real(tbl, st, cells, *args)
+
+    monkeypatch.setattr(K, "_scan_candidates", _rec)
+    return seen
+
+
+@pytest.fixture
+def knn_joined(monkeypatch, knn_scans):
+    """The join side of the bound for kNN: with index.DRIVER_FINISH_MAX_ROWS
+    at 0 every driver round collects the candidate join (the returned list
+    of scan-finished rounds must stay empty)."""
+    monkeypatch.setattr(I, "DRIVER_FINISH_MAX_ROWS", 0)
+    return knn_scans
 
 
 def job_sites(spark, group: str, fn):

@@ -9,6 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from pkd_tree_spark import fixtures as FX
+from pkd_tree_spark import index as I
+from pkd_tree_spark.config import EngineConfig
 from pkd_tree_spark.documents import load_points
 from pkd_tree_spark.index import SpatialIndex
 from pkd_tree_spark.knn import auto_knn_level, knn
@@ -131,6 +133,30 @@ def _sorted(res) -> pd.DataFrame:
     return res.toPandas().sort_values(["qid", "rn"]).reset_index(drop=True)[_RESCOLS]
 
 
+def _rows_stats(res, st) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """Every result column, doc_id included, in (qid, rn) order, and the
+    per-query stats in qid order."""
+    rows = res.toPandas().sort_values(["qid", "rn"]).reset_index(drop=True)
+    return rows, st.toPandas().sort_values("qid").reset_index(drop=True)
+
+
+def _run_sides(monkeypatch, knn_scans, run):
+    """``run()`` -> (rows, stats) first on the scan side of
+    index.DRIVER_FINISH_MAX_ROWS (the shipped bound), then on its join side
+    (the bound at 0). The first must finish a round from a scan and the
+    second none; both must return identical rows and stats. Returns the
+    scan side's."""
+    scan = run()
+    n = len(knn_scans)
+    assert n, "no driver round was finished from a scan"
+    monkeypatch.setattr(I, "DRIVER_FINISH_MAX_ROWS", 0)
+    join = run()
+    assert len(knn_scans) == n, "a round past the bound was finished from a scan"
+    for a, b in zip(scan, join):
+        pd.testing.assert_frame_equal(a, b)
+    return scan
+
+
 @pytest.mark.parametrize("grain", ["coarse", "fine"])
 def test_knn_distributed_fixed_level_matches_driver(request, cfg, monkeypatch, grain):
     """A fixed level through the distributed rounds only (the handoff size
@@ -156,20 +182,21 @@ def test_knn_distributed_fixed_level_matches_driver(request, cfg, monkeypatch, g
         assert any(lv > cfg.index_level for p in plans for lv in p["lvl_counts"]), plans
 
 
-def test_knn_pruned_duplicate_collapse(spark, cfg):
+def _lattice(spark):
+    """sf0.001 uniform points folded onto a 10 x 10 lattice of positions."""
+    pts = load_points(spark, SF_DIR, dims=2, dist="uniform")
+    return pts.select(
+        "doc_id", "span_idx", "key",
+        *[(F.col(f"x{j}") % 10 * 99_991).alias(f"x{j}") for j in range(2)],
+    )
+
+
+def test_knn_pruned_duplicate_collapse(spark, cfg, knn_scans):
     """Dummy-leaf duplicate collapse (build_tree.hpp:183-186): on a
     duplicate-heavy lattice the pruned candidate table must engage, shrink
     the scan, and stay multiset-exact vs the raw path — including after a
     cap upgrade (second call with larger k rebuilds the pruned table)."""
-    from pyspark.sql import functions as F
-    from pkd_tree_spark.documents import load_points
-    from pkd_tree_spark.index import SpatialIndex
-
-    pts = load_points(spark, "/root/testdata/sf0.001", dims=2, dist="uniform")
-    lattice = pts.select(
-        "doc_id", "span_idx", "key",
-        *[(F.col(f"x{j}") % 10 * 99_991).alias(f"x{j}") for j in range(2)],
-    )
+    lattice = _lattice(spark)
     idx = SpatialIndex.build(lattice, cfg)
     raw = SpatialIndex.build(lattice, cfg)
     object.__setattr__(raw, "_pruned", "refused")
@@ -191,6 +218,19 @@ def test_knn_pruned_duplicate_collapse(spark, cfg):
     got20 = _sorted(knn(idx, queries, k=20))
     assert idx._pruned[1] >= 20
     pd.testing.assert_frame_equal(got20, _sorted(knn(raw, queries, k=20)))
+    assert knn_scans  # the driver rounds finished from scans of the pruned table
+
+
+def test_knn_pruned_duplicate_collapse_joined(spark, cfg, monkeypatch, knn_scans):
+    """The pruned table on both sides of the bound: identical rows, doc_id
+    included, and identical stats."""
+    idx = SpatialIndex.build(_lattice(spark), cfg)
+    queries = FX.knn_fixtures(16, 2)
+    try:
+        _run_sides(monkeypatch, knn_scans, lambda: _rows_stats(*knn(idx, queries, k=10, return_stats=True)))
+        assert isinstance(idx._pruned, tuple)
+    finally:
+        idx.release()
 
 
 @pytest.mark.parametrize("outcome", ["occupancy", "estimate", "spread", "build"])
@@ -248,8 +288,9 @@ def test_knn_empty_index_fine_level(spark, cfg):
     assert res.count() == 0
 
 
-def test_knn_driver_loop_window_reduction_matches_raw(index_varden, monkeypatch):
-    """r7 driver ring loop: rounds whose estimated candidate volume exceeds
+def test_knn_driver_loop_window_reduction_matches_raw(index_varden, monkeypatch, knn_joined):
+    """r7 driver ring loop: rounds past index.DRIVER_FINISH_MAX_ROWS (here
+    every round: the bound at 0) whose estimated candidate volume exceeds
     DRIVER_COLLECT_MAX_ROWS reduce per-query top-k in Spark before the
     collect. Forcing the reduction (cap=0 after the exact-count downgrade
     is also disabled) must give byte-identical results to the raw path."""
@@ -260,6 +301,7 @@ def test_knn_driver_loop_window_reduction_matches_raw(index_varden, monkeypatch)
     monkeypatch.setattr(K, "DRIVER_COLLECT_MAX_ROWS", 0)
     got = _sorted(knn(index_varden, queries, k=10))
     pd.testing.assert_frame_equal(got, want)
+    assert knn_joined == []
 
 
 @pytest.mark.parametrize("which", ["uniform", "varden"])
@@ -319,19 +361,12 @@ def test_knn_leaves_no_broadcast(spark, index_varden, monkeypatch):
     assert not any(b._jbroadcast.isValid() for b in made)
 
 
-def test_knn_driver_loop_jobs_per_round(spark, index_uniform):
-    """Job-count guard: on a warm index a pandas batch in the driver rounds
-    issues two Spark jobs per ring round at this shape (one coarse leaf
-    join per round), both under the round's candidate collect. The first
-    is the BroadcastExchange of the local cell relation: createDataFrame
-    turns the pandas cells into a defaultParallelism-partition RDD, and
-    the broadcast collects it in a job of its own (defaultParallelism
-    tasks). The second scans the points, probes the broadcast and runs the
-    Arrow collect. The rows, doc_id included, are finished on the driver,
-    so reading the result costs exactly one job (its local relation's
-    scan)."""
+def _driver_round_jobs(spark, index, tag: str):
+    """(ring rounds, Spark jobs of the kNN call, jobs of reading its
+    result) for a warm 32-query pandas batch, counted under job groups
+    named after ``tag``."""
     queries = FX.knn_fixtures(32, 2)
-    knn(index_uniform, queries, k=10)  # warm: skeleton memo, pruned-table decision
+    knn(index, queries, k=10)  # warm: skeleton memo, pruned-table decision
     sc = spark.sparkContext
 
     def jobs_of(group: str, fn):
@@ -343,13 +378,40 @@ def test_knn_driver_loop_jobs_per_round(spark, index_uniform):
             sc.setLocalProperty("spark.job.description", None)
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    (res, st), n_knn = jobs_of("knn-job-guard", lambda: knn(index_uniform, queries, k=10, return_stats=True))
-    rounds = int(st.toPandas()["rounds"].max())
+    (res, st), n_knn = jobs_of(f"knn-job-guard-{tag}", lambda: knn(index, queries, k=10, return_stats=True))
+    out, n_read = jobs_of(f"knn-read-guard-{tag}", res.toPandas)
+    assert len(out) == 32 * 10 and out["doc_id"].notna().all()
+    return int(st.toPandas()["rounds"].max()), n_knn, n_read
+
+
+def test_knn_driver_loop_jobs_per_round(spark, index_uniform, knn_scans):
+    """Job-count guard: on a warm index a pandas batch in the driver rounds
+    runs ONE Spark job per ring round within index.DRIVER_FINISH_MAX_ROWS:
+    the pre-filtered scan of the candidate table, collected through Arrow
+    (the shells meet their rows in numpy). The rows, doc_id included, are
+    finished on the driver, so reading the result costs exactly one job
+    (its local relation's scan)."""
+    rounds, n_knn, n_read = _driver_round_jobs(spark, index_uniform, "scan")
+    assert rounds == 2
+    assert len(knn_scans) == 2 * rounds  # the warm-up call's rounds too
+    assert n_knn == rounds
+    assert n_read == 1
+
+
+def test_knn_driver_loop_jobs_per_round_joined(spark, index_uniform, knn_joined):
+    """Past the bound (at 0 here) a driver round runs two Spark jobs at
+    this shape (one coarse leaf join per round), both under the round's
+    candidate collect. The first is the BroadcastExchange of the local
+    cell relation: createDataFrame plans the pandas cells as a
+    LocalTableScan, whose rows the broadcast collects in a job of its own
+    (min(rows, defaultParallelism) tasks). The second scans the points,
+    probes the broadcast and runs the Arrow collect. Reading the result
+    still costs one job."""
+    rounds, n_knn, n_read = _driver_round_jobs(spark, index_uniform, "joined")
     assert rounds == 2
     assert n_knn == 2 * rounds
-    out, n_read = jobs_of("knn-read-guard", res.toPandas)
     assert n_read == 1
-    assert len(out) == 32 * 10 and out["doc_id"].notna().all()
+    assert knn_joined == []
 
 
 def test_knn_cells_join_over_gate_equivalence(spark, cfg, index_varden):
@@ -373,9 +435,10 @@ def test_knn_cells_join_over_gate_equivalence(spark, cfg, index_varden):
     pd.testing.assert_frame_equal(sa, sb)
 
 
-def test_knn_driver_count_then_collect_matches_raw(index_varden, monkeypatch):
-    """The middle rung of _knn_driver's collect ladder: the metadata
-    estimate is over DRIVER_COLLECT_MAX_ROWS (forced through
+def test_knn_driver_count_then_collect_matches_raw(index_varden, monkeypatch, knn_joined):
+    """The middle rung of _knn_driver's collect ladder, which rounds past
+    index.DRIVER_FINISH_MAX_ROWS take (here every round: the bound at 0):
+    the metadata estimate is over DRIVER_COLLECT_MAX_ROWS (forced through
     _cand_estimate) while the exact count is under it, so each round runs
     one exact per-qid count and then collects its candidates raw. Rows and
     stats must equal the raw path's, at one more collect per round and
@@ -408,6 +471,7 @@ def test_knn_driver_count_then_collect_matches_raw(index_varden, monkeypatch):
     assert collects == [False] * (2 * rounds)
     pd.testing.assert_frame_equal(got, raw)
     pd.testing.assert_frame_equal(got_st, raw_st)
+    assert knn_joined == []
 
 
 # ---------------------------------------------------------------------------
@@ -438,11 +502,11 @@ def index_7d(spark):
     idx.release()
 
 
-def _brute_nd(pts: pd.DataFrame, queries: pd.DataFrame, k: int) -> pd.DataFrame:
+def _brute_nd(pts: pd.DataFrame, queries: pd.DataFrame, k: int, d: int = _D) -> pd.DataFrame:
     """numpy brute force in (dist2, key, span_idx) order, as _sorted lays out."""
-    x = pts[[f"x{j}" for j in range(_D)]].to_numpy(np.int64)
+    x = pts[[f"x{j}" for j in range(d)]].to_numpy(np.int64)
     rows = []
-    for qid, *q in queries[["qid", *[f"q{j}" for j in range(_D)]]].itertuples(index=False):
+    for qid, *q in queries[["qid", *[f"q{j}" for j in range(d)]]].itertuples(index=False):
         d2 = ((x - np.array(q)) ** 2).sum(axis=1)
         top = np.lexsort((pts["span_idx"], pts["key"], d2))[:k]
         rows += [(qid, rn, pts["key"].iat[i], pts["span_idx"].iat[i], d2[i]) for rn, i in enumerate(top, 1)]
@@ -521,48 +585,85 @@ def _assert_doc_ids(res, idx) -> None:
 
 
 @pytest.mark.parametrize("max_driver", ["default", 0], ids=["driver_only", "distributed_only"])
-def test_knn_doc_id_matches_points(index_varden, monkeypatch, max_driver):
-    """doc_id of rows finished in driver rounds (collected with the
-    candidates) and in distributed rounds (re-attached by key)."""
+def test_knn_doc_id_matches_points(index_varden, monkeypatch, knn_scans, max_driver):
+    """doc_id of rows finished in driver rounds (the scanned rows of those
+    entering a top-k) and in distributed rounds (re-attached by key)."""
     import pkd_tree_spark.knn as K
 
     if max_driver == 0:
         monkeypatch.setattr(K, "DRIVER_CELLS_MAX_QUERIES", 0)
     _assert_doc_ids(knn(index_varden, FX.knn_fixtures(16, 2), k=10), index_varden)
+    assert bool(knn_scans) == (max_driver == "default")
 
 
-def test_knn_doc_id_carried_across_handoff(cfg, index_uniform, points_uniform, monkeypatch):
-    """Every query is still pending when the distributed rounds hand off,
-    so no distributed round finishes a row and every row is finished on
-    the driver; the top-k entries carried across the handoff leave the
-    distributed rounds without a doc_id and must still get theirs. A fine
-    fixed level leaves every query short of k=20 after round 1; the
-    handoff size rises once round 1 has passed its check, so round 2
-    starts on the driver."""
+def test_knn_doc_id_matches_points_joined(index_varden, monkeypatch, knn_scans):
+    """Driver rounds on both sides of the bound: the join side collects
+    doc_id with its candidates, and both give identical rows and stats."""
+    queries = FX.knn_fixtures(16, 2)
+
+    def run():
+        res, st = knn(index_varden, queries, k=10, return_stats=True)
+        _assert_doc_ids(res, index_varden)
+        return _rows_stats(res, st)
+
+    _run_sides(monkeypatch, knn_scans, run)
+
+
+def _handoff_run(cfg, index, monkeypatch):
+    """k=20 kNN where every query is still pending when the distributed
+    rounds hand off: a fine fixed level leaves every query short of k after
+    round 1, and the handoff size rises once round 1 has passed its check,
+    so round 2 starts on the driver with carried entries. Returns the
+    result, its stats and the queries."""
     import pkd_tree_spark.knn as K
 
     queries = FX.knn_fixtures(16, 2)
     real_join, real_driver = K._candidate_join, K._knn_driver
     handoffs: list = []
 
-    def join_then_hand_off(*args, **kwargs):
-        monkeypatch.setattr(K, "DRIVER_CELLS_MAX_QUERIES", 1 << 20)
-        return real_join(*args, **kwargs)
-
     def spy(index, st, carried, k, rnd0, *args):
         handoffs.append((len(st), len(carried), rnd0))
         return real_driver(index, st, carried, k, rnd0, *args)
 
-    monkeypatch.setattr(K, "DRIVER_CELLS_MAX_QUERIES", 0)
-    monkeypatch.setattr(K, "_candidate_join", join_then_hand_off)
-    monkeypatch.setattr(K, "_knn_driver", spy)
-    res = knn(index_uniform, queries, k=20, level=cfg.index_level + 2, adaptive=False)
+    with monkeypatch.context() as m:
+
+        def join_then_hand_off(*args, **kwargs):
+            m.setattr(K, "DRIVER_CELLS_MAX_QUERIES", 1 << 20)
+            return real_join(*args, **kwargs)
+
+        m.setattr(K, "DRIVER_CELLS_MAX_QUERIES", 0)
+        m.setattr(K, "_candidate_join", join_then_hand_off)
+        m.setattr(K, "_knn_driver", spy)
+        res, st = knn(index, queries, k=20, level=cfg.index_level + 2, adaptive=False, return_stats=True)
     [(n_st, n_carried, rnd0)] = handoffs
     assert (n_st, rnd0) == (16, 2) and n_carried > 0, handoffs
+    return res, st, queries
+
+
+def test_knn_doc_id_carried_across_handoff(cfg, index_uniform, points_uniform, monkeypatch, knn_scans):
+    """Every query is still pending when the distributed rounds hand off,
+    so no distributed round finishes a row and every row is finished on
+    the driver; the top-k entries carried across the handoff leave the
+    distributed rounds without a doc_id and must still get theirs."""
+    res, _, queries = _handoff_run(cfg, index_uniform, monkeypatch)
+    assert knn_scans  # the driver rounds after the handoff finished from scans
     _assert_doc_ids(res, index_uniform)
     got = res.toPandas()
     assert len(got) == 16 * 20
     assert got[got.rn == 20].set_index("qid")["dist2"].to_dict() == _kth_oracle(points_uniform, queries, 20)
+
+
+def test_knn_doc_id_carried_across_handoff_joined(cfg, index_uniform, monkeypatch, knn_scans):
+    """The driver rounds after the handoff on both sides of the bound:
+    carried entries get their doc_id on either, and rows and stats are
+    identical."""
+
+    def run():
+        res, st, _ = _handoff_run(cfg, index_uniform, monkeypatch)
+        _assert_doc_ids(res, index_uniform)
+        return _rows_stats(res, st)
+
+    _run_sides(monkeypatch, knn_scans, run)
 
 
 # level-2 cells of the default 2^20 coordinate grid are W wide; a query at
@@ -592,51 +693,80 @@ def _brute(pts: pd.DataFrame, q: tuple[int, int], k: int) -> list[tuple[int, int
     return [(key, sp, dd) for dd, key, sp in rows]
 
 
-@pytest.mark.parametrize("loop", ["driver", "distributed"])
-def test_knn_block_bound_tie_with_smaller_key(spark, monkeypatch, loop):
+def _tie_case(spark):
     """After round 1 the k-th distance equals the block gap exactly, and
     two UNSCANNED points (just past the block, one per dimension) tie with
-    it at smaller keys. The bound is strict (kth < gap^2), so the query
-    must take round 2 and return them in (dist2, key, span_idx) order."""
-    import pkd_tree_spark.knn as K
-
-    q = (_Q, _Q)
+    it at smaller keys."""
     xy = [
         (3 * _W, _Q), (_Q, 3 * _W),  # keys 0, 1: outside the block, at GAP
         (3 * _W + 5, 3 * _W + 5), (900_000, 10),  # keys 2, 3: far
         (0, _Q), (0, _Q),  # keys 4, 5: duplicates inside the block, at GAP
         (_Q + 7, _Q - 3),  # key 6: inside, near
     ]
-    idx, pts = _tiny_index(spark, xy)
-    if loop == "distributed":
-        monkeypatch.setattr(K, "DRIVER_CELLS_MAX_QUERIES", 0)
-    res, st = knn(idx, pd.DataFrame({"qid": [0], "q0": [q[0]], "q1": [q[1]]}), k=3, level=2,
+    return _tiny_index(spark, xy), 3
+
+
+def _centre_case(spark):
+    """A query at the centre of its home cell whose k-th neighbour lies
+    between r*w and the block gap."""
+    dd = 6 * _W // 5  # W < dd < GAP
+    xy = [(_Q - dd, _Q), (_Q, _Q - dd), (_Q + dd, _Q), (_Q, _Q + dd), (1_000_000, 1_000_000)]
+    return _tiny_index(spark, xy), 4
+
+
+def _centre_query(idx, k: int):
+    res, st = knn(idx, pd.DataFrame({"qid": [0], "q0": [_Q], "q1": [_Q]}), k=k, level=2,
                   adaptive=False, return_stats=True)
-    got = _sorted(res)
-    assert list(zip(got["key"], got["span_idx"], got["dist2"])) == _brute(pts, q, 3)
-    assert got["key"].tolist() == [6, 0, 1] and got["dist2"].tolist()[1:] == [_GAP**2] * 2
-    assert st.toPandas()["rounds"].tolist() == [2]
+    return _rows_stats(res, st)
 
 
 @pytest.mark.parametrize("loop", ["driver", "distributed"])
-def test_knn_block_bound_centre_query_one_round(spark, monkeypatch, loop):
-    """A query at the centre of its home cell whose k-th neighbour lies
-    between r*w and the block gap: the worst-placement rule (kth <= (r*w)^2)
-    needed a second round, the exact block bound finishes in round 1."""
+def test_knn_block_bound_tie_with_smaller_key(spark, monkeypatch, knn_scans, loop):
+    """The tie case: the bound is strict (kth < gap^2), so the query must
+    take round 2 and return the unscanned points in (dist2, key, span_idx)
+    order."""
     import pkd_tree_spark.knn as K
 
-    q, dd = (_Q, _Q), 6 * _W // 5  # W < dd < GAP
-    xy = [(_Q - dd, _Q), (_Q, _Q - dd), (_Q + dd, _Q), (_Q, _Q + dd), (1_000_000, 1_000_000)]
-    idx, pts = _tiny_index(spark, xy)
+    (idx, pts), k = _tie_case(spark)
     if loop == "distributed":
         monkeypatch.setattr(K, "DRIVER_CELLS_MAX_QUERIES", 0)
-    res, st = knn(idx, pd.DataFrame({"qid": [0], "q0": [q[0]], "q1": [q[1]]}), k=4, level=2,
-                  adaptive=False, return_stats=True)
-    got = _sorted(res)
-    assert list(zip(got["key"], got["span_idx"], got["dist2"])) == _brute(pts, q, 4)
+    got, st = _centre_query(idx, k)
+    assert list(zip(got["key"], got["span_idx"], got["dist2"])) == _brute(pts, (_Q, _Q), k)
+    assert got["key"].tolist() == [6, 0, 1] and got["dist2"].tolist()[1:] == [_GAP**2] * 2
+    assert st["rounds"].tolist() == [2]
+    assert bool(knn_scans) == (loop == "driver")
+
+
+def test_knn_block_bound_tie_with_smaller_key_joined(spark, monkeypatch, knn_scans):
+    """The tie case's driver rounds on both sides of the bound: identical
+    rows and stats."""
+    (idx, _), k = _tie_case(spark)
+    _, st = _run_sides(monkeypatch, knn_scans, lambda: _centre_query(idx, k))
+    assert st["rounds"].tolist() == [2]
+
+
+@pytest.mark.parametrize("loop", ["driver", "distributed"])
+def test_knn_block_bound_centre_query_one_round(spark, monkeypatch, knn_scans, loop):
+    """The centre case: the worst-placement rule (kth <= (r*w)^2) needed a
+    second round, the exact block bound finishes in round 1."""
+    import pkd_tree_spark.knn as K
+
+    (idx, pts), k = _centre_case(spark)
+    if loop == "distributed":
+        monkeypatch.setattr(K, "DRIVER_CELLS_MAX_QUERIES", 0)
+    got, st = _centre_query(idx, k)
+    assert list(zip(got["key"], got["span_idx"], got["dist2"])) == _brute(pts, (_Q, _Q), k)
     kth = int(got["dist2"].max())
     assert _W**2 < kth < _GAP**2  # the old rule would not fire, the new one does
-    assert st.toPandas()["rounds"].tolist() == [1]
+    assert st["rounds"].tolist() == [1]
+    assert bool(knn_scans) == (loop == "driver")
+
+
+def test_knn_block_bound_centre_query_one_round_joined(spark, monkeypatch, knn_scans):
+    """The centre case on both sides of the bound: identical rows and stats."""
+    (idx, _), k = _centre_case(spark)
+    _, st = _run_sides(monkeypatch, knn_scans, lambda: _centre_query(idx, k))
+    assert st["rounds"].tolist() == [1]
 
 
 def test_knn_distributed_round_actions(spark, index_uniform, monkeypatch):
@@ -674,3 +804,106 @@ def test_knn_distributed_round_actions(spark, index_uniform, monkeypatch):
     assert seen.count("localCheckpoint") == 1 + rounds
     assert len(seen) == 1 + 2 * rounds, seen
     pd.testing.assert_frame_equal(_sorted(res), _sorted(want))
+
+
+# ---------------------------------------------------------------------------
+# both sides of index.DRIVER_FINISH_MAX_ROWS where a Morton run could miss
+# ---------------------------------------------------------------------------
+
+_SIDES = ["scan", "joined"]
+
+
+def _side_spy(request, side: str) -> list:
+    """The knn_scans record; on the joined side the bound is at 0."""
+    return request.getfixturevalue("knn_scans" if side == "scan" else "knn_joined")
+
+
+@pytest.mark.parametrize("side", _SIDES)
+def test_knn_on_rows_out_of_morton_order(tmp_path, request, spark, cfg, index_uniform, points_uniform, side):
+    """An insert appends its batch after the sorted table, its lazy
+    exact-delete survivors stream out of Morton order, and a loaded
+    PersistentIndex reads its bucket files in split order: kNN on each
+    equals brute force on both sides of the bound."""
+    from pkd_tree_spark.updates import PersistentIndex, merge_delete, merge_insert
+
+    scans = _side_spy(request, side)
+    batch = points_uniform.iloc[3::40].copy()
+    batch["key"] = 98_000_000 + np.arange(len(batch))
+    batch["doc_id"] = "ins_" + batch["key"].astype(str)
+    # exact_rows deletes rows by (key, span_idx): only ids no other row shares
+    gone = points_uniform[~points_uniform.duplicated(["key", "span_idx"], keep=False)].iloc[5::90]
+    g = merge_insert(index_uniform, spark.createDataFrame(batch))
+    dl = merge_delete(g, spark.createDataFrame(gone[["key", "span_idx", "x0", "x1"]]), exact_rows=True)
+    assert not dl.points.is_cached  # a small delete leaves its survivors lazy
+    p = PersistentIndex(path=str(tmp_path / "idx"), cfg=cfg)
+    p.write(dl)
+    loaded = p.load(spark)
+    queries = FX.knn_fixtures(32, 2)
+    ins = pd.concat([points_uniform, batch])
+    live = pd.concat([points_uniform.drop(gone.index), batch])
+    try:
+        for ix, pts in ((g, ins), (dl, live), (loaded, live)):
+            pd.testing.assert_frame_equal(_sorted(knn(ix, queries, k=10)), _brute_nd(pts, queries, 10, d=2))
+    finally:
+        for ix in (g, dl, loaded):
+            ix.release()
+    if side == "scan":
+        assert scans and not all(s["sorted"] for s in scans)
+    else:
+        assert scans == []
+
+
+@pytest.mark.parametrize("side", _SIDES)
+def test_knn_fine_levels_on_hot_cells(request, cfg, index_varden, points_varden, side):
+    """Varden queries in hot clusters take levels finer than index_level,
+    whose shell cells are Morton prefixes of their own level: brute force
+    on both sides of the bound."""
+    scans = _side_spy(request, side)
+    queries = FX.knn_fixtures_varden(32, 2)
+    with candidate_joins() as joins:
+        got = _sorted(knn(index_varden, queries, k=10))
+    pd.testing.assert_frame_equal(got, _brute_nd(points_varden, queries, 10, d=2))
+    levels = [lv for s in scans for lv in s["levels"]] + [lv for j in joins for lv in j["lvl_counts"]]
+    assert any(lv > cfg.index_level for lv in levels), levels
+    assert (scans == []) == (side == "joined") and (joins == []) == (side == "scan")
+
+
+@pytest.mark.parametrize("side", _SIDES)
+def test_knn_at_63_bit_morton_keys(request, spark, side):
+    """dims * grid_bits = 63 with a cluster in the last leaf, whose
+    interval end (cell + 1) << s overflows int64: brute force on both
+    sides of the bound."""
+    scans = _side_spy(request, side)
+    cfg = EngineConfig(dims=3, coord_bits=21, index_level=4, knn_level=3, partitions=2)
+    assert cfg.dims * cfg.grid_bits == 63
+    top = 1 << 21
+    rng = np.random.default_rng(63)
+    x = np.vstack([rng.integers(0, top, (3000, 3)), rng.integers(top - (1 << 16), top, (1000, 3))])
+    pts = pd.DataFrame({"doc_id": [f"d{i}" for i in range(len(x))], "span_idx": 0, "key": np.arange(len(x)),
+                        **{f"x{j}": x[:, j] for j in range(3)}})
+    q = np.vstack([top - 1 - rng.integers(0, 1 << 14, (8, 3)), rng.integers(0, top, (4, 3))])
+    queries = pd.DataFrame({"qid": np.arange(len(q)), **{f"q{j}": q[:, j] for j in range(3)}})
+    ix = SpatialIndex.build(spark.createDataFrame(pts), cfg)
+    try:
+        got = _sorted(knn(ix, queries, k=5))
+    finally:
+        ix.release()
+    pd.testing.assert_frame_equal(got, _brute_nd(pts, queries, 5, d=3))
+    assert bool(scans) == (side == "scan")
+
+
+@pytest.mark.parametrize("side", _SIDES)
+def test_knn_round_whose_scan_returns_no_rows(request, cfg, index_uniform, side):
+    """A skeleton that names rows its points no longer hold: every round's
+    shells resolve to occupied cells and every scan returns no row. The
+    queries end, as brute force over no points does, with no result row
+    and no stats row."""
+    scans = _side_spy(request, side)
+    stale = SpatialIndex(points=index_uniform.points.where(F.lit(False)), meta=index_uniform.meta, cfg=cfg,
+                         _pruned="refused")
+    res, st = knn(stale, FX.knn_fixtures(4, 2), k=3, level=2, adaptive=False, return_stats=True)
+    assert res.toPandas().empty and st.toPandas().empty
+    if side == "scan":
+        assert len(scans) == 3 and all(s["rows"] == 0 for s in scans), scans
+    else:
+        assert scans == []

@@ -476,7 +476,7 @@ def test_inside_np_matches_exact_pred(spark, kind, d):
 def test_count_at_63_bit_morton_keys(spark, monkeypatch, finishes, bound):
     """dims * grid_bits = 63 with boxes touching the last leaf, whose end
     ((leaf + 1) << s) - 1 overflows int64: counts equal numpy on both sides."""
-    from pkd_tree_spark import ranges as R
+    from pkd_tree_spark import index as I
 
     cfg = EngineConfig(dims=3, coord_bits=21, index_level=4, knn_level=3, partitions=2)
     assert cfg.dims * cfg.grid_bits == 63
@@ -491,7 +491,7 @@ def test_count_at_63_bit_morton_keys(spark, monkeypatch, finishes, bound):
     boxes = pd.DataFrame({"qid": np.arange(12), **{f"lo{j}": lo[:, j] for j in range(3)},
                           **{f"hi{j}": hi[:, j] for j in range(3)}})
     if bound == "joined":
-        monkeypatch.setattr(R, "DRIVER_FINISH_MAX_ROWS", 0)
+        monkeypatch.setattr(I, "DRIVER_FINISH_MAX_ROWS", 0)
     try:
         got = _counts(range_count_boxes(ix, boxes))
     finally:
@@ -506,7 +506,7 @@ def test_count_on_rows_out_of_morton_order(tmp_path, spark, cfg, index_uniform, 
     delete survivors stream out of Morton order, and a loaded
     PersistentIndex reads its bucket files in split order: counts on both
     equal brute force on both sides of the bound."""
-    from pkd_tree_spark import ranges as R
+    from pkd_tree_spark import index as I
     from pkd_tree_spark.updates import PersistentIndex, merge_delete, merge_insert
 
     batch = points_uniform.iloc[3::40].copy()
@@ -527,7 +527,7 @@ def test_count_on_rows_out_of_morton_order(tmp_path, spark, cfg, index_uniform, 
         assert _counts(range_count_boxes(dl, boxes)) == want
         assert _counts(range_count_boxes(loaded, boxes)) == want
         assert finishes == [("box", False), ("box", False)]
-        monkeypatch.setattr(R, "DRIVER_FINISH_MAX_ROWS", 0)
+        monkeypatch.setattr(I, "DRIVER_FINISH_MAX_ROWS", 0)
         assert _counts(range_count_boxes(dl, boxes)) == want
         assert _counts(range_count_boxes(loaded, boxes)) == want
         assert len(finishes) == 2

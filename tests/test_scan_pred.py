@@ -13,7 +13,7 @@ from pkd_tree_spark import fixtures as FX
 from pkd_tree_spark.knn import knn
 from pkd_tree_spark.ranges import range_count_boxes, range_report_boxes
 
-from test_knn import _kth_oracle
+from test_knn import _kth_oracle, _rows_stats, _run_sides
 from test_range import _box_oracle
 
 
@@ -180,16 +180,19 @@ def test_range_report_exact_both_sides(index_uniform, points_uniform, decisions,
     _assert_side(decisions, side == "corner")
 
 
-@pytest.mark.parametrize("side", ["corner", "spanning"])
-def test_knn_driver_loop_exact_both_sides(index_uniform, points_uniform, decisions, side):
+def _knn_exact(index_uniform, points_uniform, decisions, side):
+    """kNN of the corner or the spanning batch against brute force, with
+    its scan pre-filter decisions; returns its rows and stats."""
+    decisions.clear()
     if side == "corner":
         qid = np.arange(16, dtype=np.int64)
         queries = pd.DataFrame({"qid": qid, "q0": (qid * 7919) % 40_000, "q1": (qid * 104_729) % 40_000})
     else:
         queries = FX.knn_fixtures(256, 2)
     k = 10
-    res = knn(index_uniform, queries, k=k).toPandas()
-    got = res[res.rn == k].set_index("qid")["dist2"].to_dict()
+    res, st = knn(index_uniform, queries, k=k, return_stats=True)
+    out = _rows_stats(res, st)
+    got = out[0][out[0].rn == k].set_index("qid")["dist2"].to_dict()
     assert got == _kth_oracle(points_uniform, queries, k)
     if side == "corner":
         _assert_side(decisions, True)
@@ -197,3 +200,18 @@ def test_knn_driver_loop_exact_both_sides(index_uniform, points_uniform, decisio
         # round 1's shells span the domain; the straggler rounds that
         # follow pend only a few queries and may rightly filter
         _assert_side(decisions[:1], False)
+    return out
+
+
+@pytest.mark.parametrize("side", ["corner", "spanning"])
+def test_knn_driver_loop_exact_both_sides(index_uniform, points_uniform, decisions, knn_scans, side):
+    _knn_exact(index_uniform, points_uniform, decisions, side)
+    assert knn_scans  # every round here is finished from one collected scan
+
+
+@pytest.mark.parametrize("side", ["corner", "spanning"])
+def test_knn_driver_loop_exact_both_sides_joined(index_uniform, points_uniform, decisions, knn_scans, monkeypatch,
+                                                 side):
+    """The same batches through the candidate join (the bound at 0):
+    identical rows and stats."""
+    _run_sides(monkeypatch, knn_scans, lambda: _knn_exact(index_uniform, points_uniform, decisions, side))

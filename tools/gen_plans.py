@@ -115,12 +115,39 @@ def report_plan(spark, ix, sf) -> str:
     return _executed(rr)
 
 
-def knn_round1_plan(spark, ix, sf) -> str:
+def knn_round_scan_plan(spark, ix, sf) -> str:
+    """A small kNN batch's round-1 Spark query within the bound: the scan
+    knn._knn_driver collects through Arrow (read by wrapping toArrow)."""
+    from unittest import mock
+
     from pkd_tree_spark import fixtures as FX
+    from pkd_tree_spark.knn import knn
+
+    cls = type(ix.points)
+    real = cls.toArrow
+    scans: list[str] = []
+
+    def spy(self):
+        out = real(self)
+        scans.append(_executed(self))
+        return out
+
+    with mock.patch.object(cls, "toArrow", spy):
+        knn(ix, FX.knn_fixtures(32, 2), k=10).count()
+    return scans[0]
+
+
+def knn_round1_plan(spark, ix, sf) -> str:
+    """The same batch's round-1 candidate join past the bound (patched to
+    0 here), read by wrapping knn._candidate_join."""
+    from unittest import mock
+
+    from pkd_tree_spark import fixtures as FX
+    from pkd_tree_spark import index as I
     from pkd_tree_spark.knn import knn
     from tests.conftest import candidate_joins
 
-    with candidate_joins() as rounds:
+    with mock.patch.object(I, "DRIVER_FINISH_MAX_ROWS", 0), candidate_joins() as rounds:
         knn(ix, FX.knn_fixtures(32, 2), k=10).count()
     return rounds[0]["plan"]
 
@@ -233,12 +260,28 @@ SECTIONS = [
         report_plan,
     ),
     (
+        "kNN driver round (one collected scan, within DRIVER_FINISH_MAX_ROWS)",
+        "A small batch's round: the shells resolve DRIVER-SIDE to occupied "
+        "leaves (or fine cells); while the scan's rows plus the (row, query) "
+        "pairs it must test stay within index.DRIVER_FINISH_MAX_ROWS (exact "
+        "from the prefix sums before any job) the candidate table's key, "
+        "span_idx, x0, x1, morton and doc_id are scanned ONCE (the "
+        "Morton-interval pre-filter prunes cached batches when it pays) and "
+        "collected through Arrow; each shell cell's rows are a searchsorted "
+        "run of the Morton keys, and dist2, the top-k merge and doc_id (for "
+        "top-k rows only) are numpy. One job, no join, no local cell "
+        "relation, no shuffle.",
+        knn_round_scan_plan,
+    ),
+    (
         "kNN round-1 candidate join",
-        "Round-1 candidate join (optimized logical plan of the parts "
-        "knn._candidate_join returns, read by wrapping it): shells leaf-resolved; lvl==-1 rows take the "
-        "no-generate leaf equi-join; the join projects doc_id, which the "
-        "driver rounds collect with the candidates (no re-attach query "
-        "for a batch finished on the driver).",
+        "The same round past index.DRIVER_FINISH_MAX_ROWS (patched to 0 here; optimized logical "
+        "plan of the parts knn._candidate_join returns, read by wrapping it): "
+        "shells leaf-resolved; lvl==-1 rows take the no-generate leaf "
+        "equi-join against a local cell relation; the join projects doc_id, "
+        "which the driver round collects with the candidates (no re-attach "
+        "query for a batch finished on the driver). The distributed rounds "
+        "run the same join against their persisted cells frame.",
         knn_round1_plan,
     ),
     (
