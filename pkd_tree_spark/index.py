@@ -22,8 +22,9 @@ META_MEMO_CELLS cells. Covers are computed from query geometry alone
 broadcast of the skeleton when the query set is itself large.
 
 Every generation (a build, an update, a retile, a PersistentIndex commit)
-encodes its points with with_morton and aggregates its meta with meta_of,
-so the meta schema is decided here once. The build's one size gate: it
+encodes its points with with_morton and aggregates its meta (an in-memory
+update: its batch's meta delta) with meta_of, so the meta schema is
+decided here once. The build's one size gate: it
 stages its encoded input on disk only when Catalyst estimates the input
 above STAGE_INPUT_BYTES.
 """
@@ -77,17 +78,19 @@ class SpatialIndex:
     """points: (doc_id, span_idx, key, x0..x{d-1}, morton) range-partitioned
     and sorted by morton; meta: (cell, cnt, mn0..mx{d-1}) at cfg.index_level.
 
-    ``_meta_np`` memoizes the driver-side skeleton (meta_np below), from
+    ``_meta_np`` holds the driver-side skeleton (meta_np below), from
     which kNN picks its per-query levels and resolves its shells — INDEX
-    state, like the reference kd-tree's depth structure, computed at most
-    once per index generation (updates produce a new SpatialIndex, so the
-    memo invalidates naturally).
+    state, like the reference kd-tree's depth structure. It is carried
+    across generations: an in-memory update computes its child's skeleton
+    on the driver from this one plus the batch's per-cell delta, a
+    checkpoint passes it on, and PersistentIndex.load reads it off the
+    committed meta file, so only a build or a retile collects it with a
+    Spark job (see updates.py).
 
     ``_min_positions`` is a lower bound on the table's distinct coordinate
     positions (None: unknown), the evidence behind pruned_points'
-    decision. Unlike the memos it outlives a generation: updates pass it
-    to the index they make without a Spark job, as they refresh the meta
-    (see updates.py)."""
+    decision. It outlives a generation too: updates pass it to the index
+    they make without a Spark job, as they refresh the skeleton."""
 
     points: DataFrame
     meta: DataFrame
@@ -134,9 +137,11 @@ class SpatialIndex:
         self.release_staged()
 
     def meta_np(self) -> dict:
-        """Driver-side snapshot of the metadata table, memoized per index
-        generation: {"cells": sorted int64 cell ids, "cum": length m+1
-        count prefix sums, "mn"/"mx": (m, d) per-cell occupied bounds}.
+        """Driver-side snapshot of the metadata table (``skeleton``):
+        {"cells": sorted int64 cell ids, "cum": length m+1 count prefix
+        sums, "mn"/"mx": (m, d) per-cell occupied bounds}. Collected at
+        most once per index, and only when no update, checkpoint or load
+        handed the index its skeleton already.
 
         This is the distributed analog of the reference keeping its top
         skeleton in shared memory (build_tree.hpp:19-45): every query batch
@@ -148,15 +153,8 @@ class SpatialIndex:
         """
         if self._meta_np is not None:
             return self._meta_np
-        d = self.cfg.dims
-        # one Arrow collect; cell ids are unique (the meta's group key)
-        m = self.meta.toPandas().sort_values("cell")
-        memo = {
-            "cells": m["cell"].to_numpy(np.int64),
-            "cum": np.concatenate([[0], np.cumsum(m["cnt"].to_numpy(np.int64))]),
-            "mn": m[[f"mn{j}" for j in range(d)]].to_numpy(np.int64),
-            "mx": m[[f"mx{j}" for j in range(d)]].to_numpy(np.int64),
-        }
+        # one Arrow collect
+        memo = skeleton(self.meta.toPandas(), self.cfg.dims)
         # frozen=False dataclass: plain assignment; keep setattr uniform
         object.__setattr__(self, "_meta_np", memo)
         return memo
@@ -364,6 +362,18 @@ def meta_of(points: DataFrame, cfg: EngineConfig) -> DataFrame:
         *[F.min(c).alias(f"mn{j}") for j, c in enumerate(xcols)],
         *[F.max(c).alias(f"mx{j}") for j, c in enumerate(xcols)],
     )
+
+
+def skeleton(meta: pd.DataFrame, d: int) -> dict:
+    """The driver skeleton (SpatialIndex.meta_np's layout) of a collected
+    meta table in any row order; cell ids are unique (the meta's group key)."""
+    m = meta.sort_values("cell")
+    return {
+        "cells": m["cell"].to_numpy(np.int64),
+        "cum": np.concatenate([[0], np.cumsum(m["cnt"].to_numpy(np.int64))]),
+        "mn": m[[f"mn{j}" for j in range(d)]].to_numpy(np.int64),
+        "mx": m[[f"mx{j}" for j in range(d)]].to_numpy(np.int64),
+    }
 
 
 def release_rdd_ids(spark, ids) -> None:

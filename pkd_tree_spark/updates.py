@@ -12,16 +12,22 @@ Reference operators reproduced (SURVEY.md §2.5-2.6):
   M2 update_inner_tree metadata refresh (batch_helpers.hpp:124-142)
 
 Spark-first semantics: the index is immutable data + metadata; an update
-produces a new SpatialIndex whose metadata was refreshed *incrementally*
-(delta aggregation over only the touched cells — the analog of re-linking
-only tagged skeleton nodes). The same incremental refresh covers the
-index's lower bound on distinct coordinate positions, which decides
-kNN's duplicate collapse (SpatialIndex.pruned_points) and which the
-reference keeps as tree state too (dummy-leaf multiplicity): an insert,
-checkpoint or retile passes the parent's bound on unchanged, an
-``exact_rows`` delete passes it less the rows removed, and a new
-generation's first kNN then refuses the collapse with no probe scan. Any
-other delete, and ``PersistentIndex.load``, start it unknown.
+produces a new SpatialIndex whose metadata was refreshed *incrementally*.
+M2's refresh is the driver skeleton's (SpatialIndex.meta_np): the batch's
+per-cell delta is aggregated and collected in one job, merged into the
+parent's skeleton in numpy (the analog of re-linking only the tagged
+skeleton nodes and propagating their sizes and boxes), and the child's
+meta table is built from the merged skeleton, so a new generation's first
+read collects no meta; checkpoint_index passes the skeleton on, and
+PersistentIndex.load reads it off the committed meta file. The same
+incremental refresh covers the index's lower bound on distinct
+coordinate positions, which decides kNN's duplicate collapse
+(SpatialIndex.pruned_points) and which the reference keeps as tree state
+too (dummy-leaf multiplicity): an insert, checkpoint or retile passes the
+parent's bound on unchanged, an ``exact_rows`` delete passes it less the
+rows removed, and a new generation's first kNN then refuses the collapse
+with no probe scan. Any other delete, and ``PersistentIndex.load``, start
+it unknown.
 
 In a real deployment the points table is an Iceberg table and
 insert/delete are `MERGE INTO` with copy-on-write of the touched cell
@@ -45,12 +51,14 @@ import shutil
 from dataclasses import dataclass
 
 import numpy as np
+import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from .config import EngineConfig, DEFAULT_CONFIG
-from .index import SpatialIndex, meta_of, release_rdd_ids, tracked_local_checkpoint, with_morton
+from .index import SpatialIndex, meta_of, release_rdd_ids, skeleton, tracked_local_checkpoint, with_morton
 from .zorder import cell_col
 
 __all__ = [
@@ -82,48 +90,52 @@ DELETE_BCAST_ROWS = 8_000_000
 DELETE_LAZY_PERSIST_FRAC = 0.05
 
 
-def _merge_meta(old: DataFrame, delta: DataFrame, cfg: EngineConfig, sign: int) -> DataFrame:
-    """Combine per-cell stats; sign=+1 insert, -1 delete. Cells reaching
-    cnt<=0 drop out (the thin-subtree collapse, kdTreeParallel.h:42)."""
-    d = cfg.dims
-    # selectExpr strings, not Column chains: the Column form issued ~8 py4j
-    # round-trips per dim and this runs once per step of iterative loops
-    o = old.selectExpr(
-        "cell", "cnt AS ocnt",
-        *[f"mn{j} AS omn{j}" for j in range(d)],
-        *[f"mx{j} AS omx{j}" for j in range(d)],
-    )
-    dl = delta.selectExpr(
-        "cell", "cnt AS dcnt",
-        *[f"mn{j} AS dmn{j}" for j in range(d)],
-        *[f"mx{j} AS dmx{j}" for j in range(d)],
-    )
-    j = o.join(dl, "cell", "full_outer")
-    # the column order of index.meta_of: one meta schema
-    # for every generation, so an update cycle started from a build runs
-    # the plan shapes (and compiled classes) of one started from a checkpoint
-    if sign > 0:
-        mn = [f"least(coalesce(omn{jj}, dmn{jj}), coalesce(dmn{jj}, omn{jj})) AS mn{jj}" for jj in range(d)]
-        mx = [f"greatest(coalesce(omx{jj}, dmx{jj}), coalesce(dmx{jj}, omx{jj})) AS mx{jj}" for jj in range(d)]
-    else:  # delete: keep old (conservative) bounds
-        mn = [f"coalesce(omn{jj}, dmn{jj}) AS mn{jj}" for jj in range(d)]
-        mx = [f"coalesce(omx{jj}, dmx{jj}) AS mx{jj}" for jj in range(d)]
-    exprs = ["cell", f"coalesce(ocnt, 0) + ({sign}) * coalesce(dcnt, 0) AS cnt", *mn, *mx]
-    return j.selectExpr(*exprs).where("cnt > 0")
+def _carry(index: SpatialIndex, delta: DataFrame, sign: int) -> tuple[DataFrame, dict]:
+    """The child's meta and skeleton after a batch whose per-cell meta is
+    ``delta``; sign=+1 insert, -1 delete. The delta is collected in one
+    job (at most META_MEMO_CELLS rows, like any meta) and merged into the
+    parent's skeleton on the driver: counts add or subtract, an insert's
+    bounds take the union of both, a delete keeps the old (conservative)
+    bounds, and cells reaching cnt<=0 drop out (the thin-subtree collapse,
+    kdTreeParallel.h:42). The meta frame is built from that skeleton with
+    the delta's schema, which is meta_of's: one meta shape (column order
+    and nullabilities) for every generation, so commits write one schema
+    and an update cycle started from a build runs the plan shapes (and
+    compiled classes) of one started from a checkpoint."""
+    d = index.cfg.dims
+    old, dl = index.meta_np(), skeleton(delta.toPandas(), d)
+    cells = np.union1d(old["cells"], dl["cells"])
+    at_old, at_dl = np.searchsorted(cells, old["cells"]), np.searchsorted(cells, dl["cells"])
+    cnt = np.zeros(len(cells), dtype=np.int64)
+    cnt[at_old] = np.diff(old["cum"])
+    cnt[at_dl] += sign * np.diff(dl["cum"])
+    mn = np.full((len(cells), d), np.iinfo(np.int64).max, dtype=np.int64)
+    mx = np.full((len(cells), d), np.iinfo(np.int64).min, dtype=np.int64)
+    # a delete's bounds are the old ones: a cell only its batch names
+    # falls below 0 and drops out
+    for at, sk in [(at_old, old), (at_dl, dl)] if sign > 0 else [(at_old, old)]:
+        mn[at] = np.minimum(mn[at], sk["mn"])
+        mx[at] = np.maximum(mx[at], sk["mx"])
+    keep = cnt > 0
+    cells, cnt, mn, mx = cells[keep], cnt[keep], mn[keep], mx[keep]
+    skel = {"cells": cells, "cum": np.concatenate([[0], np.cumsum(cnt)]), "mn": mn, "mx": mx}
+    cols = {"cell": cells, "cnt": cnt, **{f"mn{j}": mn[:, j] for j in range(d)}, **{f"mx{j}": mx[:, j] for j in range(d)}}
+    return index.points.sparkSession.createDataFrame(pd.DataFrame(cols), schema=delta.schema), skel
 
 
 def merge_insert(index: SpatialIndex, new_points: DataFrame, persist: bool = True) -> SpatialIndex:
-    """U1 batchInsert: encode the batch, append, refresh metadata
-    incrementally (only touched cells aggregate — one small shuffle)."""
+    """U1 batchInsert: encode the batch, append, refresh the meta and the
+    skeleton incrementally (only the batch aggregates — one small shuffle,
+    collected; the merge runs on the driver, see _carry)."""
     cfg = index.cfg
     base_cols = [c for c in index.points.columns if c != "morton"]
     batch = with_morton(new_points.select(*base_cols), cfg)
     pts = index.points.unionByName(batch)
-    meta = _merge_meta(index.meta, meta_of(batch, cfg), cfg, +1)
+    meta, skel = _carry(index, meta_of(batch, cfg), +1)
     if persist:
         pts, meta = pts.persist(), meta.persist()
     # an insert removes no position: the parent's distinct-position bound holds
-    return SpatialIndex(points=pts, meta=meta, cfg=cfg, _min_positions=index._min_positions)
+    return SpatialIndex(points=pts, meta=meta, cfg=cfg, _meta_np=skel, _min_positions=index._min_positions)
 
 
 def merge_delete(
@@ -193,7 +205,7 @@ def merge_delete(
         if keyside is None:
             keyside = keys.hint("shuffle_hash")
         delta_src = index.points.join(keyside, on, "left_semi")
-    meta = _merge_meta(index.meta, meta_of(delta_src, cfg), cfg, -1)
+    meta, skel = _carry(index, meta_of(delta_src, cfg), -1)
     if persist:
         meta = meta.persist()
         # count-gate the survivors persist (VERDICT r6 #7): a small delete
@@ -208,7 +220,7 @@ def merge_delete(
     bound = None
     if exact_rows and index._min_positions is not None:
         bound = index._min_positions - int(rows.get["n"])
-    return SpatialIndex(points=pts, meta=meta, cfg=cfg, _staged_ids=key_ids, _min_positions=bound)
+    return SpatialIndex(points=pts, meta=meta, cfg=cfg, _meta_np=skel, _staged_ids=key_ids, _min_positions=bound)
 
 
 def checkpoint_index(index: SpatialIndex) -> SpatialIndex:
@@ -241,7 +253,12 @@ def checkpoint_index(index: SpatialIndex) -> SpatialIndex:
         pts, ids_p = f_pts.result()
         meta, ids_m = f_meta.result()
     return SpatialIndex(
-        points=pts, meta=meta, cfg=index.cfg, _staged_ids=ids_p + ids_m, _min_positions=index._min_positions
+        points=pts,
+        meta=meta,
+        cfg=index.cfg,
+        _meta_np=index._meta_np,
+        _staged_ids=ids_p + ids_m,
+        _min_positions=index._min_positions,
     )
 
 
@@ -411,9 +428,11 @@ class PersistentIndex:
         man = self.manifest()
         pts = self._scan(spark, man["schema"], [e["dir"] for e in man["buckets"].values()])
         meta = self._scan(spark, man["meta_schema"], [man["meta"]])
+        # the skeleton is read on the driver: every commit writes the meta as one file
+        skel = skeleton(pq.read_table(os.path.join(self.path, man["meta"])).to_pandas(), self.cfg.dims)
         if persist:
             pts, meta = pts.persist(), meta.persist()
-        return SpatialIndex(points=pts, meta=meta, cfg=self.cfg)
+        return SpatialIndex(points=pts, meta=meta, cfg=self.cfg, _meta_np=skel)
 
     def write(self, index: SpatialIndex) -> "PersistentIndex":
         """Replace whatever ``path`` holds with ``index`` (one commit; its

@@ -2,8 +2,10 @@
 operators on sf0.001 at local[8].
 
 Captures, per operator, the executed/optimized plan and a node-count
-summary (unique plan_ids for Exchange — cached lineage re-prints inflate
-raw text counts). Run from the repo root:
+summary of the query's own nodes: those above each InMemoryTableScan (a
+scan of a cached table prints the table's build lineage under its
+InMemoryRelation), with unique plan_ids for Exchange. Run from the repo
+root:
 
     PYTHONPATH=. python tools/gen_plans.py
 
@@ -23,7 +25,9 @@ HEAD = """# Physical plans of the headline operators (sf0.001, local[8])
 
 Regenerated by tools/gen_plans.py. Checks per plan: join
 strategies, shuffle count (unique Exchange plan_ids), window-group-limit
-presence, and that `Generate` never sits above the points table in the
+presence (each count covers the query's own nodes, not the lineage a
+cached table prints under its InMemoryRelation), and that `Generate`
+never sits above the points table in the
 query hot path (`BatchEvalPython`/`ArrowEval` = 0 in every JVM row path;
 the only Arrow stages are the declared mapInPandas/pandas_udf operators:
 kNN ring-cell generation, large-batch covers, media decode, ANN table
@@ -37,7 +41,21 @@ NODE_RE = re.compile(
 )
 
 
+def _above_cache(plan: str) -> str:
+    """``plan`` without the subtree each InMemoryRelation prints (the
+    lineage that built the cached table, not this query's work)."""
+    kept, cut = [], None
+    for ln in plan.splitlines():
+        depth = len(ln) - len(ln.lstrip(" :+-"))
+        if cut is not None and depth > cut:
+            continue
+        cut = depth if "InMemoryRelation" in ln else None
+        kept.append(ln)
+    return "\n".join(kept)
+
+
 def op_counts(plan: str) -> dict:
+    plan = _above_cache(plan)
     counts: dict[str, int] = {}
     for m in NODE_RE.finditer(plan):
         counts[m.group(1)] = counts.get(m.group(1), 0) + 1
@@ -70,11 +88,12 @@ def _boxes(n: int):
 
 
 def build_plan(spark, ix, sf) -> str:
-    """A fresh build's points layout, before anything runs it."""
+    """A build's points layout: the plan that builds its cached points."""
     from pkd_tree_spark.documents import load_points
     from pkd_tree_spark.index import SpatialIndex
 
-    return _executed(SpatialIndex.build(load_points(spark, sf, dims=2, dist="uniform"), _cfg()).points)
+    pts = SpatialIndex.build(load_points(spark, sf, dims=2, dist="uniform"), _cfg()).points
+    return pts._jdf.queryExecution().optimizedPlan().cachedPlan().toString()
 
 
 def boundary_scan_plan(spark, ix, sf, n: int = 64) -> str:
