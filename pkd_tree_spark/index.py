@@ -35,6 +35,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -90,7 +91,12 @@ class SpatialIndex:
     ``_min_positions`` is a lower bound on the table's distinct coordinate
     positions (None: unknown), the evidence behind pruned_points'
     decision. It outlives a generation too: updates pass it to the index
-    they make without a Spark job, as they refresh the skeleton."""
+    they make without a Spark job, as they refresh the skeleton.
+
+    ``_rows`` holds the points' kNN candidate columns on the driver
+    (local_rows below; None until a kNN driver round collects them): the
+    reference's leaves, in shared memory. A checkpoint passes it on; an
+    update starts its child without it."""
 
     points: DataFrame
     meta: DataFrame
@@ -99,6 +105,7 @@ class SpatialIndex:
     _staged_ids: list = field(default_factory=list)
     _pruned: object = None  # None | "refused" | (DataFrame, cap)
     _min_positions: int | None = None
+    _rows: pa.Table | None = None
 
     def release_staged(self) -> None:
         """Drop the staged-build-input blocks (localCheckpoint RDDs,
@@ -122,8 +129,10 @@ class SpatialIndex:
         residency stays bounded by the LIVE index — the r4 153.6M study
         held ~6 persisted full-size tables by the update section and
         anti-scaled. Blocking by default so the block drop completes
-        OUTSIDE the next timed section. Driver-side memos (meta_np)
-        die with the instance."""
+        OUTSIDE the next timed section. The driver-side rows
+        (local_rows) are dropped too; the skeleton (meta_np) dies with the
+        instance, or with the last generation it was passed to."""
+        object.__setattr__(self, "_rows", None)
         for df in (self.points, self.meta):
             try:
                 df.unpersist(blocking=blocking)
@@ -158,6 +167,29 @@ class SpatialIndex:
         # frozen=False dataclass: plain assignment; keep setattr uniform
         object.__setattr__(self, "_meta_np", memo)
         return memo
+
+    def local_rows(self) -> pa.Table:
+        """The points' kNN candidate columns (key, doc_id, span_idx, x*,
+        morton) as one Arrow table in Morton order, collected in ONE
+        ``toArrow`` job on first use and then held as index state: later
+        kNN driver rounds and driver-finished range counts match their
+        cells against these rows (index.morton_runs finds a cell's run in
+        any superset of its rows) instead of scanning the table again.
+        Rows that arrive out of Morton order (an insert's appended batch, a
+        loaded index's files) are sorted once, here.
+
+        Only a kNN driver round whose scan would read the whole table and
+        whose rows + pairs fit DRIVER_FINISH_MAX_ROWS calls this, so the
+        rows held are bounded by that bound; a range count reads them only
+        if they exist (see knn._knn_driver, ranges._count)."""
+        if self._rows is None:
+            xcols = [f"x{j}" for j in range(self.cfg.dims)]
+            tbl = self.points.select("key", "doc_id", "span_idx", *xcols, "morton").toArrow().combine_chunks()
+            m = tbl.column("morton").to_numpy()
+            if (m[1:] < m[:-1]).any():
+                tbl = tbl.take(np.argsort(m, kind="stable"))
+            object.__setattr__(self, "_rows", tbl)
+        return self._rows
 
     def meta_n_cells(self) -> int:
         """Skeleton row count (the number of occupied level-L cells)."""

@@ -44,14 +44,19 @@ level, r, cnt) plus their carried top-k; only where a round runs varies:
     independent of query count;
   * once the pending set is at or below that size it is collected ONCE
     (carried top-k exploded into rows) and the remaining rounds run on the
-    DRIVER (_knn_driver): numpy shells and merge, ONE candidate collection
-    per round. Small batches start there. While a round's scan rows plus
-    the (row, query) pairs it must test fit index.DRIVER_FINISH_MAX_ROWS,
-    that collection is one pre-filtered scan of the candidate table, and
-    the shells meet their rows in numpy (_scan_candidates: the reference
-    visiting a leaf and computing its distances in place,
-    nn_search.hpp:81-126): one Spark job, no join. Larger rounds, and
-    rounds holding an exhaustive query, collect the candidate join.
+    DRIVER (_knn_driver): numpy shells and merge, AT MOST ONE candidate
+    collection per round. Small batches start there. While a round's scan
+    rows plus the (row, query) pairs it must test fit
+    index.DRIVER_FINISH_MAX_ROWS, the shells meet the candidate table's
+    rows in numpy (_scan_candidates: the reference visiting a leaf and
+    computing its distances in place, nn_search.hpp:81-126), no join. On
+    the points table those rows are index state (SpatialIndex.local_rows,
+    the reference's leaves in shared memory): the first such round whose
+    scan would read the whole table collects them in one Spark job, and
+    every later round on that index runs none. A pre-filtered round before
+    that, and every round on the pruned table, collects its own scan: one
+    job. Larger rounds, and rounds holding an exhaustive query, collect the
+    candidate join.
 Every round yields its shell cells' rows (the candidate join's multiset,
 _candidate_join), and all share the exhaustive branch and termination
 rule, so rows and per-query stats do not depend on where the handoff
@@ -372,7 +377,7 @@ def _union(frames: list[DataFrame]) -> DataFrame:
 
 
 def _candidate_source(index: SpatialIndex, k: int, d: int):
-    """(narrow candidate table, dist2 column), built once per loop;
+    """(narrow candidate table, dist2 column), built at most once per loop;
     duplicate-heavy indexes swap in the pruned (position-collapsed) table —
     multiset-exact for this k (see SpatialIndex.pruned_points). doc_id is
     in the table for the driver rounds' collect; the distributed rounds
@@ -547,14 +552,15 @@ def _cand_estimate(lvl: np.ndarray, anc: np.ndarray, mnp: dict, d: int, cb: int,
 
 def _scan_candidates(tbl, st: pd.DataFrame, cells: pd.DataFrame, d: int, kb: int, L: int) -> pd.DataFrame:
     """One driver round's candidates from ONE collected scan ``tbl`` (an
-    Arrow table of the candidate table's rows): the rows of each resolved
-    shell cell ``cells`` (qid, lvl, cell) are one Morton run of the scanned
-    rows (index.morton_runs; a cell at lvl > L is a prefix of its own
-    level, lvl == -1 a level-L leaf), and their exact int64 dist2 to the
-    cell's query in ``st`` is computed in numpy: the multiset the candidate
-    join yields. Returns (qid, dist2, key, span_idx, doc_id, row) with
-    doc_id unset and ``row`` the candidate's position in ``tbl``: strings
-    are made only for the rows that enter a top-k."""
+    Arrow table of the candidate table's rows, or any superset of them such
+    as SpatialIndex.local_rows): the rows of each resolved shell cell
+    ``cells`` (qid, lvl, cell) are one Morton run of the scanned rows
+    (index.morton_runs; a cell at lvl > L is a prefix of its own level,
+    lvl == -1 a level-L leaf), and their exact int64 dist2 to the cell's
+    query in ``st`` is computed in numpy: the multiset the candidate join
+    yields. Returns (qid, dist2, key, span_idx, row), ``row`` being the
+    candidate's position in ``tbl``: doc_id strings are made only for the
+    rows of a final top-k (_DocIds)."""
 
     def col(c: str) -> np.ndarray:
         return tbl.column(c).to_numpy().astype(np.int64, copy=False)
@@ -569,8 +575,51 @@ def _scan_candidates(tbl, st: pd.DataFrame, cells: pd.DataFrame, d: int, kb: int
         dist2 += t * t
     return pd.DataFrame({
         "qid": st["qid"].to_numpy(np.int64)[qi], "dist2": dist2, "key": col("key")[rows],
-        "span_idx": col("span_idx")[rows], "doc_id": None, "row": rows,
+        "span_idx": col("span_idx")[rows], "row": rows,
     })
+
+
+class _DocIds:
+    """The doc_id columns one driver-round loop has collected: a round's
+    scanned table (one registration per table, so every round that reads
+    SpatialIndex.local_rows shares one) or a joined round's collected
+    strings. A top-k entry carries its row's position in their
+    concatenation (-1: none, for entries carried across the handoff, whose
+    doc_id _finish joins), and strings are made only for the rows of a
+    final top-k. Keeping the strings out of the carried entries keeps every
+    round's merge on int64 columns."""
+
+    def __init__(self):
+        self.cols: list = []
+        self.starts: list[int] = []
+        self.n = 0
+        self._tables: list = []  # (table, position of its row 0)
+
+    def add(self, col) -> int:
+        """Register a doc_id column; returns the position of its row 0."""
+        self.cols.append(col)
+        self.starts.append(self.n)
+        self.n += len(col)
+        return self.starts[-1]
+
+    def of_table(self, tbl) -> int:
+        """add() for a collected table's doc_id column, once per table."""
+        for t, at in self._tables:
+            if t is tbl:
+                return at
+        self._tables.append((tbl, self.add(tbl.column("doc_id"))))
+        return self._tables[-1][1]
+
+    def take(self, rows: np.ndarray) -> np.ndarray:
+        """The doc_id of each registered row (None where ``rows`` is -1)."""
+        out = np.full(len(rows), None, dtype=object)
+        src = np.searchsorted(np.asarray(self.starts, dtype=np.int64), rows, side="right") - 1
+        for i in np.unique(src[rows >= 0]):
+            m = (rows >= 0) & (src == i)
+            idx = rows[m] - self.starts[i]
+            col = self.cols[i]
+            out[m] = col[idx] if isinstance(col, np.ndarray) else col.take(idx).to_pylist()
+        return out
 
 
 def _knn_driver(
@@ -583,22 +632,29 @@ def _knn_driver(
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
     """Driver rounds rnd0..max_rounds of the ring loop, for a pending set
     ``st`` (qid, q*, level, r, cnt) with carried top-k entries ``carried``
-    (qid, dist2, key, span_idx, doc_id). Shell resolution, top-k merge and
-    ring termination run ON THE DRIVER; Spark contributes ONE candidate
-    collection per ring round.
+    (qid, dist2, key, span_idx, row; row -1: doc_id not known yet). Shell
+    resolution, top-k merge and ring termination run ON THE DRIVER; Spark
+    contributes AT MOST ONE candidate collection per ring round.
 
     A round of mesh queries whose scan rows plus (row, query) pairs stay
     within index.DRIVER_FINISH_MAX_ROWS — both from the skeleton before
     any job: leaf_scan's rows, and the leaf occupancy under the resolved
-    cells (exact for coarse cells, an upper bound for fine ones) — is ONE
-    Spark job: one pre-filtered scan of the candidate table collected
-    through Arrow, matched to its shell cells in numpy (_scan_candidates).
-    Other rounds (past the bound, or holding an exhaustive query) collect
-    the candidate join (a local cell relation broadcast against the scan)
-    instead. Those whose metadata-estimated candidate volume exceeds
-    DRIVER_COLLECT_MAX_ROWS reduce per-query top-k with the same
-    WindowGroupLimit plan the distributed rounds use before collecting, so
-    the driver never holds more than ~pend*k rows from such a round.
+    cells (exact for coarse cells, an upper bound for fine ones) — meets
+    its shell cells with the candidate table's rows in numpy
+    (_scan_candidates). On the points table those rows are
+    SpatialIndex.local_rows: the first such round whose scan would read the
+    whole table collects them in one Spark job, and every later round on
+    the index (this call's, later calls', rounds after a handoff) runs no
+    Spark job. A round before that whose scan is pre-filtered, and every
+    round on the pruned table (which never takes the memo), collects its
+    own scan through Arrow: one job. Other rounds (past the bound, or
+    holding an exhaustive query) collect the candidate join (a local cell
+    relation broadcast against the scan) instead. Those whose
+    metadata-estimated candidate volume exceeds DRIVER_COLLECT_MAX_ROWS
+    reduce per-query top-k with the same WindowGroupLimit plan the
+    distributed rounds use before collecting, so the driver never holds
+    more than ~pend*k rows from such a round. The candidate table's frame
+    and dist2 column are built only for a round that queries Spark.
 
     The candidate multiset per round is the distributed round's (same
     shell cells, _exhaustive_part), the merge order is (dist2, key,
@@ -615,7 +671,10 @@ def _knn_driver(
     mnp = index.meta_np()
     batch_rows = index.scan_batch_rows()
     total_pts = int(mnp["cum"][-1])
-    pts_narrow, dist2 = _candidate_source(index, k, d)
+    source = functools.cache(lambda: _candidate_source(index, k, d))
+    # local_rows holds the points table only
+    memo_ok = index.pruned_points(k) is None
+    docs = _DocIds()
 
     res_frames: list[pd.DataFrame] = []
     stats_frames: list[pd.DataFrame] = []
@@ -634,14 +693,18 @@ def _knn_driver(
             cells_pdf = _resolved_cells(sub, d, cb, L, mnp)
             lvlv = cells_pdf["lvl"].to_numpy(np.int64)
             anc = _leaf_ancestors(lvlv, cells_pdf["cell"].to_numpy(np.int64), d, L)
-            scan = None
+            tbl = None
             if len(anc) and not exh.any():
                 pred, rows = leaf_scan(mnp, anc, d * (kb - L), batch_rows)
                 if rows + leaf_rows(mnp, anc) <= I.DRIVER_FINISH_MAX_ROWS:
-                    scan = pts_narrow if pred is None else pts_narrow.where(pred)
-            if scan is not None:
-                tbl = scan.toArrow()
+                    if memo_ok and (pred is None or index._rows is not None):
+                        tbl = index.local_rows()
+                    else:
+                        pts_narrow = source()[0]
+                        tbl = (pts_narrow if pred is None else pts_narrow.where(pred)).toArrow()
+            if tbl is not None:
                 cand_pd = _scan_candidates(tbl, sub, cells_pdf, d, kb, L)
+                cand_pd["row"] += docs.of_table(tbl)
             else:
                 est += _cand_estimate(lvlv, anc, mnp, d, cb, L)
                 lvl_counts, leaves = _level_stats(lvlv, np.ones(len(lvlv), dtype=np.int64), anc)
@@ -655,16 +718,16 @@ def _knn_driver(
                         schema=f"qid long, lvl int, cell long, {qschema}",
                     )
 
-                parts = _candidate_join(pts_narrow, cell_rel, lvl_counts, leaves, mnp, d, kb, L, 3 + d, batch_rows)
+                parts = _candidate_join(source()[0], cell_rel, lvl_counts, leaves, mnp, d, kb, L, 3 + d, batch_rows)
         if exh.any():
             ex = st.loc[exh, ["qid", *qcols, "level", "r"]]
             exq = spark.createDataFrame(ex, schema=f"qid long, {qschema}, level int, r long")
-            parts.append(_exhaustive_part(pts_narrow, exq, int(exh.sum()), d, cb))
+            parts.append(_exhaustive_part(source()[0], exq, int(exh.sum()), d, cb))
             est += int(exh.sum()) * total_pts
         if cand_pd is None and parts:
             sel = _union(parts).select(
                 "qid",
-                dist2,
+                source()[1],
                 F.col("key").cast("long").alias("key"),
                 F.col("span_idx").cast("long").alias("span_idx"),
                 "doc_id",
@@ -690,6 +753,8 @@ def _knn_driver(
                     )
             else:
                 cand_pd = sel.toPandas()
+            at = docs.add(cand_pd.pop("doc_id").to_numpy(dtype=object))
+            cand_pd["row"] = at + np.arange(len(cand_pd), dtype=np.int64)
         elif cand_pd is None:
             cand_pd = carried.iloc[0:0]
         if new_sizes is None:
@@ -704,10 +769,6 @@ def _knn_driver(
         row = np.arange(len(qv))
         pos = row - np.maximum.accumulate(np.where(np.diff(qv, prepend=qv[:1] - 1) != 0, row, 0))
         allv, pos = allv.loc[pos < k].reset_index(drop=True), pos[pos < k]
-        if "row" in allv:  # this round's scanned rows: doc_id for the top-k only
-            src = allv.pop("row").to_numpy(np.float64)  # NaN: a carried entry
-            new = ~np.isnan(src)
-            allv.loc[new, "doc_id"] = tbl.column("doc_id").take(src[new].astype(np.int64)).to_pylist()
         sizes = st["qid"].map(allv.groupby("qid").size()).fillna(0).to_numpy(np.int64)
         kth_ser = allv.loc[pos == k - 1].set_index("qid")["dist2"]
         kth = st["qid"].map(kth_ser).fillna(-1).to_numpy(np.int64)
@@ -715,9 +776,10 @@ def _knn_driver(
         covered = exh | ((2 * rv + 1) >= (np.int64(2) << lv))
         done = ((sizes >= k) & (kth >= 0) & (kth < gap2)) | (covered & (sizes > 0))
         dropm = covered & (sizes == 0)
-        if done.any():  # done queries hold >= 1 entry
+        if done.any():  # done queries hold >= 1 entry; their top-k is final
             dmask = allv["qid"].isin(st.loc[done, "qid"]).to_numpy()
-            resf = allv.loc[dmask, ["qid", "key", "doc_id", "span_idx", "dist2"]].copy()
+            resf = allv.loc[dmask, ["qid", "key", "span_idx", "dist2"]].copy()
+            resf.insert(2, "doc_id", docs.take(allv["row"].to_numpy(np.int64)[dmask]))
             resf["rn"] = (pos[dmask] + 1).astype(np.int64)
             res_frames.append(resf)
             stf = st.loc[done, ["qid", "cnt"]].rename(columns={"cnt": "cand_rows"})
@@ -726,7 +788,7 @@ def _knn_driver(
         st = st.loc[~done & ~dropm].copy()
         if not len(st):
             break
-        carried = allv.loc[allv["qid"].isin(st["qid"]), ["qid", *_ENTRY_COLS, "doc_id"]].reset_index(drop=True)
+        carried = allv.loc[allv["qid"].isin(st["qid"]), ["qid", *_ENTRY_COLS, "row"]].reset_index(drop=True)
         st["r"] = st["r"].to_numpy(np.int64) * 2
 
     if not res_frames:
@@ -808,8 +870,11 @@ def knn(
     cand_rows is cumulative across rounds). Rows finished in driver rounds
     (every row of a small batch) are computed before knn returns, doc_id
     included, and come back as a local relation; reading one costs one job.
-    A driver round within index.DRIVER_FINISH_MAX_ROWS costs one Spark job
-    (its collected scan), a joined one two or more.
+    A driver round within index.DRIVER_FINISH_MAX_ROWS costs no Spark job
+    once the index holds its rows (SpatialIndex.local_rows, collected by the
+    first such round whose scan reads the whole table) and one job (its
+    collected scan) before that or on a pruned candidate table; a joined
+    round costs two or more.
 
     With return_stats a distributed round's candidate counts run as ONE
     extra narrow hash-count pass over the candidate join (the window top-k
@@ -848,8 +913,7 @@ def knn(
             st["level"] = np.int64(level)
         st["r"] = np.int64(1)
         st["cnt"] = np.int64(0)
-        carried = pd.DataFrame({c: pd.Series(dtype="int64") for c in ("qid", *_ENTRY_COLS)})
-        carried["doc_id"] = pd.Series(dtype=object)
+        carried = pd.DataFrame({c: pd.Series(dtype="int64") for c in ("qid", *_ENTRY_COLS, "row")})
         res_pd, stats_pd = _knn_driver(index, st, carried, k, 1, max_rounds)
         return _finish(index, [], res_pd, stats_pd, return_stats)
 
@@ -952,7 +1016,7 @@ def _knn_rounds(
                 *[F.coalesce(F.col(f"e.{c}"), F.lit(-1)).alias(c) for c in _ENTRY_COLS],
             ).toPandas().astype("int64")
             st = flat.drop_duplicates("qid")[["qid", *qcols, "level", "r", "cnt"]].reset_index(drop=True)
-            carried = flat.loc[flat["dist2"] >= 0, ["qid", *_ENTRY_COLS]].assign(doc_id=None).reset_index(drop=True)
+            carried = flat.loc[flat["dist2"] >= 0, ["qid", *_ENTRY_COLS]].assign(row=-1).reset_index(drop=True)
             res_pd, stats_pd = _knn_driver(index, st, carried, k, rnd, max_rounds)
             break
 

@@ -18,9 +18,11 @@ one report plan serve all three. Per query batch:
       |     boundary cells -> occupied leaves (qid, leaf, interior, region)
       |
       +-- points (ONE scan of x0.., morton, Morton pre-filter when it pays)
-            +-- driver-resolved count, small: collected once; each resolved
-            |     leaf's rows by searchsorted on the Morton-sorted rows,
-            |     numpy twin of the exact predicate, bincount per qid
+            +-- driver-resolved count, small: the index's driver-side rows
+            |     if a kNN round collected them (no job), else collected
+            |     once; each resolved leaf's rows by searchsorted on the
+            |     Morton-sorted rows, numpy twin of the exact predicate,
+            |     bincount per qid
             +-- otherwise: one derived leaf column == resolved leaves
                   [one join, broadcast if it fits] -> exact predicate
                   -> COUNT per qid / rows
@@ -31,7 +33,10 @@ one report plan serve all three. Per query batch:
 The driver-finished count is the reference's boundary-leaf point test
 (range_count.hpp:77-96) on the driver: it runs one Spark job (the scan)
 instead of four (a broadcast of the resolved rows, the join stages, the
-qid aggregate), and it is taken only while the rows the scan returns plus
+qid aggregate), and none on an index that holds its rows on the driver
+(SpatialIndex.local_rows, which only a kNN round collects: a count that
+collected them would make the first reader of a generation pay for the
+wider collect). It is taken only while the rows the scan returns plus
 the (row, query) pairs it tests, both exact from the skeleton's prefix
 sums before any job, stay within index.DRIVER_FINISH_MAX_ROWS.
 
@@ -253,17 +258,21 @@ def _resolve(index: SpatialIndex, kind: str, q: pd.DataFrame, budget: int | None
 # the boundary scan, finished in one join or on the driver
 # ---------------------------------------------------------------------------
 
-def _scan(index: SpatialIndex, res, cols: list[str]) -> tuple[DataFrame, int]:
-    """The points' ``cols`` and ``morton`` in ONE scan, pre-filtered to the
-    driver-resolved leaves when that pays (``leaf_scan``), and the exact
-    number of rows it returns."""
-    pts = index.points.select(*cols, "morton")
+def _leaf_scan(index: SpatialIndex, res) -> tuple[Column | None, int]:
+    """The boundary scan's ``morton`` pre-filter (None: the whole table,
+    always so for executor-resolved rows) and the exact number of rows it
+    returns (``leaf_scan``)."""
     if not isinstance(res, pd.DataFrame):
-        return pts, int(index.meta_np()["cum"][-1])
+        return None, int(index.meta_np()["cum"][-1])
     cfg = index.cfg
     shift = cfg.dims * (cfg.grid_bits - cfg.index_level)
-    pred, rows = leaf_scan(index.meta_np(), res["leaf"].to_numpy(), shift, index.scan_batch_rows())
-    return (pts if pred is None else pts.where(pred)), rows
+    return leaf_scan(index.meta_np(), res["leaf"].to_numpy(), shift, index.scan_batch_rows())
+
+
+def _scan(index: SpatialIndex, pred: Column | None, cols: list[str]) -> DataFrame:
+    """The points' ``cols`` and ``morton`` in ONE scan, filtered by ``pred``."""
+    pts = index.points.select(*cols, "morton")
+    return pts if pred is None else pts.where(pred)
 
 
 def _join(index: SpatialIndex, kind: str, q: pd.DataFrame, res, pts: DataFrame) -> DataFrame:
@@ -287,7 +296,7 @@ def _plan(index: SpatialIndex, kind: str, q: pd.DataFrame, budget: int | None, c
         return inter, None
     d = index.cfg.dims
     cols = [f"x{j}" for j in range(d)] if count else [c for c in index.points.columns if c != "morton"]
-    return inter, _join(index, kind, q, res, _scan(index, res, cols)[0])
+    return inter, _join(index, kind, q, res, _scan(index, _leaf_scan(index, res)[0], cols))
 
 
 def _inside_np(kind: str, q: pd.DataFrame, qsel: np.ndarray, x: np.ndarray) -> np.ndarray:
@@ -322,23 +331,32 @@ def _count(index: SpatialIndex, kind: str, q: pd.DataFrame, budget: int | None) 
     """(qid, cnt) for every row of q: interior sums plus exact boundary
     counts, added on the driver. Runs now and returns a local frame.
 
-    A driver-resolved batch finishes its boundary on the driver from ONE
-    collected scan while the scanned rows plus the (row, query) pairs to
-    test, both exact from the prefix sums before any job, stay within
-    index.DRIVER_FINISH_MAX_ROWS; otherwise its boundary runs as one Spark
-    query (the leaf join, the exact predicate, a qid count)."""
+    A driver-resolved batch finishes its boundary on the driver while the
+    scanned rows plus the (row, query) pairs to test, both exact from the
+    prefix sums before any job, stay within index.DRIVER_FINISH_MAX_ROWS:
+    from the index's driver-side rows (SpatialIndex.local_rows) when a kNN
+    round has collected them, with no Spark job, else from ONE collected
+    scan. A count never collects those rows itself: the first reader of a
+    generation would pay for the wider collect. Otherwise its boundary
+    runs as one Spark query (the leaf join, the exact predicate, a qid
+    count)."""
     inter, res = _resolve(index, kind, q, budget, count=True)
     parts = [] if inter is None else [inter]
     if res is not None:
         xcols = [f"x{j}" for j in range(index.cfg.dims)]
-        pts, rows = _scan(index, res, xcols)
+        pred, rows = _leaf_scan(index, res)
         # the (row, query) pairs tested: each resolved leaf's rows, once per query
         if isinstance(res, pd.DataFrame) and (
             rows + leaf_rows(index.meta_np(), res["leaf"].to_numpy()) <= I.DRIVER_FINISH_MAX_ROWS
         ):
-            parts.append(_boundary_counts_np(index, kind, q, res, pts.toPandas()))
+            local = index._rows
+            if local is not None:
+                pts = local.select([*xcols, "morton"]).to_pandas()
+            else:
+                pts = _scan(index, pred, xcols).toPandas()
+            parts.append(_boundary_counts_np(index, kind, q, res, pts))
         else:
-            cand = _join(index, kind, q, res, pts).where(_exact_pred(kind, index.cfg.dims))
+            cand = _join(index, kind, q, res, _scan(index, pred, xcols)).where(_exact_pred(kind, index.cfg.dims))
             parts.append(cand.groupBy("qid").agg(F.count("*").alias("cnt")).toPandas())
     qid = q["qid"].to_numpy(dtype="int64")
     cnt = pd.concat(parts).groupby("qid")["cnt"].sum() if parts else pd.Series(dtype="int64")

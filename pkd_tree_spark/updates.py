@@ -241,7 +241,10 @@ def checkpoint_index(index: SpatialIndex) -> SpatialIndex:
         the configured width before materializing;
       * the points and meta checkpoints are INDEPENDENT eager jobs —
         submitting them from two driver threads lets the small meta job
-        back-fill the points job's straggler tail (guide §2.6)."""
+        back-fill the points job's straggler tail (guide §2.6).
+
+    The checkpoint holds the same rows, so it passes on the skeleton and
+    the driver-side rows (SpatialIndex.local_rows) it was handed."""
     # coalesce never increases a partition count, so this is a no-op when
     # the index is already at its configured width
     pts_df = index.points.coalesce(index.cfg.partitions)
@@ -259,6 +262,7 @@ def checkpoint_index(index: SpatialIndex) -> SpatialIndex:
         _meta_np=index._meta_np,
         _staged_ids=ids_p + ids_m,
         _min_positions=index._min_positions,
+        _rows=index._rows,
     )
 
 

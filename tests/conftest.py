@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import contextlib
+import dataclasses
 import os
 from unittest import mock
 
@@ -113,6 +114,24 @@ def knn_joined(monkeypatch, knn_scans):
     of scan-finished rounds must stay empty)."""
     monkeypatch.setattr(I, "DRIVER_FINISH_MAX_ROWS", 0)
     return knn_scans
+
+
+def memo_free(index: SpatialIndex) -> SpatialIndex:
+    """A copy of ``index`` (same cached tables and skeleton) that holds no
+    driver-side rows (SpatialIndex.local_rows): the session-scoped index
+    fixtures keep the rows an earlier kNN test collected. Never release the
+    copy, which would release the fixture's tables."""
+    return dataclasses.replace(index, _rows=None)
+
+
+@pytest.fixture
+def no_row_memo(monkeypatch):
+    """The memo-free side of SpatialIndex.local_rows: every call collects
+    the rows again and keeps none, so each kNN driver round scans the table
+    and a range count finds no rows to read, as before the index held
+    them. The rows still arrive in Morton order."""
+    real = SpatialIndex.local_rows
+    monkeypatch.setattr(SpatialIndex, "local_rows", lambda self: real(memo_free(self)))
 
 
 def job_sites(spark, group: str, fn):

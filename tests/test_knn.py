@@ -384,11 +384,13 @@ def _driver_round_jobs(spark, index, tag: str):
     return int(st.toPandas()["rounds"].max()), n_knn, n_read
 
 
-def test_knn_driver_loop_jobs_per_round(spark, index_uniform, knn_scans):
-    """Job-count guard: on a warm index a pandas batch in the driver rounds
-    runs ONE Spark job per ring round within index.DRIVER_FINISH_MAX_ROWS:
-    the pre-filtered scan of the candidate table, collected through Arrow
-    (the shells meet their rows in numpy). The rows, doc_id included, are
+def test_knn_driver_loop_jobs_per_round(spark, index_uniform, knn_scans, no_row_memo):
+    """Job-count guard: on a warm index that holds no driver-side rows
+    (SpatialIndex.local_rows; test_local_rows pins the memo's side) a
+    pandas batch in the driver rounds runs ONE Spark job per ring round
+    within index.DRIVER_FINISH_MAX_ROWS: the scan of the candidate table,
+    collected through Arrow (the shells meet their rows in numpy). The
+    rows, doc_id included, are
     finished on the driver, so reading the result costs exactly one job
     (its local relation's scan)."""
     rounds, n_knn, n_read = _driver_round_jobs(spark, index_uniform, "scan")
@@ -823,7 +825,9 @@ def test_knn_on_rows_out_of_morton_order(tmp_path, request, spark, cfg, index_un
     """An insert appends its batch after the sorted table, its lazy
     exact-delete survivors stream out of Morton order, and a loaded
     PersistentIndex reads its bucket files in split order: kNN on each
-    equals brute force on both sides of the bound."""
+    equals brute force on both sides of the bound. On the scan side the
+    rounds meet the index's driver-side rows, which the first round
+    collected out of Morton order and sorted once (SpatialIndex.local_rows)."""
     from pkd_tree_spark.updates import PersistentIndex, merge_delete, merge_insert
 
     scans = _side_spy(request, side)
@@ -841,14 +845,19 @@ def test_knn_on_rows_out_of_morton_order(tmp_path, request, spark, cfg, index_un
     queries = FX.knn_fixtures(32, 2)
     ins = pd.concat([points_uniform, batch])
     live = pd.concat([points_uniform.drop(gone.index), batch])
+    collected = []
     try:
         for ix, pts in ((g, ins), (dl, live), (loaded, live)):
             pd.testing.assert_frame_equal(_sorted(knn(ix, queries, k=10)), _brute_nd(pts, queries, 10, d=2))
+            m = ix.points.select("morton").toPandas()["morton"]
+            collected.append(bool((m.diff().dropna() >= 0).all()))
+            assert (ix._rows is not None) == (side == "scan")
     finally:
         for ix in (g, dl, loaded):
             ix.release()
+    assert not any(collected), "each generation's rows should arrive out of Morton order"
     if side == "scan":
-        assert scans and not all(s["sorted"] for s in scans)
+        assert scans and all(s["sorted"] for s in scans)
     else:
         assert scans == []
 
@@ -893,7 +902,7 @@ def test_knn_at_63_bit_morton_keys(request, spark, side):
 
 
 @pytest.mark.parametrize("side", _SIDES)
-def test_knn_round_whose_scan_returns_no_rows(request, cfg, index_uniform, side):
+def test_knn_round_whose_scan_returns_no_rows(request, cfg, index_uniform, side, no_row_memo):
     """A skeleton that names rows its points no longer hold: every round's
     shells resolve to occupied cells and every scan returns no row. The
     queries end, as brute force over no points does, with no result row

@@ -348,14 +348,20 @@ def test_range_jobs_per_call(spark, index_uniform, points_uniform):
     jobs. The boundary join (a broadcast job and the qid aggregate's
     stages: 4 jobs in all), and the interior sums, the union, the second
     aggregate and the query-frame join that ran in Spark before it (6 and
-    3 jobs) must not come back."""
+    3 jobs) must not come back. The index holds no driver-side rows
+    (SpatialIndex.local_rows), which a range count never collects:
+    test_local_rows pins the count that reads them."""
+    from tests.conftest import memo_free
+
+    ix = memo_free(index_uniform)
     boxes = FX.box_fixtures(64, 2)
-    range_count_boxes(index_uniform, boxes).toPandas()  # warm: skeleton memo
-    n_count, got = _jobs(spark, "range-count-guard", lambda: range_count_boxes(index_uniform, boxes).toPandas())
-    n_report, _ = _jobs(spark, "range-report-guard", lambda: range_report_boxes(index_uniform, boxes).toPandas())
+    range_count_boxes(ix, boxes).toPandas()  # warm: skeleton memo
+    n_count, got = _jobs(spark, "range-count-guard", lambda: range_count_boxes(ix, boxes).toPandas())
+    n_report, _ = _jobs(spark, "range-report-guard", lambda: range_report_boxes(ix, boxes).toPandas())
     assert got.set_index("qid")["cnt"].to_dict() == _box_oracle(points_uniform, boxes).to_dict()
     assert n_count == 2
     assert n_report == 2
+    assert ix._rows is None
 
 
 def _check_every_qid(index_uniform, points_uniform, monkeypatch, threshold):

@@ -24,7 +24,7 @@ from pkd_tree_spark.index import SpatialIndex, meta_of, skeleton
 from pkd_tree_spark.ranges import range_count_boxes
 from pkd_tree_spark.updates import PersistentIndex, checkpoint_index, merge_delete, merge_insert
 from pkd_tree_spark.zorder import morton_decode_np
-from tests.conftest import SF_DIR, job_sites
+from tests.conftest import SF_DIR, compiles, job_sites
 from tests.test_codegen_cache import _cycle
 
 BOXES = FX.box_fixtures(64, 2)
@@ -241,28 +241,42 @@ def test_long_session_state_stays_flat(tmp_path, spark, points_uniform):
     Every in-memory update persists a new local meta frame, so a leaked
     frame would show in both: the bytes may move by the shuffle files of
     the jobs still reachable (a few KB), never by a frame's rows (two
-    frames a cycle)."""
+    frames a cycle). The cycles after the second (the first one started
+    from a checkpoint, see test_codegen_cache) compile no class, and every
+    released generation's driver-side rows (SpatialIndex.local_rows, which
+    the cycle's kNN reads collect) are gone."""
     cfg = EngineConfig(dims=2, index_level=5, knn_level=4, partitions=1)
     base = SpatialIndex.build(load_points(spark, SF_DIR, dims=2, dist="uniform"), cfg)
     p = PersistentIndex(path=str(tmp_path / "idx"), cfg=cfg)
     p.write(base)
     want = _oracle(points_uniform)
-    ix, seen = base, []
+    ix, seen, compiled, released = base, [], [], []
     for n in range(4):
-        nxt, old = _cycle(spark, ix, points_uniform, 10 + n)
-        for g in [ix, *old]:
-            g.meta.count()  # materialized, as the benchmark's cycle does
-            g.release()
-        ix = nxt
-        rows = points_uniform.iloc[n::50].copy()
-        rows["key"] += 98_000_000 + 1_000 * n
-        b = spark.createDataFrame(rows[ROW_COLS])
-        p.merge_insert_cow(spark, b)
-        p.merge_delete_cow(spark, b.select("key", "span_idx", "x0", "x1"))
-        got, _ = _count_jobs(spark, p.load(spark), f"long-session-{n}")
-        assert got == want
+
+        def step():
+            nxt, old = _cycle(spark, ix, points_uniform, 10 + n)
+            assert all(g._rows is not None for g in old)  # each generation's kNN collected its rows
+            for g in [ix, *old]:
+                g.meta.count()  # materialized, as the benchmark's cycle does
+                g.release()
+                released.append(g)
+            rows = points_uniform.iloc[n::50].copy()
+            rows["key"] += 98_000_000 + 1_000 * n
+            b = spark.createDataFrame(rows[ROW_COLS])
+            p.merge_insert_cow(spark, b)
+            p.merge_delete_cow(spark, b.select("key", "span_idx", "x0", "x1"))
+            got, _ = _count_jobs(spark, p.load(spark), f"long-session-{n}")
+            assert got == want
+            return nxt
+
+        ix, c = compiles(spark, step)
+        compiled.append(c)
         seen.append(_settled(spark))
     frame_bytes = 8 * len(ix.meta.columns) * len(ix.meta_np()["cells"])
+    assert ix._rows is not None  # the checkpoint passed its parent's rows on
     ix.release()
+    released.append(ix)
     assert [s[0] for s in seen[1:]] == [seen[0][0]] * 3, seen
     assert max(s[1] for s in seen[1:]) - seen[0][1] < frame_bytes, (seen, frame_bytes)
+    assert compiled[2:] == [0, 0], compiled
+    assert all(g._rows is None for g in released)

@@ -102,7 +102,7 @@ def boundary_scan_plan(spark, ix, sf, n: int = 64) -> str:
     from pkd_tree_spark import ranges as R
 
     _, res = R._resolve(ix, "box", _boxes(n), None, count=True)
-    scan, _ = R._scan(ix, res, ["x0", "x1"])
+    scan = R._scan(ix, R._leaf_scan(ix, res)[0], ["x0", "x1"])
     scan.toPandas()
     return _executed(scan)
 
@@ -135,8 +135,11 @@ def report_plan(spark, ix, sf) -> str:
 
 
 def knn_round_scan_plan(spark, ix, sf) -> str:
-    """A small kNN batch's round-1 Spark query within the bound: the scan
-    knn._knn_driver collects through Arrow (read by wrapping toArrow)."""
+    """A small kNN batch's round-1 Spark query within the bound, on an
+    index that holds no driver-side rows yet: the scan that
+    SpatialIndex.local_rows collects through Arrow (read by wrapping
+    toArrow); later rounds and calls on the index run no query."""
+    import dataclasses
     from unittest import mock
 
     from pkd_tree_spark import fixtures as FX
@@ -152,7 +155,7 @@ def knn_round_scan_plan(spark, ix, sf) -> str:
         return out
 
     with mock.patch.object(cls, "toArrow", spy):
-        knn(ix, FX.knn_fixtures(32, 2), k=10).count()
+        knn(dataclasses.replace(ix, _rows=None), FX.knn_fixtures(32, 2), k=10).count()
     return scans[0]
 
 
@@ -286,10 +289,13 @@ SECTIONS = [
         "from the prefix sums before any job) the candidate table's key, "
         "span_idx, x0, x1, morton and doc_id are scanned ONCE (the "
         "Morton-interval pre-filter prunes cached batches when it pays) and "
-        "collected through Arrow; each shell cell's rows are a searchsorted "
-        "run of the Morton keys, and dist2, the top-k merge and doc_id (for "
-        "top-k rows only) are numpy. One job, no join, no local cell "
-        "relation, no shuffle.",
+        "collected through Arrow; on the points table that collect is the "
+        "index's driver-side rows (SpatialIndex.local_rows), made by the "
+        "first such round whose scan reads the whole table (this plan) and "
+        "read by every later round and call on the index with no job. Each "
+        "shell cell's rows are a searchsorted run of the Morton keys, and "
+        "dist2, the top-k merge and doc_id (for final top-k rows only) are "
+        "numpy. At most one job, no join, no local cell relation, no shuffle.",
         knn_round_scan_plan,
     ),
     (
